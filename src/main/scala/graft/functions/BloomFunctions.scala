@@ -1,15 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
-/** Session-registered access to Spark's native Bloom-filter expressions
+/** Column access to Spark's native Bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the same kernels
   * Catalyst's runtime row-level filtering injects into shuffle joins).
   *
@@ -69,46 +68,16 @@ object BloomFunctions {
       copy(child = newChild)
   }
 
-  private val installedSessions =
-    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  /** Aggregate a LongType column into a serialized Bloom filter (binary)
+    * of `numBits` bits sized for `expectedItems` keys; 8 bits/item gives
+    * a ~2% false-positive rate. */
+  def bloomAgg(keys: Column, expectedItems: Long, numBits: Long): Column =
+    column(BloomFilterAggregate(expression(keys), Literal(expectedItems),
+      Literal(numBits), 0, 0).toAggregateExpression())
 
-  def install(spark: SparkSession): Boolean = synchronized {
-    if (installedSessions.contains(spark)) true
-    else try {
-      val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
-      registry.registerFunction(FunctionIdentifier("graft_bloom_agg"),
-        new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-        (exprs: Seq[Expression]) => BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0))
-      registry.registerFunction(FunctionIdentifier("graft_bloom_probe"),
-        new ExpressionInfo(classOf[BloomProbe].getName, "graft_bloom_probe"),
-        (exprs: Seq[Expression]) => BloomProbe(exprs(1), exprs(0) match {
-          case Literal(b: Array[Byte], BinaryType) => b
-          case other => throw new IllegalArgumentException(
-            s"graft_bloom_probe: first arg must be a binary literal, got $other")
-        }))
-      installedSessions.add(spark)
-      true
-    } catch { case _: Throwable => false }
-  }
-
-  /** Aggregate a LongType column into a serialized Bloom filter (binary).
-    * `numBits` defaults to 8 bits/item → ~2% false-positive rate. */
-  def bloomAgg(spark: SparkSession)(keys: Column, expectedItems: Long,
-                                    numBits: Long): Option[Column] =
-    if (install(spark))
-      Some(call_function("graft_bloom_agg", keys,
-        org.apache.spark.sql.functions.lit(expectedItems),
-        org.apache.spark.sql.functions.lit(numBits)))
-    else None
-
-  /** Membership probe for a driver-held serialized filter: the bytes end up
-    * a reference-object field on [[BloomProbe]] (the literal exists only for
-    * the one analysis step that unwraps it), so the optimized plan never
-    * carries the payload. Results are identical to the literal form. */
-  def probe(spark: SparkSession)(bytes: Array[Byte], key: Column): Option[Column] =
-    if (install(spark))
-      Some(call_function("graft_bloom_probe",
-        org.apache.spark.sql.functions.lit(bytes), key))
-    else None
+  /** Membership probe for a driver-held serialized filter: the bytes are a
+    * reference-object field on [[BloomProbe]], so the plan never carries
+    * the payload. Results are identical to `BloomFilterMightContain`. */
+  def probe(bytes: Array[Byte], key: Column): Column =
+    column(BloomProbe(expression(key), bytes))
 }

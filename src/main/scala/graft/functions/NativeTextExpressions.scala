@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,6 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Catalyst's subexpression elimination applies, so a projection computing
   * both `shingle_hashes(text)` and `minhash_sig(shingle_hashes(text))`
   * hashes the shingles ONCE per row.
+  *
+  * The Column builders at the end wrap each expression directly, so a
+  * kernel column resolves in whatever session evaluates it.
   *
   * Hashing is FNV-1a64 (public-domain constant set) — stable across engines
   * and JVMs; MinHash permutations are universal hashes in a 31-bit domain
@@ -191,7 +193,7 @@ object NativeTextExpressions {
     *    are short lowercase ASCII, so a token matches via one packed-long
     *    open-addressed table probe — no per-token String allocation;
     *  - best is the FIRST maximal language — the (score, -index) argmax
-    *    tie-break of langIdWith;
+    *    tie-break of langIdDeclarative;
     *  - n_char counts code points (Spark's length()), n_punct counts
     *    [.,!?;:] code points (the regexp_replace-based punctCount), cjk is
     *    "any code point in [0x4e00,0x9fff]" (length(regexp_replace(..)) > 0
@@ -429,62 +431,26 @@ object NativeTextExpressions {
       copy(child = newChild)
   }
 
-  private val installedSessions =
-    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  /** Distinct word-`n`-gram hashes of `text` ([[WordShingleHashes]]). */
+  def shingleHashes(text: Column, n: Int): Column =
+    column(WordShingleHashes(expression(text), n))
 
-  def install(spark: SparkSession): Boolean = synchronized {
-    if (installedSessions.contains(spark)) true
-    else try {
-      val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
-      def intLit(e: Expression): Int = e.asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-      def longLit(e: Expression): Long = e.asInstanceOf[Literal].value.asInstanceOf[Number].longValue()
-      registry.registerFunction(FunctionIdentifier("shingle_hashes"),
-        new ExpressionInfo(classOf[WordShingleHashes].getName, "shingle_hashes"),
-        (exprs: Seq[Expression]) => WordShingleHashes(exprs(0), intLit(exprs(1))))
-      registry.registerFunction(FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-        (exprs: Seq[Expression]) => MinHashSig(exprs(0), intLit(exprs(1)), longLit(exprs(2))))
-      registry.registerFunction(FunctionIdentifier("long_set_jaccard"),
-        new ExpressionInfo(classOf[LongSetJaccard].getName, "long_set_jaccard"),
-        (exprs: Seq[Expression]) => LongSetJaccard(exprs(0), exprs(1)))
-      // lang_profile bakes the default marker table; langIdWith falls back
-      // to the declarative form for custom marker sets
-      registry.registerFunction(FunctionIdentifier("lang_profile"),
-        new ExpressionInfo(classOf[LangProfile].getName, "lang_profile"),
-        (exprs: Seq[Expression]) => LangProfile(exprs(0), TextFunctions.defaultMarkers))
-      registry.registerFunction(FunctionIdentifier("word_shingles"),
-        new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-        (exprs: Seq[Expression]) => WordShingles(exprs(0), intLit(exprs(1))))
-      installedSessions.add(spark)
-      true
-    } catch { case _: Throwable => false }
-  }
+  /** `k`-slot MinHash signature of a hash set ([[MinHashSig]]). */
+  def minhashSig(hashes: Column, k: Int, seed: Long): Column =
+    column(MinHashSig(expression(hashes), k, seed))
 
-  def shingleHashes(spark: SparkSession)(text: Column, n: Int): Option[Column] =
-    if (install(spark)) Some(call_function("shingle_hashes", text, org.apache.spark.sql.functions.lit(n)))
-    else None
+  /** Exact Jaccard of two hash sets ([[LongSetJaccard]]). */
+  def longSetJaccard(a: Column, b: Column): Column =
+    column(LongSetJaccard(expression(a), expression(b)))
 
-  def minhashSig(spark: SparkSession)(hashes: Column, k: Int, seed: Long): Option[Column] =
-    if (install(spark)) Some(call_function("minhash_sig", hashes,
-      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(seed)))
-    else None
+  /** The fused text-profile struct over the DEFAULT marker table. Identical
+    * subtrees in one projection are deduplicated by codegen subexpression
+    * elimination, so langId + qualityScore + tokenCount over the same column
+    * tokenize once. */
+  def langProfile(text: Column): Column =
+    column(LangProfile(expression(text), TextFunctions.defaultMarkers))
 
-  def longSetJaccard(spark: SparkSession)(a: Column, b: Column): Option[Column] =
-    if (install(spark)) Some(call_function("long_set_jaccard", a, b))
-    else None
-
-  /** The fused text-profile struct over the DEFAULT marker table (None when
-    * the kernel can't install). Identical subtrees in one projection are
-    * deduplicated by codegen subexpression elimination, so langId +
-    * qualityScore + tokenCount over the same column tokenize once. */
-  def langProfile(spark: SparkSession)(text: Column): Option[Column] =
-    if (install(spark)) Some(call_function("lang_profile", text))
-    else None
-
-  /** Native word-shingle strings (None when the kernel can't install). */
-  def wordShingles(spark: SparkSession)(text: Column, n: Int): Option[Column] =
-    if (install(spark)) Some(call_function("word_shingles", text,
-      org.apache.spark.sql.functions.lit(n)))
-    else None
+  /** Word-`n`-gram shingle strings of `text` ([[WordShingles]]). */
+  def wordShingles(text: Column, n: Int): Column =
+    column(WordShingles(expression(text), n))
 }

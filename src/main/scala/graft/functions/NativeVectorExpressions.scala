@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Codegen'd vector kernels: the hot path for pairwise similarity at scale.
@@ -19,8 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * accumulation), so results are bit-compatible with the HOF version and the
   * DuckDB oracle.
   *
-  * Registered into the session's FunctionRegistry (same registry SQL
-  * functions live in), callable from both DataFrame (`call_function`) and SQL.
+  * The builders at the end return Columns that wrap the expressions
+  * directly; the HOF forms in [[VectorFunctions]] stay as the reference the
+  * specs compare against.
   */
 object NativeVectorExpressions {
 
@@ -156,52 +156,15 @@ object NativeVectorExpressions {
       copy(child = newChild)
   }
 
-  private val installedSessions =
-    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  /** Fused cosine similarity (`vec_cosine`). */
+  def cosineFast(a: Column, b: Column): Column =
+    column(VecCosine(expression(a), expression(b)))
 
-  /** Idempotently register vec_cosine / vec_dot in THIS session's function
-    * registry. Returns whether the native path is available (falls back to
-    * the HOF implementation when the internal API is unavailable). */
-  def install(spark: SparkSession): Boolean = synchronized {
-    if (installedSessions.contains(spark)) true
-    else try {
-      val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
-      registry.registerFunction(FunctionIdentifier("vec_cosine"),
-        new ExpressionInfo(classOf[VecCosine].getName, "vec_cosine"),
-        (exprs: Seq[Expression]) => VecCosine(exprs(0), exprs(1)))
-      registry.registerFunction(FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-        (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1)))
-      def intLit(e: Expression): Int = e.asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
-      def longLit(e: Expression): Long = e.asInstanceOf[Literal].value.asInstanceOf[Number].longValue()
-      registry.registerFunction(FunctionIdentifier("hyperplane_bits"),
-        new ExpressionInfo(classOf[HyperplaneBits].getName, "hyperplane_bits"),
-        (exprs: Seq[Expression]) =>
-          HyperplaneBits(exprs(0), intLit(exprs(1)), intLit(exprs(2)), longLit(exprs(3))))
-      installedSessions.add(spark)
-      true
-    } catch { case _: Throwable => false }
-  }
+  /** Fused dot product (`vec_dot`). */
+  def dotFast(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
 
-  /** Fused cosine: native codegen kernel when installed, HOF fallback. */
-  def cosineFast(spark: SparkSession)(a: Column, b: Column): Column =
-    if (install(spark)) call_function("vec_cosine", a, b)
-    else VectorFunctions.cosine(a, b)
-
-  /** Fused dot product: native kernel when installed, HOF fallback. */
-  def dotFast(spark: SparkSession)(a: Column, b: Column): Column =
-    if (install(spark)) call_function("vec_dot", a, b)
-    else VectorFunctions.vdot(a, b)
-
-  /** Fused hyperplane signature: native kernel when installed, HOF fallback
-    * (identical planes — same seed, same RNG draw order). */
-  def hyperplaneBitsFast(spark: SparkSession)(v: Column, dim: Int, nBits: Int,
-                                              seed: Long): Column =
-    if (install(spark))
-      call_function("hyperplane_bits", v,
-        org.apache.spark.sql.functions.lit(dim),
-        org.apache.spark.sql.functions.lit(nBits),
-        org.apache.spark.sql.functions.lit(seed))
-    else VectorFunctions.hyperplaneBits(v, dim, nBits, seed)
+  /** Fused hyperplane signature (`hyperplane_bits`). */
+  def hyperplaneBitsFast(v: Column, dim: Int, nBits: Int, seed: Long): Column =
+    column(HyperplaneBits(expression(v), dim, nBits, seed))
 }

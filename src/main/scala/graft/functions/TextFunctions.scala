@@ -6,10 +6,14 @@ import org.apache.spark.sql.functions._
 /** Text-analysis column functions for large-scale document pipelines:
   * tokenization, n-gram shingling, language ID, quality scoring.
   *
-  * Everything here is built from `org.apache.spark.sql.functions` higher-order
-  * functions — no UDFs — so the whole stage stays inside Catalyst (column
-  * pruning, codegen where available) and runs as a pure map: no shuffle, which
-  * is what makes these viable over 100 TB of documents.
+  * No UDFs: each function is either built from `org.apache.spark.sql.functions`
+  * or served by a native Catalyst kernel ([[NativeTextExpressions]]:
+  * `lang_profile` behind langId/qualityScore/tokenCount, `word_shingles`
+  * behind textShingles), so the whole stage stays inside Catalyst (column
+  * pruning, codegen) and runs as a pure map: no shuffle, which is what makes
+  * these viable over 100 TB of documents. The kernels' declarative
+  * equivalents stay here as the references LangProfileParitySpec fuzzes them
+  * against.
   */
 object TextFunctions {
 
@@ -26,23 +30,9 @@ object TextFunctions {
   def bpeishTokens(text: Column): Column =
     regexp_extract_all(text, lit(bpeishPattern), lit(0))
 
+  /** `size(tokens(text))`, read from the fused `lang_profile` kernel. */
   def tokenCount(text: Column): Column =
-    profileOf(text).map(_.getField("n_tok")).getOrElse(size(tokens(text)))
-
-  /** The thread's active/default session, if any — these column builders
-    * keep their session-free signatures, so native kernels install into
-    * (and must be analyzed under) the session current at COLUMN
-    * CONSTRUCTION time. All registry queries build and run under the one
-    * driver session, which is the supported shape; a column built here and
-    * shipped to a different `newSession()` would not resolve the kernel. */
-  private def currentSession: Option[org.apache.spark.sql.SparkSession] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-
-  /** The fused one-pass profile struct (NativeTextExpressions.LangProfile)
-    * when a session is resolvable and the kernel installs; None otherwise. */
-  private def profileOf(text: Column): Option[Column] =
-    currentSession.flatMap(s => NativeTextExpressions.langProfile(s)(text))
+    NativeTextExpressions.langProfile(text).getField("n_tok")
 
   /** Word n-gram shingles ("a b c", n=2 → ["a b","b c"]); empty array when
     * the document is shorter than n tokens.
@@ -66,18 +56,18 @@ object TextFunctions {
   }
 
   /** `shingles(tokens(text), n)` served by the native `word_shingles`
-    * kernel when it installs (one pass over the lowered bytes instead of an
-    * interpreted arrays_zip/transform/concat_ws per row), the declarative
-    * form otherwise. Output is position-for-position identical
-    * (LangProfileParitySpec fuzz-pins the equality). */
+    * kernel (one pass over the lowered bytes instead of an interpreted
+    * arrays_zip/transform/concat_ws per row). Output is
+    * position-for-position identical (LangProfileParitySpec fuzz-pins the
+    * equality). */
   def textShingles(text: Column, n: Int): Column =
-    currentSession.flatMap(s => NativeTextExpressions.wordShingles(s)(text, n))
-      .getOrElse(shingles(tokens(text), n))
+    NativeTextExpressions.wordShingles(text, n)
 
   // --- language ID (n-gram/stopword heuristic) ------------------------------
 
-  /** Marker words per language. Tiny on purpose: broadcasts as literals into
-    * the plan; extendable without code changes via `langIdWith`. */
+  /** Marker words per language. Tiny on purpose: the `lang_profile` kernel
+    * packs them into one open-addressed table (at most 31 languages of
+    * 1..7-byte lowercase ASCII words). */
   val defaultMarkers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "it", "for", "was", "with", "his"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "zu", "mit", "den", "von", "sich"),
@@ -88,33 +78,26 @@ object TextFunctions {
     size(filter(toks, t => array_contains(array(markers.map(lit): _*), t)))
 
   /** Heuristic language ID: CJK codepoints → zh, else argmax of stopword hits
-    * (deterministic tie-break: earlier language in `markers` wins ties; zero
+    * (deterministic tie-break: earlier language in `defaultMarkers` wins ties; zero
     * hits → "unknown"). Pure map-side — no shuffle. */
-  def langId(text: Column): Column = langIdWith(text, defaultMarkers)
-
-  def langIdWith(text: Column, markers: Seq[(String, Seq[String])]): Column = {
-    // Default markers: the fused native kernel computes every language's
-    // occurrence count AND the first-max index in one tokenize pass (the
-    // argmax-over-structs form below still paid one interpreted HOF filter
-    // per language per row). `best` already encodes the (score, -index)
-    // tie-break; all-zero counts → -1 → "unknown"; null text → null struct
-    // → both when() conditions null → "unknown", exactly like the
-    // declarative form's null propagation.
-    val native = if (markers == defaultMarkers) profileOf(text) else None
-    native match {
-      case Some(p) =>
-        val names = typedlit(markers.map(_._1))
-        when(p.getField("cjk"), lit("zh"))
-          .otherwise(when(p.getField("best") >= 0,
-            element_at(names, p.getField("best") + 1))
-            .otherwise(lit("unknown")))
-      case None => langIdDeclarative(text, markers)
-    }
+  def langId(text: Column): Column = {
+    // The fused native kernel computes every language's occurrence count
+    // AND the first-max index in one tokenize pass (the argmax-over-structs
+    // form below pays one interpreted HOF filter per language per row).
+    // `best` already encodes the (score, -index) tie-break; all-zero counts
+    // → -1 → "unknown"; null text → null struct → both when() conditions
+    // null → "unknown", exactly like the declarative form's null
+    // propagation.
+    val p = NativeTextExpressions.langProfile(text)
+    val names = typedlit(defaultMarkers.map(_._1))
+    when(p.getField("cjk"), lit("zh"))
+      .otherwise(when(p.getField("best") >= 0,
+        element_at(names, p.getField("best") + 1))
+        .otherwise(lit("unknown")))
   }
 
-  /** The pre-kernel declarative langId — the fallback when the native
-    * kernel can't install, and the parity pin LangProfileParitySpec fuzzes
-    * the kernel against. */
+  /** The pre-kernel declarative langId — the parity pin
+    * LangProfileParitySpec fuzzes the kernel against. */
   private[graft] def langIdDeclarative(text: Column,
       markers: Seq[(String, Seq[String])]): Column = {
     val toks = tokens(text)
@@ -146,24 +129,18 @@ object TextFunctions {
     * stopword density (the reference's medallion "silver" cleanliness idea —
     * clinicdata.sql:174-176 — generalized to web-scale text filtering). */
   def qualityScore(text: Column): Column = {
-    // Same arithmetic over the same values either way; the native path just
-    // sources (n_tok, stopword count, n_punct, n_char) from the fused
-    // one-pass kernel instead of a split + interpreted HOF filter + two
-    // regex passes. In a projection that also computes langId/tokenCount,
-    // codegen subexpression elimination evaluates the kernel once.
-    val (nTokI, swI, punctI, charI) = profileOf(text) match {
-      case Some(p) =>
-        (p.getField("n_tok"), p.getField("s0"),
-          p.getField("n_punct"), p.getField("n_char"))
-      case None =>
-        val toks = tokens(text)
-        (size(toks), stopwordCount(toks), punctCount(text), length(text))
-    }
-    qualityFormula(nTokI, swI, punctI, charI)
+    // The same arithmetic as qualityScoreDeclarative, with (n_tok, stopword
+    // count, n_punct, n_char) sourced from the fused one-pass kernel instead
+    // of a split + interpreted HOF filter + two regex passes. In a
+    // projection that also computes langId/tokenCount, codegen
+    // subexpression elimination evaluates the kernel once.
+    val p = NativeTextExpressions.langProfile(text)
+    qualityFormula(p.getField("n_tok"), p.getField("s0"),
+      p.getField("n_punct"), p.getField("n_char"))
   }
 
-  /** The pre-kernel declarative qualityScore — the fallback's feature
-    * sourcing, kept callable for LangProfileParitySpec's fuzz pin. */
+  /** The pre-kernel declarative qualityScore — the reference
+    * LangProfileParitySpec fuzzes the kernel against. */
   private[graft] def qualityScoreDeclarative(text: Column): Column = {
     val toks = tokens(text)
     qualityFormula(size(toks), stopwordCount(toks), punctCount(text), length(text))

@@ -4,12 +4,12 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
-import org.apache.spark.sql.functions.{call_function, collect_list, lit, slice, sort_array}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType}
 
 /** Bounded top-K as a first-class aggregate: `topk_min(e, k)` returns the K
@@ -35,40 +35,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   * are any orderable type incl. structs (lexicographic), so callers pack
   * `struct(orderCol, tieBreaker, payload…)` exactly like `max(struct(…))`
   * argmax. Serialization between phases is one UnsafeRow per element,
-  * length-prefixed. Registered in the session FunctionRegistry (SQL surface
-  * included); [[TopKAggregate.topKMin]] is the typed entry with a
-  * plan-equivalent `slice(sort_array(collect_list))` fallback should
-  * registration be unavailable.
+  * length-prefixed. [[TopKAggregate.topKMin]] is the Column entry.
   */
 object TopKAggregate {
 
   /** K smallest values of `e` per group, ascending. `e` must be an
     * orderable type (atomic, struct, array). */
-  def topKMin(spark: SparkSession)(e: Column, k: Int): Column = {
-    require(k > 0, s"topKMin: k must be positive, got $k")
-    if (install(spark)) call_function("topk_min", e, lit(k))
-    else slice(sort_array(collect_list(e)), 1, k) // unbounded-state fallback
-  }
-
-  private val installedSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotently register `topk_min` in THIS session's function registry
-    * (same pattern as [[NativeVectorExpressions.install]]). */
-  def install(spark: SparkSession): Boolean = synchronized {
-    if (installedSessions.contains(spark)) true
-    else try {
-      val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
-      registry.registerFunction(FunctionIdentifier("topk_min"),
-        new ExpressionInfo(classOf[TopKMin].getName, "topk_min"),
-        (exprs: Seq[Expression]) => TopKMin(exprs(0),
-          exprs(1).asInstanceOf[Literal].value.asInstanceOf[Number].intValue()))
-      installedSessions.add(spark)
-      true
-    } catch { case _: Throwable => false }
-  }
+  def topKMin(e: Column, k: Int): Column =
+    column(TopKMin(expression(e), k).toAggregateExpression())
 }
 
 /** The aggregate function behind `topk_min(e, k)` — see [[TopKAggregate]]. */

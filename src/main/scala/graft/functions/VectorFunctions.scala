@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Embedding-vector math over `array<float>`/`array<double>` columns using
   * Spark higher-order functions (`zip_with`/`aggregate`) — sequential,
-  * deterministic summation, no UDF, no shuffle. For the 100 TB path the same
-  * expressions run inside the scan stage; a codegen'd Catalyst Expression is
-  * the next optimization step if profiles show HOF overhead dominating.
+  * deterministic summation, no UDF, no shuffle. The operators' hot paths use
+  * the codegen'd kernels in [[NativeVectorExpressions]]; `cosine`, `vdot` and
+  * `hyperplaneBits` here are the declarative references those kernels are
+  * pinned bit-identical to (and q45's oracle-checked formulation).
   */
 object VectorFunctions {
 

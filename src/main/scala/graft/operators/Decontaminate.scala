@@ -46,45 +46,38 @@ object Decontaminate {
         countDistinct(col("__g")).as("n_shared_shingles"))
   }
 
-  /** Serialized Bloom filter over the eval side's distinct shingle hashes.
-    * `None` = the native Bloom expressions can't be installed in this
-    * session (caller should fall back to [[overlapReport]]); `Some(None)` =
-    * the eval corpus yields no shingles, so nothing can overlap;
-    * `Some(Some(bytes))` = the filter, `numBits/8` bytes, independent of
-    * train volume. One eager pass over the (small by premise) eval side —
+  /** Serialized Bloom filter over the eval side's distinct shingle hashes:
+    * `Some(bytes)` = the filter, `numBits/8` bytes, independent of train
+    * volume; `None` = the eval corpus yields no shingles, so nothing can
+    * overlap. One eager pass over the (small by premise) eval side —
     * nothing is cached, so there is no persist lifecycle to manage. */
-  def evalShingleFilter(spark: org.apache.spark.sql.SparkSession,
-                        eval: DataFrame, idCol: String, textCol: String,
+  def evalShingleFilter(eval: DataFrame, idCol: String, textCol: String,
                         n: Int = 5, expectedEvalShingles: Long = 1L << 20,
-                        bitsPerItem: Int = 8): Option[Option[Array[Byte]]] = {
+                        bitsPerItem: Int = 8): Option[Array[Byte]] = {
     import graft.functions.BloomFunctions
-    val numBits = expectedEvalShingles * bitsPerItem
-    BloomFunctions.bloomAgg(spark)(col("__g"), expectedEvalShingles, numBits)
-      .map { agg =>
-        Option(grams(eval, idCol, textCol, n, "__eval_id")
-          .select(agg).head.getAs[Array[Byte]](0))
-      }
+    val agg = BloomFunctions.bloomAgg(col("__g"), expectedEvalShingles,
+      expectedEvalShingles * bitsPerItem)
+    Option(grams(eval, idCol, textCol, n, "__eval_id")
+      .select(agg).head.getAs[Array[Byte]](0))
   }
 
   /** [[overlapReport]] with a prebuilt eval-side filter (from
-    * [[evalShingleFilter]] or [[loadEvalFilter]]) probed map-side on the
-    * train shingles BEFORE the shuffle. */
-  def overlapReportWithFilter(spark: org.apache.spark.sql.SparkSession,
-                              train: DataFrame, eval: DataFrame,
+    * [[evalShingleFilter]] or [[standingEvalFilter]]) probed map-side on the
+    * train shingles BEFORE the shuffle; a `None` filter (empty eval
+    * corpus) yields no rows. */
+  def overlapReportWithFilter(train: DataFrame, eval: DataFrame,
                               idCol: String, textCol: String, n: Int,
-                              filter: Option[Option[Array[Byte]]]): DataFrame = {
+                              filter: Option[Array[Byte]]): DataFrame = {
     import graft.functions.BloomFunctions
     val tr = grams(train, idCol, textCol, n, "__train_id")
     val te = grams(eval, idCol, textCol, n, "__eval_id")
     val filtered = filter match {
-      case None => tr // Bloom unavailable: plain (still-correct) join
-      case Some(None) => tr.limit(0) // empty eval: nothing can overlap
-      case Some(Some(bytes)) =>
+      case None => tr.limit(0) // empty eval: nothing can overlap
+      case Some(bytes) =>
         // reference-object probe: the ~1 MB serialized filter must NOT ride
         // the plan as a literal (driver-side plan handling cost, see
         // BloomFunctions.BloomProbe)
-        BloomFunctions.probe(spark)(bytes, col("__g"))
-          .map(tr.filter).getOrElse(tr)
+        tr.filter(BloomFunctions.probe(bytes, col("__g")))
     }
     te.join(filtered, "__g")
       .groupBy(col("__eval_id").as("eval_doc"))
@@ -109,16 +102,14 @@ object Decontaminate {
     *
     * The driver collects only the serialized filter (bounded by
     * `expectedEvalShingles` — like IVF's bounded training sample, never
-    * data-proportional). Falls back to the plain report if the native
-    * Bloom expressions cannot be installed in this session.
+    * data-proportional).
     */
-  def overlapReportBloom(spark: org.apache.spark.sql.SparkSession,
-                         train: DataFrame, eval: DataFrame, idCol: String,
+  def overlapReportBloom(train: DataFrame, eval: DataFrame, idCol: String,
                          textCol: String, n: Int = 5,
                          expectedEvalShingles: Long = 1L << 20,
                          bitsPerItem: Int = 8): DataFrame =
-    overlapReportWithFilter(spark, train, eval, idCol, textCol, n,
-      evalShingleFilter(spark, eval, idCol, textCol, n,
+    overlapReportWithFilter(train, eval, idCol, textCol, n,
+      evalShingleFilter(eval, idCol, textCol, n,
         expectedEvalShingles, bitsPerItem))
 
   // --- Standing filter state ------------------------------------------------
@@ -136,21 +127,19 @@ object Decontaminate {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Persist a built filter under `dir` for `version`. No-op when the
-    * filter is `None` (Bloom unavailable — nothing worth committing). */
+  /** Persist a built filter under `dir` for `version` (`None`, the empty
+    * eval corpus, commits the zero-length sentinel). */
   def saveEvalFilter(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     version: String,
-                     filter: Option[Option[Array[Byte]]]): Unit =
-    filter.foreach { bytes =>
-      val fs = fsOf(spark, dir)
-      val vDir = s"$dir/bloom_$version"
-      val marker = new org.apache.hadoop.fs.Path(s"$vDir/_COMMIT")
-      fs.delete(marker, false) // retract before rewrite, as DedupStream does
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$vDir/filter.bin"), true)
-      try out.write(bytes.getOrElse(Array.emptyByteArray))
-      finally out.close()
-      require(fs.createNewFile(marker), s"commit $marker")
-    }
+                     version: String, filter: Option[Array[Byte]]): Unit = {
+    val fs = fsOf(spark, dir)
+    val vDir = s"$dir/bloom_$version"
+    val marker = new org.apache.hadoop.fs.Path(s"$vDir/_COMMIT")
+    fs.delete(marker, false) // retract before rewrite, as DedupStream does
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"$vDir/filter.bin"), true)
+    try out.write(filter.getOrElse(Array.emptyByteArray))
+    finally out.close()
+    require(fs.createNewFile(marker), s"commit $marker")
+  }
 
   /** Read back a committed filter for `version`: `None` = never committed;
     * `Some(None)` = committed empty-eval sentinel; `Some(Some(bytes))` =
@@ -204,8 +193,7 @@ object Decontaminate {
                             maxBroadcastEvalRows: Long = 1000000L,
                             fallbackBuckets: Int = 64): DataFrame = {
     import graft.functions.VectorFunctions.asDouble
-    val spark = train.sparkSession
-    val cos = graft.functions.NativeVectorExpressions.cosineFast(spark) _
+    val cos = graft.functions.NativeVectorExpressions.cosineFast _
     val tr = train.select(col(idCol).as("__tid"), asDouble(col(vecCol)).as("__tv"))
     val ev = eval.select(col(idCol).as("eval_vec"), asDouble(col(vecCol)).as("__ev"))
     val probeLimit = math.min(maxBroadcastEvalRows, Int.MaxValue - 1L).toInt + 1
@@ -232,14 +220,14 @@ object Decontaminate {
   }
 
   /** Load the committed filter for `version`, or build it from `eval` and
-    * commit it. Returns `None` only when Bloom is unavailable. */
+    * commit it. `None` = the empty eval corpus. */
   def standingEvalFilter(spark: org.apache.spark.sql.SparkSession,
                          dir: String, version: String, eval: DataFrame,
                          idCol: String, textCol: String, n: Int = 5,
                          expectedEvalShingles: Long = 1L << 20,
-                         bitsPerItem: Int = 8): Option[Option[Array[Byte]]] =
-    loadEvalFilter(spark, dir, version).orElse {
-      val built = evalShingleFilter(spark, eval, idCol, textCol, n,
+                         bitsPerItem: Int = 8): Option[Array[Byte]] =
+    loadEvalFilter(spark, dir, version).getOrElse {
+      val built = evalShingleFilter(eval, idCol, textCol, n,
         expectedEvalShingles, bitsPerItem)
       saveEvalFilter(spark, dir, version, built)
       built

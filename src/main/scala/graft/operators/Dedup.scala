@@ -4,15 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions._
-
 /** Deduplication operators for training-data pipelines, in increasing
   * fuzziness: exact → MinHash/LSH → SimHash → n-gram Jaccard.
   *
   * Scale design (100 TB):
   *  - Exact dedup = one shuffle on a 128-bit content hash (not on the text
   *    itself — keys stay small).
-  *  - MinHash: signatures are computed map-side with higher-order functions;
+  *  - MinHash: signatures are computed map-side by native codegen kernels;
   *    only the banded buckets shuffle. Candidate pairs come from equi-joins
   *    on (band, bucket) — never an all-pairs cross join.
   *  - SimHash: 64-bit fingerprint map-side (UDF today; custom codegen
@@ -35,24 +33,6 @@ object Dedup {
       .filter(col("n_copies") > 1)
 
   // --- MinHash + LSH --------------------------------------------------------
-
-  /** k-permutation MinHash signature over word-`shingleN` shingles.
-    * Universal hashing h_i(x) = (a_i * xxhash64(x) + b_i) mod p with a fixed
-    * seed; all arithmetic in native columns (one `transform`+`array_min` per
-    * permutation, evaluated once per row, map-side).
-    */
-  def minhashSignature(text: Column, k: Int = 32, shingleN: Int = 3,
-                       seed: Long = 42L): Column = {
-    // 31-bit domain: a,b < 2^31 and h < 2^31 keep a*h+b < 2^62, so the
-    // arithmetic never overflows a long even under ANSI mode.
-    val p = 2147483647L // 2^31 - 1
-    val rnd = new scala.util.Random(seed)
-    val ab = Seq.fill(k)((rnd.nextInt(Int.MaxValue - 1).toLong + 1, rnd.nextInt(Int.MaxValue).toLong))
-    val hashes = transform(shingles(tokens(text), shingleN), s => pmod(xxhash64(s), lit(p)))
-    array(ab.map { case (a, b) =>
-      array_min(transform(hashes, h => pmod(h * lit(a) + lit(b), lit(p))))
-    }: _*)
-  }
 
   /** (id, band, bucket) LSH keys of an (__id, __sig) projection: each
     * signature slices into `bands` buckets (hash of the band's row slice).
@@ -99,27 +79,19 @@ object Dedup {
     * every column is a pure function of one document, so a growing corpus
     * indexes only its delta ([[nearDupPairsDelta]]). One pass computes both
     * the verification shingle set (hashed to longs — set ops on 8-byte keys,
-    * not full strings) and the signature; native kernels when available
-    * (~µs/row), declarative HOF fallback otherwise. */
+    * not full strings) and the signature, both by native kernels
+    * (~µs/row; FNV-1a64 shingle hashes, see NativeTextExpressions). */
   def dedupIndex(df: DataFrame, idCol: String, textCol: String,
                  k: Int = 32, shingleN: Int = 3): DataFrame = {
     import graft.functions.NativeTextExpressions
-    val spark = df.sparkSession
     // The signature kernel is the most compute-dense map in the engine
     // (k × |shingles| universal hashes per row); an under-split input
     // serializes it on one core — fan out first (identity at real scan
     // widths; see ScaleOps.fanOutForKernels).
     val src = graft.ops.ScaleOps.fanOutForKernels(df)
-    val nativeSh = NativeTextExpressions.shingleHashes(spark)(col(textCol), shingleN)
-    val shCol = nativeSh
-      .getOrElse(array_distinct(transform(shingles(tokens(col(textCol)), shingleN),
-        s => xxhash64(s))))
-    val sigCol = nativeSh match {
-      case Some(sh) => NativeTextExpressions.minhashSig(spark)(sh, k, 42L)
-        .getOrElse(minhashSignature(col(textCol), k, shingleN))
-      case None => minhashSignature(col(textCol), k, shingleN)
-    }
-    src.select(col(idCol).as("__id"), shCol.as("__sh"), sigCol.as("__sig"))
+    val sh = NativeTextExpressions.shingleHashes(col(textCol), shingleN)
+    src.select(col(idCol).as("__id"), sh.as("__sh"),
+      NativeTextExpressions.minhashSig(sh, k, 42L).as("__sig"))
   }
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against an
@@ -128,11 +100,9 @@ object Dedup {
                           threshold: Double,
                           broadcastCands: Boolean = false): DataFrame = {
     import graft.functions.NativeTextExpressions
-    val spark = idx.sparkSession
     val sa = idx.select(col("__id").as("id_a"), col("__sh").as("sh_a"))
     val sb = idx.select(col("__id").as("id_b"), col("__sh").as("sh_b"))
-    val jac = NativeTextExpressions.longSetJaccard(spark)(col("sh_a"), col("sh_b"))
-      .getOrElse(jaccard(col("sh_a"), col("sh_b")))
+    val jac = NativeTextExpressions.longSetJaccard(col("sh_a"), col("sh_b"))
     // Incremental callers set broadcastCands: the candidate PAIR LIST is
     // ids-only (16 bytes/row, distinct'd) and usually wave-sized, so
     // broadcasting it keeps the CORPUS-sized index un-shuffled for join1

@@ -134,7 +134,7 @@ object IvfIndex {
     val spark = df.sparkSession
     val assigned = df
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
-      .withColumn("cell", Similarity.cellExpr(spark, centroids)(col("vec")))
+      .withColumn("cell", Similarity.cellExpr(centroids)(col("vec")))
       .withColumn("gen", lit(gen))
     // one file per cell: every row of a cell hashes to one task, and each
     // task writes one file per cell dir it holds — so a probe of c cells
@@ -204,7 +204,7 @@ object IvfIndex {
     val probed =
       if (nprobe >= centroids.length) centroids.indices.toArray
       else queries
-        .select(explode(Similarity.probeCellsExpr(spark, centroids, nprobe)(
+        .select(explode(Similarity.probeCellsExpr(centroids, nprobe)(
           asDouble(col(vecCol)))).as("cell"))
         .distinct().collect().map(_.getInt(0)).sorted
     val pruned = st.readWhere(col("cell").isin(probed.map(Int.box): _*))

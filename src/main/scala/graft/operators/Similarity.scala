@@ -47,17 +47,15 @@ object Similarity {
     * row_number. The raw sim rides in the struct tail and is rounded on
     * output, exactly as before. */
   private[operators] def topKTail(cands: DataFrame, k: Int): DataFrame = {
-    val spark = cands.sparkSession
-    val cos = graft.functions.NativeVectorExpressions.cosineFast(spark) _
-    val topk = graft.functions.TopKAggregate.topKMin(spark) _
-    val sim = cos(col("__qv"), col("__cv"))
+    val sim = graft.functions.NativeVectorExpressions
+      .cosineFast(col("__qv"), col("__cv"))
     val key = struct(
       coalesce(-sim, lit(Double.PositiveInfinity)).as("ns"),
       col("neighbor_id").as("nid"),
       sim.as("s"))
     cands
       .groupBy(col("query_id"))
-      .agg(topk(key, k).as("__top"))
+      .agg(graft.functions.TopKAggregate.topKMin(key, k).as("__top"))
       .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__t")))
       .select(col("query_id"), col("__t.nid").as("neighbor_id"),
         round(col("__t.s"), 6).as("sim"), (col("__pos") + 1).as("rank"))
@@ -68,8 +66,7 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int, nBits: Int = 16,
               bands: Int = 4, seed: Long = 42L): DataFrame = {
-    val bitsOf = graft.functions.NativeVectorExpressions
-      .hyperplaneBitsFast(corpus.sparkSession) _
+    val bitsOf = graft.functions.NativeVectorExpressions.hyperplaneBitsFast _
     def banded(df: DataFrame, idAs: String, vecAs: String): DataFrame =
       df.select(col(idCol).as(idAs), asDouble(col(vecCol)).as(vecAs),
           bitsOf(asDouble(col(vecCol)), dim, nBits, seed).as("__bits"))
@@ -110,7 +107,7 @@ object Similarity {
     val centroids =
       trainCentroids(corpus, vecCol, nCells, iters, sampleN, seed)
     val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-      .withColumn("cell", cellExpr(corpus.sparkSession, centroids)(col("__cv")))
+      .withColumn("cell", cellExpr(centroids)(col("__cv")))
     scoreProbed(c, queries, idCol, vecCol, k, nprobe, centroids)
   }
 
@@ -147,9 +144,8 @@ object Similarity {
     centroids
   }
 
-  private def negDot(spark: org.apache.spark.sql.SparkSession)(
-      v: Column, cVec: Array[Double]): Column = {
-    val dot = graft.functions.NativeVectorExpressions.dotFast(spark) _
+  private def negDot(v: Column, cVec: Array[Double]): Column = {
+    val dot = graft.functions.NativeVectorExpressions.dotFast _
     // ONE ArrayType literal per centroid, not dim separate lit() nodes under
     // a CreateArray: cellExpr/probeCellsExpr inline nCells × dim of these —
     // at 16×64 that was ~2k expression nodes per plan, paid in every
@@ -163,19 +159,19 @@ object Similarity {
     * the row's own norm is constant across centroids so the ordering equals
     * cosine ordering, and zero vectors tie at 0 and deterministically take
     * the lowest cell id. */
-  private[operators] def cellExpr(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]])(v: Column): Column = {
+  private[operators] def cellExpr(centroids: Array[Array[Double]])(
+      v: Column): Column = {
     val dists = centroids.zipWithIndex.map { case (cVec, i) =>
-      struct(negDot(spark)(v, cVec).as("negsim"), lit(i).as("cell"))
+      struct(negDot(v, cVec).as("negsim"), lit(i).as("cell"))
     }
     array_min(array(dists: _*)).getField("cell")
   }
 
   /** The `nprobe` nearest cells per query vector (the nprobe largest dots). */
-  private[operators] def probeCellsExpr(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]], nprobe: Int)(v: Column): Column = {
+  private[operators] def probeCellsExpr(centroids: Array[Array[Double]],
+      nprobe: Int)(v: Column): Column = {
     val dists = centroids.zipWithIndex.map { case (cVec, i) =>
-      struct(negDot(spark)(v, cVec).as("negsim"), lit(i).as("cell"))
+      struct(negDot(v, cVec).as("negsim"), lit(i).as("cell"))
     }
     slice(transform(array_sort(array(dists: _*)), s => s.getField("cell")), 1, nprobe)
   }
@@ -187,7 +183,6 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       centroids: Array[Array[Double]],
       exactShortcut: Boolean = true): DataFrame = {
-    val spark = assigned.sparkSession
     // all cells probed ⇒ the cell equi-join degenerates to "every query
     // meets every candidate once": serve the already-pruned candidate set
     // directly against the BROADCAST (bounded-by-contract) query batch and
@@ -200,7 +195,7 @@ object Similarity {
     }
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
       .withColumn("cell",
-        explode(probeCellsExpr(spark, centroids, nprobe)(col("__qv"))))
+        explode(probeCellsExpr(centroids, nprobe)(col("__qv"))))
     topKTail(assigned.join(q, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("__qv"), col("__cv")), k)
@@ -236,7 +231,7 @@ object Similarity {
     * or `cosinePairsAboveLsh` (subquadratic, high thresholds) in pipelines. */
   def cosinePairsAbove(df: DataFrame, idCol: String, vecCol: String,
                        threshold: Double): DataFrame = {
-    val cos = graft.functions.NativeVectorExpressions.cosineFast(df.sparkSession) _
+    val cos = graft.functions.NativeVectorExpressions.cosineFast _
     val a = df.select(col(idCol).as("id_a"), asDouble(col(vecCol)).as("__va"))
     val b = df.select(col(idCol).as("id_b"), asDouble(col(vecCol)).as("__vb"))
     a.join(b, col("id_a") < col("id_b"))
@@ -265,7 +260,7 @@ object Similarity {
                               threshold: Double, blocks: Int = 16): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cos = graft.functions.NativeVectorExpressions.cosineFast(spark) _
+    val cos = graft.functions.NativeVectorExpressions.cosineFast _
     val blockPairs =
       (for { i <- 0 until blocks; j <- i until blocks } yield (i, j)).toDF("i", "j")
     val vecs = df.select(col(idCol).as("__id"), asDouble(col(vecCol)).as("__v"),
@@ -297,9 +292,8 @@ object Similarity {
   def cosinePairsAboveLsh(df: DataFrame, idCol: String, vecCol: String,
                           threshold: Double, dim: Int, nBits: Int = 64,
                           bands: Int = 16, seed: Long = 42L): DataFrame = {
-    val cos = graft.functions.NativeVectorExpressions.cosineFast(df.sparkSession) _
-    val bitsOf = graft.functions.NativeVectorExpressions
-      .hyperplaneBitsFast(df.sparkSession) _
+    val cos = graft.functions.NativeVectorExpressions.cosineFast _
+    val bitsOf = graft.functions.NativeVectorExpressions.hyperplaneBitsFast _
     val banded = df
       .select(col(idCol).as("__id"), asDouble(col(vecCol)).as("__v"),
         bitsOf(asDouble(col(vecCol)), dim, nBits, seed).as("__bits"))

@@ -434,7 +434,7 @@ object DataPipelineQueries {
   }
 
   /** First-maximal language (ties keep the earlier language, matching the
-    * fold in TextFunctions.langIdWith); zero hits → unknown; CJK → zh. */
+    * fold in TextFunctions.langIdDeclarative); zero hits → unknown; CJK → zh. */
   private val langPredOracleExpr: String = """
       CASE WHEN n_cjk > 0 THEN 'zh'
            WHEN greatest(s_en, s_de, s_es, s_fr) = 0 THEN 'unknown'
@@ -1606,7 +1606,7 @@ object DataPipelineQueries {
         _ => graft.TempDirs.newDir("graft_bloom_state"))
       val filter = Decontaminate.standingEvalFilter(s, fdir, "eval_v1", ev,
         "doc_id", "text", n = 5)
-      Decontaminate.overlapReportWithFilter(s, train, ev, "doc_id", "text",
+      Decontaminate.overlapReportWithFilter(train, ev, "doc_id", "text",
         n = 5, filter)
     }, Some("""
       WITH seeded AS (
@@ -1796,7 +1796,7 @@ object DataPipelineQueries {
     // two-phase plan against the plan it replaced.
     Q("q97_source_cap", (s, dir) => {
       val K = 10
-      val topk = graft.functions.TopKAggregate.topKMin(s) _
+      val topk = graft.functions.TopKAggregate.topKMin _
       t(s, dir, "documents")
         .withColumn("h", md5(col("text")))
         .groupBy(col("source"))

@@ -173,7 +173,7 @@ object DedupStream {
           t.evalVersion, t.eval, idCol, textCol, t.n,
           t.expectedEvalShingles, t.bitsPerItem)
         Decontaminate
-          .overlapReportWithFilter(spark, batch, t.eval, idCol, textCol, t.n, filter)
+          .overlapReportWithFilter(batch, t.eval, idCol, textCol, t.n, filter)
           .write.mode("overwrite").parquet(s"${t.reportDir}/b_$batchId")
       }
       // Retract our own marker FIRST: if this is a crash-replay, the version

@@ -3,8 +3,9 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one place graft reaches for a `private[sql]` Spark API: wrapping a
-  * Catalyst [[LogicalPlan]] back into a [[DataFrame]]. The workload advisor
+/** graft's door to a `private[sql]` Spark API (the other is
+  * [[ColumnBridge]]): wrapping a Catalyst [[LogicalPlan]] back into a
+  * [[DataFrame]]. The workload advisor
   * observes Join subtrees inside analyzed plans and must later *profile* a
   * join's child (one key-distribution aggregation over its rows) and *rebuild*
   * the join salted — both need the subtree as a queryable frame, and

@@ -56,13 +56,13 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: native minhash signature slots only decrease when shingles are added") {
-    import graft.functions.NativeTextExpressions
+    import graft.functions.NativeTextExpressions.minhashSig
     import spark.implicits._
-    assume(NativeTextExpressions.install(spark))
     val gen = Gen.nonEmptyListOf(Gen.choose(1L, 1000000L))
     samples(gen, 8).foreach { hashes =>
       val df = Seq((hashes, hashes ++ hashes.map(_ + 7))).toDF("a", "b")
-        .selectExpr("minhash_sig(a, 16, 42L) AS sa", "minhash_sig(b, 16, 42L) AS sb")
+        .select(minhashSig(col("a"), 16, 42L).as("sa"),
+          minhashSig(col("b"), 16, 42L).as("sb"))
       val row = df.head
       val sa = row.getSeq[Long](0); val sb = row.getSeq[Long](1)
       assert(sa.zip(sb).forall { case (x, y) => y <= x })

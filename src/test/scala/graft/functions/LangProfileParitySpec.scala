@@ -48,7 +48,6 @@ class LangProfileParitySpec extends SparkSpec {
   }
 
   test("lang_profile: langId/qualityScore/tokenCount match the declarative forms on fuzz input") {
-    assume(NativeTextExpressions.install(spark))
     import spark.implicits._
     val df = fuzzDocs.toDF("text")
     // sanity: the kernel is actually in the plan (not silently fallen back)
@@ -73,7 +72,6 @@ class LangProfileParitySpec extends SparkSpec {
   }
 
   test("lang_profile: parity on the real sf corpus") {
-    assume(NativeTextExpressions.install(spark))
     val mismatches = sf("documents").select(
       TextFunctions.langId(col("text")).as("lang_k"),
       TextFunctions.langIdDeclarative(col("text"),
@@ -89,7 +87,6 @@ class LangProfileParitySpec extends SparkSpec {
   }
 
   test("lang_profile: known-value spot checks (tie-break, zero hits, CJK, null)") {
-    assume(NativeTextExpressions.install(spark))
     import spark.implicits._
     val df = Seq(
       ("the und", "en"),            // 1-1 tie → earliest language wins
@@ -111,13 +108,12 @@ class LangProfileParitySpec extends SparkSpec {
   }
 
   test("word_shingles: position-for-position parity with shingles(tokens(text), n) on fuzz input") {
-    assume(NativeTextExpressions.install(spark))
     import spark.implicits._
     val df = fuzzDocs.toDF("text")
     Seq(1, 2, 3, 5).foreach { n =>
       val rows = df.select(
         col("text"),
-        NativeTextExpressions.wordShingles(spark)(col("text"), n).get.as("k"),
+        NativeTextExpressions.wordShingles(col("text"), n).as("k"),
         TextFunctions.shingles(TextFunctions.tokens(col("text")), n).as("d")).collect()
       rows.foreach { r =>
         val doc = Option(r.getString(0)).map(_.take(60)).orNull
@@ -128,7 +124,7 @@ class LangProfileParitySpec extends SparkSpec {
     // real corpus, the two consumed arities
     Seq(2, 3).foreach { n =>
       val bad = sf("documents").select(
-        NativeTextExpressions.wordShingles(spark)(col("text"), n).get.as("k"),
+        NativeTextExpressions.wordShingles(col("text"), n).as("k"),
         TextFunctions.shingles(TextFunctions.tokens(col("text")), n).as("d"))
         .filter(!(col("k") <=> col("d"))).count()
       assert(bad === 0L, s"n=$n corpus mismatches: $bad")

@@ -9,7 +9,7 @@ import graft.SparkSpec
 class TopKAggregateSpec extends SparkSpec {
 
   private def topk(e: org.apache.spark.sql.Column, k: Int) =
-    TopKAggregate.topKMin(spark)(e, k)
+    TopKAggregate.topKMin(e, k)
 
   test("keeps the K smallest per group across many partitions, ascending") {
     // 40 input partitions force real partial buffers + a real merge phase
@@ -49,20 +49,19 @@ class TopKAggregateSpec extends SparkSpec {
     assert(got === Seq(2, 5))
   }
 
-  test("SQL surface: topk_min is registered and matches the window form") {
-    TopKAggregate.install(spark)
-    sf("lineitem").createOrReplaceTempView("li_topk")
-    val viaAgg = spark.sql(
-      """SELECT l_returnflag, topk_min(l_extendedprice, 3) AS t
-         FROM li_topk GROUP BY l_returnflag ORDER BY l_returnflag""")
+  test("topKMin matches the row_number window form on lineitem") {
+    import org.apache.spark.sql.expressions.Window
+    val li = sf("lineitem")
+    val viaAgg = li.groupBy("l_returnflag")
+      .agg(topk(col("l_extendedprice"), 3).as("t"))
+      .orderBy("l_returnflag")
       .collect().map(r => (r.getString(0), r.getSeq[java.math.BigDecimal](1)))
-    val viaWindow = spark.sql(
-      """SELECT l_returnflag, collect_list(l_extendedprice) AS t FROM (
-           SELECT l_returnflag, l_extendedprice,
-                  row_number() OVER (PARTITION BY l_returnflag
-                                     ORDER BY l_extendedprice) AS rn
-           FROM li_topk) WHERE rn <= 3
-         GROUP BY l_returnflag ORDER BY l_returnflag""")
+    val viaWindow = li
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("l_returnflag").orderBy("l_extendedprice")))
+      .filter(col("rn") <= 3)
+      .groupBy("l_returnflag").agg(collect_list("l_extendedprice").as("t"))
+      .orderBy("l_returnflag")
       .collect().map(r => (r.getString(0), r.getSeq[java.math.BigDecimal](1).sorted))
     assert(viaAgg.map(_._1).toSeq === viaWindow.map(_._1).toSeq)
     viaAgg.zip(viaWindow).foreach { case ((g, a), (_, w)) =>

@@ -46,7 +46,7 @@ class DecontaminateSpec extends SparkSpec {
     val train = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0)
     val eval = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 === 0)
     val plain = Decontaminate.overlapReport(train, eval, "doc_id", "text", n = 3)
-    val bloom = Decontaminate.overlapReportBloom(spark, train, eval, "doc_id", "text", n = 3)
+    val bloom = Decontaminate.overlapReportBloom(train, eval, "doc_id", "text", n = 3)
     assert(plain.count() > 0, "fixture must produce some overlap")
     assert(bloom.exceptAll(plain).isEmpty && plain.exceptAll(bloom).isEmpty)
   }
@@ -55,7 +55,7 @@ class DecontaminateSpec extends SparkSpec {
     import spark.implicits._
     val train = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("id", "text")
     val eval = Seq((10L, "alpha beta gamma delta epsilon zeta")).toDF("id", "text")
-    val out = Decontaminate.overlapReportBloom(spark, train, eval, "id", "text", n = 5)
+    val out = Decontaminate.overlapReportBloom(train, eval, "id", "text", n = 5)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("graft_bloom_probe"),
       s"expected a graft_bloom_probe pre-filter in the physical plan:\n$plan")
@@ -72,7 +72,7 @@ class DecontaminateSpec extends SparkSpec {
     import spark.implicits._
     val train = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("id", "text")
     val eval = Seq.empty[(Long, String)].toDF("id", "text")
-    assert(Decontaminate.overlapReportBloom(spark, train, eval, "id", "text").count() === 0L)
+    assert(Decontaminate.overlapReportBloom(train, eval, "id", "text").count() === 0L)
   }
 
   test("standing filter: reloaded filter yields the identical report") {
@@ -87,8 +87,8 @@ class DecontaminateSpec extends SparkSpec {
     // first call builds + commits; it must equal the build-per-run path
     val built = Decontaminate.standingEvalFilter(spark, dir, "v1", eval,
       "doc_id", "text", n = 3)
-    assume(built.isDefined, "native Bloom expressions unavailable")
-    val fresh = Decontaminate.overlapReportBloom(spark, train, eval,
+    assert(built.isDefined, "eval corpus must yield shingles")
+    val fresh = Decontaminate.overlapReportBloom(train, eval,
       "doc_id", "text", n = 3)
 
     // the reloaded bytes are the committed ones, NOT a rebuild: feeding a
@@ -97,9 +97,9 @@ class DecontaminateSpec extends SparkSpec {
     val poisoned = Seq((-1L, "should never be scanned")).toDF("doc_id", "text")
     val reloaded = Decontaminate.standingEvalFilter(spark, dir, "v1", poisoned,
       "doc_id", "text", n = 3)
-    assert(reloaded.get.get.sameElements(built.get.get))
+    assert(reloaded.get.sameElements(built.get))
 
-    val viaReloaded = Decontaminate.overlapReportWithFilter(spark, train, eval,
+    val viaReloaded = Decontaminate.overlapReportWithFilter(train, eval,
       "doc_id", "text", 3, reloaded)
     assert(fresh.count() > 0, "fixture must produce overlap")
     assert(viaReloaded.exceptAll(fresh).isEmpty && fresh.exceptAll(viaReloaded).isEmpty)
@@ -108,7 +108,7 @@ class DecontaminateSpec extends SparkSpec {
     val emptyEval = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val v2 = Decontaminate.standingEvalFilter(spark, dir, "v2", emptyEval,
       "doc_id", "text", n = 3)
-    assert(v2 === Some(None))
+    assert(v2 === None)
     assert(Decontaminate.loadEvalFilter(spark, dir, "v2") === Some(None))
   }
 

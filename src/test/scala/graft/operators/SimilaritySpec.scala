@@ -119,7 +119,7 @@ class SimilaritySpec extends SparkSpec {
     val centroids = Similarity.trainCentroids(e, "embedding", 8, 5, 10000, 42L)
     val assigned = e.select(col("vec_id").as("neighbor_id"),
         asDouble(col("embedding")).as("__cv"))
-      .withColumn("cell", Similarity.cellExpr(spark, centroids)(col("__cv")))
+      .withColumn("cell", Similarity.cellExpr(centroids)(col("__cv")))
     val cellPath = Similarity.scoreProbed(assigned, q, "vec_id", "embedding",
       k = 5, nprobe = 8, centroids, exactShortcut = false)
       .select("query_id", "neighbor_id").collect()

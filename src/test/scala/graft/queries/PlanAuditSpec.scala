@@ -98,6 +98,38 @@ class PlanAuditSpec extends SparkSpec {
     assert(!q98.contains("CartesianProduct"), s"q98 fell back to cartesian:\n$q98")
   }
 
+  test("curation rows run their native kernels") {
+    // Each row's executed plan must name the kernel its operator builds, so
+    // a slide back to a declarative formulation fails here rather than only
+    // in a benchmark. q72/q90/q92 evaluate their pair pipeline while the
+    // frame is built (their plans are local-relation tails); the near-dup
+    // pipeline test below pins that subplan's kernels instead.
+    val kernels = Seq(
+      "q42_dedup_minhash_lsh" -> Seq("shingle_hashes", "minhash_sig", "long_set_jaccard"),
+      "q44_ngram_jaccard" -> Seq("word_shingles"),
+      "q46_ann_bruteforce" -> Seq("vec_cosine", "partial_topk_min"),
+      "q47_ann_lsh" -> Seq("hyperplane_bits", "vec_cosine", "partial_topk_min"),
+      "q48_embedding_neardup" -> Seq("vec_cosine"),
+      "q49_ann_ivf" -> Seq("vec_cosine", "partial_topk_min"),
+      "q49b_ann_ivf_recall" -> Seq("vec_dot", "vec_cosine", "partial_topk_min"),
+      "q51_lang_quality" -> Seq("lang_profile"),
+      "q52_source_profile" -> Seq("lang_profile"),
+      "q76_curation_pipeline" -> Seq("lang_profile"),
+      "q79_neardup_lsh" -> Seq("hyperplane_bits", "vec_cosine"),
+      "q93_bloom_decontamination" -> Seq("graft_bloom_probe"),
+      "q96_top_ngrams" -> Seq("word_shingles"),
+      "q97_source_cap" -> Seq("partial_topk_min"),
+      "q98_semantic_decontam" -> Seq("vec_cosine"),
+      "q126_ann_index" -> Seq("vec_cosine", "partial_topk_min"),
+      "q131_semantic_hybrid_search" -> Seq("vec_cosine", "partial_topk_min"))
+    kernels.foreach { case (name, want) =>
+      val plan = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.executedPlan.toString
+      val missing = want.filterNot(plan.contains)
+      assert(missing.isEmpty, s"$name: kernels ${missing.mkString(", ")} not in plan:\n$plan")
+    }
+  }
+
   test("round-10 row-level DML reads keep their scale-sane physical shapes") {
     // The merge-on-read equality-delete resolves as a BROADCAST anti-join
     // over the base scan — the delete file is small by the mode's own
@@ -157,6 +189,9 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"near-dup pair pipeline lost its equi-join shape:\n$plan")
+    Seq("shingle_hashes", "minhash_sig", "long_set_jaccard").foreach { k =>
+      assert(plan.contains(k), s"near-dup pair pipeline lost its $k kernel:\n$plan")
+    }
     spark.catalog.clearCache()
   }
 
