@@ -3439,9 +3439,10 @@ object DataPipelineQueries {
     // spec computed with the SPEC's own transform functions (epoch-based
     // years, canonical murmur3 buckets per Appendix B — deliberately NOT
     // Spark's seed-42 hash, so a foreign Iceberg engine recomputes the
-    // identical layout), and readTable prunes transform-aware: the date
-    // range keeps only matching year cells, the custkey equality keeps
-    // only its bucket. The oracle replays the filter declaratively.
+    // identical layout), and readTable prunes transform-aware: the custkey
+    // equality keeps only its bucket (the DATE literal on the TIMESTAMP
+    // column o_orderdate does not fit its domain and is residual-only).
+    // The oracle replays the filter declaratively.
     Q("q133_iceberg_transform_export", (s, dir) => {
       import graft.sources.IcebergExport
       val dest = transformExportFixture(s, dir)
@@ -3786,8 +3787,9 @@ object DataPipelineQueries {
     // evolution; at 100 TB a layout change must never force a rewrite).
     // Files keep the spec they were written under and the read prunes
     // each file against ITS spec: require()s pin pruning under BOTH
-    // layouts. The timed query reads through a date predicate that the
-    // old spec's year tuples and both specs' footer bounds serve.
+    // layouts. The timed query's DATE literal does not fit the TIMESTAMP
+    // column o_orderdate, so it prunes no file and is applied only as the
+    // residual filter.
     Q("q140_iceberg_spec_evolution", (s, dir) => {
       import graft.sources.IcebergExport
       import graft.sources.IcebergExport.Predicate
@@ -3802,10 +3804,12 @@ object DataPipelineQueries {
           IcebergExport.export(o.filter(col("o_orderkey") % 2 === 1)
             .coalesce(2), d, partitionBy = Seq("bucket(4, o_custkey)"))
           // the old layout still prunes: a tight date range keeps only
-          // the matching year cells of the spec-0 files
+          // the matching year cells of the spec-0 files (a timestamp
+          // literal, the column's own type — a date literal would be cast
+          // by Spark and never prunes)
           IcebergExport.readTable(s, d, preds = Seq(
             Predicate("o_orderdate", "<",
-              java.sql.Date.valueOf("1993-01-01"))))
+              java.sql.Timestamp.valueOf("1993-01-01 00:00:00"))))
           val (k1, t1) = IcebergExport.lastPlanStats
           require(k1 < t1, s"year-spec files must prune: $k1/$t1")
           // the new layout prunes too: a key equality keeps only its

@@ -6,6 +6,11 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression,
+  GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
+  LessThanOrEqual, Literal, Not}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -89,6 +94,8 @@ import org.json4s.jackson.JsonMethods
   * transforms. */
 object IcebergExport {
 
+  import FilePruning.{SpecField, entryOf, parseSpecEntry}
+
   /** One export's receipt: the snapshot id written, the data files THIS
     * export added, and their row count. */
   final case class Export(snapshotId: Long, dataFiles: Seq[String], rows: Long)
@@ -102,15 +109,10 @@ object IcebergExport {
   /** A pruning/filter predicate for [[readTable]] / [[plannedDataFiles]]:
     * `op` ∈ {=, !=, <, <=, >, >=, in, isnull, notnull} over one top-level
     * column (`value` is ignored for the null ops; for `in` it is the
-    * Iterable of values). Comparison ops evaluate against partition tuples
-    * (transform-aware) and column bounds inclusively; `in` prunes as a
-    * disjunction of equalities (bucket transforms derive a cell per
-    * value); `!=` excludes only files provably all-`value` (an identity
-    * tuple equal to it, or bounds collapsed onto it) and otherwise applies
-    * as residual; null ops evaluate against the manifests'
-    * `null_value_counts`/`value_counts` metrics. Any uncertainty keeps the
-    * file; [[readTable]] also applies it as a residual row filter, so
-    * results equal `readTable().filter(...)`. */
+    * Iterable of values). Files prune inclusively against their bounds,
+    * null/value counts and partition tuples ([[FilePruning.keep]]), and
+    * [[readTable]] also applies it as a residual row filter, so results
+    * equal `readTable().filter(...)`. */
   final case class Predicate(column: String, op: String, value: Any = null) {
     require(Set("=", "!=", "<", "<=", ">", ">=", "in", "isnull", "notnull")(op),
       s"unsupported op $op")
@@ -517,114 +519,7 @@ object IcebergExport {
       case _ => None
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** A predicate literal normalized to the same comparison domain. */
-  private def domainOf(v: Any): Option[Any] = v match {
-    case n: Int => Some(n.toLong)
-    case n: Long => Some(n)
-    case n: Short => Some(n.toLong)
-    case n: Byte => Some(n.toLong)
-    case n: Float => Some(n.toDouble)
-    case n: Double => Some(n)
-    case s: String => Some(s)
-    case b: Boolean => Some(b)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => Some(d.toEpochDay)
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000L + (t.getNanos / 1000) % 1000)
-    case i: java.time.Instant =>
-      Some(i.getEpochSecond * 1000000L + i.getNano / 1000)
-    // decimals compare as java.math.BigDecimal (compareTo is
-    // scale-insensitive, so a literal at a different scale still orders
-    // correctly against the column's bounds)
-    case d: java.math.BigDecimal => Some(d)
-    case d: scala.math.BigDecimal => Some(d.bigDecimal)
-    case d: org.apache.spark.sql.types.Decimal => Some(d.toJavaBigDecimal)
-    case _ => None
-  }
-
-  /** Ordering within one comparison domain; integral vs floating compares
-    * as double (adequate for pruning — any uncertainty keeps the file). */
-  private def domainCompare(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Long, y: Long) => Some(java.lang.Long.compare(x, y))
-    case (x: Double, y: Double) => Some(java.lang.Double.compare(x, y))
-    case (x: Long, y: Double) => Some(java.lang.Double.compare(x.toDouble, y))
-    case (x: Double, y: Long) => Some(java.lang.Double.compare(x, y.toDouble))
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-      Some(x.compareTo(y))
-    case (x: java.math.BigDecimal, y: Long) =>
-      Some(x.compareTo(java.math.BigDecimal.valueOf(y)))
-    case (x: Long, y: java.math.BigDecimal) =>
-      Some(java.math.BigDecimal.valueOf(x).compareTo(y))
-    case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
-    case (x: String, y: String) =>
-      val bx = x.getBytes("UTF-8"); val by = y.getBytes("UTF-8")
-      var i = 0
-      val n = math.min(bx.length, by.length)
-      while (i < n) {
-        val c = (bx(i) & 0xff) - (by(i) & 0xff)
-        if (c != 0) return Some(c)
-        i += 1
-      }
-      Some(bx.length - by.length)
-    case _ => None
-  }
-
   // ── partition transforms (spec §"Partition Transforms") ────────────────
-
-  /** One partition-spec field. `entry` is the store-grammar form the
-    * caller writes ("days(ts)", "bucket(8, id)", or a plain identity
-    * column name — the same grammar [[SnapshotTable]] records), `name` the
-    * Iceberg partition field name the spec/manifests/hive dirs carry,
-    * `transform` the spec's transform string ("identity", "day", "month",
-    * "year", "hour", "bucket[N]", "truncate[W]"), `source` the schema
-    * column the transform applies to. */
-  private[sources] final case class SpecField(
-      entry: String, name: String, transform: String, source: String) {
-    def isIdentity: Boolean = transform == "identity"
-  }
-
-  private val DayRe = "(?i)^days?\\((\\w+)\\)$".r
-  private val MonthRe = "(?i)^months?\\((\\w+)\\)$".r
-  private val YearRe = "(?i)^years?\\((\\w+)\\)$".r
-  private val HourRe = "(?i)^hours?\\((\\w+)\\)$".r
-  private val BucketRe = "(?i)^bucket\\((\\d+)\\s*,\\s*(\\w+)\\)$".r
-  private val TruncRe = "(?i)^truncate\\((\\d+)\\s*,\\s*(\\w+)\\)$".r
-
-  /** Parse one partitionBy entry (store grammar) into its spec field.
-    * Partition field names follow the Iceberg convention `<src>_<kind>`. */
-  private[sources] def parseSpecEntry(entry: String): SpecField =
-    entry.trim match {
-      case DayRe(src) => SpecField(s"days($src)", s"${src}_day", "day", src)
-      case MonthRe(src) =>
-        SpecField(s"months($src)", s"${src}_month", "month", src)
-      case YearRe(src) => SpecField(s"years($src)", s"${src}_year", "year", src)
-      case HourRe(src) => SpecField(s"hours($src)", s"${src}_hour", "hour", src)
-      case BucketRe(n, src) =>
-        SpecField(s"bucket($n, $src)", s"${src}_bucket", s"bucket[$n]", src)
-      case TruncRe(w, src) =>
-        SpecField(s"truncate($w, $src)", s"${src}_trunc", s"truncate[$w]", src)
-      case id => SpecField(id, id, "identity", id)
-    }
-
-  /** Rebuild the store-grammar entry from a spec field's (transform,
-    * source) — the read-side inverse of [[parseSpecEntry]]. */
-  private def entryOf(transform: String, source: String): String = {
-    def arg(t: String) = t.substring(t.indexOf('[') + 1, t.length - 1)
-    transform match {
-      case "identity" => source
-      case "day" => s"days($source)"
-      case "month" => s"months($source)"
-      case "year" => s"years($source)"
-      case "hour" => s"hours($source)"
-      case b if b.startsWith("bucket[") => s"bucket(${arg(b)}, $source)"
-      case t if t.startsWith("truncate[") => s"truncate(${arg(t)}, $source)"
-      case other => throw new IllegalArgumentException(
-        s"iceberg read: unsupported partition transform $other")
-    }
-  }
-
-  private def intArg(transform: String): Int =
-    transform.substring(transform.indexOf('[') + 1, transform.length - 1).toInt
 
   /** Partition tuple type of a spec field (spec transform result types:
     * day → date; month/year/hour/bucket → int; identity/truncate → the
@@ -726,7 +621,7 @@ object IcebergExport {
         case _ => unsupported()
       }
       case b if b.startsWith("bucket[") =>
-        val n = intArg(b)
+        val n = sf.arg
         val hashLong = udf((v: java.lang.Long) =>
           if (v == null) null else Int.box(bucketLong(v, n)))
         srcType match {
@@ -742,7 +637,7 @@ object IcebergExport {
           case _ => unsupported()
         }
       case t if t.startsWith("truncate[") =>
-        val w = intArg(t)
+        val w = sf.arg
         srcType match {
           case StringType => substring(c, 1, w)
           case LongType =>
@@ -764,73 +659,6 @@ object IcebergExport {
         }
       case other => throw new IllegalArgumentException(
         s"iceberg export: unsupported transform $other")
-    }
-  }
-
-  /** Apply a spec field's transform to a predicate literal, in the SAME
-    * comparison domain [[domainOf]] uses (Long for the integral family —
-    * epoch days for day, months-from-1970 for month, etc. — String for
-    * string truncates). None = not derivable; the caller falls back to
-    * column bounds. */
-  private[sources] def evalTransform(sf: SpecField, srcType: DataType,
-      v: Any): Option[Any] = {
-    val dom = domainOf(v)
-    def utcDate: Option[java.time.LocalDate] = srcType match {
-      case DateType => dom.collect {
-        case d: Long => java.time.LocalDate.ofEpochDay(d) }
-      case _: TimestampType => dom.collect { case us: Long =>
-        java.time.LocalDate.ofEpochDay(Math.floorDiv(us, 86400000000L)) }
-      case _ => None
-    }
-    sf.transform match {
-      case "identity" => dom
-      case "day" => utcDate.map(_.toEpochDay)
-      case "month" => utcDate.map(d =>
-        ((d.getYear - 1970) * 12 + d.getMonthValue - 1).toLong)
-      case "year" => utcDate.map(d => (d.getYear - 1970).toLong)
-      case "hour" => srcType match {
-        case _: TimestampType => dom.collect {
-          case us: Long => Math.floorDiv(us, 3600000000L) }
-        case _ => None
-      }
-      case b if b.startsWith("bucket[") =>
-        val n = intArg(b)
-        srcType match {
-          case StringType => v match {
-            case s: String => Some(bucketString(s, n).toLong)
-            case _ => None
-          }
-          case DateType | _: TimestampType |
-               IntegerType | LongType | ShortType | ByteType =>
-            dom.collect { case x: Long => bucketLong(x, n).toLong }
-          case _ => None
-        }
-      case t if t.startsWith("truncate[") =>
-        val w = intArg(t)
-        srcType match {
-          case StringType => v match {
-            case s: String =>
-              // code points, not UTF-16 units — the spec's definition
-              // (and Spark substring's), or supplementary characters
-              // would compare a lone surrogate against the tuple
-              val cps = s.codePoints().toArray
-              Some(new String(cps, 0, math.min(w, cps.length)))
-            case _ => None
-          }
-          case IntegerType | LongType | ShortType | ByteType =>
-            dom.collect { case x: Long =>
-              // mirror the write side exactly: long arithmetic for long
-              // sources (wraps at Long.MinValue), 32-bit arithmetic for
-              // the int family (wraps at Int.MinValue; byte/short values
-              // can never overflow int)
-              srcType match {
-                case LongType => x - Math.floorMod(x, w.toLong)
-                case _ => (x.toInt - Math.floorMod(x.toInt, w)).toLong
-              }
-            }
-          case _ => None
-        }
-      case _ => None
     }
   }
 
@@ -2673,157 +2501,48 @@ object IcebergExport {
         }
     }
 
-  /** Does a range predicate on this truncate field risk the wrap at the
-    * type minimum? Only the single LOWEST cell can wrap (and only when the
-    * type minimum is not W-aligned), so the check is exact: the tuple
-    * equals the wrapped image of that cell, or the literal falls inside
-    * it. String truncation and aligned widths never wrap. */
-  private def truncateWrapRisk(sf: SpecField, srcType: DataType,
-      tup: Any, litValue: Any): Boolean =
-    sf.transform.startsWith("truncate[") && (srcType match {
-      // byte/short truncate in int arithmetic and can never overflow it;
-      // only the int and long sources have a wrap cell (at their minimum)
-      case IntegerType | LongType =>
-        val w = intArg(sf.transform).toLong
-        val typeMin: Long =
-          if (srcType == IntegerType) Int.MinValue else Long.MinValue
-        if (Math.floorMod(typeMin, w) == 0L) false
-        else {
-          // the wrap cell's tuple AS WRITTEN (32-bit wrap for int; for
-          // long the subtraction itself overflows — also as written)
-          val wrappedCell: Long = srcType match {
-            case IntegerType =>
-              (typeMin.toInt - Math.floorMod(typeMin.toInt, w.toInt)).toLong
-            case _ => typeMin - Math.floorMod(typeMin, w)
-          }
-          val tupIsWrapped = tup == wrappedCell
-          val litInWrapCell = domainOf(litValue).collect { case x: Long =>
-            Math.floorDiv(x, w) == Math.floorDiv(typeMin, w) }.contains(true)
-          tupIsWrapped || litInWrapCell
-        }
-      case _ => false
-    })
-
-  /** Inclusive metrics/partition evaluation: may this file contain a
-    * matching row? Any uncertainty keeps the file. */
-  private def mayMatch(f: PlannedFile, preds: Seq[Predicate],
-      fieldIds: Map[String, Int], types: Map[String, DataType],
-      specs: Seq[SpecField]): Boolean =
-    preds.forall { p =>
-      if (p.op == "isnull" || p.op == "notnull") {
-        // metrics maps: a file with zero nulls can't match IS NULL; a file
-        // that is all-null can't match IS NOT NULL. Missing metrics keep
-        // the file (identity partition columns live in hive dirs, not in
-        // file footers, so they never prune here — conservative).
-        fieldIds.get(p.column).forall { fid =>
-          if (p.op == "isnull") f.nullCounts.get(fid).forall(_ > 0)
-          else (for (vc <- f.valueCounts.get(fid); nc <- f.nullCounts.get(fid))
-            yield vc > nc).getOrElse(true)
-        }
-      } else if (p.op == "in") p.value match {
-        // a disjunction of equalities: the file survives if ANY listed
-        // value may match — on a bucket-partitioned column each value
-        // derives its cell, so IN prunes to the union of named cells.
-        // IN () matches nothing (the residual is `false` too).
-        case vs: Iterable[_] =>
-          vs.exists(v => cmpMayMatch(f, p.column, "=", v, fieldIds, types, specs))
-        case _ => true
-      } else if (p.op == "!=") {
-        // only a provably all-`v` file is excludable: an identity tuple
-        // equal to v, or bounds collapsed onto exactly v (bounds ignore
-        // nulls, but null rows never satisfy != so they can't rescue the
-        // file). Everything else keeps the file; the residual filters rows.
-        domainOf(p.value).forall { lv =>
-          val identityAllV = specs
-            .filter(sf => sf.isIdentity && sf.source == p.column)
-            .exists { sf =>
-              (for {
-                tupRaw <- f.partition.get(sf.name)
-                tup <- domainOf(tupRaw)
-                c <- domainCompare(tup, lv)
-              } yield c == 0).getOrElse(false)
-            }
-          val boundsAllV = (for {
-            fid <- fieldIds.get(p.column)
-            dt <- types.get(p.column)
-            loB <- f.lower.get(fid); hiB <- f.upper.get(fid)
-            lo <- boundValue(dt, loB); hi <- boundValue(dt, hiB)
-            cLo <- domainCompare(lo, lv); cHi <- domainCompare(hi, lv)
-          } yield cLo == 0 && cHi == 0).getOrElse(false)
-          !(identityAllV || boundsAllV)
-        }
-      } else cmpMayMatch(f, p.column, p.op, p.value, fieldIds, types, specs)
+  /** The file filter for `conj` over files written under `specs`: each
+    * file's binary bounds, null/value counts and partition tuple become a
+    * [[FilePruning.FileMetrics]] record, and [[FilePruning.keep]] decides
+    * over the conjuncts with their tuple conjuncts derived — the bucket
+    * cell computed with the spec's own murmur3 (Appendix B). */
+  private def pruner(st: TableState, specs: Seq[SpecField],
+      conj: Seq[Expression]): PlannedFile => Boolean = {
+    val byName = st.fields.fields.map(f => f.name -> f.dataType).toMap
+    val types = FilePruning.typesOf(st.fields) ++ specs.filterNot(_.isIdentity)
+      .flatMap(sf => byName.get(sf.source).map(sf.name.toLowerCase -> partResultType(sf, _)))
+    def bucket(l: Literal, ct: DataType, n: Int) = FilePruning.domainValue(l, ct).collect {
+      case s: String => bucketString(s, n)
+      case x: Long => bucketLong(x, n)
     }
-
-  /** One comparison op (=, <, <=, >, >=) against a file's partition tuple
-    * and column bounds — the shared leg for plain predicates and each IN
-    * disjunct. */
-  private def cmpMayMatch(f: PlannedFile, column: String, op: String,
-      value: Any, fieldIds: Map[String, Int], types: Map[String, DataType],
-      specs: Seq[SpecField]): Boolean = {
-      val pv = domainOf(value)
-      if (pv.isEmpty) true
-      else {
-        // partition tuple: every spec field sourced from the predicate's
-        // column derives a check. Identity tuples are exact; monotonic
-        // transforms (day/month/year/hour/truncate) relax </ > to their
-        // inclusive forms (rows below v share v's day); bucket derives
-        // equality only (hash scatter has no order).
-        val specChecks = specs.filter(_.source == column).flatMap { sf =>
-          for {
-            tupRaw <- f.partition.get(sf.name)
-            tup <- domainOf(tupRaw)
-            srcType <- types.get(column)
-            tv <- evalTransform(sf, srcType, value)
-            res <-
-              if (sf.isIdentity)
-                domainCompare(tup, tv).map { c => op match {
-                  case "=" => c == 0
-                  case "<" => c < 0
-                  case "<=" => c <= 0
-                  case ">" => c > 0
-                  case ">=" => c >= 0
-                }}
-              else if (sf.transform.startsWith("bucket[")) {
-                if (op == "=") domainCompare(tup, tv).map(_ == 0) else None
-              } else if (op != "=" &&
-                  truncateWrapRisk(sf, srcType, tup, value)) {
-                // truncate over the int family wraps at the type minimum
-                // (write and read mirror it), which breaks the monotonicity
-                // the </> relaxation assumes: a value within W-1 of the
-                // minimum wraps to a large positive tuple. '=' is safe
-                // (both sides wrap identically); for range ops, skip the
-                // partition check and fall back to column bounds whenever
-                // the tuple or the literal sits in the one wrapping cell.
-                None
-              } else
-                domainCompare(tup, tv).map { c => op match {
-                  case "=" => c == 0
-                  case "<" | "<=" => c <= 0
-                  case ">" | ">=" => c >= 0
-                }}
-          } yield res
-        }
-        val byPartition =
-          if (specChecks.isEmpty) None else Some(specChecks.forall(identity))
-        byPartition.getOrElse {
-          // column bounds: inclusive range check
-          (for {
-            fid <- fieldIds.get(column)
-            dt <- types.get(column)
-            loB <- f.lower.get(fid); hiB <- f.upper.get(fid)
-            lo <- boundValue(dt, loB); hi <- boundValue(dt, hiB)
-            cLo <- domainCompare(lo, pv.get); cHi <- domainCompare(hi, pv.get)
-          } yield op match {
-            case "=" => cLo <= 0 && cHi >= 0
-            case "<" => cLo < 0
-            case "<=" => cLo <= 0
-            case ">" => cHi > 0
-            case ">=" => cHi >= 0
-          }).getOrElse(true)
-        }
-      }
+    val derived = FilePruning.deriveTuples(conj, specs, types, bucket)
+    val ids = st.fieldIds.map { case (n, id) => n.toLowerCase -> id }
+    f => {
+      // a tuple pins its field (an identity tuple: its source column) to
+      // one value
+      val tuples = specs.flatMap { sf =>
+        val key = (if (sf.isIdentity) sf.source else sf.name).toLowerCase
+        for (raw <- f.partition.get(sf.name); dt <- types.get(key); v <- tupleValue(raw, dt))
+          yield key -> (v, v)
+      }.toMap
+      def bounds(c: String) = for {
+        id <- ids.get(c); dt <- types.get(c)
+        lo <- f.lower.get(id).flatMap(boundValue(dt, _))
+        hi <- f.upper.get(id).flatMap(boundValue(dt, _))
+      } yield (lo, hi)
+      def count(counts: Map[Int, Long])(c: String) = ids.get(c).flatMap(counts.get)
+      FilePruning.keep(types, FilePruning.FileMetrics(c => tuples.get(c).orElse(bounds(c)),
+        count(f.nullCounts), count(f.valueCounts)), derived)
     }
+  }
+
+  /** A partition tuple's Avro value in the domain of its column of type
+    * `dt`: Avro hands dates over as epoch-day ints and timestamps as
+    * epoch-micro longs. */
+  private[sources] def tupleValue(raw: Any, dt: DataType): Option[Any] =
+    scala.util.Try(
+      if (dt == DateType || dt == TimestampType) Literal(raw, dt) else Literal(raw)
+    ).toOption.flatMap(FilePruning.domainValue(_, dt))
 
   /** The data files the chosen snapshot plans (content=0, live statuses),
     * resolved ONLY through the Iceberg metadata chain. (path, record_count)
@@ -3249,12 +2968,14 @@ object IcebergExport {
     val st0 = readState(spark, dir)
     val st = snapshotId.map(stateAt(st0, _)).getOrElse(st0)
     val planned = plannedOf(spark, st, snapshotId.getOrElse(st.currentSnapshotId))
-    val types = st.fields.fields.map(f => f.name -> f.dataType).toMap
     val dataAll = planned.filter(_.content == 0)
+    val conj = preds.map(residual)
     // each file prunes against the spec it was WRITTEN under (spec
     // evolution: per-manifest spec ids; an unknown id prunes bounds-only)
-    val data = dataAll.filter(f => mayMatch(f, preds, st.fieldIds, types,
-      st.specsById.getOrElse(f.specId, Nil)))
+    val pruners = dataAll.map(_.specId).distinct.map { id =>
+      id -> pruner(st, st.specsById.getOrElse(id, Nil), conj)
+    }.toMap
+    val data = if (conj.isEmpty) dataAll else dataAll.filter(f => pruners(f.specId)(f))
     lastPlanStats = (data.size.toLong, dataAll.size.toLong)
     val posDel = planned.filter(_.content == 1)
     val eqDel = planned.filter(_.content == 2)
@@ -3337,7 +3058,7 @@ object IcebergExport {
     }.toIndexedSeq ++
       (if (keepPos) Seq(col("__ice_file"), col("__ice_pos")) else Nil)
     val out = df.select(outCols: _*)
-    preds.foldLeft(out)((d, p) => d.filter(residual(p)))
+    conj.foldLeft(out)((d, e) => d.filter(ColumnBridge.column(e)))
   }
 
   /** The Iceberg NAME-MAPPING spec JSON for a schema AST (spec §"Name
@@ -3384,23 +3105,25 @@ object IcebergExport {
   private def normPathStr(s: String): String =
     s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/{1,3}", "/")
 
-  private def residual(p: Predicate): Column = {
-    val c = col(p.column)
-    lazy val v = lit(p.value)
+  /** One predicate as a Catalyst expression: the residual row filter, and
+    * the conjunct [[pruner]] evaluates against each file. */
+  private def residual(p: Predicate): Expression = {
+    val c = UnresolvedAttribute.quotedString(p.column)
+    lazy val v = Literal(p.value)
     p.op match {
-      case "=" => c === v
-      case "!=" => c =!= v
-      case "<" => c < v
-      case "<=" => c <= v
-      case ">" => c > v
-      case ">=" => c >= v
+      case "=" => EqualTo(c, v)
+      case "!=" => Not(EqualTo(c, v))
+      case "<" => LessThan(c, v)
+      case "<=" => LessThanOrEqual(c, v)
+      case ">" => GreaterThan(c, v)
+      case ">=" => GreaterThanOrEqual(c, v)
       case "in" => p.value match {
-        case vs: Iterable[_] if vs.isEmpty => lit(false)
-        case vs: Iterable[_] => c.isin(vs.toSeq: _*)
-        case _ => lit(true)
+        case vs: Iterable[_] if vs.isEmpty => Literal(false)
+        case vs: Iterable[_] => In(c, vs.toSeq.map(Literal(_)))
+        case _ => Literal(true)
       }
-      case "isnull" => c.isNull
-      case "notnull" => c.isNotNull
+      case "isnull" => IsNull(c)
+      case "notnull" => IsNotNull(c)
     }
   }
 }

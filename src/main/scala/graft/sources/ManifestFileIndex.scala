@@ -59,15 +59,21 @@ private[sources] final class ManifestFileIndex(
 
   override def rootPaths: Seq[Path] = Seq(new Path(storeRoot))
 
+  /** Each entry's stats lookup built once per relation, however often
+    * Spark re-lists it; a column decodes only when a conjunct names it. */
+  private val types = FilePruning.typesOf(statsSchema)
+  private lazy val metrics = entries.map(e => SnapshotTable.metricsOf(types, e.stats))
+
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     // manifest-stats pass over EVERY pushed conjunct (partition values ride
     // the stats map as min = max pins, so both filter kinds prune here);
     // `augment` adds transform-derived conjuncts — a bucket(N, key) store
     // maps key equality to hidden-bucket equality — for the STATS pass only
-    val afterStats = entries.filter(e =>
-      SnapshotTable.mayContain(statsSchema, e.stats,
-        augment(partitionFilters ++ dataFilters)))
+    val conj = augment(partitionFilters ++ dataFilters)
+    val afterStats = if (conj.isEmpty) entries else entries.zip(metrics).collect {
+      case (e, m) if FilePruning.keep(types, m, conj) => e
+    }
     // exact partition-filter evaluation on the parsed partition values
     // (bound by NAME — the filter's attributes belong to the relation's
     // output, not to this index)

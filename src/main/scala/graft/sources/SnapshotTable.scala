@@ -167,7 +167,10 @@ object SnapshotTable {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
-    // (domain min, domain max) accumulated per column; None = column disabled
+    // (min, max) accumulated per column; None = column disabled. Floats stay
+    // floats so their canonical strings keep the float form; `dom` maps
+    // them into the shared domain only to order them.
+    def dom(v: Any) = v match { case f: Float => f.toDouble; case o => o }
     val acc = scala.collection.mutable.LinkedHashMap.empty[String, Option[(Any, Any)]]
     footer.getBlocks.asScala.foreach { block =>
       block.getColumns.asScala.foreach { cc =>
@@ -213,8 +216,8 @@ object SnapshotTable {
             val merged = (acc.getOrElse(name, Some(null)), c) match {
               case (Some(null), v) => v
               case (Some((a1, b1)), Some((a2, b2))) =>
-                Some((if (domainCompare(a1, a2) <= 0) a1 else a2,
-                  if (domainCompare(b1, b2) >= 0) b1 else b2))
+                Some((if (FilePruning.compare(dom(a1), dom(a2)) <= 0) a1 else a2,
+                  if (FilePruning.compare(dom(b1), dom(b2)) >= 0) b1 else b2))
               case _ => None
             }
             acc(name) = merged
@@ -229,40 +232,7 @@ object SnapshotTable {
 
   private def canonical(v: Any): String = v.toString
 
-  /** Ordering inside one stats domain (both sides same runtime type). */
-  private def domainCompare(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long)       => java.lang.Long.compare(x, y)
-    case (x: Float, y: Float)     => java.lang.Float.compare(x, y)
-    case (x: Double, y: Double)   => java.lang.Double.compare(x, y)
-    case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
-    case (x: String, y: String)   => utf8Compare(x, y)
-    case _ => throw new IllegalStateException(s"stats domain mismatch: $a vs $b")
-  }
-
-  /** Unsigned UTF-8 byte comparison — the order parquet min/max for BINARY
-    * strings are computed in (Java String compareTo differs for
-    * supplementary characters, so it must not be used here). */
-  private def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  // ── predicate → file-range evaluation (the Iceberg
-  //    InclusiveMetricsEvaluator shape: "might this file contain a matching
-  //    row?" — ANY uncertainty keeps the file; pruning is only ever an
-  //    optimization over the residual filter) ──────────────────────────────
-
-  import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-  import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast,
-    EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan,
-    LessThanOrEqual, Literal, Or}
+  import org.apache.spark.sql.catalyst.expressions.And
 
   /** Top-level AND conjuncts of `pred`, RESOLVED against `df`'s plan: the
     * filter is run through analysis + optimization so implicit casts fold
@@ -278,149 +248,34 @@ object SnapshotTable {
     }.getOrElse(Nil)
   }
 
-  private def attrName(e: Expression): Option[String] = e match {
-    case u: UnresolvedAttribute if u.nameParts.length == 1 => Some(u.nameParts.head)
-    case a: Attribute => Some(a.name)
-    // a predicate pushed through a type-WIDENING resolution cast (ALTER
-    // COLUMN TYPE readers cast during resolution; Catalyst pushes the
-    // filter down as `cast(col) op lit`): integral widenings share one
-    // ordered stats domain, so the cast is transparent for range pruning
-    case c: Cast if scala.util.Try((c.child.dataType, c.dataType) match {
-      case (ByteType | ShortType | IntegerType,
-            ShortType | IntegerType | LongType) => true
-      case _ => false
-    }).getOrElse(false) => attrName(c.child)
-    case _ => None
-  }
-
-  /** [[attrName]] for the class side (transform-conjunct derivation). */
-  private[sources] def attrNameOf(e: Expression): Option[String] = attrName(e)
-
-  /** A literal's value in the DOMAIN of column type `ct` (the domain
-    * [[footerColumnStats]] recorded) — None when the literal's type doesn't
-    * convert exactly, which simply disables pruning on that conjunct. */
-  private def literalInDomain(v: Any, ct: DataType): Option[Any] = ct match {
-    case ByteType | ShortType | IntegerType | LongType => v match {
-      case b: Byte => Some(b.toLong); case s: Short => Some(s.toLong)
-      case i: Int => Some(i.toLong); case l: Long => Some(l)
+  /** One manifest file's canonical-string stats decoded into the shared
+    * value domain. Decimal stats are the raw UNSCALED values at the
+    * column's scale (evolution only ever raises precision); a stat that
+    * does not parse is simply unknown. */
+  private[sources] def metricsOf(types: Map[String, DataType],
+      stats: Map[String, (String, String)]): FilePruning.FileMetrics = {
+    def value(s: String, ct: DataType): Option[Any] = ct match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType => s.toLongOption
+      case FloatType => s.toFloatOption.map(_.toDouble)
+      case DoubleType => s.toDoubleOption
+      case StringType => Some(s)
+      case BooleanType => s.toBooleanOption
+      case dt: org.apache.spark.sql.types.DecimalType => s.toLongOption.map(u =>
+        new java.math.BigDecimal(java.math.BigInteger.valueOf(u), dt.scale))
       case _ => None
     }
-    case DateType => v match { // Catalyst internal: days since epoch
-      case i: Int => Some(i.toLong); case _ => None
-    }
-    case TimestampType => v match { // Catalyst internal: micros
-      case l: Long => Some(l); case _ => None
-    }
-    case FloatType => v match {
-      case f: Float => Some(f); case i: Int => Some(i.toFloat)
-      case l: Long => Some(l.toFloat); case _ => None
-    }
-    case DoubleType => v match {
-      case d: Double => Some(d); case i: Int => Some(i.toDouble)
-      case l: Long => Some(l.toDouble); case _ => None
-    }
-    case StringType => Some(v.toString) // internal UTF8String → String
-    case BooleanType => v match { case b: Boolean => Some(b); case _ => None }
-    case dt: org.apache.spark.sql.types.DecimalType => v match {
-      // Catalyst internal decimal literal → the stats domain (UNSCALED long
-      // at the column's scale — what footerColumnStats records for the
-      // INT32/INT64 physical decimals Spark writes at precision ≤ 18). A
-      // literal whose scale doesn't land exactly (or whose unscaled value
-      // overflows long) disables pruning on the conjunct, never correctness.
-      case d: org.apache.spark.sql.types.Decimal =>
-        try {
-          val unscaled = d.toJavaBigDecimal.setScale(dt.scale).unscaledValue()
-          if (unscaled.bitLength() < 64) Some(unscaled.longValue()) else None
-        } catch { case _: ArithmeticException => None }
-      case _ => None
-    }
-    case _ => None
+    val statsLc = stats.map { case (c, v) => c.toLowerCase -> v }
+    FilePruning.FileMetrics(c => for {
+      ct <- types.get(c); (mn, mx) <- statsLc.get(c); lo <- value(mn, ct); hi <- value(mx, ct)
+    } yield (lo, hi))
   }
 
-  /** A stored canonical stat parsed back into column type `ct`'s domain. */
-  private def statInDomain(s: String, ct: DataType): Option[Any] = ct match {
-    case ByteType | ShortType | IntegerType | LongType | DateType |
-         TimestampType => s.toLongOption
-    case FloatType  => Some(s.toFloat)
-    case DoubleType => Some(s.toDouble)
-    case StringType => Some(s)
-    case BooleanType => s.toBooleanOption
-    // decimal stats are the raw UNSCALED values (ordering-equivalent at one
-    // column's fixed scale; evolution only ever raises precision)
-    case _: org.apache.spark.sql.types.DecimalType => s.toLongOption
-    case _ => None
-  }
-
-  /** Might a file with `stats` contain a row matching every conjunct?
-    * Evaluates each supported `col op literal` conjunct against the file's
-    * (min, max); an unsupported shape, unknown column, or missing stat keeps
-    * the file. */
-  private[sources] def mayContain(schema: StructType,
-      stats: Map[String, (String, String)], conjuncts: Seq[Expression]): Boolean = {
-    val types = schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-    val statsLc = stats.map { case (k, v) => k.toLowerCase -> v }
-    def range(name: String): Option[(Any, Any, DataType)] =
-      for {
-        ct <- types.get(name.toLowerCase)
-        (mnS, mxS) <- statsLc.get(name.toLowerCase)
-        mn <- statInDomain(mnS, ct)
-        mx <- statInDomain(mxS, ct)
-      } yield (mn, mx, ct)
-    def cmp = domainCompare _
-    def eval(c: Expression): Boolean = c match {
-      // pushed-down filters arrive as whole trees (not pre-split conjuncts)
-      // on the lazy FileIndex path, and an OR of ranges — a dashboard
-      // comparing two periods — prunes as the UNION of its disjuncts' kept
-      // verdicts rather than keeping everything
-      case And(l, r) => eval(l) && eval(r)
-      case Or(l, r)  => eval(l) || eval(r)
-      case EqualTo(a, Literal(v, _)) => evalOp(a, v, "=")
-      case EqualTo(Literal(v, _), a) => evalOp(a, v, "=")
-      case GreaterThan(a, Literal(v, _)) => evalOp(a, v, ">")
-      case GreaterThan(Literal(v, _), a) => evalOp(a, v, "<")
-      case GreaterThanOrEqual(a, Literal(v, _)) => evalOp(a, v, ">=")
-      case GreaterThanOrEqual(Literal(v, _), a) => evalOp(a, v, "<=")
-      case LessThan(a, Literal(v, _)) => evalOp(a, v, "<")
-      case LessThan(Literal(v, _), a) => evalOp(a, v, ">")
-      case LessThanOrEqual(a, Literal(v, _)) => evalOp(a, v, "<=")
-      case LessThanOrEqual(Literal(v, _), a) => evalOp(a, v, ">=")
-      case In(a, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        attrName(a).flatMap(range) match {
-          case Some((mn, mx, ct)) =>
-            vs.exists { case Literal(v, _) =>
-              if (v == null) false
-              else literalInDomain(v, ct).forall(d =>
-                cmp(mn, d) <= 0 && cmp(d, mx) <= 0)
-            }
-          case None => true
-        }
-      case InSet(a, hset) => // the optimizer's large-IN form
-        attrName(a).flatMap(range) match {
-          case Some((mn, mx, ct)) =>
-            hset.exists(v =>
-              if (v == null) false
-              else literalInDomain(v, ct).forall(d =>
-                cmp(mn, d) <= 0 && cmp(d, mx) <= 0))
-          case None => true
-        }
-      case _ => true
-    }
-    def evalOp(a: Expression, v: Any, op: String): Boolean =
-      if (v == null) true
-      else attrName(a).flatMap(range) match {
-        case Some((mn, mx, ct)) => literalInDomain(v, ct) match {
-          case Some(d) => op match {
-            case "="  => cmp(mn, d) <= 0 && cmp(d, mx) <= 0
-            case ">"  => cmp(mx, d) > 0
-            case ">=" => cmp(mx, d) >= 0
-            case "<"  => cmp(mn, d) < 0
-            case "<=" => cmp(mn, d) <= 0
-          }
-          case None => true
-        }
-        case None => true
-      }
-    conjuncts.forall(eval)
+  /** The files of one manifest that may hold a row matching `conj`. */
+  private[sources] def keptFiles(schema: StructType, files: Seq[ManifestFile],
+      conj: Seq[Expression]): Seq[ManifestFile] = {
+    val types = FilePruning.typesOf(schema)
+    files.filter(f => FilePruning.keep(types, metricsOf(types, f.stats), conj))
   }
 
   /** Stats blob ↔ manifest-field encoding: `col US b64(min) US b64(max)`
@@ -868,34 +723,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     out.toSeq
   }
 
-  private def daysOf(entry: String): Option[String] =
-    "(?i)^days?\\((\\w+)\\)$".r.findFirstMatchIn(entry.trim).map(_.group(1))
-
-  private def monthsOf(entry: String): Option[String] =
-    "(?i)^months?\\((\\w+)\\)$".r.findFirstMatchIn(entry.trim).map(_.group(1))
-
-  private def yearsOf(entry: String): Option[String] =
-    "(?i)^years?\\((\\w+)\\)$".r.findFirstMatchIn(entry.trim).map(_.group(1))
-
-  private def hoursOf(entry: String): Option[String] =
-    "(?i)^hours?\\((\\w+)\\)$".r.findFirstMatchIn(entry.trim).map(_.group(1))
-
-  private[sources] def bucketOf(entry: String): Option[(Int, String)] =
-    "(?i)^bucket\\((\\d+)\\s*,\\s*(\\w+)\\)$".r.findFirstMatchIn(entry.trim)
-      .map(m => (m.group(1).toInt, m.group(2)))
-
-  private[sources] def truncOf(entry: String): Option[(Int, String)] =
-    "(?i)^truncate\\((\\d+)\\s*,\\s*(\\w+)\\)$".r.findFirstMatchIn(entry.trim)
-      .map(m => (m.group(1).toInt, m.group(2)))
-
-  /** The Iceberg-shaped bucket value of `v` (type `dt`): murmur3 (Spark's
-    * `hash`, seed 42 — EXACTLY the write path's expression) mod N, positive.
-    * Driver-side evaluation of the same Catalyst expression the layout was
-    * written with, so read-side derivation can never drift from the files. */
-  private def bucketValueOf(v: Any, dt: DataType, n: Int): Option[Int] = {
+  /** The store's bucket of literal `l` for a source column of type `ct`:
+    * the write path's own Catalyst expression (Spark `hash`, seed 42, pmod
+    * N) evaluated on the driver, so derivation cannot drift from the files.
+    * Only a literal of the column's declared type derives. */
+  private def storeBucket(l: Expression, ct: DataType, n: Int): Option[Int] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
-    scala.util.Try(
-      Pmod(new Murmur3Hash(Seq(Literal.create(v, dt))), Literal(n)).eval(null))
+    if (l.dataType != ct) None
+    else scala.util.Try(Pmod(new Murmur3Hash(Seq(l)), Literal(n)).eval(null))
       .toOption.collect { case i: Int => i }
   }
 
@@ -914,102 +749,61 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       def derive(hidden: String, src: String, e: Column): Some[String] = {
         out = out.withColumn(hidden, e); Some(hidden)
       }
-      val cols = spec.flatMap { e =>
-        val isTransform = daysOf(e).orElse(monthsOf(e)).orElse(yearsOf(e))
-          .orElse(hoursOf(e)).orElse(bucketOf(e).map(_._2))
-          .orElse(truncOf(e).map(_._2)).isDefined
-        daysOf(e).filter(ok).flatMap(src =>
-            derive(DayCol, src, to_date(col(src))))
-          .orElse(monthsOf(e).filter(ok).flatMap(src =>
-            derive(MonthCol, src, date_format(col(src), "yyyy-MM"))))
-          .orElse(yearsOf(e).filter(ok).flatMap(src =>
-            derive(YearCol, src, date_format(col(src), "yyyy"))))
-          .orElse(hoursOf(e).filter(ok).flatMap(src =>
-            derive(HourCol, src, date_format(col(src), "yyyy-MM-dd-HH"))))
-          .orElse(bucketOf(e).filter(p => ok(p._2)).flatMap { case (n, src) =>
-            derive(BucketCol, src, pmod(hash(col(src)), lit(n))) })
-          .orElse(truncOf(e).filter(p => ok(p._2)).flatMap { case (w, src) =>
-            derive(TruncCol, src, field(src).get.dataType match {
-              case StringType => substring(col(src), 1, w)
-              case dt => (floor(col(src).cast("double") / w) * w).cast(dt)
-            }) })
-          .orElse(if (!isTransform && field(e.trim).isDefined) Some(e.trim) else None)
+      val cols = spec.map(FilePruning.parseSpecEntry).flatMap { sf =>
+        val src = sf.source
+        if (!ok(src)) None
+        else sf.kind match {
+          case "identity" => Some(src)
+          case "day" => derive(DayCol, src, to_date(col(src)))
+          case "month" => derive(MonthCol, src, date_format(col(src), "yyyy-MM"))
+          case "year" => derive(YearCol, src, date_format(col(src), "yyyy"))
+          case "hour" => derive(HourCol, src, date_format(col(src), "yyyy-MM-dd-HH"))
+          case "bucket" => derive(BucketCol, src, pmod(hash(col(src)), lit(sf.arg)))
+          case "truncate" => derive(TruncCol, src, field(src).get.dataType match {
+            case StringType => substring(col(src), 1, sf.arg)
+            case dt => (floor(col(src).cast("double") / sf.arg) * sf.arg).cast(dt)
+          })
+        }
       }
       (out, cols)
     }
   }
 
-  /** Transform-derived pruning conjuncts: a key-equality (or IN) predicate
-    * on a bucket transform's source column derives the matching equality on
-    * the hidden bucket column, whose per-file partition-path pin then
-    * excludes every other bucket — the point lookup that makes
-    * `bucket(N, key)` the 100 TB high-cardinality layout (footer min/max of
-    * a hashed key spans everything; only the transform can prune). Only
-    * derives when the literal's type equals the source column's declared
-    * type (the hash is type-sensitive); derived conjuncts are ADDED, never
-    * replace the originals. */
+  /** Transform-derived pruning conjuncts: key equality (or IN) on a bucket
+    * transform's source derives equality on the hidden bucket column, whose
+    * per-file partition-path pin excludes every other bucket — the point
+    * lookup footer min/max of a hashed key cannot give. Only bucket derives:
+    * a time partition pins its SOURCE column's range in each file's stats at
+    * commit time, and a file's footer range already lies in its truncate
+    * cell. */
   private def transformConjuncts(schema: StructType,
-      conj: Seq[Expression], windowVersions: Seq[Long]): Seq[Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-      EqualTo, In, InSet, Literal}
-    import org.apache.spark.sql.types.IntegerType
-    partitionSpec.flatMap(bucketOf).headOption match {
+      conj: Seq[Expression], windowVersions: Seq[Long]): Seq[Expression] =
+    partitionSpec.map(FilePruning.parseSpecEntry).find(_.kind == "bucket") match {
       case None => conj
-      case Some((n, src)) =>
-        val srcType = schema.fields.find(_.name.equalsIgnoreCase(src)).map(_.dataType)
-        def bucketAttr = AttributeReference(BucketCol, IntegerType)()
-        def derive(a: Expression, v: Any, dt: DataType): Option[Expression] =
-          if (v == null || !SnapshotTable.attrNameOf(a).exists(_.equalsIgnoreCase(src)) ||
-              !srcType.contains(dt)) None
-          else bucketValueOf(v, dt, n).map(bv =>
-            EqualTo(bucketAttr, Literal(bv, IntegerType)))
-        val derived = conj.flatMap {
-          case EqualTo(a, Literal(v, dt)) => derive(a, v, dt)
-          case EqualTo(Literal(v, dt), a) => derive(a, v, dt)
-          case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-            val bvs = vs.collect { case Literal(v, dt) => derive(a, v, dt) }
-            if (bvs.exists(_.isEmpty)) None
-            else Some(bvs.flatten.reduce[Expression](
-              org.apache.spark.sql.catalyst.expressions.Or(_, _)))
-          case InSet(a, hset) if hset.nonEmpty && srcType.isDefined =>
-            val bvs = hset.toSeq.map(v => derive(a, v, srcType.get))
-            if (bvs.exists(_.isEmpty)) None
-            else Some(bvs.flatten.reduce[Expression](
-              org.apache.spark.sql.catalyst.expressions.Or(_, _)))
-          case _ => None
-        }
-        if (derived.isEmpty || !bucketDerivationSound(n, src, windowVersions)) conj
-        else conj ++ derived
+      case Some(sf) =>
+        val derived = FilePruning.deriveTuples(conj, Seq(sf.copy(name = BucketCol)),
+          FilePruning.typesOf(schema), storeBucket)
+        if (derived == conj || !bucketDerivationSound(sf, windowVersions)) conj
+        else derived
     }
-  }
 
-  /** Is deriving `graft__bucket` conjuncts from the CURRENT spec's
-    * `bucket(n, src)` sound for every file this store can resolve? Files
-    * written under a DIFFERENT bucket entry (partition-spec evolution that
-    * changed N or the source column) carry bucket partition-path pins
-    * computed with the old hash-mod — a current-spec conjunct would wrongly
-    * prune them. Iceberg tracks a spec id per data file for exactly this
-    * reason; here each manifest records the spec its files were written
-    * under ([[manifestSpec]]), and derivation is allowed only when every
-    * live version's bucket-pinned files match the current entry. Legacy
-    * manifests (no recorded spec) are trusted only when their files carry
-    * no bucket dirs at all — a file without a bucket pin can never be
-    * wrongly pruned by a bucket conjunct.
-    *
-    * Checked over the RESOLVED WINDOW's data-dir versions only (the dirs
-    * this read can actually prune), not the whole commit log: a long-lived
-    * table's dead history must not cost O(total versions) manifest reads
-    * per pruned query — planning stays O(chain). */
-  private def bucketDerivationSound(n: Int, src: String,
+  /** Is deriving `graft__bucket` conjuncts from the CURRENT spec's bucket
+    * field `sf` sound for every file this read resolves? Files written
+    * under a DIFFERENT bucket entry (spec evolution changing N or the
+    * source) carry pins from the old hash-mod. Like Iceberg's per-file spec
+    * id, each manifest records its write spec ([[manifestSpec]]); legacy
+    * manifests are trusted only when their files carry no bucket dirs.
+    * Checked over the resolved window's data dirs only, so planning stays
+    * O(chain), not O(history). */
+  private def bucketDerivationSound(sf: FilePruning.SpecField,
       windowVersions: Seq[Long]): Boolean =
     windowVersions.forall { v =>
       readManifest(v) match {
         case None => true // no manifest → no stats → never pruned
         case Some((_, files)) =>
           !files.exists(_.name.contains(BucketCol + "=")) ||
-            manifestSpec(v).exists(_.flatMap(bucketOf).exists {
-              case (bn, bs) => bn == n && bs.equalsIgnoreCase(src)
-            })
+            manifestSpec(v).exists(_.map(FilePruning.parseSpecEntry).exists(w =>
+              w.transform == sf.transform && w.source.equalsIgnoreCase(sf.source)))
       }
     }
 
@@ -1134,12 +928,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     // spec (this runs at COMMIT time, so "current" is the spec the file was
     // just written under — the recorded stats stay correct across later
     // spec evolution)
-    val spec = partitionSpec
-    val timeSrc: Map[String, String] =
-      (spec.flatMap(daysOf).headOption.map(DayCol -> _) ++
-        spec.flatMap(monthsOf).headOption.map(MonthCol -> _) ++
-        spec.flatMap(yearsOf).headOption.map(YearCol -> _) ++
-        spec.flatMap(hoursOf).headOption.map(HourCol -> _)).toMap
+    val hiddenOf = Map("day" -> DayCol, "month" -> MonthCol, "year" -> YearCol,
+      "hour" -> HourCol)
+    val timeSrc: Map[String, String] = partitionSpec.map(FilePruning.parseSpecEntry)
+      .flatMap(sf => hiddenOf.get(sf.kind).map(_ -> sf.source))
+      .distinctBy(_._1).toMap
     val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     def micros(t: java.time.LocalDateTime): Long =
       t.atZone(zone).toInstant.toEpochMilli * 1000L
@@ -2000,11 +1793,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   private[graft] def isEvolveOp(op: String): Boolean =
     op.startsWith(EvolveOpPrefix)
 
-  /** Is this evolve commit a RENAME? */
-  private[graft] def evolveIsRename(op: String): Boolean =
-    op.startsWith(EvolveOpPrefix) &&
-      decodeEvolve(op).headOption.contains("rename")
-
   /** The (old, new) names of a RENAME evolve commit — what
     * `IcebergExport.syncStore` mirrors metadata-only (the field id
     * carries under the new name). */
@@ -2236,7 +2024,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     prune match {
       case Some(cs) => readManifest(v) match {
         case Some((schema, files)) if files.nonEmpty =>
-          val kept = files.filter(f => SnapshotTable.mayContain(schema, f.stats, cs))
+          val kept = SnapshotTable.keptFiles(schema, files, cs)
           pruneKept += kept.size; pruneTotal += files.size
           if (kept.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -2329,7 +2117,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
               val perDir = run.map { m =>
                 // run members always carry a manifest (batchDeltaRuns contract)
                 val (schema, files) = readManifest(m._1).get
-                val kept = files.filter(f => SnapshotTable.mayContain(schema, f.stats, cs))
+                val kept = SnapshotTable.keptFiles(schema, files, cs)
                 pruneKept += kept.size; pruneTotal += files.size
                 (m._1, schema, kept, files.size)
               }
@@ -3475,25 +3263,22 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * needs N > 0; `truncate(W, c)` needs W > 0 and an integral or string
     * source (the width-truncation domains). */
   private def validateSpecEntry(schema: StructType, e: String): Unit = {
-    val src = daysOf(e).orElse(monthsOf(e)).orElse(yearsOf(e)).orElse(hoursOf(e))
-      .orElse(bucketOf(e).map(_._2)).orElse(truncOf(e).map(_._2))
-      .getOrElse(e.trim)
+    val sf = FilePruning.parseSpecEntry(e)
+    val src = sf.source
     val f = schema.fields.find(_.name.equalsIgnoreCase(src))
     require(f.isDefined, s"partition spec entry '$e' names no column $src")
-    if (daysOf(e).isDefined || monthsOf(e).isDefined || yearsOf(e).isDefined)
-      require(f.get.dataType == TimestampType || f.get.dataType == DateType,
-        s"${e.trim} needs a timestamp/date column, got ${f.get.dataType.simpleString}")
-    if (hoursOf(e).isDefined)
-      require(f.get.dataType == TimestampType,
-        s"hours($src) needs a timestamp column, got ${f.get.dataType.simpleString}")
-    bucketOf(e).foreach { case (n, _) =>
-      require(n > 0, s"bucket($n, $src): bucket count must be positive") }
-    truncOf(e).foreach { case (w, _) =>
-      require(w > 0, s"truncate($w, $src): width must be positive")
-      require(f.get.dataType == StringType ||
-        Seq(ByteType, ShortType, IntegerType, LongType).contains(f.get.dataType),
-        s"truncate($w, $src) needs an integral or string column, got " +
-          f.get.dataType.simpleString)
+    val dt = f.get.dataType
+    def need(ok: Boolean, what: String) =
+      require(ok, s"${sf.entry} needs $what, got ${dt.simpleString}")
+    sf.kind match {
+      case "day" | "month" | "year" =>
+        need(dt == TimestampType || dt == DateType, "a timestamp/date column")
+      case "hour" => need(dt == TimestampType, "a timestamp column")
+      case "bucket" => need(sf.arg > 0, "a positive bucket count")
+      case "truncate" => need(sf.arg > 0 && (dt == StringType ||
+        Seq(ByteType, ShortType, IntegerType, LongType).contains(dt)),
+        "a positive width over an integral or string column")
+      case _ =>
     }
   }
 
@@ -3503,18 +3288,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       throw new IllegalStateException(s"no snapshots at $root"))
     val schema = resolveVersion(meta, head, None).schema
     newSpec.foreach(e => validateSpecEntry(schema, e))
-    require(newSpec.flatMap(daysOf).size <= 1,
-      "at most one days() transform per spec")
-    require(newSpec.flatMap(monthsOf).size <= 1,
-      "at most one months() transform per spec")
-    require(newSpec.flatMap(yearsOf).size <= 1,
-      "at most one years() transform per spec")
-    require(newSpec.flatMap(hoursOf).size <= 1,
-      "at most one hours() transform per spec")
-    require(newSpec.flatMap(e => bucketOf(e).toSeq).size <= 1,
-      "at most one bucket() transform per spec")
-    require(newSpec.flatMap(e => truncOf(e).toSeq).size <= 1,
-      "at most one truncate() transform per spec")
+    newSpec.map(FilePruning.parseSpecEntry).filterNot(_.isIdentity)
+      .groupBy(_.kind).foreach { case (_, fs) =>
+        require(fs.size <= 1,
+          s"at most one ${fs.head.entry.takeWhile(_ != '(')}() transform per spec")
+      }
     require(newSpec.map(_.trim.toLowerCase).distinct.size == newSpec.size,
       s"duplicate partition fields in ${newSpec.mkString(", ")}")
     val next = claimVersion(meta)

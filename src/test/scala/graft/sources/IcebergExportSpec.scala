@@ -695,15 +695,16 @@ class IcebergExportSpec extends SparkSpec {
     // surrogate whose bytes never match the written tuple (the sandbox
     // JVM can't WRITE non-ASCII partition dirs — sun.jnu.encoding=ASCII —
     // so the derivation is pinned at the unit level)
-    val sTrunc = IcebergExport.parseSpecEntry("truncate(1, s)")
-    assert(IcebergExport.evalTransform(sTrunc, StringType, "😀a")
+    val sTrunc = FilePruning.parseSpecEntry("truncate(1, s)")
+    assert(FilePruning.evalTransform(sTrunc, StringType, "😀a")
       === Some("😀"))
-    assert(IcebergExport.evalTransform(sTrunc, StringType, "ab") === Some("a"))
+    assert(FilePruning.evalTransform(sTrunc, StringType, "ab") === Some("a"))
     // Int.MinValue: floorDiv(-2147483648, 10)*10 = -2147483650 overflows
     // int32; Iceberg's own TruncateInteger wraps in 32-bit arithmetic and
     // the written tuple wraps the same way — the derivation must agree
-    val iTrunc = IcebergExport.parseSpecEntry("truncate(10, x)")
-    assert(IcebergExport.evalTransform(iTrunc, IntegerType, Int.MinValue)
+    // (the transform takes its source value in the shared Long domain)
+    val iTrunc = FilePruning.parseSpecEntry("truncate(10, x)")
+    assert(FilePruning.evalTransform(iTrunc, IntegerType, Int.MinValue.toLong)
       === Some((-2147483650L).toInt.toLong))
   }
 

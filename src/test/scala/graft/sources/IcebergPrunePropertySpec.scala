@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files => JFiles}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -45,13 +46,20 @@ class IcebergPrunePropertySpec extends SparkSpec {
             .map(n => java.math.BigDecimal.valueOf(n, 1): Any)),
           (1, Gen.chooseNum(-120000L, 170000L)
             .map(n => java.math.BigDecimal.valueOf(n, 3): Any)))
+        // timestamp literals against the date column (and date literals
+        // against the timestamp column below): Spark compares them after a
+        // cast, while the bounds are days vs micros — pruning must not
+        // compare the two domains
         case "d" => Gen.frequency(
           (3, Gen.chooseNum(0, 900).map(n =>
             java.sql.Date.valueOf(java.time.LocalDate.of(2023, 1, 1)
               .plusDays(n.toLong)): Any)),
           (1, Gen.chooseNum(0, 400).map(n =>
             java.sql.Date.valueOf(java.time.LocalDate.of(1969, 12, 31)
-              .minusDays(n.toLong)): Any)))
+              .minusDays(n.toLong)): Any)),
+          (2, Gen.chooseNum(0, 900 * 24).map(h =>
+            java.sql.Timestamp.valueOf(java.time.LocalDateTime
+              .of(2023, 1, 1, 0, 0).plusHours(h.toLong)): Any)))
         case "ts" => Gen.frequency(
           (3, Gen.chooseNum(0, 900 * 24).map(h =>
             java.sql.Timestamp.valueOf(java.time.LocalDateTime
@@ -62,7 +70,10 @@ class IcebergPrunePropertySpec extends SparkSpec {
           (1, Gen.chooseNum(0, 200).map(h =>
             java.sql.Timestamp.from(java.time.Instant
               .parse("1969-12-31T23:59:59.500Z")
-              .minus(java.time.Duration.ofHours(h.toLong))): Any)))
+              .minus(java.time.Duration.ofHours(h.toLong))): Any)),
+          (2, Gen.chooseNum(0, 900).map(n =>
+            java.sql.Date.valueOf(java.time.LocalDate.of(2023, 1, 1)
+              .plusDays(n.toLong)): Any)))
         case "s" => Gen.oneOf("aa", "ab", "ba", "bz", "ca").map(x => x: Any)
         case _ => Gen.const(null: Any)
       }
@@ -149,5 +160,54 @@ class IcebergPrunePropertySpec extends SparkSpec {
     // the property is vacuous if nothing ever pruned / never evolved
     assert(pruned > 5, s"pruning fired only $pruned times across ${cases.size}")
     assert(evolved > 5, s"spec evolution drawn only $evolved times")
+  }
+
+  test("a timestamp literal against a date column keeps its files: " +
+      "unpartitioned and under months(d) the pruned read equals the filter") {
+    import spark.implicits._
+    // d = 2023-01-01 + 10·i days: 24 of the 40 dates lie after June 1st
+    val df = Seq.tabulate(40)(i => (i.toLong,
+      java.sql.Date.valueOf(java.time.LocalDate.of(2023, 1, 1)
+        .plusDays(10L * i)))).toDF("id", "d").repartition(4)
+    val cut = java.sql.Timestamp.valueOf("2023-06-01 00:00:00")
+    Seq(Nil, Seq("months(d)")).foreach { spec =>
+      val dest = JFiles.createTempDirectory("iceprop_ts").toFile.getAbsolutePath
+      IcebergExport.export(df, dest, partitionBy = spec)
+      val got = IcebergExport.readTable(spark, dest,
+        preds = Seq(IcebergExport.Predicate("d", ">", cut)))
+        .select("id").as[Long].collect().sorted.toSeq
+      val (kept, total) = IcebergExport.lastPlanStats
+      val want = IcebergExport.readTable(spark, dest)
+        .filter(col("d") > lit(cut)).select("id").as[Long].collect().sorted.toSeq
+      assert(want.size === 24, s"spec $spec")
+      assert(got === want, s"spec $spec kept $kept/$total")
+    }
+  }
+
+  test("an integral literal outside an int column's range keeps its files " +
+      "under truncate(10, x): the derived tuple literal must not wrap") {
+    import spark.implicits._
+    val df = Seq.tabulate(40)(i => (i.toLong, i * 7 - 140)).toDF("id", "x")
+      .repartition(4)
+    val dest = JFiles.createTempDirectory("iceprop_wide").toFile.getAbsolutePath
+    IcebergExport.export(df, dest, partitionBy = Seq("truncate(10, x)"))
+    // -3e9 wraps to +1294967296 as an int, 3e9 to -1294967296: a wrapped
+    // derivation would prune every file
+    Seq(">" -> -3000000000L, ">=" -> -3000000000L, "<" -> 3000000000L,
+        "<=" -> 3000000000L).foreach { case (op, v) =>
+      val got = IcebergExport.readTable(spark, dest,
+        preds = Seq(IcebergExport.Predicate("x", op, v))).count()
+      val (kept, total) = IcebergExport.lastPlanStats
+      assert(got === 40L, s"x $op $v kept $kept/$total")
+    }
+  }
+
+  test("an identity tuple on a timestamp column decodes in the column's " +
+      "domain, so it pins the file like the bounds do") {
+    val us = 1685577600000000L // 2023-06-01 00:00 UTC, as Avro hands it over
+    assert(IcebergExport.tupleValue(us, TimestampType) === Some(us))
+    assert(IcebergExport.tupleValue(19509, DateType) === Some(19509L))
+    assert(IcebergExport.tupleValue(7L, LongType) === Some(7L))
+    assert(IcebergExport.tupleValue(7, LongType) === Some(7L))
   }
 }
