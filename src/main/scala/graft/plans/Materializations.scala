@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Reflection-style acceleration (SURVEY.md §2.11 X1, readme.md:320-389):
@@ -107,7 +108,7 @@ final class Materializations(spark: SparkSession, warehouseDir: Option[String] =
       val mat = warehouseDir match {
         case Some(dir) =>
           df.write.mode("overwrite").parquet(s"$dir/$name")
-          spark.read.parquet(s"$dir/$name")
+          readBack(s"$dir/$name", df.schema)
         case None =>
           df.persist(StorageLevel.MEMORY_AND_DISK)
       }
@@ -167,7 +168,7 @@ final class Materializations(spark: SparkSession, warehouseDir: Option[String] =
           require(fs.rename(live, backup), s"refreshIncremental: backup rename failed for $name")
           require(fs.rename(stage, live), s"refreshIncremental: rename failed for $name")
           fs.delete(backup, true)
-          spark.read.parquet(live.toString)
+          readBack(live.toString, merged.schema)
         case None =>
           // materialize the merge FULLY before dropping the old copy it reads
           val m = merged.persist(StorageLevel.MEMORY_AND_DISK)
@@ -184,6 +185,13 @@ final class Materializations(spark: SparkSession, warehouseDir: Option[String] =
       mat
     }
   }
+
+  /** A materialization just written to `path`, read back with the schema
+    * it was written with (every field nullable, as any parquet read
+    * reports): planning it launches no schema-inference job. */
+  private def readBack(path: String, schema: StructType): DataFrame =
+    spark.read.schema(graft.sources.SnapshotTable.allNullable(schema)
+      .asInstanceOf[StructType]).parquet(path)
 
   /** Run `body` with every MaterializationSubstitution stripped from the
     * session's extra optimizer rules, restoring them afterwards. */

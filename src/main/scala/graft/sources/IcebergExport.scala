@@ -7,6 +7,7 @@ import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression,
   GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
   LessThanOrEqual, Literal, Not}
@@ -733,7 +734,7 @@ object IcebergExport {
   private def writeAvro(spark: SparkSession, path: Path, schema: Schema,
       meta: Map[String, String], rows: Seq[GenericData.Record]): Long = {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
+    val out = createFile(fs, path)
     var closed = false
     try {
       val w = new DataFileWriter(new GenericDatumWriter[GenericData.Record](schema))
@@ -1869,9 +1870,8 @@ object IcebergExport {
               throw new IllegalStateException(
                 s"equality-delete snapshot $sid keys on field id $id, " +
                   "absent from the snapshot's schema")))
-            st.deleteKeysMor(
-              spark.read.parquet(files.map(_.path): _*)
-                .select(cols.map(col): _*), cols)
+            st.deleteKeysMor(readEqualityDeletes(spark, snapState, files, cols),
+              cols)
           }
           record(sid); synced += sid
         case "posdel" =>
@@ -1884,9 +1884,7 @@ object IcebergExport {
           if (!priorOps.contains(op)) {
             val delFiles = planned(sid)
               .filter(f => f.addedBy == sid && f.content == 1)
-            val stated = spark.read.parquet(delFiles.map(_.path): _*)
-              .select(col("file_path").cast("string").as("file_path"),
-                col("pos").cast("long").as("pos"))
+            val stated = readPositionDeletes(spark, delFiles.map(_.path))
             // the spec permits RE-STATING an already-deleted position (a
             // read-side no-op): subtract positions earlier delete files
             // already name, or the mirror would delete an extra copy of a
@@ -1896,9 +1894,8 @@ object IcebergExport {
             val dels =
               if (priorDelFiles.isEmpty) stated
               else {
-                val prior = spark.read.parquet(priorDelFiles: _*)
-                  .select(col("file_path").cast("string").as("pf"),
-                    col("pos").cast("long").as("pp"))
+                val prior = readPositionDeletes(spark, priorDelFiles)
+                  .toDF("pf", "pp")
                 stated.join(broadcast(prior),
                   normPath(stated("file_path")) === normPath(prior("pf")) &&
                     stated("pos") === prior("pp"), "left_anti")
@@ -1942,13 +1939,8 @@ object IcebergExport {
                     throw new IllegalStateException(
                       s"equality-delete file keys on field id $id, absent " +
                         s"from snapshot $sid's schema")))
-                  val writeNames: Map[Int, String] = files.headOption
-                    .map(f => stateAt(snapState, f.addedBy).fieldIds
-                      .map(_.swap))
-                    .getOrElse(idToName2)
-                  val keys = spark.read.parquet(files.map(_.path): _*)
-                    .select(ids.zip(cols).map { case (id, c) =>
-                      col(writeNames.getOrElse(id, c)).as(s"__del_$c") }: _*)
+                  val keys = readEqualityDeletes(spark, snapState, files, cols)
+                    .toDF(cols.map(c => s"__del_$c"): _*)
                   val cond = cols.map(c => cand(c) <=> keys(s"__del_$c"))
                     .reduce(_ && _) && (cand("__dseq") < dseq)
                   cand = cand.join(broadcast(keys), cond, "left_anti")
@@ -2011,36 +2003,33 @@ object IcebergExport {
     // the spec REQUIRES position-delete file rows sorted by (file_path,
     // pos) — foreign readers may rely on the ordering; sortWithinPartitions
     // keeps each written file spec-ordered without a shuffle
+    // equality-delete files carry the table's field types (the reader
+    // plans them from the schema, never from the files)
     val ordered =
       if (content == 1)
         rows.sortWithinPartitions(col("file_path"), col("pos"))
-      else rows
+      else rows.select(equalityCols.map(c =>
+        col(c).cast(st.fields(c).dataType).as(c)): _*)
     ordered.write.mode("overwrite").parquet(delDir)
     val fs = new Path(delDir).getFileSystem(hconf)
-    val files = {
-      val it = fs.listFiles(new Path(delDir), false)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && !n.startsWith("_") && !n.startsWith("."))
-          buf += ((fs.makeQualified(s.getPath).toString, s.getLen))
-      }
-      buf.toSeq.sortBy(_._1)
-    }
+    val files = fs.listStatus(new Path(delDir)).toSeq.collect {
+      case s if s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith(".") =>
+        (fs.makeQualified(s.getPath).toString, s.getLen)
+    }.sortBy(_._1)
     val seq = st.lastSeq + 1
     val snapshotId = math.abs(java.util.UUID
       .nameUUIDFromBytes(s"${st.location}#snap$seq".getBytes("UTF-8"))
       .getMostSignificantBits)
     val entrySchema = manifestEntrySchema(Nil)
     val eqIds = equalityCols.map(st.fieldIds)
-    val entries = files.map { case (p, len) =>
-      val n = SnapshotTable.footerRecordCount(new Path(p), hconf)
+    val counts = files.map { case (p, _) =>
+      SnapshotTable.footerRecordCount(new Path(p), hconf) }
+    val entries = files.zip(counts).map { case ((p, len), n) =>
       dataFileEntry(entrySchema, status = 1, snapshotId, seq, content,
         p, n, len, Map.empty, Map.empty, Map.empty, eqIds)
     }
-    val deletedRows = files.map { case (p, _) =>
-      SnapshotTable.footerRecordCount(new Path(p), hconf) }.sum
+    val deletedRows = counts.sum
     // a delete snapshot changes no schema: carry the chain's CURRENT
     // schema entry + schemas history verbatim (regenerating ids here
     // would reset an evolved chain back to schema-id 0)
@@ -2336,45 +2325,40 @@ object IcebergExport {
 
   private def writeString(fs: org.apache.hadoop.fs.FileSystem, p: Path,
       s: String): Unit = {
-    val out = fs.create(p, true)
+    val out = createFile(fs, p)
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
+
+  /** Create-or-overwrite `p` for a metadata write. The local filesystem
+    * writes through java.nio, as the store's metadata seam does: Hadoop's
+    * checksummed local create forks a `chmod` per file (no native Hadoop
+    * library) and writes a `.crc` sidecar, and a sidecar left by an earlier
+    * Hadoop write is removed, or a checksummed read of the new bytes would
+    * fail. Every other scheme writes through its FileSystem. */
+  private def createFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: Path): java.io.OutputStream =
+    if (fs.getScheme != "file") fs.create(p, true)
+    else {
+      val local = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      java.nio.file.Files.createDirectories(local.getParent)
+      java.nio.file.Files.deleteIfExists(
+        local.resolveSibling(s".${local.getFileName}.crc"))
+      new java.io.BufferedOutputStream(java.nio.file.Files.newOutputStream(local))
+    }
 
   // ── data-dir listing + hive partition values ────────────────────────────
 
   /** (qualified path, length) of every data-dir file, partition dirs
     * included, metadata/hidden names excluded. */
-  private def listDataFiles(spark: SparkSession, destDir: String): Seq[(String, Long)] = {
+  private[sources] def listDataFiles(spark: SparkSession,
+      destDir: String): Seq[(String, Long)] = {
     val dataDir = new Path(s"$destDir/data")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dataDir)) return Nil
-    val it = fs.listFiles(dataDir, true)
-    val base = fs.makeQualified(dataDir).toUri.getPath.stripSuffix("/") + "/"
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(base)
-        if (rel.split('/').forall(s => !s.startsWith("_") && !s.startsWith(".")) &&
-          !rel.startsWith("deletes-"))
-          buf += ((fs.makeQualified(st.getPath).toString, st.getLen))
-      }
-    }
-    buf.toSeq.sortBy(_._1)
-  }
-
-  /** Spark's hive-dir escaping, minimally inverted (%xx sequences). */
-  private def unescapePathName(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+    SnapshotTable.listVisibleFiles(fs, dataDir).collect {
+      case (rel, st) if !rel.startsWith("deletes-") =>
+        (fs.makeQualified(st.getPath).toString, st.getLen)
+    }.sortBy(_._1)
   }
 
   /** The partition tuple of one data file, parsed from its hive path
@@ -2388,7 +2372,8 @@ object IcebergExport {
       val segs = path.split('/').filter(_.contains('='))
         .map { s =>
           val i = s.indexOf('=')
-          (s.substring(0, i), unescapePathName(s.substring(i + 1)))
+          (s.substring(0, i),
+            ExternalCatalogUtils.unescapePathName(s.substring(i + 1)))
         }.toMap
       specs.flatMap { sf =>
         segs.get(sf.name).filter(_ != "__HIVE_DEFAULT_PARTITION__").map { raw =>
@@ -2776,8 +2761,8 @@ object IcebergExport {
         .schema(readSchema).parquet(gFiles.map(_.path): _*))
       val sel = resolved.map {
         case (Some((gname, _, proj)), f) =>
-          proj(col(gname)).cast(allNullable(f.dataType)).as(f.name)
-        case (None, f) => lit(null).cast(allNullable(f.dataType)).as(f.name)
+          proj(col(gname)).cast(SnapshotTable.allNullable(f.dataType)).as(f.name)
+        case (None, f) => lit(null).cast(SnapshotTable.allNullable(f.dataType)).as(f.name)
       } ++ (if (withProv) Seq(col("__ice_file"), col("__ice_pos")) else Nil)
       base.select(sel: _*)
     }.reduce(_.unionByName(_))
@@ -2899,19 +2884,6 @@ object IcebergExport {
     * null-fill, dropped ones leave; NULL structs stay NULL). Non-struct
     * positions are identity — structs inside arrays/maps resolve by name,
     * matching the export's refusal to author renames there. */
-  /** `dt` with every nested nullability flag erased to nullable — cast
-    * targets for reconstruction expressions (casting an expression to a
-    * NOT NULL struct type is an analysis error, and the projection's
-    * null-fills are nullable by nature). */
-  private def allNullable(dt: DataType): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      f.copy(dataType = allNullable(f.dataType), nullable = true)))
-    case ArrayType(e, _) => ArrayType(allNullable(e), containsNull = true)
-    case MapType(k, v, _) =>
-      MapType(allNullable(k), allNullable(v), valueContainsNull = true)
-    case o => o
-  }
-
   private def resolveTypeById(gAst: JValue, tAst: JValue,
       tType: DataType): (DataType, Column => Column) = {
     implicit val fmts: Formats = DefaultFormats
@@ -2937,16 +2909,45 @@ object IcebergExport {
         val proj: Column => Column = c => {
           val parts = subs.map {
             case (Some((gn, _, p)), tf) =>
-              p(c.getField(gn)).cast(allNullable(tf.dataType)).as(tf.name)
+              p(c.getField(gn)).cast(SnapshotTable.allNullable(tf.dataType)).as(tf.name)
             case (None, tf) =>
-              lit(null).cast(allNullable(tf.dataType)).as(tf.name)
+              lit(null).cast(SnapshotTable.allNullable(tf.dataType)).as(tf.name)
           }
-          when(c.isNull, lit(null).cast(allNullable(ts)))
+          when(c.isNull, lit(null).cast(SnapshotTable.allNullable(ts)))
             .otherwise(struct(parts: _*))
         }
         (readType, proj)
       case _ => (tType, identity)
     }
+  }
+
+  /** Position-delete files read with the spec's `file_path string,
+    * pos long` schema — never inferred from the files. */
+  private def readPositionDeletes(spark: SparkSession,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("file_path", StringType),
+      StructField("pos", LongType)))).parquet(paths: _*)
+
+  /** One delete snapshot's equality-delete `files`, read with the schema
+    * the metadata fixes — never inferred from the files — and returned as
+    * the columns `cols` (the key names at `st`, in equality-id order). The
+    * files carry their WRITE-TIME column names and types: each key id
+    * resolves against the ADDING snapshot's schema, so a later rename or
+    * type promotion stays metadata-only for standing delete files too. */
+  private def readEqualityDeletes(spark: SparkSession, st: TableState,
+      files: Seq[PlannedFile], cols: Seq[String]): DataFrame = {
+    val at = stateAt(st, files.head.addedBy)
+    val writeNames = at.fieldIds.map(_.swap)
+    val fields = files.head.equalityIds.zip(cols).map { case (id, c) =>
+      val name = writeNames.getOrElse(id, c)
+      val dt = at.fields.find(_.name == name).orElse(st.fields.find(_.name == c))
+        .getOrElse(throw new IllegalStateException(
+          s"equality-delete key $name (field id $id) is in no schema of the chain"))
+        .dataType
+      StructField(name, SnapshotTable.allNullable(dt), nullable = true)
+    }
+    spark.read.schema(StructType(fields)).parquet(files.map(_.path): _*)
+      .toDF(cols: _*)
   }
 
   def readTable(spark: SparkSession, dir: String,
@@ -3008,7 +3009,7 @@ object IcebergExport {
       posDel.groupBy(_.seq).toSeq.sortBy(_._1).foreach { case (dseq, files) =>
         val eligible = data.filter(_.seq <= dseq).map(_.path).toSet
         if (eligible.nonEmpty) {
-          val dels = spark.read.parquet(files.map(_.path): _*)
+          val dels = readPositionDeletes(spark, files.map(_.path))
             .filter(normPath(col("file_path")).isin(
               eligible.toSeq.map(p => normPathStr(p)): _*))
           df = df.join(broadcast(dels),
@@ -3026,16 +3027,9 @@ object IcebergExport {
               s"equality-delete file keys on field id $id, which the " +
                 "read schema no longer carries (dropped column) — read " +
                 "at a snapshot whose schema still has it")))
-          // the delete parquet carries its WRITE-TIME column names: resolve
-          // the key ids against the ADDING snapshot's schema, so a later
-          // rename stays metadata-only for standing delete files too (one
-          // group = one delete snapshot — seq numbers are per-snapshot)
-          val writeNames: Map[Int, String] = files.headOption
-            .map(f => stateAt(st, f.addedBy).fieldIds.map(_.swap))
-            .getOrElse(idToName)
-          val keys = spark.read.parquet(files.map(_.path): _*)
-            .select(ids.zip(cols).map { case (id, c) =>
-              col(writeNames.getOrElse(id, c)).as(s"__del_$c") }: _*)
+          // one group = one delete snapshot (seq numbers are per-snapshot)
+          val keys = readEqualityDeletes(spark, st, files, cols)
+            .toDF(cols.map(c => s"__del_$c"): _*)
           val cond = cols.map(c => df(c) <=> keys(s"__del_$c"))
             .reduce(_ && _) && (df("__ice_dseq") < dseq)
           df = df.join(broadcast(keys), cond, "left_anti")

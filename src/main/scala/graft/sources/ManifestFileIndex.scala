@@ -38,7 +38,8 @@ private[sources] final case class ManifestFileEntry(
   *    EXACTLY — `FileSourceStrategy` drops partition-only conjuncts from
   *    the post-scan residual, so the listing must not over-return there;
   *  - [[SnapshotTable.scanStats]] records (kept, live) per store root, the
-  *    observable the pruning specs and bench plans pin.
+  *    observable the pruning specs and bench plans pin (`recordScans`;
+  *    off for the pruned subsets and key files a read already counted).
   */
 private[sources] final class ManifestFileIndex(
     spark: SparkSession,
@@ -46,7 +47,8 @@ private[sources] final class ManifestFileIndex(
     statsSchema: StructType,
     override val partitionSchema: StructType,
     entries: Seq[ManifestFileEntry],
-    augment: Seq[Expression] => Seq[Expression] = identity) extends FileIndex {
+    augment: Seq[Expression] => Seq[Expression] = identity,
+    recordScans: Boolean = true) extends FileIndex {
 
   /** Identity for scan accounting: one slot per index INSTANCE, so a
     * re-listing of the same relation (second action, AQE re-plan) overwrites
@@ -91,7 +93,8 @@ private[sources] final class ManifestFileIndex(
         pred.initialize(0)
         afterStats.filter(e => pred.eval(e.partitionValues))
       }
-    SnapshotTable.recordScan(storeRoot, indexId, kept.size.toLong, entries.size.toLong)
+    if (recordScans)
+      SnapshotTable.recordScan(storeRoot, indexId, kept.size.toLong, entries.size.toLong)
     kept.groupBy(_.partitionKey).toSeq.sortBy(_._1).map { case (_, fs) =>
       PartitionDirectory(fs.head.partitionValues,
         fs.map(e => new FileStatus(e.bytes, false, 1, DefaultBlockSize, 0L, e.path))

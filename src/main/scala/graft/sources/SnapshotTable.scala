@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType,
-  DoubleType, FloatType, IntegerType, LongType, ShortType, StringType,
-  StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
+  DateType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
+  StringType, StructField, StructType, TimestampType}
 
 object SnapshotTable {
 
@@ -18,6 +19,15 @@ object SnapshotTable {
     * scan planning skip files whose ranges exclude a pushed predicate. */
   final case class ManifestFile(name: String, records: Long, bytes: Long,
       stats: Map[String, (String, String)])
+
+  /** One version's parsed manifest: the data schema and files, the
+    * partition spec the files were written under (`#spec`, r14+ manifests
+    * of partitioned stores) and, for a mor UPDATE/MERGE, the claimed-key
+    * record (`#keyschema`/`#keyfile`; None in manifests written before key
+    * files were recorded). */
+  private final case class Manifest(schema: StructType,
+      files: Seq[ManifestFile], spec: Option[Seq[String]],
+      keys: Option[(StructType, Seq[ManifestFile])])
 
   /** Raised when an optimistic commit loses its conflict check: the table
     * head moved between the operation's snapshot read and its commit attempt
@@ -148,6 +158,37 @@ object SnapshotTable {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
     try reader.getRecordCount finally reader.close()
+  }
+
+  /** Every file under `dir` as (path relative to `dir`, status), found by a
+    * `listStatus` walk that skips `_`- and `.`-prefixed names (Spark's
+    * hidden-file rule: `_SUCCESS`, `.crc` sidecars, `_graft_deletes/`).
+    * `FileSystem.listFiles` would return the same set, but it builds a
+    * `LocatedFileStatus` per file, and on a local filesystem without the
+    * native Hadoop library that permission load forks `ls -ld` per file. */
+  private[sources] def listVisibleFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: Path): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+    def visible(s: org.apache.hadoop.fs.FileStatus) = {
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def walk(d: Path, prefix: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+      fs.listStatus(d).toSeq.filter(visible).flatMap { s =>
+        val rel = prefix + s.getPath.getName
+        if (s.isDirectory) walk(s.getPath, rel + "/") else Seq(rel -> s)
+      }
+    walk(dir, "").sortBy(_._1)
+  }
+
+  /** `dt` with every nullability flag, nested ones included, set to
+    * nullable: the schema Spark's parquet source reports for any file. */
+  private[graft] def allNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = allNullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(allNullable(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(allNullable(k), allNullable(v), valueContainsNull = true)
+    case o => o
   }
 
   // ── column-stats capture (commit-time, from the footers the manifest pass
@@ -602,13 +643,21 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     op == MorUpdateOp || op == MorMergeOp
 
   /** The claimed-keys frame of a mor UPDATE/MERGE commit; None when the
-    * commit claimed none (an insert-only merge). */
+    * commit claimed none (an insert-only merge). Planned from the key
+    * record in the version's manifest; a version written before key files
+    * were recorded lists its key dir and reads it with an inferred schema. */
   private[graft] def morClaimedKeys(v: Long): Option[DataFrame] =
-    if (morKeysExist(v)) Some(spark.read.parquet(morUpdateDeletesDir(v)))
-    else None
+    manifestOf(v).flatMap(_.keys) match {
+      case Some((schema, files)) =>
+        filesRelation(schema, files.map(morUpdateDeletesDir(v) -> _), Seq(v),
+          recordScans = false)
+      case None =>
+        if (legacyKeysExist(v)) Some(spark.read.parquet(morUpdateDeletesDir(v)))
+        else None
+    }
 
-  /** Does version `v` carry a non-empty equality-delete key file? */
-  private def morKeysExist(v: Long): Boolean =
+  /** Does version `v`'s unrecorded key dir hold a non-empty key file? */
+  private def legacyKeysExist(v: Long): Boolean =
     if (rootIsLocal) {
       val delDir = new java.io.File(
         new Path(morUpdateDeletesDir(v)).toUri.getPath)
@@ -941,7 +990,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       if (i <= 0) Nil
       else {
         val k = seg.substring(0, i)
-        val raw = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
+        val raw = ExternalCatalogUtils.unescapePathName(seg.substring(i + 1))
         if (raw == "__HIVE_DEFAULT_PARTITION__") Nil // null partition value
         else if (timeSrc.contains(k)) {
           // the dir value's [start, end) period, as LocalDateTimes in the
@@ -1487,7 +1536,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     rootFs.delete(new Path(root, s"v=$v"), true)
     metaDelete(manifestRel(v))
     manifestCache.synchronized { manifestCache.remove(v) }
-    manifestSpecCache.synchronized { manifestSpecCache.remove(v) }
     deleteMarker(v)
   }
 
@@ -1527,40 +1575,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * relative, so stats and metadata scans see through the partition dirs). */
   private def writeVersionDir(df: DataFrame, v: Long,
       partitionBy: Seq[String] = Nil, spec: Seq[String] = Nil): Long = {
-    val dir = s"$root/v=$v"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val base = new Path(dir)
-    val fs = base.getFileSystem(hconf)
-    val found = scala.collection.mutable.ArrayBuffer.empty[(String, Path, Long)]
-    val basePrefix = base.toUri.getPath.stripSuffix("/") + "/"
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        // manual prefix-strip: URI.relativize treats a no-trailing-slash base
-        // as a file and mangles nested (partition-dir) children
-        val rel = st.getPath.toUri.getPath.stripPrefix(basePrefix)
-        if (rel.split('/').forall(s => !s.startsWith("_") && !s.startsWith(".")))
-          found += ((rel, st.getPath, st.getLen))
-      }
-    }
-    val stats = found.sortBy(_._1).toSeq.map { case (rel, path, len) =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, hconf))
-      try {
-        // footer stats win; partition-path values fill in the columns hive
-        // layout removed from the files (identity partition cols), plus a
-        // day-range for the hidden transform's source timestamp when its
-        // own footer stats are unavailable
-        val footerSt = SnapshotTable.footerColumnStats(reader.getFooter)
-        SnapshotTable.ManifestFile(rel, reader.getRecordCount, len,
-          partitionPathStats(rel, df.schema) ++ footerSt)
-      } finally reader.close()
-    }
-    val header = "#schema\t" + java.util.Base64.getEncoder.encodeToString(
-      df.schema.json.getBytes("UTF-8"))
+    val stats = writeFiles(df, s"$root/v=$v", partitionBy)
     // the spec in force when these files were WRITTEN rides the manifest
     // (Iceberg's spec-id-per-file): transform-derived pruning conjuncts are
     // only sound against files whose recorded spec matches the derivation
@@ -1568,62 +1583,109 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       if (spec.isEmpty) Nil
       else Seq("#spec\t" + java.util.Base64.getEncoder.encodeToString(
         spec.mkString(",").getBytes("UTF-8")))
-    val body = stats.map(f =>
-      s"${f.name}\t${f.records}\t${f.bytes}\t${SnapshotTable.encodeStats(f.stats)}")
     metaWriteString(manifestRel(v),
-      ((header +: specLine) ++ body).mkString("", "\n", "\n"))
+      ((schemaLine(SchemaTag, df.schema) +: specLine) ++ stats.map(fileLine))
+        .mkString("", "\n", "\n"))
     stats.map(_.records).sum
   }
 
-  /** Per-instance manifest cache: a version's manifest is immutable once
-    * written (expiry deletes it, but then the version is unreadable anyway),
-    * and resolution probes it from both the base-selection scan and the
-    * delta-batching pass — a 500-delta chain must not re-open 1000 files.
-    * Synchronized: concurrent committers share the instance. */
-  private val manifestCache =
-    scala.collection.mutable.HashMap.empty[Long, Option[(StructType, Seq[SnapshotTable.ManifestFile])]]
-
-  /** Partition spec recorded in each version's manifest (`#spec` header):
-    * Some(spec) when recorded, None for legacy manifests — filled as a side
-    * effect of [[readManifest]]. */
-  private val manifestSpecCache =
-    scala.collection.mutable.HashMap.empty[Long, Option[Seq[String]]]
-
-  /** The partition spec version `v`'s files were WRITTEN under, when its
-    * manifest recorded one (r14+ manifests of partitioned stores). */
-  private[sources] def manifestSpec(v: Long): Option[Seq[String]] = {
-    readManifest(v) // populates both caches
-    manifestSpecCache.synchronized(manifestSpecCache.get(v)).flatten
+  /** Write `df` as parquet under `dir` and describe every file written:
+    * name relative to `dir`, footer record count, byte size and column
+    * ranges (footer stats win; partition-path values fill in the columns
+    * hive layout removed from the files, plus a period range for a time
+    * transform's source column when its own footer stats are unavailable). */
+  private def writeFiles(df: DataFrame, dir: String,
+      partitionBy: Seq[String]): Seq[SnapshotTable.ManifestFile] = {
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val base = new Path(dir)
+    SnapshotTable.listVisibleFiles(base.getFileSystem(hconf), base).map {
+      case (rel, st) =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
+        try SnapshotTable.ManifestFile(rel, reader.getRecordCount, st.getLen,
+          partitionPathStats(rel, df.schema) ++
+            SnapshotTable.footerColumnStats(reader.getFooter))
+        finally reader.close()
+    }
   }
 
-  /** The manifest written with version `v`'s data dir, if present:
-    * (schema, per-file name/records/bytes/column-ranges). */
-  private[sources] def readManifest(v: Long): Option[(StructType, Seq[SnapshotTable.ManifestFile])] =
+  /** Manifest line tags: `#schema` heads every manifest; a mor UPDATE/MERGE
+    * manifest also records its claimed-key files (`_graft_deletes/`) as a
+    * `#keyschema` line plus one `#keyfile` line per file, so readers plan
+    * the key files without listing the dir or inferring their schema.
+    * Readers that predate a tag skip it (every `#` line is a header). */
+  private val SchemaTag = "#schema"
+  private val KeySchemaTag = "#keyschema"
+  private val KeyFileTag = "#keyfile"
+
+  private def schemaLine(tag: String, schema: StructType): String =
+    tag + "\t" + java.util.Base64.getEncoder.encodeToString(
+      schema.json.getBytes("UTF-8"))
+
+  private def fileLine(f: SnapshotTable.ManifestFile): String =
+    s"${f.name}\t${f.records}\t${f.bytes}\t${SnapshotTable.encodeStats(f.stats)}"
+
+  /** Write a mor UPDATE/MERGE commit's claimed keys into version `v`'s
+    * `_graft_deletes/` (only when `nonEmpty`: a commit that claimed nothing
+    * writes no key file) and append their record to `v`'s manifest. Runs
+    * before the commit is logged, so crash debris is the unlogged version's
+    * dir and manifest, which removeOrphans reclaims together. */
+  private def writeKeyFiles(v: Long, keys: DataFrame, nonEmpty: Boolean): Unit = {
+    val files = if (nonEmpty) writeFiles(keys, morUpdateDeletesDir(v), Nil) else Nil
+    metaAppendString(manifestRel(v), (schemaLine(KeySchemaTag, keys.schema) +:
+      files.map(f => KeyFileTag + "\t" + fileLine(f))).mkString("", "\n", "\n"))
+    manifestCache.synchronized { manifestCache.remove(v) }
+  }
+
+  /** Per-instance manifest cache: a version's manifest is immutable once
+    * its commit is logged (expiry deletes it, but then the version is
+    * unreadable anyway), and resolution probes it from both the
+    * base-selection scan and the delta-batching pass — a 500-delta chain
+    * must not re-open 1000 files. Synchronized: concurrent committers
+    * share the instance. */
+  private val manifestCache =
+    scala.collection.mutable.HashMap.empty[Long, Option[SnapshotTable.Manifest]]
+
+  private def manifestOf(v: Long): Option[SnapshotTable.Manifest] =
     manifestCache.synchronized {
       manifestCache.getOrElseUpdate(v, readManifestUncached(v))
     }
 
-  private def readManifestUncached(v: Long): Option[(StructType, Seq[SnapshotTable.ManifestFile])] =
+  /** The partition spec version `v`'s files were WRITTEN under, when its
+    * manifest recorded one (r14+ manifests of partitioned stores). */
+  private[sources] def manifestSpec(v: Long): Option[Seq[String]] =
+    manifestOf(v).flatMap(_.spec)
+
+  /** The manifest written with version `v`'s data dir, if present:
+    * (schema, per-file name/records/bytes/column-ranges). */
+  private[sources] def readManifest(v: Long): Option[(StructType, Seq[SnapshotTable.ManifestFile])] =
+    manifestOf(v).map(m => (m.schema, m.files))
+
+  private def readManifestUncached(v: Long): Option[SnapshotTable.Manifest] =
     if (!metaExists(manifestRel(v))) None
     else {
       val lines = metaReadLines(manifestRel(v))
-      val schema = lines.headOption.filter(_.startsWith("#schema\t")).map { h =>
-        DataType.fromJson(new String(java.util.Base64.getDecoder.decode(
-          h.split("\t", 2)(1)), "UTF-8")).asInstanceOf[StructType]
+      def payload(l: String) = new String(
+        java.util.Base64.getDecoder.decode(l.split("\t", 2)(1)), "UTF-8")
+      def schemaOf(l: String) =
+        DataType.fromJson(payload(l)).asInstanceOf[StructType]
+      def fileOf(l: String) = {
+        // pre-r12 manifests have 3 fields (no stats) — still readable,
+        // they just never prune
+        val p = l.split("\t", 4)
+        SnapshotTable.ManifestFile(p(0), p(1).toLong, p(2).toLong,
+          if (p.length > 3) SnapshotTable.decodeStats(p(3)) else Map.empty)
       }
-      val spec = lines.find(_.startsWith("#spec\t")).map { l =>
-        splitSpecEntries(new String(
-          java.util.Base64.getDecoder.decode(l.split("\t", 2)(1)), "UTF-8"))
-      }
-      manifestSpecCache.synchronized { manifestSpecCache.put(v, spec) }
-      schema.map { sch =>
-        (sch, lines.drop(1).filterNot(_.startsWith("#")).map { l =>
-          // pre-r12 manifests have 3 fields (no stats) — still readable,
-          // they just never prune
-          val p = l.split("\t", 4)
-          SnapshotTable.ManifestFile(p(0), p(1).toLong, p(2).toLong,
-            if (p.length > 3) SnapshotTable.decodeStats(p(3)) else Map.empty)
-        }.toSeq)
+      val spec = lines.find(_.startsWith("#spec\t")).map(l =>
+        splitSpecEntries(payload(l)))
+      val keys = lines.find(_.startsWith(KeySchemaTag + "\t")).map(l =>
+        (schemaOf(l), lines.filter(_.startsWith(KeyFileTag + "\t"))
+          .map(k => fileOf(k.stripPrefix(KeyFileTag + "\t")))))
+      lines.headOption.filter(_.startsWith(SchemaTag + "\t")).map { h =>
+        SnapshotTable.Manifest(schemaOf(h), lines.drop(1).filterNot(_.startsWith("#"))
+          .map(fileOf), spec, keys)
       }
     }
 
@@ -1636,9 +1698,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     readManifest(v) match {
       case Some((schema, files)) if files.isEmpty =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case Some((schema, _)) =>
-        manifestRelation(Seq(v)).getOrElse(
-          inSchemaOrder(schema, spark.read.parquet(s"$root/v=$v")))
+      case Some((schema, files)) =>
+        manifestRelation(Seq(v)).getOrElse(keptFrame(schema, files.map(v -> _)))
       case _ => spark.read.parquet(s"$root/v=$v")
     }
 
@@ -1665,33 +1726,52 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     case _ => None
   }
 
-  /** The given version dirs as ONE manifest-backed parquet relation: a
-    * [[ManifestFileIndex]] over every manifest-listed file (qualified path,
-    * byte size, column ranges, parsed partition values) under a
-    * HadoopFsRelation, so Spark's `FileSourceStrategy` consults the
-    * manifests — never the filesystem — and pushed-down filters prune files
-    * before the scan plans. This is what makes file skipping happen on the
-    * PLAIN read paths (reference clinicdata.sql:38-39: a day query reads
-    * one partition no matter who asks), where [[readWhere]] serves callers
-    * that want the eagerly-measured variant.
-    *
-    * None (→ caller falls back to `spark.read.parquet`) when any dir lacks
-    * a manifest, schemas differ across dirs, or the partition layout is
-    * inconsistent / carries a value the declared type cannot parse — the
-    * fallback only costs the pruning, never correctness. */
+  /** The given version dirs as ONE manifest-backed parquet relation over
+    * every manifest-listed file ([[filesRelation]]). None when any dir
+    * lacks a manifest, schemas differ across dirs, or [[filesRelation]]
+    * declines the layout; the caller's fallback read only costs the
+    * pruning, never correctness. */
   private def manifestRelation(versions: Seq[Long]): Option[DataFrame] = {
     val manifests = versions.flatMap(v => readManifest(v).map(v -> _))
     if (manifests.size != versions.size) return None
     val schema = manifests.head._2._1
     if (manifests.exists(_._2._1.json != schema.json)) return None
-    val files = manifests.flatMap { case (v, (_, fs)) => fs.map(v -> _) }
+    filesRelation(schema,
+      manifests.flatMap { case (v, (_, fs)) => fs.map(s"$root/v=$v" -> _) },
+      versions, recordScans = true)
+  }
+
+  /** Manifest-recorded files as ONE parquet relation planned from the
+    * recorded `schema`: a [[ManifestFileIndex]] over the files (qualified
+    * path, byte size, column ranges, parsed partition values) under a
+    * HadoopFsRelation, so Spark's `FileSourceStrategy` consults the
+    * manifests — never the filesystem, never a schema-inference job — and
+    * pushed-down filters prune files before the scan plans. This is what
+    * makes file skipping happen on the PLAIN read paths (reference
+    * clinicdata.sql:38-39: a day query reads one partition no matter who
+    * asks), where [[readWhere]] serves callers that want the
+    * eagerly-measured variant.
+    *
+    * `files` pairs each file with the dir its manifest name is relative
+    * to; `versions` are the version dirs read (transform-derivation
+    * soundness). `recordScans = false` is for pruned subsets and key
+    * files: the scan records nothing into [[SnapshotTable.scanStats]]
+    * ([[lastPruneStats]] counted the subset eagerly) and every field reads
+    * nullable, nested ones too, as the schema-inferring reads of these
+    * paths always reported.
+    *
+    * None when there are no files, or the partition layout is inconsistent
+    * / carries a value the declared type cannot parse. */
+  private def filesRelation(schema: StructType,
+      files: Seq[(String, SnapshotTable.ManifestFile)], versions: Seq[Long],
+      recordScans: Boolean): Option[DataFrame] = {
     if (files.isEmpty) return None
     def dirPairs(name: String): Seq[(String, String)] =
       name.split('/').dropRight(1).toSeq.map { seg =>
         val i = seg.indexOf('=')
         if (i <= 0) ("", seg)
         else (seg.substring(0, i),
-          java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8"))
+          ExternalCatalogUtils.unescapePathName(seg.substring(i + 1)))
       }
     val partKeys = dirPairs(files.head._2.name).map(_._1)
     if (partKeys.exists(_.isEmpty)) return None
@@ -1699,14 +1779,16 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val partFieldOpts = partKeys.map(k =>
       schema.fields.find(_.name.equalsIgnoreCase(k)))
     if (partFieldOpts.exists(_.isEmpty)) return None
-    val partitionSchema = StructType(
-      partFieldOpts.flatten.map(_.copy(nullable = true)))
+    def readable(f: StructField) =
+      if (recordScans) f.copy(nullable = true)
+      else f.copy(dataType = SnapshotTable.allNullable(f.dataType), nullable = true)
+    val partitionSchema = StructType(partFieldOpts.flatten.map(readable))
     val dataSchema = StructType(schema.fields.filterNot(f =>
-      partKeys.exists(_.equalsIgnoreCase(f.name))).map(_.copy(nullable = true)))
+      partKeys.exists(_.equalsIgnoreCase(f.name))).map(readable))
     if (dataSchema.isEmpty) return None
     val hconf = spark.sparkContext.hadoopConfiguration
     val fsys = new Path(root).getFileSystem(hconf)
-    val entryOpts: Seq[Option[ManifestFileEntry]] = files.map { case (v, f) =>
+    val entryOpts: Seq[Option[ManifestFileEntry]] = files.map { case (dir, f) =>
       val pairs = dirPairs(f.name)
       val valueOpts = pairs.zip(partitionSchema.fields).map { case ((_, raw), fld) =>
         if (raw == "__HIVE_DEFAULT_PARTITION__") Some(null)
@@ -1714,13 +1796,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       }
       if (valueOpts.exists(_.isEmpty)) None
       else Some(ManifestFileEntry(
-        fsys.makeQualified(new Path(s"$root/v=$v/${f.name}")), f.bytes, f.stats,
+        fsys.makeQualified(new Path(s"$dir/${f.name}")), f.bytes, f.stats,
         pairs.map(p => s"${p._1}=${p._2}").mkString("/"),
         org.apache.spark.sql.catalyst.InternalRow.fromSeq(valueOpts.map(_.get))))
     }
     if (entryOpts.exists(_.isEmpty)) return None
     val index = new ManifestFileIndex(spark, root, schema, partitionSchema,
-      entryOpts.flatten, conj => transformConjuncts(schema, conj, versions))
+      entryOpts.flatten, conj => transformConjuncts(schema, conj, versions),
+      recordScans)
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, partitionSchema, dataSchema, None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
@@ -1732,6 +1815,24 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .baseRelationToDataFrame(rel)
       .select(schema.fields.map(f => col(f.name)).toSeq: _*))
   }
+
+  /** Some of the manifest files of one or more version dirs (a pruned
+    * subset), planned from the recorded schema: no listing, no inference
+    * job. `wrap` annotates each scan frame (pos-delete provenance must be
+    * taken on a file-source relation, before any union). A layout
+    * [[filesRelation]] declines reads per dir with the schema given
+    * explicitly, partition columns recovered from the hive dirs. */
+  private def keptFrame(schema: StructType,
+      kept: Seq[(Long, SnapshotTable.ManifestFile)],
+      wrap: DataFrame => DataFrame = identity): DataFrame =
+    filesRelation(schema, kept.map { case (v, f) => s"$root/v=$v" -> f },
+      kept.map(_._1).distinct, recordScans = false).map(wrap).getOrElse(
+      kept.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, fs) =>
+        wrap(inSchemaOrder(schema, spark.read
+          .schema(SnapshotTable.allNullable(schema).asInstanceOf[StructType])
+          .option("basePath", s"$root/v=$v")
+          .parquet(fs.map(f => s"$root/v=$v/${f._2.name}"): _*)))
+      }.reduce(_.unionByName(_, allowMissingColumns = true)))
 
   // ── resolution ─────────────────────────────────────────────────────────
 
@@ -2004,9 +2105,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   private var pruneKept = 0L
   private var pruneTotal = 0L
 
-  /** Version `v`'s own data dir, file-pruned by `conj` when its manifest
-    * carries column stats. Reads through hive-partition subdirs (basePath)
-    * so partition columns survive a partial file list. */
   /** A frame's columns reordered to the manifest-declared schema order (a
     * hive-partitioned read appends partition columns at the end; readers
     * must see the committed order). Only reorders — never adds, drops, or
@@ -2020,6 +2118,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     else df
   }
 
+  /** Version `v`'s own data dir, file-pruned by `conj` when its manifest
+    * carries column stats; a partial file list plans from the manifest
+    * ([[keptFrame]]), partition columns included. */
   private def readVersionDirPruned(v: Long, prune: Option[Seq[Expression]]): DataFrame =
     prune match {
       case Some(cs) => readManifest(v) match {
@@ -2029,10 +2130,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
           if (kept.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
           else if (kept.size == files.size) readVersionDir(v)
-          else if (kept.exists(_.name.contains('/')))
-            inSchemaOrder(schema, spark.read.option("basePath", s"$root/v=$v")
-              .parquet(kept.map(f => s"$root/v=$v/${f.name}"): _*))
-          else spark.read.parquet(kept.map(f => s"$root/v=$v/${f.name}"): _*)
+          else keptFrame(schema, kept.map(v -> _))
         case Some((schema, _)) =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         case None => readVersionDir(v)
@@ -2119,31 +2217,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
                 val (schema, files) = readManifest(m._1).get
                 val kept = SnapshotTable.keptFiles(schema, files, cs)
                 pruneKept += kept.size; pruneTotal += files.size
-                (m._1, schema, kept, files.size)
+                (schema, kept.map(m._1 -> _))
               }
-              val nested = perDir.exists(_._3.exists(_.name.contains('/')))
-              if (perDir.forall(d => d._3.size == d._4))
-                inSchemaOrder(perDir.head._2,
-                  spark.read.parquet(run.map(m => s"$root/v=${m._1}"): _*))
-              else if (perDir.forall(_._3.isEmpty))
-                spark.createDataFrame(spark.sparkContext.emptyRDD[Row], perDir.head._2)
-              else if (!nested)
-                spark.read.parquet(perDir.flatMap { case (ver, _, kept, _) =>
-                  kept.map(f => s"$root/v=$ver/${f.name}") }: _*)
-              else perDir.filter(_._3.nonEmpty).map { case (ver, sch, kept, total) =>
-                // posWrap BEFORE the union: `_metadata` only resolves on a
-                // file-source relation — wrapping the reduced Union would
-                // silently null-fill and make these rows immune to
-                // position deletes
-                posWrap(if (kept.size == total) readVersionDir(ver)
-                else inSchemaOrder(sch, spark.read.option("basePath", s"$root/v=$ver")
-                  .parquet(kept.map(f => s"$root/v=$ver/${f.name}"): _*)))
-              }.reduce(_.unionByName(_, allowMissingColumns = true))
-            case None => manifestRelation(run.map(_._1)).getOrElse {
-              val raw = spark.read.parquet(run.map(m => s"$root/v=${m._1}"): _*)
-              readManifest(run.head._1).map(m => inSchemaOrder(m._1, raw))
-                .getOrElse(raw)
-            }
+              val kept = perDir.flatMap(_._2)
+              if (kept.isEmpty)
+                spark.createDataFrame(spark.sparkContext.emptyRDD[Row], perDir.head._1)
+              else keptFrame(perDir.head._1, kept, posWrap)
+            case None => manifestRelation(run.map(_._1)).getOrElse(
+              keptFrame(readManifest(run.head._1).get._1, run.flatMap(m =>
+                readManifest(m._1).get._2.map(m._1 -> _)), posWrap))
           }
           Some(acc.map(_.unionByName(posWrap(df), allowMissingColumns = true))
             .getOrElse(posWrap(df)))
@@ -2221,25 +2303,23 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       val df = acc.getOrElse(throw new IllegalStateException(
         s"mor-update v=${m._1} has no base snapshot at $root"))
       val repl = posWrap(readVersionDirPruned(m._1, prune))
-      if (!morKeysExist(m._1)) df // predicate matched nothing: a no-op commit
-      else {
-        val keys = spark.read.parquet(morUpdateDeletesDir(m._1))
-        // anti-join on EVERY key column (the delete file carries the whole
-        // composite key, like the mor-delete path) — joining on a prefix
-        // would drop base rows that share only the first key component
-        df.join(broadcast(keys), keys.columns.toSeq, "left_anti")
-          .unionByName(repl, allowMissingColumns = true)
+      morClaimedKeys(m._1) match {
+        case None => df // predicate matched nothing: a no-op commit
+        case Some(keys) =>
+          // anti-join on EVERY key column (the delete file carries the whole
+          // composite key, like the mor-delete path) — joining on a prefix
+          // would drop base rows that share only the first key component
+          df.join(broadcast(keys), keys.columns.toSeq, "left_anti")
+            .unionByName(repl, allowMissingColumns = true)
       }
     case MorMergeOp =>
       val df = acc.getOrElse(throw new IllegalStateException(
         s"mor-merge v=${m._1} has no base snapshot at $root"))
       val repl = posWrap(readVersionDirPruned(m._1, prune))
-      val afterDel =
-        if (!morKeysExist(m._1)) df // insert-only merge: nothing matched
-        else {
-          val keys = spark.read.parquet(morUpdateDeletesDir(m._1))
-          df.join(broadcast(keys), keys.columns.toSeq, "left_anti")
-        }
+      val afterDel = morClaimedKeys(m._1) match {
+        case None => df // insert-only merge: nothing matched
+        case Some(keys) => df.join(broadcast(keys), keys.columns.toSeq, "left_anti")
+      }
       // unlike mor-update, the dir unions even with no keys (inserts)
       afterDel.unionByName(repl, allowMissingColumns = true)
     case op if op.startsWith(EvolveOpPrefix) =>
@@ -2518,7 +2598,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
           rootFs.delete(s.getPath, true)
           metaDelete(manifestRel(v))
           manifestCache.synchronized { manifestCache.remove(v) }
-          manifestSpecCache.synchronized { manifestSpecCache.remove(v) }
           v
         }
       }.sorted
@@ -2822,9 +2901,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     // the delete keys come from the just-written REPLACEMENT files — a
     // delta-sized read, not a second predicate pass over the table
     val written = readVersionDir(next)
-    if (!written.isEmpty)
-      written.select(keyCols.map(col): _*).distinct()
-        .write.mode("overwrite").parquet(morUpdateDeletesDir(next))
+    writeKeyFiles(next, written.select(keyCols.map(col): _*).distinct(),
+      nonEmpty = !written.isEmpty)
     validateHeadOrRelease(mainHead(meta), next)
     appendMeta(next, MorUpdateOp, tableRowsAsOf(meta, mainHead(meta).get))
     next
@@ -3016,8 +3094,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val written = writeDataDir(data, next)
     val keys = claimed.select(col(keyCol)).distinct()
     val keysN = keys.count()
-    if (keysN > 0)
-      keys.write.mode("overwrite").parquet(morUpdateDeletesDir(next))
+    writeKeyFiles(next, keys, nonEmpty = keysN > 0)
     // rows the read-path anti-join will actually remove: every TARGET row
     // whose key is claimed. With duplicate-keyed base rows (appends can
     // create them; nothing enforces target-key uniqueness) this exceeds the
@@ -3511,9 +3588,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .getOrElse(return None)._1
     val keyFrame = op match {
       case o if o == MorDeleteOp || isPosDelete(o) => readVersionDir(v)
-      case _ =>
-        if (morKeysExist(v)) spark.read.parquet(morUpdateDeletesDir(v))
-        else readVersionDir(v).limit(0) // no claimed keys (e.g. insert-only merge)
+      case _ => morClaimedKeys(v).getOrElse(
+        readVersionDir(v).limit(0)) // no claimed keys (e.g. insert-only merge)
     }
     val joinCols = keyFrame.columns.toSeq
     val resolvedPrev =
