@@ -114,12 +114,7 @@ final class Materializations(spark: SparkSession, warehouseDir: Option[String] =
       }
       e.materialized = Some(mat)
       e.refreshedAtMs = Some(System.currentTimeMillis())
-      // Fingerprint once at refresh (optimizer rules run per query —
-      // matching must not re-analyze the definition each time).
-      e.fingerprint = try Some((
-        classic(e.define()).queryExecution.optimizedPlan.canonicalized,
-        classic(mat).queryExecution.analyzed))
-      catch { case _: Throwable => None }
+      e.fingerprint = fingerprintOf(e, mat)
       mat
     }
   }
@@ -178,13 +173,20 @@ final class Materializations(spark: SparkSession, warehouseDir: Option[String] =
       }
       e.materialized = Some(mat)
       e.refreshedAtMs = Some(System.currentTimeMillis())
-      e.fingerprint = try Some((
-        classic(e.define()).queryExecution.optimizedPlan.canonicalized,
-        classic(mat).queryExecution.analyzed))
-      catch { case _: Throwable => None }
+      e.fingerprint = fingerprintOf(e, mat)
       mat
     }
   }
+
+  /** The (definition, materialization) plan pair substitution matches on,
+    * taken once at refresh: optimizer rules run per query, and matching
+    * must not re-analyze the definition each time. Both plans belong to a
+    * definition and a materialization that just ran, so an error here is a
+    * real fault and propagates rather than silently disabling substitution
+    * for the reflection. */
+  private def fingerprintOf(e: Entry, mat: DataFrame) = Some((
+    classic(e.define()).queryExecution.optimizedPlan.canonicalized,
+    classic(mat).queryExecution.analyzed))
 
   /** A materialization just written to `path`, read back with the schema
     * it was written with (every field nullable, as any parquet read

@@ -29,6 +29,30 @@ object SnapshotTable {
       files: Seq[ManifestFile], spec: Option[Seq[String]],
       keys: Option[(StructType, Seq[ManifestFile])])
 
+  /** The head a write op's staged content was derived from:
+    * [[SnapshotTable#transact]] logs the op only while that head still
+    * stands. */
+  private sealed trait Basis
+  /** Derived from no head: a plain append, a blind overwrite, a rollback or
+    * a publish commutes with whatever commits first. */
+  private case object Commutes extends Basis
+  /** Derived from main's head: the one the caller read before calling
+    * (`pinned`), else the one `transact` reads. */
+  private final case class OnMain(pinned: Option[Option[Long]] = None) extends Basis
+  /** Derived from branch `name`'s head. */
+  private final case class OnBranch(name: String) extends Basis
+
+  /** What a write op's stage leaves for `transact` to log: the op string,
+    * the logged row count as a function of (log, head) — evaluated on the
+    * log read fresh inside the commit section, `head` being the version the
+    * commit lands on — and a step that must follow the log record (a
+    * branch's ref move, the partition spec file). */
+  private final case class Staged(op: String,
+      rows: (Seq[Meta], Option[Long]) => Long, afterLog: () => Unit = () => ())
+
+  /** One commit-log entry: (version, committed-at ms, op, row count). */
+  private type Meta = (Long, Long, String, Long)
+
   /** Raised when an optimistic commit loses its conflict check: the table
     * head moved between the operation's snapshot read and its commit attempt
     * (Iceberg's commit-conflict contract — re-read and retry the operation). */
@@ -447,8 +471,7 @@ object SnapshotTable {
   * (re-read and retry). Plain appends commute and never conflict.
   */
 final class SnapshotTable(spark: SparkSession, root: String) {
-
-  private type Meta = (Long, Long, String, Long)
+  import SnapshotTable.{Basis, Commutes, Meta, OnBranch, OnMain, Staged}
 
   private val MetaFile = "_graft_meta.jsonl"
 
@@ -1316,32 +1339,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     res
   }
 
-  // ── cross-process commit critical section ────────────────────────────────
-  //    With a registered arbiter, the validate→log tail of every commit runs
-  //    inside the arbiter's commit mutex: [[validateHeadOrRelease]] acquires
-  //    before its fresh head read, plain (validation-free) commits acquire
-  //    at [[appendMeta]], and the section releases once the log record is
-  //    durable. Data writes stay OUTSIDE the section — at 100 TB the heavy
-  //    parquet writes of concurrent commits proceed in parallel and only the
-  //    short metadata tail serializes, the same split Iceberg gets from its
-  //    catalog-side CAS. The flag is per-instance but every path here runs
-  //    under [[withRootLock]]'s monitor, so a single thread owns it.
-  private var commitMutexHeld = false
-
-  private def acquireCommitMutex(): Unit =
-    if (!commitMutexHeld)
-      SnapshotTable.arbiterFor(root).foreach { a =>
-        a.lockCommit(SnapshotTable.canonicalRoot(root))
-        commitMutexHeld = true
-      }
-
-  private def releaseCommitMutex(): Unit =
-    if (commitMutexHeld) {
-      commitMutexHeld = false
-      SnapshotTable.arbiterFor(root)
-        .foreach(_.unlockCommit(SnapshotTable.canonicalRoot(root)))
-    }
-
   /** Test seam: runs inside the commit section just before the fence
     * check + log-tail write (models a GC pause at the worst point). */
   private[sources] var beforeLogTail: () => Unit = () => ()
@@ -1351,39 +1348,38 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * window the r18 fence left open — the conditional write closes it). */
   private[sources] var afterFenceBeforeTail: () => Unit = () => ()
 
+  /** Step 6 of [[transact]]: write the log record, inside the commit
+    * section. */
   private def appendMeta(version: Long, op: String, rows: Long): Unit = {
-    acquireCommitMutex()
-    try {
-      beforeLogTail()
-      // fencing, early reject: a holder whose commit.lock was taken over
-      // (stale-break by another process after a long pause) must NOT
-      // write the tail
-      SnapshotTable.arbiterFor(root)
-        .foreach(_.verifyFence(SnapshotTable.canonicalRoot(root)))
-      afterFenceBeforeTail()
-      val line = s"$version,${System.currentTimeMillis()},$op,$rows\n"
-      // the tail write itself is TOKEN-CONDITIONAL on the arbiter seam:
-      // epoch check + write are atomic against takeovers, so a pause
-      // between the fence check above and here cannot land the record
-      def writeTail(): Unit = {
-        // scheme'd roots: the record file IS the commit point (see the
-        // ledger note above); the shared log below is only a cache of it
-        if (!rootIsLocal) metaWriteString(logRecordRel(version), line)
-        metaAppendString(MetaFile, line)
-      }
-      SnapshotTable.arbiterFor(root) match {
-        case Some(a) => a.conditionalTailWrite(
-          SnapshotTable.canonicalRoot(root), () => writeTail())
-        case None => writeTail()
-      }
-      // self-GC: once the version is LOGGED the marker has done its job —
-      // `claimVersion` re-validates against the log after every create, so a
-      // racer that re-creates this number can never keep it. Without this a
-      // long-lived table accrues one empty file per version forever and every
-      // commit pays an O(total-versions) marker listing (on an object store,
-      // the classic metadata bottleneck).
-      deleteMarker(version)
-    } finally releaseCommitMutex()
+    beforeLogTail()
+    // fencing, early reject: a holder whose commit.lock was taken over
+    // (stale-break by another process after a long pause) must NOT
+    // write the tail
+    SnapshotTable.arbiterFor(root)
+      .foreach(_.verifyFence(SnapshotTable.canonicalRoot(root)))
+    afterFenceBeforeTail()
+    val line = s"$version,${System.currentTimeMillis()},$op,$rows\n"
+    // the tail write itself is TOKEN-CONDITIONAL on the arbiter seam:
+    // epoch check + write are atomic against takeovers, so a pause
+    // between the fence check above and here cannot land the record
+    def writeTail(): Unit = {
+      // scheme'd roots: the record file IS the commit point (see the
+      // ledger note above); the shared log below is only a cache of it
+      if (!rootIsLocal) metaWriteString(logRecordRel(version), line)
+      metaAppendString(MetaFile, line)
+    }
+    SnapshotTable.arbiterFor(root) match {
+      case Some(a) => a.conditionalTailWrite(
+        SnapshotTable.canonicalRoot(root), () => writeTail())
+      case None => writeTail()
+    }
+    // self-GC: once the version is LOGGED the marker has done its job —
+    // `claimVersion` re-validates against the log after every create, so a
+    // racer that re-creates this number can never keep it. Without this a
+    // long-lived table accrues one empty file per version forever and every
+    // commit pays an O(total-versions) marker listing (on an object store,
+    // the classic metadata bottleneck).
+    deleteMarker(version)
   }
 
   // ── optimistic concurrency (Iceberg's atomic-swap commit: SURVEY §3.1
@@ -1391,21 +1387,20 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   //    CLAIMED by atomically creating `_graft_commits/v=N` (create-exclusive
   //    — POSIX atomic); losing the race re-reads and retries with the next
   //    number, so two concurrent writers always land DISTINCT versions and
-  //    neither overwrites the other's files or log entry. Operations that
-  //    derived their data from a snapshot read (cow DELETE/UPDATE/MERGE,
-  //    compaction, mor key selection) additionally validate that main's head
-  //    is still the snapshot they read — a moved head means the computed
-  //    result is stale, and the commit raises [[SnapshotTable.CommitConflictException]]
-  //    for the caller to re-read and retry, exactly Iceberg's
-  //    conflict-detection contract. Plain appends never conflict (they
-  //    commute), also matching Iceberg. ──────────────────────────────────
+  //    neither overwrites the other's files or log entry. Every write op
+  //    commits through [[transact]], which also validates that the head the
+  //    op's content was derived from still stands — a moved head means the
+  //    computed result is stale, and the commit raises
+  //    [[SnapshotTable.CommitConflictException]] for the caller to re-read
+  //    and retry, exactly Iceberg's conflict-detection contract. Plain
+  //    appends never conflict (they commute), also matching Iceberg. ───────
 
   // Marker IO goes through Hadoop's FileSystem so the CAS discipline holds
   // on `hdfs:`/`s3a:` roots, not just the local FS (the DedupStream
   // discipline). Local roots keep java.nio's O_EXCL create — RawLocalFS's
   // create(overwrite=false) is check-then-act, strictly weaker; HDFS's is
   // atomic server-side; S3A is best-effort (a real deployment closes that
-  // window with a catalog-side CAS, as validateHeadOrRelease documents).
+  // window with a catalog-side CAS, as [[transact]] documents).
   private lazy val rootFs: org.apache.hadoop.fs.FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -1470,18 +1465,19 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .map(_.maxClaimed(SnapshotTable.canonicalRoot(root))).getOrElse(-1L))
   }
 
-  /** Atomically claim the next free version number. Never returns a version
-    * another writer holds; a lost race simply moves to the next number.
-    * After winning a create, the claim is RE-VALIDATED against the log:
-    * markers self-GC once their version is logged, so a racer whose meta
-    * read predated that append could re-create a spent number — the
-    * re-validation releases it and moves past the log instead. */
   /** Test seam: invoked right after a marker create SUCCEEDS, before the
     * claim's log re-validation — lets specs inject a cross-process writer
     * landing (log append + marker self-GC) into the exact window the
     * re-validation protects. Production: no-op. */
   private[sources] var afterMarkerClaim: Long => Unit = _ => ()
 
+  /** Step 2 of [[transact]]: atomically claim the next free version number.
+    * Never returns a version another writer holds; a lost race simply moves
+    * to the next number. After winning a create, the claim is RE-VALIDATED
+    * against the log: markers self-GC once their version is logged, so a
+    * racer whose meta read predated that append could re-create a spent
+    * number — the re-validation releases it and moves past the log
+    * instead. */
   private def claimVersion(meta: Seq[Meta]): Long = {
     rootFs.mkdirs(commitMarkersDir)
     var next = math.max(nextVersion(meta), maxClaimed() + 1)
@@ -1500,38 +1496,32 @@ final class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Per-root in-process lock: commits from concurrent threads of one JVM
     * serialize their claim→write→log section (cross-process writers are
-    * ordered by the marker CAS alone). Keyed by the SAME canonical form the
-    * scan-stats map uses — java.nio canonicalization garbles scheme'd roots
-    * (`s3a://b/x` → `<cwd>/s3a:/b/x`), so two spellings of one remote root
-    * would take different locks. */
+    * ordered by the marker CAS and the arbiter's commit section). Keyed by
+    * the SAME canonical form the scan-stats map uses — java.nio
+    * canonicalization garbles scheme'd roots (`s3a://b/x` →
+    * `<cwd>/s3a:/b/x`), so two spellings of one remote root would take
+    * different locks. */
   private def withRootLock[T](body: => T): T =
     SnapshotTable.rootLocks
       .computeIfAbsent(SnapshotTable.canonicalRoot(root), _ => new Object)
-      // safety net: an op failing between its mutex acquire and appendMeta's
-      // release (a data-write error mid-tail) must not leak the cross-process
-      // commit section; release is a no-op when not held
-      .synchronized(try body finally releaseCommitMutex())
+      .synchronized(body)
 
-  private def headConflict(expected: Option[Long], now: Option[Long]): Nothing =
-    throw new SnapshotTable.CommitConflictException(
-      s"commit conflict at $root: expected main head $expected but found " +
-        s"$now — the table changed since this operation read it; re-read and retry")
-
-  /** Test seam: invoked immediately before a read-dependent commit's FINAL
-    * head validation (after its data is written, before the log append) —
-    * lets specs inject a cross-process writer into the exact window the
-    * re-check protects. Production: no-op. */
+  /** Test seam: invoked after a commit's stage has written its data, just
+    * before [[transact]] enters the commit section for the final head
+    * validation — lets specs inject a cross-process writer into the exact
+    * window the re-check protects, or a crash whose debris the claim
+    * marker protects until removeOrphans. Production: no-op. */
   private[sources] var beforeFinalHeadCheck: () => Unit = () => ()
 
-  /** Undo an optimistic claim that lost its conflict check: delete everything
-    * written under the claimed version (data dir with any `_graft_deletes`
-    * key file inside it, manifest sidecar, cached manifest) and then the
-    * claim marker itself, so a lost race leaves NO orphaned files. Releasing
-    * the marker is safe: by the time a conflict is raised the winning writer
-    * has already logged its entry, so `claimVersion`'s
-    * `max(nextVersion, maxClaimed + 1)` floor has moved past every live
-    * version and a re-claim of this number can only happen after this
-    * cleanup completed (marker deletion is last). */
+  /** Undo a claim whose commit will not be logged (a failed stage or a lost
+    * conflict check): delete everything written under the claimed version
+    * (data dir with any `_graft_deletes` key file inside it, manifest
+    * sidecar, cached manifest) and then the claim marker itself, so the
+    * attempt leaves NO orphaned files. Releasing the marker is safe: a
+    * conflict is raised only after the winning writer logged its entry, so
+    * `claimVersion`'s `max(nextVersion, maxClaimed + 1)` floor has moved
+    * past every live version, and a re-claim of this number can only happen
+    * after this cleanup completed (marker deletion is last). */
   private def releaseClaim(v: Long): Unit = {
     rootFs.delete(new Path(root, s"v=$v"), true)
     metaDelete(manifestRel(v))
@@ -1539,28 +1529,92 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     deleteMarker(v)
   }
 
-  /** Final conflict validation of a read-dependent commit: re-reads the log
-    * AFTER the data write (covering cross-process writers that landed during
-    * the write window — in-JVM writers are serialized by [[withRootLock]])
-    * and releases the claim before raising, so a conflict leaves no orphans.
-    * NOTE: the validation and the log append are two steps, not a CAS —
-    * within one JVM the root lock makes check+append atomic, and ACROSS
-    * processes a registered arbiter's commit mutex does
-    * ([[SnapshotTable.ClaimArbiter.lockCommit]], entered here before the
-    * fresh read and released by [[appendMeta]]; [[LockDirClaimArbiter]] is
-    * the durable implementation). Without an arbiter, cross-process callers
-    * get Iceberg's optimistic window, which a real deployment closes with a
-    * catalog-side CAS. */
-  private def validateHeadOrRelease(expected: Option[Long], next: Long): Unit = {
-    beforeFinalHeadCheck()
-    // enter the cross-process commit section BEFORE the fresh read: no
-    // record can land between this check and our own appendMeta (which
-    // releases the section) — see the ClaimArbiter.lockCommit contract
-    acquireCommitMutex()
-    val now = mainHead(readMeta(fresh = true))
-    if (now != expected) {
-      releaseCommitMutex(); releaseClaim(next); headConflict(expected, now)
+  /** The row count of a commit that leaves its head's rows as they were. */
+  private val headRows: (Seq[Meta], Option[Long]) => Long =
+    (log, head) => tableRowsAsOf(log, head.get)
+
+  private def headOrThrow(head: Option[Long]): Long =
+    head.getOrElse(throw new IllegalStateException(s"no snapshots at $root"))
+
+  private def headConflict(basis: Basis, expected: Option[Long],
+      now: Option[Long]): Nothing = {
+    val which = basis match { case OnBranch(b) => s"branch $b's"; case _ => "main" }
+    throw new SnapshotTable.CommitConflictException(
+      s"commit conflict at $root: expected $which head $expected but found " +
+        s"$now — the table changed since this operation read it; re-read and retry")
+  }
+
+  /** The one write protocol: every store write op commits through here.
+    *  1. Under the root lock, read the log and `basis`'s head; a head the
+    *     caller pinned that has already moved conflicts before any claim.
+    *  2. Claim a version ([[claimVersion]]).
+    *  3. Run `stage(log, head, version)`: the op's data and key-file writes.
+    *  4. Enter the commit section and read the log fresh.
+    *  5. Validate that `basis`'s head still stands (a [[Commutes]] op skips
+    *     this) and evaluate the staged row count on the fresh log.
+    *  6. Append the log record ([[appendMeta]]).
+    *  7. Run the staged post-log step, still inside the section, so a
+    *     branch's validate → log → ref move cannot interleave with another
+    *     writer's.
+    * A throw in steps 3–5 releases the claim ([[releaseClaim]]); a conflict
+    * raises [[SnapshotTable.CommitConflictException]] for the caller to
+    * re-read and retry.
+    *
+    * The commit section is a registered arbiter's commit mutex
+    * ([[SnapshotTable.ClaimArbiter.lockCommit]]; [[LockDirClaimArbiter]] is
+    * the durable implementation): entered before the fresh read, so no
+    * record lands between the check and the append, and left after step 7.
+    * Data writes stay OUTSIDE it — at 100 TB the heavy parquet writes of
+    * concurrent commits proceed in parallel and only the short metadata
+    * tail serializes, the split Iceberg gets from its catalog-side CAS.
+    * Within one JVM the root lock alone serializes; without an arbiter,
+    * cross-process writers get Iceberg's optimistic window, which a real
+    * deployment closes with a catalog-side CAS.
+    *
+    * A stage must not call another write op: the root lock is reentrant,
+    * so a nested claim would go unnoticed. */
+  private def transact(basis: Basis)(
+      stage: (Seq[Meta], Option[Long], Long) => Staged): Long = withRootLock {
+    def headIn(log: Seq[Meta]): Option[Long] = basis match {
+      case OnBranch(b) => Some(branchHead(b).getOrElse(
+        throw new IllegalStateException(s"no branch $b at $root")))
+      case _ => mainHead(log)
     }
+    val meta = readMeta()
+    val head = headIn(meta)
+    val expected = basis match {
+      case OnMain(Some(pinned)) => pinned
+      case _                    => head
+    }
+    if (head != expected) headConflict(basis, expected, head)
+    val next = claimVersion(meta)
+    def releasedOnThrow[T](body: => T): T =
+      try body catch { case e: Throwable => releaseClaim(next); throw e }
+    val staged = releasedOnThrow(stage(meta, head, next))
+    // outside the release: a throw here models a crash after the data write
+    beforeFinalHeadCheck()
+    val arbiter = SnapshotTable.arbiterFor(root)
+    val canon = SnapshotTable.canonicalRoot(root)
+    arbiter.foreach(_.lockCommit(canon))
+    try {
+      val rows = releasedOnThrow {
+        val log = readMeta(fresh = true)
+        val landsOn = basis match {
+          // the main head below the claim: a plain append's count is its
+          // predecessor's plus its own, whatever landed in the window
+          case Commutes =>
+            log.filter(m => m._1 < next && !isBranchOp(m._3)).lastOption.map(_._1)
+          case _ =>
+            val now = headIn(log)
+            if (now != expected) headConflict(basis, expected, now)
+            now
+        }
+        staged.rows(log, landsOn)
+      }
+      appendMeta(next, staged.op, rows)
+      staged.afterLog()
+    } finally arbiter.foreach(_.unlockCommit(canon))
+    next
   }
 
   // ── data-dir write path (manifest-producing) ───────────────────────────
@@ -2002,25 +2056,12 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * another writer moved it. Pass the head the operation's data was READ
     * from; ops whose result doesn't depend on prior state pass None. */
   def commit(df: DataFrame, op: String, expectedHead: Option[Option[Long]]): Long =
-    withRootLock {
-      val meta = readMeta()
-      expectedHead.foreach { exp =>
-        val now = mainHead(meta)
-        if (now != exp) headConflict(exp, now)
-      }
-      val next = claimVersion(meta)
-      val prev = mainHead(meta)
-      val written = writeDataDir(df, next)
-      // re-verify AFTER the (long) data write: a cross-process writer that
-      // committed during the write window must conflict here, not land a
-      // stale result as head (see validateHeadOrRelease's contract note)
-      expectedHead.foreach(exp => validateHeadOrRelease(exp, next))
-      val rows =
-        if (isDeltaAppend(op))
-          prev.map(tableRowsAsOf(meta, _)).getOrElse(0L) + written
-        else written
-      appendMeta(next, op, rows)
-      next
+    transact(expectedHead.fold[Basis](Commutes)(e => OnMain(Some(e)))) {
+      (_, _, next) =>
+        val written = writeDataDir(df, next)
+        Staged(op, (log, head) =>
+          if (isDeltaAppend(op)) head.fold(0L)(tableRowsAsOf(log, _)) + written
+          else written)
     }
 
   /** Declare the store's partition spec (identity columns and/or one
@@ -2744,17 +2785,13 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   /** Multi-column equality-delete form (Iceberg equality deletes may span
     * several identifier fields): the delete file carries every key column
     * and readers anti-join on all of them. */
-  def deleteWhereMor(pred: Column, keyCols: Seq[String]): Long = withRootLock {
+  def deleteWhereMor(pred: Column, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteWhereMor needs at least one key column")
-    val meta = readMeta()
-    val head = mainHead(meta)
-    require(head.nonEmpty, s"no snapshots at $root")
-    val next = claimVersion(meta)
-    val n = writeVersionDir(
-      read().filter(pred).select(keyCols.map(col): _*).distinct(), next)
-    validateHeadOrRelease(head, next) // keys were selected from `head`
-    appendMeta(next, MorDeleteOp, n)
-    next
+    transact(OnMain()) { (_, _, next) =>
+      val n = writeVersionDir(
+        read().filter(pred).select(keyCols.map(col): _*).distinct(), next)
+      Staged(MorDeleteOp, (_, _) => n)
+    }
   }
 
   /** Equality-delete commit from an explicit KEY FRAME (the shape an
@@ -2764,27 +2801,23 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * rather than a predicate (mirrored foreign delete files, CDC feeds).
     * Deleting keys with no matching rows is a no-op in effect, so replays
     * are idempotent by value. */
-  def deleteKeysMor(keys: DataFrame, keyCols: Seq[String]): Long = withRootLock {
+  def deleteKeysMor(keys: DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
-    val meta = readMeta()
-    val head = mainHead(meta)
-    require(head.nonEmpty, s"no snapshots at $root")
-    val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
-    // the logged row delta must be the MATCHED row count, not the key
-    // count: tableRowsAsOf subtracts it, and foreign keys may match zero
-    // rows (replays) or be absent entirely — deleteWhereMor's keys are
-    // head-selected so the two coincide there, not here
-    val cur = read()
-    // null-safe: a foreign delete file may carry NULL key values, and the
-    // resolution anti-join (applyChainOp) removes null-keyed rows for them
-    val matched = cur.join(broadcast(distinctKeys),
-      keyCols.map(c => cur(c) <=> distinctKeys(c)).reduce(_ && _),
-      "left_semi").count()
-    val next = claimVersion(meta)
-    writeVersionDir(distinctKeys, next)
-    validateHeadOrRelease(head, next) // matched was counted against `head`
-    appendMeta(next, MorDeleteOp, matched)
-    next
+    transact(OnMain()) { (_, _, next) =>
+      val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
+      // the logged row delta must be the MATCHED row count, not the key
+      // count: tableRowsAsOf subtracts it, and foreign keys may match zero
+      // rows (replays) or be absent entirely — deleteWhereMor's keys are
+      // head-selected so the two coincide there, not here
+      val cur = read()
+      // null-safe: a foreign delete file may carry NULL key values, and the
+      // resolution anti-join (applyChainOp) removes null-keyed rows for them
+      val matched = cur.join(broadcast(distinctKeys),
+        keyCols.map(c => cur(c) <=> distinctKeys(c)).reduce(_ && _),
+        "left_semi").count()
+      writeVersionDir(distinctKeys, next)
+      Staged(MorDeleteOp, (_, _) => matched)
+    }
   }
 
   /** DELETE FROM … WHERE, merge-on-read with POSITION deletes (Iceberg v2's
@@ -2795,20 +2828,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * O(matching rows) like the equality form; readers fold it as one
     * broadcast anti-join on the provenance pair until compact(). `rows` in
     * the commit log is the deleted-position count. */
-  def deleteWherePos(pred: Column): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta)
-    require(head.nonEmpty, s"no snapshots at $root")
-    val next = claimVersion(meta)
-    val positions = resolveVersion(meta, head.get, None, withPos = true)
+  def deleteWherePos(pred: Column): Long = transact(OnMain()) { (meta, head, next) =>
+    val positions = resolveVersion(meta, headOrThrow(head), None, withPos = true)
       .filter(pred <=> lit(true))
       .select(col(FileCol), col(PosCol))
       .filter(col(FileCol).isNotNull) // rows with no file provenance can't
                                       // be named by a position-delete file
     val n = writeVersionDir(positions, next)
-    validateHeadOrRelease(head, next) // positions were selected from `head`
-    appendMeta(next, PosDeleteOp, n)
-    next
+    Staged(PosDeleteOp, (_, _) => n)
   }
 
   /** Position-delete commit from a MULTISET of row VALUES: removes exactly
@@ -2824,12 +2851,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * mirror drift, not a no-op. O(delta) commit: one table scan with a
     * broadcast semi-join gate, the shuffle holds only matched copies. */
   def deleteRowsMultiset(rows: DataFrame, tag: Option[String] = None): Long =
-    withRootLock {
+    transact(OnMain()) { (meta, head, next) =>
     import org.apache.spark.sql.expressions.Window
-    val meta = readMeta()
-    val head = mainHead(meta)
-    require(head.nonEmpty, s"no snapshots at $root")
-    val live = resolveVersion(meta, head.get, None, withPos = true)
+    val live = resolveVersion(meta, headOrThrow(head), None, withPos = true)
     val valueCols = live.columns.filterNot(hiddenReadCols.contains).toSeq
     require(rows.columns.toSeq.sorted == valueCols.sorted,
       s"deleteRowsMultiset frame columns ${rows.columns.toSeq} must match " +
@@ -2844,18 +2868,12 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= col("__del_n") && col(FileCol).isNotNull)
       .select(col(FileCol), col(PosCol))
-    val next = claimVersion(meta)
     val n = writeVersionDir(chosen, next)
     val asked = rows.count()
-    if (n != asked) {
-      releaseClaim(next)
-      throw new IllegalStateException(
-        s"deleteRowsMultiset: $asked copies requested but only $n live " +
-          s"copies found at $root — the store has drifted from the source")
-    }
-    validateHeadOrRelease(head, next) // copies were chosen from `head`
-    appendMeta(next, tag.fold(PosDeleteOp)(t => s"$PosDeleteOp@$t"), n)
-    next
+    if (n != asked) throw new IllegalStateException(
+      s"deleteRowsMultiset: $asked copies requested but only $n live " +
+        s"copies found at $root — the store has drifted from the source")
+    Staged(tag.fold(PosDeleteOp)(t => s"$PosDeleteOp@$t"), (_, _) => n)
   }
 
   /** UPDATE … SET col = expr, … WHERE pred (copy-on-write): each assignment
@@ -2880,10 +2898,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Composite-key form of the merge-on-read UPDATE (identifier fields may
     * span several columns, like multi-column equality deletes). */
-  def updateMor(pred: Column, set: Map[String, Column], keyCols: Seq[String]): Long = withRootLock {
+  def updateMor(pred: Column, set: Map[String, Column], keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "updateMor needs at least one key column")
-    val meta = readMeta()
-    require(mainHead(meta).nonEmpty, s"no snapshots at $root")
     // the delete keys are captured from the REPLACEMENT rows, which is only
     // sound when no key column is reassigned (updating an identifier would
     // delete the NEW key and leave the old row live) — Iceberg likewise
@@ -2893,19 +2909,18 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     require(clash.isEmpty,
       s"merge-on-read UPDATE cannot reassign the key column ${clash.getOrElse("")}; " +
         "use the copy-on-write mode (or DELETE + INSERT) to change identifiers")
-    val next = claimVersion(meta)
-    val updated = set.foldLeft(read().filter(pred <=> lit(true))) {
-      case (df, (c, e)) => df.withColumn(c, e)
+    transact(OnMain()) { (_, _, next) =>
+      val updated = set.foldLeft(read().filter(pred <=> lit(true))) {
+        case (df, (c, e)) => df.withColumn(c, e)
+      }
+      writeDataDir(updated, next)
+      // the delete keys come from the just-written REPLACEMENT files — a
+      // delta-sized read, not a second predicate pass over the table
+      val written = readVersionDir(next)
+      writeKeyFiles(next, written.select(keyCols.map(col): _*).distinct(),
+        nonEmpty = !written.isEmpty)
+      Staged(MorUpdateOp, headRows)
     }
-    writeDataDir(updated, next)
-    // the delete keys come from the just-written REPLACEMENT files — a
-    // delta-sized read, not a second predicate pass over the table
-    val written = readVersionDir(next)
-    writeKeyFiles(next, written.select(keyCols.map(col): _*).distinct(),
-      nonEmpty = !written.isEmpty)
-    validateHeadOrRelease(mainHead(meta), next)
-    appendMeta(next, MorUpdateOp, tableRowsAsOf(meta, mainHead(meta).get))
-    next
   }
 
   /** Iceberg MERGE requires each target row to match at most one source row;
@@ -3034,12 +3049,10 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * is written. */
   def mergeIntoMor(source: DataFrame, keyCol: String,
       matched: Seq[(Option[Column], Option[Map[String, Column]])],
-      notMatched: Seq[(Option[Column], Option[Map[String, Column]])]): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
+      notMatched: Seq[(Option[Column], Option[Map[String, Column]])]): Long =
+    transact(OnMain()) { (meta, head, next) =>
     requireUniqueKeys(source, keyCol)
-    val target = resolveVersion(meta, head, None)
+    val target = resolveVersion(meta, headOrThrow(head), None)
     val tSchema = target.schema
     val src = source.select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
     // matched target rows only — delta-sized via a broadcast semi-join
@@ -3090,7 +3103,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }.reduceOption(_ unionByName _)
     val data = insertRows.map(replacements.unionByName(_)).getOrElse(replacements)
     // ONE commit: data files (updated copies + inserts) + claimed keys
-    val next = claimVersion(meta)
     val written = writeDataDir(data, next)
     val keys = claimed.select(col(keyCol)).distinct()
     val keysN = keys.count()
@@ -3103,26 +3115,28 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val removedN =
       if (keysN == 0) 0L
       else matchedTarget.join(broadcast(keys), Seq(keyCol), "left_semi").count()
-    validateHeadOrRelease(Some(head), next)
-    appendMeta(next, MorMergeOp, tableRowsAsOf(meta, head) - removedN + written)
-    next
+    Staged(MorMergeOp, (log, h) => tableRowsAsOf(log, h.get) - removedN + written)
   }
 
   // ── schema evolution (Iceberg ALTER TABLE … ADD/DROP/RENAME COLUMN) ────
   //    METADATA-ONLY: no data file is touched at any size — readers apply
   //    the change during resolution, old versions keep their original schema.
 
+  /** One evolve commit: `change` validates against main's head schema and
+    * returns the evolve op's parts; the commit conflicts if the head moves
+    * before it is logged, since the validation was against that head. */
+  private def evolve(change: StructType => Seq[String],
+      afterLog: () => Unit = () => ()): Long =
+    transact(OnMain()) { (meta, head, _) =>
+      val parts = change(resolveVersion(meta, headOrThrow(head), None).schema)
+      Staged(encodeEvolve(parts), headRows, afterLog)
+    }
+
   /** ALTER TABLE … ADD COLUMN name type — existing rows read back NULL. */
-  def addColumn(name: String, typeDdl: String): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    require(!resolveVersion(meta, head, None).columns.contains(name),
-      s"column $name already exists")
+  def addColumn(name: String, typeDdl: String): Long = evolve { schema =>
+    require(!schema.fieldNames.contains(name), s"column $name already exists")
     DataType.fromDDL(typeDdl) // validate the type spelling at DDL time
-    val next = claimVersion(meta)
-    appendMeta(next, encodeEvolve(Seq("add", name, typeDdl)), tableRowsAsOf(meta, head))
-    next
+    Seq("add", name, typeDdl)
   }
 
   /** ALTER TABLE … ADD COLUMN parent.child type — a NESTED add (Iceberg
@@ -3134,11 +3148,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * be a DOTTED path into nested structs ("inner.y" adds y inside
     * parent.inner). */
   def addNestedColumn(parent: String, child: String, typeDdl: String): Long =
-    withRootLock {
-      val meta = readMeta()
-      val head = mainHead(meta).getOrElse(
-        throw new IllegalStateException(s"no snapshots at $root"))
-      val schema = resolveVersion(meta, head, None).schema
+    evolve { schema =>
       val pf = schema.fields.find(_.name.equalsIgnoreCase(parent)).getOrElse(
         throw new IllegalArgumentException(s"no column $parent"))
       def asStruct(dt: DataType, at: String) = dt match {
@@ -3158,38 +3168,22 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       require(!holder._1.fieldNames.exists(_.equalsIgnoreCase(segs.last)),
         s"field ${holder._2}.${segs.last} already exists")
       DataType.fromDDL(typeDdl) // validate the type spelling at DDL time
-      val next = claimVersion(meta)
-      appendMeta(next, encodeEvolve(Seq("addnested", pf.name, child, typeDdl)),
-        tableRowsAsOf(meta, head))
-      next
+      Seq("addnested", pf.name, child, typeDdl)
     }
 
   /** ALTER TABLE … DROP COLUMN name — hidden from head reads; versions
     * before the drop still carry it (time travel keeps old schemas). */
-  def dropColumn(name: String): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    val cols = resolveVersion(meta, head, None).columns
-    require(cols.contains(name), s"no column $name to drop")
-    require(cols.length > 1, s"cannot drop the only column $name")
-    val next = claimVersion(meta)
-    appendMeta(next, encodeEvolve(Seq("drop", name)), tableRowsAsOf(meta, head))
-    next
+  def dropColumn(name: String): Long = evolve { schema =>
+    require(schema.fieldNames.contains(name), s"no column $name to drop")
+    require(schema.length > 1, s"cannot drop the only column $name")
+    Seq("drop", name)
   }
 
   /** ALTER TABLE … RENAME COLUMN old TO new. */
-  def renameColumn(oldName: String, newName: String): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    val cols = resolveVersion(meta, head, None).columns
-    require(cols.contains(oldName), s"no column $oldName to rename")
-    require(!cols.contains(newName), s"column $newName already exists")
-    val next = claimVersion(meta)
-    appendMeta(next, encodeEvolve(Seq("rename", oldName, newName)),
-      tableRowsAsOf(meta, head))
-    next
+  def renameColumn(oldName: String, newName: String): Long = evolve { schema =>
+    require(schema.fieldNames.contains(oldName), s"no column $oldName to rename")
+    require(!schema.fieldNames.contains(newName), s"column $newName already exists")
+    Seq("rename", oldName, newName)
   }
 
   /** Walk a dotted subfield path under column `parent` of `schema`:
@@ -3229,51 +3223,32 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * values kept, time travel before the change keeps the old name. `path`
     * may be dotted into nested structs. */
   def renameNestedColumn(parent: String, path: String, newName: String): Long =
-    withRootLock {
-      val meta = readMeta()
-      val head = mainHead(meta).getOrElse(
-        throw new IllegalStateException(s"no snapshots at $root"))
-      val schema = resolveVersion(meta, head, None).schema
+    evolve { schema =>
       val (holder, at, _, pname, canonical) =
         resolveNestedPath(schema, parent, path)
       require(!newName.contains('.'),
         s"rename target $newName must be a bare field name")
       require(!holder.fieldNames.exists(_.equalsIgnoreCase(newName)),
         s"field $at.$newName already exists")
-      val next = claimVersion(meta)
-      appendMeta(next,
-        encodeEvolve(Seq("renamenested", pname, canonical, newName)),
-        tableRowsAsOf(meta, head))
-      next
+      Seq("renamenested", pname, canonical, newName)
     }
 
   /** ALTER TABLE … DROP COLUMN parent.path — a NESTED drop: hidden from
     * head reads, metadata-only; versions before the drop still carry the
     * subfield. */
-  def dropNestedColumn(parent: String, path: String): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    val schema = resolveVersion(meta, head, None).schema
+  def dropNestedColumn(parent: String, path: String): Long = evolve { schema =>
     val (holder, at, last, pname, canonical) =
       resolveNestedPath(schema, parent, path)
     require(holder.fields.length > 1,
       s"cannot drop the only field $at.${last.name} of its struct")
-    val next = claimVersion(meta)
-    appendMeta(next, encodeEvolve(Seq("dropnested", pname, canonical)),
-      tableRowsAsOf(meta, head))
-    next
+    Seq("dropnested", pname, canonical)
   }
 
   /** ALTER TABLE … ALTER COLUMN parent.path TYPE type — NESTED type
     * widening, the same legal promotions as [[alterColumnType]], metadata
     * only. */
   def alterNestedColumnType(parent: String, path: String,
-      typeDdl: String): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    val schema = resolveVersion(meta, head, None).schema
+      typeDdl: String): Long = evolve { schema =>
     val (_, at, last, pname, canonical) =
       resolveNestedPath(schema, parent, path)
     val to = DataType.fromDDL(typeDdl)
@@ -3281,11 +3256,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       s"ALTER COLUMN $at.${last.name} TYPE $typeDdl: " +
         s"${last.dataType.simpleString} → ${to.simpleString} is not a legal " +
         "widening (int→long, float→double, decimal precision increase only)")
-    val next = claimVersion(meta)
-    appendMeta(next,
-      encodeEvolve(Seq("widennested", pname, canonical, typeDdl)),
-      tableRowsAsOf(meta, head))
-    next
+    Seq("widennested", pname, canonical, typeDdl)
   }
 
   /** Iceberg's legal primitive promotions (shared by the top-level and
@@ -3309,11 +3280,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * at any table size, and time travel before the change returns the
     * narrow type. Narrowing (or any other conversion) errors at DDL time —
     * it could corrupt values, which Iceberg likewise refuses. */
-  def alterColumnType(name: String, typeDdl: String): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    val schema = resolveVersion(meta, head, None).schema
+  def alterColumnType(name: String, typeDdl: String): Long = evolve { schema =>
     val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(s"no column $name to alter"))
     val to = DataType.fromDDL(typeDdl)
@@ -3321,20 +3288,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       s"ALTER COLUMN $name TYPE $typeDdl: " +
       s"${field.dataType.simpleString} → ${to.simpleString} is not a legal " +
       "widening (int→long, float→double, decimal precision increase only)")
-    val next = claimVersion(meta)
-    appendMeta(next, encodeEvolve(Seq("widen", field.name, typeDdl)),
-      tableRowsAsOf(meta, head))
-    next
+    Seq("widen", field.name, typeDdl)
   }
 
-  /** PARTITION SPEC EVOLUTION (Iceberg `ALTER TABLE … ADD/DROP PARTITION
-    * FIELD`): re-declare the store's partition spec WITHOUT rewriting any
-    * data — Iceberg's signature capability. The change is a metadata-only
-    * evolve commit; files written before it keep their old layout and their
-    * manifest stats (recorded from the layout in force when they were
-    * written), files written after it use the new spec, and reads/pruning
-    * merge the mixed layouts per file. Time travel before the change sees
-    * the table exactly as it was. An empty `newSpec` drops partitioning. */
   /** One partition-spec entry validated against a schema: identity columns
     * must exist; `days()` needs a timestamp/date source; `bucket(N, c)`
     * needs N > 0; `truncate(W, c)` needs W > 0 and an integral or string
@@ -3359,11 +3315,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  def evolvePartition(newSpec: Seq[String]): Long = withRootLock {
-    val meta = readMeta()
-    val head = mainHead(meta).getOrElse(
-      throw new IllegalStateException(s"no snapshots at $root"))
-    val schema = resolveVersion(meta, head, None).schema
+  /** PARTITION SPEC EVOLUTION (Iceberg `ALTER TABLE … ADD/DROP PARTITION
+    * FIELD`): re-declare the store's partition spec WITHOUT rewriting any
+    * data — Iceberg's signature capability. The change is a metadata-only
+    * evolve commit; files written before it keep their old layout and their
+    * manifest stats (recorded from the layout in force when they were
+    * written), files written after it use the new spec, and reads/pruning
+    * merge the mixed layouts per file. Time travel before the change sees
+    * the table exactly as it was. An empty `newSpec` drops partitioning. */
+  def evolvePartition(newSpec: Seq[String]): Long = evolve({ schema =>
     newSpec.foreach(e => validateSpecEntry(schema, e))
     newSpec.map(FilePruning.parseSpecEntry).filterNot(_.isIdentity)
       .groupBy(_.kind).foreach { case (_, fs) =>
@@ -3372,13 +3332,10 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       }
     require(newSpec.map(_.trim.toLowerCase).distinct.size == newSpec.size,
       s"duplicate partition fields in ${newSpec.mkString(", ")}")
-    val next = claimVersion(meta)
-    appendMeta(next, encodeEvolve(Seq("partition", newSpec.mkString(","))),
-      tableRowsAsOf(meta, head))
+    Seq("partition", newSpec.mkString(","))
+  }, afterLog = () =>
     if (newSpec.isEmpty) metaDelete(PartitionSpecFile)
-    else metaWriteString(PartitionSpecFile, newSpec.mkString(","))
-    next
-  }
+    else metaWriteString(PartitionSpecFile, newSpec.mkString(",")))
 
   /** `ALTER TABLE … ADD PARTITION FIELD f | days(ts)`. */
   def addPartitionField(entry: String): Long = {
@@ -3399,18 +3356,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * moves). ALWAYS METADATA-ONLY: a single-dir target becomes an alias
     * commit; a delta-chain or mor-delete target becomes an asof pointer —
     * neither copies data. */
-  def rollback(toVersion: Long): Long = withRootLock {
-    val meta = readMeta()
+  def rollback(toVersion: Long): Long = transact(Commutes) { (meta, _, _) =>
     val entry = meta.find(_._1 == toVersion).getOrElse(
       throw new IllegalStateException(s"no snapshot v=$toVersion at $root"))
-    val next = claimVersion(meta)
     if (!isBranchOp(entry._3) && isRestart(entry._3) && !entry._3.startsWith(AsOfOpPrefix))
-      appendMeta(next,
-        s"$AliasOpPrefix${dataDirVersion(entry)}:rollback-to-$toVersion", entry._4)
+      Staged(s"$AliasOpPrefix${dataDirVersion(entry)}:rollback-to-$toVersion",
+        (_, _) => entry._4)
     else
-      appendMeta(next, s"$AsOfOpPrefix$toVersion:rollback-to-$toVersion",
-        tableRowsAsOf(meta, toVersion))
-    next
+      Staged(s"$AsOfOpPrefix$toVersion:rollback-to-$toVersion",
+        (log, _) => tableRowsAsOf(log, toVersion))
   }
 
   /** Both snapshots aligned for diffing: the before-image re-expressed
@@ -3712,21 +3666,17 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * dir holds only `df`, and the branch entry records its parent so readers
     * resolve the chain. `op = "overwrite"` writes the branch's new full
     * content (the branch-side copy-on-write form). */
-  def commitToBranch(branch: String, df: DataFrame, op: String = "overwrite"): Long = withRootLock {
+  def commitToBranch(branch: String, df: DataFrame, op: String = "overwrite"): Long = {
     require(op == "overwrite" || op == DeltaAppendOp,
       s"commitToBranch op must be overwrite|append, got $op")
-    val head = branchHead(branch).getOrElse(
-      throw new IllegalStateException(s"no branch $branch at $root"))
-    val meta = readMeta()
-    val next = claimVersion(meta)
-    val written = writeDataDir(df, next)
-    if (op == DeltaAppendOp)
-      appendMeta(next, s"$BranchOpPrefix$branch:$DeltaAppendOp:$head",
-        tableRowsAsOf(meta, head) + written)
-    else
-      appendMeta(next, s"$BranchOpPrefix$branch:$op", written)
-    writeRef(branch, "branch", next)
-    next
+    transact(OnBranch(branch)) { (_, head, next) =>
+      val written = writeDataDir(df, next)
+      val moveRef = () => writeRef(branch, "branch", next)
+      if (op == DeltaAppendOp)
+        Staged(s"$BranchOpPrefix$branch:$DeltaAppendOp:${head.get}",
+          (log, h) => tableRowsAsOf(log, h.get) + written, moveRef)
+      else Staged(s"$BranchOpPrefix$branch:$op", (_, _) => written, moveRef)
+    }
   }
 
   /** Read a branch's current content. */
@@ -3767,24 +3717,21 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * branch is visible to a main reader. ALWAYS METADATA-ONLY: a full-data
     * branch head publishes as an alias to its dir; a delta-chain branch head
     * publishes as an asof pointer resolution follows — neither copies. */
-  def fastForward(fromBranch: String): Long = withRootLock {
+  def fastForward(fromBranch: String): Long = transact(Commutes) { (meta, _, _) =>
     val head = branchHead(fromBranch).getOrElse(
       throw new IllegalStateException(s"no branch $fromBranch at $root"))
-    val meta = readMeta()
     val entry = meta.find(_._1 == head).getOrElse(
       throw new IllegalStateException(s"no snapshot v=$head at $root"))
-    val next = claimVersion(meta)
     val isSingleDir = isBranchOp(entry._3) &&
       branchOpParts(entry._3)._2 != DeltaAppendOp
     if (isSingleDir)
-      appendMeta(next,
-        s"$AliasOpPrefix${dataDirVersion(entry)}:publish-$fromBranch", entry._4)
+      Staged(s"$AliasOpPrefix${dataDirVersion(entry)}:publish-$fromBranch",
+        (_, _) => entry._4)
     else
       // the head may be a delta chain or a mor commit whose own log entry
       // records a delta/key count, not the table total — resolve the real
       // total like rollback() does, or later appends inherit a wrong base
-      appendMeta(next, s"$AsOfOpPrefix$head:publish-$fromBranch",
-        tableRowsAsOf(meta, head))
-    next
+      Staged(s"$AsOfOpPrefix$head:publish-$fromBranch",
+        (log, _) => tableRowsAsOf(log, head))
   }
 }

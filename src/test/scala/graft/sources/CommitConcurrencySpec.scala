@@ -155,4 +155,104 @@ class CommitConcurrencySpec extends SparkSpec {
     assert(fresh.currentVersion === Some(3L))
     assert(fresh.read(Some(2L)).count() === 1) // the foreign asof:0 pointer
   }
+
+  /** Lands `foreign` once inside `t`'s next claim window: right after its
+    * marker create and before the claim's log re-validation, which is
+    * where another process's whole commit can fall. */
+  private def inClaimWindow(t: SnapshotTable)(foreign: => Unit): Unit = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    t.afterMarkerClaim = _ => if (fired.compareAndSet(false, true)) foreign
+  }
+
+  private def headRows(t: SnapshotTable): Long = {
+    import spark.implicits._
+    t.history().filter(col("version") === t.currentVersion.get)
+      .select("row_count").as[Long].head()
+  }
+
+  private def seeded(prefix: String): (String, SnapshotTable) = {
+    import spark.implicits._
+    val root = JFiles.createTempDirectory(prefix).toFile.getAbsolutePath
+    val t = new SnapshotTable(spark, root)
+    t.commit(Seq((0L, "a"), (1L, "b")).toDF("id", "w")) // v0: 2 rows
+    (root, t)
+  }
+
+  test("an append with a foreign append in its claim window logs the " +
+      "head's true row count") {
+    import spark.implicits._
+    val (root, t) = seeded("occ_rows_append")
+    inClaimWindow(t)(new SnapshotTable(spark, root)
+      .commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
+    t.commit(Seq((3L, "d")).toDF("id", "w"), op = "append")
+    assert(t.read().count() === 4)
+    assert(headRows(t) === 4L, "the append counted from the log it read " +
+      "before claiming, missing the foreign append")
+  }
+
+  test("addColumn with a foreign append in its claim window conflicts, and " +
+      "the re-run logs the true row count") {
+    import spark.implicits._
+    val (root, t) = seeded("occ_add_append")
+    inClaimWindow(t)(new SnapshotTable(spark, root)
+      .commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
+    intercept[SnapshotTable.CommitConflictException](t.addColumn("x", "STRING"))
+    assert(!t.read().columns.contains("x"))
+    val v = t.addColumn("x", "STRING")
+    assert(t.currentVersion === Some(v))
+    assert(t.read().count() === 3)
+    assert(headRows(t) === 3L)
+  }
+
+  test("two same-name addColumns racing: the second conflicts and exactly " +
+      "one add of the column is logged") {
+    val (root, t) = seeded("occ_add_add")
+    inClaimWindow(t)(new SnapshotTable(spark, root).addColumn("x", "INT"))
+    intercept[SnapshotTable.CommitConflictException](t.addColumn("x", "STRING"))
+    assert(t.commitOps().count { case (_, op) =>
+      t.evolveNewColumns(op) == Seq("x") } === 1)
+    assert(t.read().schema("x").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("dropColumn against a foreign rename of the same column conflicts") {
+    val (root, t) = seeded("occ_drop_rename")
+    inClaimWindow(t)(new SnapshotTable(spark, root).renameColumn("w", "w2"))
+    intercept[SnapshotTable.CommitConflictException](t.dropColumn("w"))
+    assert(t.read().columns.toSeq === Seq("id", "w2"))
+  }
+
+  test("commitToBranch with a foreign branch append in its claim window " +
+      "conflicts and the foreign row stays on the branch") {
+    import spark.implicits._
+    val (root, t) = seeded("occ_branch")
+    t.createBranch("dev")
+    inClaimWindow(t)(new SnapshotTable(spark, root)
+      .commitToBranch("dev", Seq((5L, "f")).toDF("id", "w"), "append"))
+    intercept[SnapshotTable.CommitConflictException](
+      t.commitToBranch("dev", Seq((2L, "c")).toDF("id", "w"), "append"))
+    def devIds = t.readBranch("dev").select("id").as[Long].collect().toSet
+    assert(devIds === Set(0L, 1L, 5L))
+    t.commitToBranch("dev", Seq((2L, "c")).toDF("id", "w"), "append")
+    assert(devIds === Set(0L, 1L, 2L, 5L))
+    assert(t.read().count() === 2, "main is untouched by branch commits")
+  }
+
+  test("a stage that fails at write time releases its claim: no marker, no " +
+      "data dir, no manifest, and the next commit takes the same version") {
+    import spark.implicits._
+    val (root, t) = seeded("occ_stage_fail")
+    def leftovers = Seq(Paths.get(root, "_graft_commits", "v=1"),
+      Paths.get(root, "v=1"), Paths.get(root, "_graft_manifest", "v=1.tsv"))
+      .filter(JFiles.exists(_))
+    val boom = raise_error(lit("boom")).cast("string")
+    intercept[Exception](
+      t.updateMor(col("id") === 0L, Map("w" -> boom), "id"))
+    assert(leftovers === Nil)
+    intercept[Exception](t.commit(
+      Seq((2L, "c")).toDF("id", "w").withColumn("w", boom), op = "append"))
+    assert(leftovers === Nil)
+    assert(t.commit(Seq((2L, "c")).toDF("id", "w"), op = "append") === 1L)
+    assert(t.read().count() === 3 && headRows(t) === 3L)
+  }
 }

@@ -339,6 +339,14 @@ class CrossProcessClaimSpec extends SparkSpec {
       assert(versions.distinct.length === versions.length)
       assert(versions.length === 1 + nParent + nChild + 1,
         s"history rows = ${versions.length}")
+      // the head's logged row_count is the table's true count: each commit
+      // derived it from the log as it stood inside its commit section, not
+      // from the log it read before the other process's commits landed
+      val headRows = fresh.history()
+        .filter(col("version") === fresh.currentVersion.get)
+        .select("row_count").as[Long].head()
+      assert(headRows === ids.length.toLong,
+        s"head row_count $headRows but the table reads ${ids.length} rows")
     } finally SnapshotTable.unregisterClaimArbiter(root)
   }
 }
