@@ -53,8 +53,8 @@ object MetadataFunctions {
     * metrics for optimizing compaction"). Record counts come from the
     * MANIFEST the commit wrote (stats captured once, at write time — the
     * Iceberg manifests contract: a metadata query never re-opens data
-    * files); parquet footers are read only for foreign dirs no engine
-    * commit described. */
+    * files); parquet footers are read only for tables that are not
+    * snapshot stores. */
   def tableFiles(spark: SparkSession, table: String): DataFrame = {
     val rows = fileStats(spark, table).map { case (f, records, bytes) =>
       Row(f, "PARQUET", records, bytes)
@@ -133,31 +133,18 @@ object MetadataFunctions {
     * merge-on-read delete-key files are NOT data files and are excluded,
     * exactly as Iceberg's files/partitions tables report data files with
     * deletes accounted separately. Stats come from each dir's commit-time
-    * manifest when present (no file opens), else from footers. Anything
-    * else is a resolvable table's own scan file list, footer-read. */
+    * manifest (no file opens). Anything else is a resolvable table's own
+    * scan file list, footer-read. */
   private def fileStats(spark: SparkSession, table: String): Seq[(String, Long, Long)] =
     resolveRoot(spark, table) match {
       case Some(root) =>
         val st = new SnapshotTable(spark, root)
         st.currentDataDirs.flatMap { dirStr =>
-          st.readManifest(st.dirVersionOf(dirStr)) match {
-            case Some((_, files)) =>
-              files.map(f =>
-                (new Path(dirStr, f.name).toUri.getPath, f.records, f.bytes))
-            case None => footerStatsAll(spark, listDataFiles(spark, dirStr))
-          }
+          st.readManifest(st.dirVersionOf(dirStr))._2.map(f =>
+            (new Path(dirStr, f.name).toUri.getPath, f.records, f.bytes))
         }.sortBy(_._1)
       case None => footerStatsAll(spark, inputFiles(spark, table))
     }
-
-  private def listDataFiles(spark: SparkSession, dirStr: String): Seq[String] = {
-    val dir = new Path(dirStr)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toUri.getPath).toSeq.sorted
-  }
 
   private val refsSchema = StructType(Seq(
     StructField("ref_name", StringType, nullable = false),

@@ -21,10 +21,9 @@ object SnapshotTable {
       stats: Map[String, (String, String)])
 
   /** One version's parsed manifest: the data schema and files, the
-    * partition spec the files were written under (`#spec`, r14+ manifests
-    * of partitioned stores) and, for a mor UPDATE/MERGE, the claimed-key
-    * record (`#keyschema`/`#keyfile`; None in manifests written before key
-    * files were recorded). */
+    * partition spec the files were written under (`#spec`, recorded by
+    * partitioned writes) and, for a mor UPDATE/MERGE, the claimed-key
+    * record (`#keyschema`/`#keyfile`). */
   private final case class Manifest(schema: StructType,
       files: Seq[ManifestFile], spec: Option[Seq[String]],
       keys: Option[(StructType, Seq[ManifestFile])])
@@ -34,7 +33,7 @@ object SnapshotTable {
     * stands. */
   private sealed trait Basis
   /** Derived from no head: a plain append, a blind overwrite, a rollback or
-    * a publish commutes with whatever commits first. */
+    * a publish commutes with whatever was logged before its claim. */
   private case object Commutes extends Basis
   /** Derived from main's head: the one the caller read before calling
     * (`pinned`), else the one `transact` reads. */
@@ -171,6 +170,12 @@ object SnapshotTable {
     * (data written, log append pending) whose dir the marker protects from
     * [[SnapshotTable#removeOrphans]]; only stale markers are swept. */
   val MarkerSweepGraceMillis: Long = 3600L * 1000
+
+  /** The on-disk layout every store is written in, stamped into
+    * `_graft_format` when the store is created. Readers refuse any other
+    * value, so a layout change bumps this instead of keeping a reader for
+    * the old layout. */
+  private[sources] val FormatVersion = "1"
 
   /** Record count from one parquet FOOTER — a metadata read, no data pages
     * opened. The shared helper for every consumer that needs ONLY the
@@ -428,18 +433,42 @@ object SnapshotTable {
   * `table_history`), time travel (`AT SNAPSHOT`/`VERSION AS OF`), row-level
   * DML, branches/tags, and schema evolution. The Iceberg runtime isn't
   * shipped in this environment, so this implements the same contract over
-  * versioned parquet directories:
+  * versioned parquet directories. The store's whole on-disk layout:
   *
-  *   root/v=N/part-*.parquet        one immutable directory per commit that
-  *                                  wrote data (full snapshots, APPEND DELTAS,
-  *                                  merge-on-read delete-key files)
-  *   root/_graft_meta.jsonl         append-only commit log (version, ts, op, rows)
-  *   root/_graft_manifest/v=N.tsv   per-version manifest: the version's schema
-  *                                  plus per-file (records, bytes) read from
-  *                                  parquet footers ONCE at commit time — the
-  *                                  Iceberg-manifests contract (metadata scans
-  *                                  never re-open data files; commit-time stats
-  *                                  cost O(new files), not O(table))
+  *   root/_graft_format             the layout version ([[SnapshotTable.FormatVersion]]),
+  *                                  written before the first log record; a
+  *                                  store holding another value (or none) is
+  *                                  refused, never read through a fallback
+  *   root/_graft_meta.jsonl         commit log, one `version,ts_ms,op,rows`
+  *                                  line per commit (on scheme'd roots a
+  *                                  cache of `_graft_log/`)
+  *   root/_graft_log/v=N.rec        scheme'd roots only: one immutable record
+  *                                  per commit, holding its log line — the
+  *                                  commit point there
+  *   root/_graft_commits/v=N        claim markers of in-flight commits,
+  *                                  deleted once the version is logged
+  *   root/v=N/…/part-*.parquet      one immutable directory per commit that
+  *                                  wrote data (full snapshots, append deltas,
+  *                                  delete files, mor replacement rows), hive
+  *                                  `col=value/` dirs under a partition spec
+  *   root/v=N/_graft_deletes/       a mor UPDATE/MERGE commit's claimed keys
+  *   root/_graft_manifest/v=N.tsv   every `v=N` dir's manifest: a `#schema`
+  *                                  first line; `#spec` (the partition spec
+  *                                  the files were written under); one
+  *                                  `name records bytes stats` line per file,
+  *                                  read from parquet footers ONCE at commit
+  *                                  time (the Iceberg-manifests contract:
+  *                                  metadata scans never re-open data files);
+  *                                  for a mor UPDATE/MERGE a `#keyschema`
+  *                                  line and one `#keyfile` line per key file
+  *   root/_graft_refs.jsonl         local roots: branch/tag log, one
+  *                                  `name,kind,version` line per ref write
+  *   root/_graft_reflog/r-….rec     scheme'd roots: the same, one immutable
+  *                                  record per ref write
+  *   root/_graft_partition          the declared partition spec
+  *   root/_graft_sortorder          the declared write sort order
+  *   root/_graft_mirror/            [[IcebergExport]]'s foreign-chain mirror
+  *                                  records
   *
   * Commit kinds (the `op` column of the log):
   *  - full-data ops (`overwrite`, `compact`, `update`, `cow-delete`, `merge`,
@@ -468,7 +497,9 @@ object SnapshotTable {
   * versions are claimed via create-exclusive markers so concurrent writers
   * always land distinct versions, and read-dependent mutations raise
   * [[SnapshotTable.CommitConflictException]] when the head moved under them
-  * (re-read and retry). Plain appends commute and never conflict.
+  * (re-read and retry). Plain appends commute with commits logged before
+  * their claim; a commit another process logs above the claim (only
+  * possible across processes) conflicts, so the log stays in claim order.
   */
 final class SnapshotTable(spark: SparkSession, root: String) {
   import SnapshotTable.{Basis, Commutes, Meta, OnBranch, OnMain, Staged}
@@ -665,33 +696,16 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   private[graft] def isMorUpdateLike(op: String): Boolean =
     op == MorUpdateOp || op == MorMergeOp
 
-  /** The claimed-keys frame of a mor UPDATE/MERGE commit; None when the
-    * commit claimed none (an insert-only merge). Planned from the key
-    * record in the version's manifest; a version written before key files
-    * were recorded lists its key dir and reads it with an inferred schema. */
-  private[graft] def morClaimedKeys(v: Long): Option[DataFrame] =
-    manifestOf(v).flatMap(_.keys) match {
-      case Some((schema, files)) =>
-        filesRelation(schema, files.map(morUpdateDeletesDir(v) -> _), Seq(v),
-          recordScans = false)
-      case None =>
-        if (legacyKeysExist(v)) Some(spark.read.parquet(morUpdateDeletesDir(v)))
-        else None
-    }
-
-  /** Does version `v`'s unrecorded key dir hold a non-empty key file? */
-  private def legacyKeysExist(v: Long): Boolean =
-    if (rootIsLocal) {
-      val delDir = new java.io.File(
-        new Path(morUpdateDeletesDir(v)).toUri.getPath)
-      delDir.isDirectory && delDir.listFiles().exists(f =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    } else {
-      val delDir = new Path(morUpdateDeletesDir(v))
-      rootFs.exists(delDir) && rootFs.listStatus(delDir).exists(s =>
-        s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-    }
+  /** The claimed-keys frame of a mor UPDATE/MERGE commit, planned from the
+    * key record in the version's manifest; None when the commit claimed
+    * none (an insert-only merge). */
+  private[graft] def morClaimedKeys(v: Long): Option[DataFrame] = {
+    val (schema, files) = manifestOf(v).keys.getOrElse(
+      throw new IllegalStateException(
+        s"manifest of mor commit v=$v at $root has no $KeySchemaTag record"))
+    filesRelation(schema, files.map(morUpdateDeletesDir(v) -> _), Seq(v),
+      recordScans = false)
+  }
 
   /** Op prefix for commits made on a side branch: `branch:<name>:overwrite`
     * or `branch:<name>:append:<parentVersion>`. Branch commits share the
@@ -863,20 +877,16 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * field `sf` sound for every file this read resolves? Files written
     * under a DIFFERENT bucket entry (spec evolution changing N or the
     * source) carry pins from the old hash-mod. Like Iceberg's per-file spec
-    * id, each manifest records its write spec ([[manifestSpec]]); legacy
-    * manifests are trusted only when their files carry no bucket dirs.
+    * id, each manifest records its write spec ([[manifestSpec]]); an
+    * unpartitioned write records none, and its files carry no bucket dirs.
     * Checked over the resolved window's data dirs only, so planning stays
     * O(chain), not O(history). */
   private def bucketDerivationSound(sf: FilePruning.SpecField,
       windowVersions: Seq[Long]): Boolean =
     windowVersions.forall { v =>
-      readManifest(v) match {
-        case None => true // no manifest → no stats → never pruned
-        case Some((_, files)) =>
-          !files.exists(_.name.contains(BucketCol + "=")) ||
-            manifestSpec(v).exists(_.map(FilePruning.parseSpecEntry).exists(w =>
-              w.transform == sf.transform && w.source.equalsIgnoreCase(sf.source)))
-      }
+      !readManifest(v)._2.exists(_.name.contains(BucketCol + "=")) ||
+        manifestSpec(v).exists(_.map(FilePruning.parseSpecEntry).exists(w =>
+          w.transform == sf.transform && w.source.equalsIgnoreCase(sf.source)))
     }
 
   // ── write sort order (Iceberg `ALTER TABLE … WRITE ORDERED BY`) ────────
@@ -1094,8 +1104,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   // write opportunistically GC's the name's superseded records. Writers to
   // different names never touch the same object; concurrent writers to the
   // SAME name race highest-seq-wins, which is the append log's
-  // last-line-wins semantics. Legacy appended lines still read (records
-  // overlay them per name).
+  // last-line-wins semantics. Local roots keep the appended log; each root
+  // kind reads only the form it writes.
   private val RefRecordsDir = "_graft_reflog"
   private def refRecordPrefix(name: String) = "r-" +
     java.util.Base64.getUrlEncoder.withoutPadding
@@ -1114,8 +1124,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       val m = line.split(",", 3)
       m(0) -> (m(1), m(2).toLong)
     }
-    val legacy =
-      if (!metaExists(RefsFile)) Nil else metaReadLines(RefsFile).map(parse)
     // One LIST + per-name GETs. Returns (resolved entries, true when some
     // listed name yielded NO readable record — the LIST-then-GET race with
     // a concurrent writeRef whose opportunistic GC deleted every record the
@@ -1138,10 +1146,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
           .toSeq.sortBy(_._1)
           .flatMap { case (_, names) =>
             // highest sequence wins; a mid-write record (no terminating
-            // newline yet) is skipped and its predecessor still serves.
-            // Sequence'd records outrank any legacy no-seq record.
-            val (seqd, legacyRec) = names.partition(_.count(_ == '.') >= 2)
-            val best = (seqd.sorted.reverse ++ legacyRec).iterator.flatMap { n =>
+            // newline yet) is skipped and its predecessor still serves
+            val best = names.sorted.reverseIterator.flatMap { n =>
               scala.util.Try {
                 val raw = metaReadString(s"$RefRecordsDir/$n")
                 require(raw.endsWith("\n"), s"mid-write record $n")
@@ -1154,15 +1160,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         (entries, vanished)
       }
     }
-    val records =
-      if (rootIsLocal) Nil
-      else {
+    val entries =
+      if (rootIsLocal) {
+        if (!metaExists(RefsFile)) Nil else metaReadLines(RefsFile).map(parse)
+      } else {
         val (first, vanished) = listOnce()
         if (!vanished) first else listOnce()._1
       }
-    // records after legacy: on a scheme'd root every NEW write is a record,
-    // so a record is always the name's latest state
-    (legacy ++ records).toMap.filter(_._2._1 != "dropped")
+    entries.toMap.filter(_._2._1 != "dropped")
   }
 
   private def writeRef(name: String, kind: String, v: Long): Unit = {
@@ -1286,19 +1291,36 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * window is the documented crashed-writer one); the correctness decisions
     * (claim re-validation, final head check) pay one fresh LIST instead. */
   private def readMeta(fresh: Boolean = false): Seq[Meta] = {
-    if (!rootIsLocal) {
-      val status =
-        try Some(rootFs.getFileStatus(hPath(MetaFile)))
-        catch { case _: java.io.FileNotFoundException => None }
-      return readMetaRemote(status, fresh)
-    }
-    val cached =
-      if (!metaExists(MetaFile)) Nil
-      else metaReadLines(MetaFile).map(parseMetaLine)
-    // defensive: interleaved RMW repairs could land one version's line
-    // twice in the cache — a duplicate entry would double that delta in
-    // chain resolution, so keep the first occurrence per version
-    cached.distinctBy(_._1).sortBy(_._1)
+    val log =
+      if (!rootIsLocal) {
+        val status =
+          try Some(rootFs.getFileStatus(hPath(MetaFile)))
+          catch { case _: java.io.FileNotFoundException => None }
+        readMetaRemote(status, fresh)
+      } else if (!metaExists(MetaFile)) Nil
+      // defensive: interleaved RMW repairs could land one version's line
+      // twice in the cache — a duplicate entry would double that delta in
+      // chain resolution, so keep the first occurrence per version
+      else metaReadLines(MetaFile).map(parseMetaLine).distinctBy(_._1).sortBy(_._1)
+    if (!formatChecked && log.nonEmpty) requireFormat()
+    log
+  }
+
+  private val FormatFile = "_graft_format"
+
+  /** Set once this instance has seen a non-empty log with the right
+    * format stamp: the stamp is written before the first log record and
+    * never changes, so one check per instance covers every later read. */
+  @volatile private var formatChecked = false
+
+  private def requireFormat(): Unit = {
+    val found =
+      if (metaExists(FormatFile)) Some(metaReadString(FormatFile).trim) else None
+    if (!found.contains(SnapshotTable.FormatVersion))
+      throw new IllegalStateException(s"store at $root has format " +
+        found.fold(s"(no $FormatFile file)")(f => s"'$f'") +
+        s", expected '${SnapshotTable.FormatVersion}': this engine reads only that layout")
+    formatChecked = true
   }
 
   private def readMetaRemote(
@@ -1393,7 +1415,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   //    computed result is stale, and the commit raises
   //    [[SnapshotTable.CommitConflictException]] for the caller to re-read
   //    and retry, exactly Iceberg's conflict-detection contract. Plain
-  //    appends never conflict (they commute), also matching Iceberg. ───────
+  //    appends commute with whatever was logged before their claim; one
+  //    logged above it (another process's) conflicts. ───────────────────
 
   // Marker IO goes through Hadoop's FileSystem so the CAS discipline holds
   // on `hdfs:`/`s3a:` roots, not just the local FS (the DedupStream
@@ -1550,9 +1573,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     *  2. Claim a version ([[claimVersion]]).
     *  3. Run `stage(log, head, version)`: the op's data and key-file writes.
     *  4. Enter the commit section and read the log fresh.
-    *  5. Validate that `basis`'s head still stands (a [[Commutes]] op skips
-    *     this) and evaluate the staged row count on the fresh log.
-    *  6. Append the log record ([[appendMeta]]).
+    *  5. Validate that no version above the claim was logged and that
+    *     `basis`'s head still stands (a [[Commutes]] op skips the head
+    *     check), then evaluate the staged row count on the fresh log.
+    *  6. Stamp `_graft_format` if the log is empty, then append the log
+    *     record ([[appendMeta]]).
     *  7. Run the staged post-log step, still inside the section, so a
     *     branch's validate → log → ref move cannot interleave with another
     *     writer's.
@@ -1599,16 +1624,18 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     try {
       val rows = releasedOnThrow {
         val log = readMeta(fresh = true)
-        val landsOn = basis match {
-          // the main head below the claim: a plain append's count is its
-          // predecessor's plus its own, whatever landed in the window
-          case Commutes =>
-            log.filter(m => m._1 < next && !isBranchOp(m._3)).lastOption.map(_._1)
-          case _ =>
-            val now = headIn(log)
-            if (now != expected) headConflict(basis, expected, now)
-            now
-        }
+        // another process logged above this claim: landing below it would
+        // put this commit under a restart point (its rows leave main) or
+        // under an append whose count misses them — keep claim order
+        log.lastOption.filter(_._1 > next).foreach(above =>
+          throw new SnapshotTable.CommitConflictException(
+            s"commit conflict at $root: v=${above._1} was logged above this " +
+              s"commit's claim v=$next; re-read and retry"))
+        val landsOn = headIn(log)
+        if (basis != Commutes && landsOn != expected)
+          headConflict(basis, expected, landsOn)
+        // a new store: stamp its format before its first log record
+        if (log.isEmpty) metaWriteString(FormatFile, SnapshotTable.FormatVersion + "\n")
         staged.rows(log, landsOn)
       }
       appendMeta(next, staged.op, rows)
@@ -1700,62 +1727,62 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * must not re-open 1000 files. Synchronized: concurrent committers
     * share the instance. */
   private val manifestCache =
-    scala.collection.mutable.HashMap.empty[Long, Option[SnapshotTable.Manifest]]
+    scala.collection.mutable.HashMap.empty[Long, SnapshotTable.Manifest]
 
-  private def manifestOf(v: Long): Option[SnapshotTable.Manifest] =
+  private def manifestOf(v: Long): SnapshotTable.Manifest =
     manifestCache.synchronized {
       manifestCache.getOrElseUpdate(v, readManifestUncached(v))
     }
 
   /** The partition spec version `v`'s files were WRITTEN under, when its
-    * manifest recorded one (r14+ manifests of partitioned stores). */
+    * manifest recorded one (partitioned writes do). */
   private[sources] def manifestSpec(v: Long): Option[Seq[String]] =
-    manifestOf(v).flatMap(_.spec)
+    manifestOf(v).spec
 
-  /** The manifest written with version `v`'s data dir, if present:
-    * (schema, per-file name/records/bytes/column-ranges). */
-  private[sources] def readManifest(v: Long): Option[(StructType, Seq[SnapshotTable.ManifestFile])] =
-    manifestOf(v).map(m => (m.schema, m.files))
+  /** The manifest written with version `v`'s data dir: (schema, per-file
+    * name/records/bytes/column-ranges). */
+  private[sources] def readManifest(v: Long): (StructType, Seq[SnapshotTable.ManifestFile]) = {
+    val m = manifestOf(v)
+    (m.schema, m.files)
+  }
 
-  private def readManifestUncached(v: Long): Option[SnapshotTable.Manifest] =
-    if (!metaExists(manifestRel(v))) None
-    else {
-      val lines = metaReadLines(manifestRel(v))
-      def payload(l: String) = new String(
-        java.util.Base64.getDecoder.decode(l.split("\t", 2)(1)), "UTF-8")
-      def schemaOf(l: String) =
-        DataType.fromJson(payload(l)).asInstanceOf[StructType]
-      def fileOf(l: String) = {
-        // pre-r12 manifests have 3 fields (no stats) — still readable,
-        // they just never prune
-        val p = l.split("\t", 4)
-        SnapshotTable.ManifestFile(p(0), p(1).toLong, p(2).toLong,
-          if (p.length > 3) SnapshotTable.decodeStats(p(3)) else Map.empty)
-      }
-      val spec = lines.find(_.startsWith("#spec\t")).map(l =>
-        splitSpecEntries(payload(l)))
-      val keys = lines.find(_.startsWith(KeySchemaTag + "\t")).map(l =>
-        (schemaOf(l), lines.filter(_.startsWith(KeyFileTag + "\t"))
-          .map(k => fileOf(k.stripPrefix(KeyFileTag + "\t")))))
-      lines.headOption.filter(_.startsWith(SchemaTag + "\t")).map { h =>
-        SnapshotTable.Manifest(schemaOf(h), lines.drop(1).filterNot(_.startsWith("#"))
-          .map(fileOf), spec, keys)
-      }
+  /** Every data version has a manifest headed by `#schema` whose file lines
+    * carry four fields; anything else is not this store's format. */
+  private def readManifestUncached(v: Long): SnapshotTable.Manifest = {
+    def corrupt(what: String) = new IllegalStateException(
+      s"manifest of v=$v at $root $what")
+    if (!metaExists(manifestRel(v))) throw corrupt(s"is missing (${manifestRel(v)})")
+    val lines = metaReadLines(manifestRel(v))
+    def payload(l: String) = new String(
+      java.util.Base64.getDecoder.decode(l.split("\t", 2)(1)), "UTF-8")
+    def schemaOf(l: String) =
+      DataType.fromJson(payload(l)).asInstanceOf[StructType]
+    def fileOf(l: String) = l.split("\t", 4) match {
+      case Array(name, records, bytes, stats) => SnapshotTable.ManifestFile(
+        name, records.toLong, bytes.toLong, SnapshotTable.decodeStats(stats))
+      case _ => throw corrupt(s"has a file line without its stats field: $l")
     }
+    val head = lines.headOption.filter(_.startsWith(SchemaTag + "\t"))
+      .getOrElse(throw corrupt(s"does not start with a $SchemaTag record"))
+    val spec = lines.find(_.startsWith("#spec\t")).map(l =>
+      splitSpecEntries(payload(l)))
+    val keys = lines.find(_.startsWith(KeySchemaTag + "\t")).map(l =>
+      (schemaOf(l), lines.filter(_.startsWith(KeyFileTag + "\t"))
+        .map(k => fileOf(k.stripPrefix(KeyFileTag + "\t")))))
+    SnapshotTable.Manifest(schemaOf(head),
+      lines.drop(1).filterNot(_.startsWith("#")).map(fileOf), spec, keys)
+  }
 
   /** Version `v`'s own data dir as a DataFrame. An EMPTY commit (zero data
     * files — e.g. a truncate) reads back as an empty frame with the schema
-    * the manifest recorded, where a bare parquet read would fail. A dir
-    * with a manifest plans over [[ManifestFileIndex]], so pushed-down
-    * predicates skip files at physical-planning time on EVERY read path. */
-  private def readVersionDir(v: Long): DataFrame =
-    readManifest(v) match {
-      case Some((schema, files)) if files.isEmpty =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case Some((schema, files)) =>
-        manifestRelation(Seq(v)).getOrElse(keptFrame(schema, files.map(v -> _)))
-      case _ => spark.read.parquet(s"$root/v=$v")
-    }
+    * the manifest recorded, where a bare parquet read would fail. Every
+    * other dir plans over [[ManifestFileIndex]], so pushed-down predicates
+    * skip files at physical-planning time on EVERY read path. */
+  private def readVersionDir(v: Long): DataFrame = {
+    val (schema, files) = readManifest(v)
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else manifestRelation(Seq(v)).getOrElse(keptFrame(schema, files.map(v -> _)))
+  }
 
   /** A hive partition-dir value string in Catalyst INTERNAL form for the
     * declared column type — None for types the layout never produces (the
@@ -1781,13 +1808,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   /** The given version dirs as ONE manifest-backed parquet relation over
-    * every manifest-listed file ([[filesRelation]]). None when any dir
-    * lacks a manifest, schemas differ across dirs, or [[filesRelation]]
-    * declines the layout; the caller's fallback read only costs the
-    * pruning, never correctness. */
+    * every manifest-listed file ([[filesRelation]]). None when schemas
+    * differ across dirs or [[filesRelation]] declines the layout; the
+    * caller's fallback read only costs the pruning, never correctness. */
   private def manifestRelation(versions: Seq[Long]): Option[DataFrame] = {
-    val manifests = versions.flatMap(v => readManifest(v).map(v -> _))
-    if (manifests.size != versions.size) return None
+    val manifests = versions.map(v => v -> readManifest(v))
     val schema = manifests.head._2._1
     if (manifests.exists(_._2._1.json != schema.json)) return None
     filesRelation(schema,
@@ -2159,23 +2184,19 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     else df
   }
 
-  /** Version `v`'s own data dir, file-pruned by `conj` when its manifest
-    * carries column stats; a partial file list plans from the manifest
+  /** Version `v`'s own data dir, file-pruned by `conj` on its manifest's
+    * column stats; a partial file list plans from the manifest
     * ([[keptFrame]]), partition columns included. */
   private def readVersionDirPruned(v: Long, prune: Option[Seq[Expression]]): DataFrame =
     prune match {
-      case Some(cs) => readManifest(v) match {
-        case Some((schema, files)) if files.nonEmpty =>
-          val kept = SnapshotTable.keptFiles(schema, files, cs)
-          pruneKept += kept.size; pruneTotal += files.size
-          if (kept.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-          else if (kept.size == files.size) readVersionDir(v)
-          else keptFrame(schema, kept.map(v -> _))
-        case Some((schema, _)) =>
+      case Some(cs) =>
+        val (schema, files) = readManifest(v)
+        val kept = SnapshotTable.keptFiles(schema, files, cs)
+        pruneKept += kept.size; pruneTotal += files.size
+        if (kept.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        case None => readVersionDir(v)
-      }
+        else if (kept.size == files.size) readVersionDir(v)
+        else keptFrame(schema, kept.map(v -> _))
       case None => readVersionDir(v)
     }
 
@@ -2224,11 +2245,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       // when resolving a main version they are invisible (a branch commit
       // must never be picked as a base, nor folded as a delta/delete file)
       val upTo = meta.filter(m => m._1 <= v && !isBranchOp(m._3))
-      // a manifest-less append dir predates the O(delta) layout (the old
-      // commit() wrote base+delta as a full copy): it is its own base, never
-      // a delta to union — resolving it as a delta would duplicate rows
-      val baseIdx = upTo.lastIndexWhere(m => isRestart(m._3) ||
-        (isDeltaAppend(m._3) && readManifest(m._1).isEmpty))
+      val baseIdx = upTo.lastIndexWhere(m => isRestart(m._3))
       val (start, tail) =
         if (baseIdx < 0) (None, upTo) else (Some(upTo(baseIdx)), upTo.drop(baseIdx + 1))
       // a rename/drop/widen evolve inside this window makes pre-evolve file
@@ -2254,8 +2271,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
           val df = p match {
             case Some(cs) =>
               val perDir = run.map { m =>
-                // run members always carry a manifest (batchDeltaRuns contract)
-                val (schema, files) = readManifest(m._1).get
+                val (schema, files) = readManifest(m._1)
                 val kept = SnapshotTable.keptFiles(schema, files, cs)
                 pruneKept += kept.size; pruneTotal += files.size
                 (schema, kept.map(m._1 -> _))
@@ -2265,8 +2281,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
                 spark.createDataFrame(spark.sparkContext.emptyRDD[Row], perDir.head._1)
               else keptFrame(perDir.head._1, kept, posWrap)
             case None => manifestRelation(run.map(_._1)).getOrElse(
-              keptFrame(readManifest(run.head._1).get._1, run.flatMap(m =>
-                readManifest(m._1).get._2.map(m._1 -> _)), posWrap))
+              keptFrame(readManifest(run.head._1)._1, run.flatMap(m =>
+                readManifest(m._1)._2.map(m._1 -> _)), posWrap))
           }
           Some(acc.map(_.unionByName(posWrap(df), allowMissingColumns = true))
             .getOrElse(posWrap(df)))
@@ -2275,8 +2291,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         // chain of NOTHING but zero-row deltas (batchDeltaRuns drops them):
         // an empty frame with the latest delta's manifest schema
         tail.reverseIterator.collectFirst {
-          case m if isDeltaAppend(m._3) && readManifest(m._1).isDefined =>
-            posWrap(readVersionDir(m._1))
+          case m if isDeltaAppend(m._3) => posWrap(readVersionDir(m._1))
         }
       }.getOrElse(throw new IllegalStateException(
         s"no data at or before v=$v at $root"))
@@ -2295,16 +2310,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       run.clear()
     }
     tail.foreach { m =>
-      val manifest = if (isDeltaAppend(m._3)) readManifest(m._1) else None
-      manifest match {
-        case Some((schema, files)) =>
-          if (files.isEmpty) () // zero-row delta: a no-op in the union
-          else {
-            val json = schema.json
-            if (run.nonEmpty && run.head._2 != json) flush()
-            run += ((m, json))
-          }
-        case None => flush(); out += Left(m)
+      if (!isDeltaAppend(m._3)) { flush(); out += Left(m) }
+      else {
+        val (schema, files) = readManifest(m._1)
+        if (files.nonEmpty) { // a zero-row delta is a no-op in the union
+          val json = schema.json
+          if (run.nonEmpty && run.head._2 != json) flush()
+          run += ((m, json))
+        }
       }
     }
     flush()
@@ -2560,16 +2573,16 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val content = remaining.map { case (v, t, o, r) => s"$v,$t,$o,$r" }
       .mkString("", "\n", if (remaining.nonEmpty) "\n" else "")
     metaWriteString(MetaFile, content)
-    // marker sweep for pre-self-GC stores and crashed writers: any marker
-    // BELOW the log's next version is spent (its writer either logged — and
-    // the re-validation in claimVersion keeps a re-created number from being
-    // kept — or died after other writers moved the log past it). Markers at
-    // or above the log head may be in-flight claims and are never touched;
-    // below-head markers additionally get a GRACE PERIOD — a SLOW writer
-    // whose claimed number the log moved past is still protected by its
-    // marker against removeOrphans, so sweeping a young marker would strip
-    // that protection mid-write and let a later orphan pass delete a dir
-    // whose commit is about to be logged.
+    // marker sweep for crashed writers (nothing else reclaims their
+    // markers): any marker BELOW the log's next version is spent (its
+    // writer either logged — and the re-validation in claimVersion keeps a
+    // re-created number from being kept — or died after other writers
+    // moved the log past it). Markers at or above the log head may be
+    // in-flight claims and are never touched; below-head markers
+    // additionally get a GRACE PERIOD — a SLOW writer whose claimed number
+    // the log moved past is still mid-write (it will conflict and release
+    // its files), and sweeping its young marker would let a removeOrphans
+    // pass delete the dir under it.
     if (rootFs.exists(commitMarkersDir)) {
       val floor = nextVersion(remaining)
       val graceCutoff =
@@ -2665,8 +2678,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       else Seq(s"$root/v=$v")
     } else {
       val upTo = meta.filter(m => m._1 <= v && !isBranchOp(m._3))
-      val baseIdx = upTo.lastIndexWhere(m => isRestart(m._3) ||
-        (isDeltaAppend(m._3) && readManifest(m._1).isEmpty)) // legacy full copy
+      val baseIdx = upTo.lastIndexWhere(m => isRestart(m._3))
       val (start, tail) =
         if (baseIdx < 0) (None, upTo) else (Some(upTo(baseIdx)), upTo.drop(baseIdx + 1))
       val baseDirs = start.toSeq.flatMap { m =>
@@ -2680,28 +2692,22 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** The FIRST current data dir (the chain's base) — kept for callers that
-    * predate delta appends; metadata scans should use [[currentDataDirs]]. */
-  def currentBaseDataDir: String = currentDataDirs.head
-
   /** Metadata-only live-layout measure for the maintenance advisor
     * ([[TableMaintenance]]): per current data dir, (version, per-file byte
     * sizes) straight from the commit manifests — ZERO data-file opens, the
     * only acceptable cost for a layout decision at 100 TB — plus the count
     * of outstanding delete-fold commits (mor/pos delete files and
     * mor-update/merge key files) every reader currently pays an anti-join
-    * for. Legacy dirs without a manifest report an empty size list. */
+    * for. */
   def layoutStats(): (Seq[(Long, Seq[Long])], Long) = {
     val meta = readMeta()
     val head = mainHead(meta).getOrElse(
       throw new IllegalStateException(s"no snapshots at $root"))
     val perDir = dataDirsOf(meta, head).map(dirVersionOf).map { v =>
-      (v, readManifest(v).map(_._2.map(_.bytes)).getOrElse(Nil))
+      (v, readManifest(v)._2.map(_.bytes))
     }
     val upTo = meta.filter(m => m._1 <= head && !isBranchOp(m._3))
-    val baseIdx = upTo.lastIndexWhere(m => isRestart(m._3) ||
-      (isDeltaAppend(m._3) && readManifest(m._1).isEmpty))
-    val tail = if (baseIdx < 0) upTo else upTo.drop(baseIdx + 1)
+    val tail = upTo.drop(upTo.lastIndexWhere(m => isRestart(m._3)) + 1)
     val folds = tail.count(m => m._3 == MorDeleteOp || isPosDelete(m._3) ||
       m._3 == MorUpdateOp || m._3 == MorMergeOp)
     (perDir, folds.toLong)

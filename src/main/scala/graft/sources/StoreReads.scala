@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 object StoreReads {
 
   /** Distinct snapshot-store roots `plan` reads through manifest-backed
-    * relations (a store read via a raw-parquet fallback is invisible here —
-    * acceptable: fallbacks only occur for legacy manifest-less dirs). */
+    * relations. Every store data dir has a manifest; a dir whose partition
+    * layout the manifest relation declines reads through a plain parquet
+    * scan and is invisible here. */
   def rootsOf(plan: LogicalPlan): Seq[String] =
     plan.collect {
       case l: LogicalRelation => l.relation match {

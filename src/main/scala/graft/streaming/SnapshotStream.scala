@@ -46,7 +46,7 @@ object SnapshotStream {
       batchCache.getOrElseUpdate(root, {
         historyLoads += 1
         val m = scala.collection.mutable.HashMap.empty[Long, Long]
-        m ++= loadCommittedBatches(st, root)
+        m ++= loadCommittedBatches(st)
         m
       })
     }
@@ -58,30 +58,12 @@ object SnapshotStream {
   }
 
   /** Committed `batchId → version`, read straight from the commit log (one
-    * source of truth — a batch-stamped append op per streamed batch). A
-    * store written by the pre-r11 sink may also carry a legacy
-    * `_graft_stream_batches.jsonl` ledger (plain `append` ops + sidecar);
-    * its entries are honored so an upgrade mid-stream cannot double-commit
-    * a replayed batch. */
-  private def loadCommittedBatches(st: SnapshotTable, root: String): Map[Long, Long] = {
-    val stamped = st.history().collect().flatMap { r =>
+    * source of truth — a batch-stamped append op per streamed batch). */
+  private def loadCommittedBatches(st: SnapshotTable): Map[Long, Long] =
+    st.history().collect().flatMap { r =>
       st.streamBatchId(r.getAs[String]("operation"))
         .map(_ -> r.getAs[Long]("version"))
     }.toMap
-    val legacy = java.nio.file.Paths.get(root, "_graft_stream_batches.jsonl")
-    val fromLedger =
-      if (!java.nio.file.Files.exists(legacy)) Map.empty[Long, Long]
-      else {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(legacy).asScala.filter(_.nonEmpty)
-          .flatMap { l =>
-            val p = l.split(",", 2)
-            for (id <- p(0).toLongOption; v <- p.lift(1).flatMap(_.toLongOption))
-              yield id -> v
-          }.toMap
-      }
-    fromLedger ++ stamped
-  }
 
   /** Commit one micro-batch as an append UNLESS `batchId` already committed
     * (the crash-replay case) — returns the batch's version either way. */

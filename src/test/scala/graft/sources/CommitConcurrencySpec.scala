@@ -55,7 +55,8 @@ class CommitConcurrencySpec extends SparkSpec {
     assert(a.read().count() === 11)
     a.deleteWhere(col("id") < 5L) // fresh read → fresh expected head → ok
     assert(a.read().count() === 6)
-    // plain appends never conflict (they commute), even with a stale view
+    // a plain append commutes with what was logged before its claim, even
+    // with a stale view
     val vA = a.commit(Seq((200L, "y")).toDF("id", "v"), op = "append")
     assert(vA === a.currentVersion.get)
     assert(a.read().count() === 7)
@@ -236,6 +237,42 @@ class CommitConcurrencySpec extends SparkSpec {
     t.commitToBranch("dev", Seq((2L, "c")).toDF("id", "w"), "append")
     assert(devIds === Set(0L, 1L, 2L, 5L))
     assert(t.read().count() === 2, "main is untouched by branch commits")
+  }
+
+  /** Lands `foreign` once inside `t`'s next write window: after its stage
+    * wrote the data and before the commit section, where another process
+    * can log a version above the claim. */
+  private def inWriteWindow(t: SnapshotTable)(foreign: => Unit): Unit = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    t.beforeFinalHeadCheck = () => if (fired.compareAndSet(false, true)) foreign
+  }
+
+  /** Runs `commit`, and once more if it raised (the caller's retry);
+    * returns the first attempt's failure. */
+  private def withOneRetry(commit: => Long): Option[Throwable] =
+    scala.util.Try(commit).failed.toOption.map { e => commit; e }
+
+  test("an append with a foreign delete logged above its claim conflicts; " +
+      "the re-run keeps the appended row") {
+    import spark.implicits._
+    val (root, t) = seeded("occ_below_delete")
+    inWriteWindow(t)(new SnapshotTable(spark, root).deleteWhere(col("id") === 0L))
+    val first = withOneRetry(t.commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
+    assert(t.read().select("id").as[Long].collect().toSet === Set(1L, 2L),
+      "the append landed below the foreign restart point and its row left main")
+    assert(headRows(t) === 2L)
+    assert(first.exists(_.isInstanceOf[SnapshotTable.CommitConflictException]))
+  }
+
+  test("an append with a foreign append logged above its claim conflicts; " +
+      "the re-run logs the head's true row count") {
+    import spark.implicits._
+    val (root, t) = seeded("occ_below_append")
+    inWriteWindow(t)(new SnapshotTable(spark, root)
+      .commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
+    val first = withOneRetry(t.commit(Seq((3L, "d")).toDF("id", "w"), op = "append"))
+    assert(headRows(t) === t.read().count())
+    assert(first.exists(_.isInstanceOf[SnapshotTable.CommitConflictException]))
   }
 
   test("a stage that fails at write time releases its claim: no marker, no " +

@@ -304,21 +304,14 @@ class CrossProcessClaimSpec extends SparkSpec {
         JFiles.writeString(JPaths.get(syncDir, "go"), "1\n")
 
         // parent's interleaved work: appends, then a cow DELETE of the seed
-        // row — retried through CommitConflictException while the child's
-        // appends move the head under it (Iceberg's optimistic contract)
+        // row — each retried through CommitConflictException while the
+        // child's commits land under it (Iceberg's optimistic contract)
+        import CrossProcessWriterMain.retryingConflicts
         (0 until nParent).foreach { i =>
-          t.commit(Seq((i.toLong + 1L, "A")).toDF("id", "w"), op = "append")
+          retryingConflicts(30)(
+            t.commit(Seq((i.toLong + 1L, "A")).toDF("id", "w"), op = "append"))
         }
-        var deleted = false
-        var attempts = 0
-        while (!deleted) {
-          attempts += 1
-          try { t.deleteWhere(col("id") === 0L); deleted = true }
-          catch {
-            case _: SnapshotTable.CommitConflictException if attempts < 30 =>
-              ()
-          }
-        }
+        retryingConflicts(30)(t.deleteWhere(col("id") === 0L))
 
         assert(child.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
           "child did not exit in time")

@@ -11,6 +11,19 @@ import org.apache.spark.sql.SparkSession
   * for `<sync>/go`, appends `n` rows one commit at a time, writes
   * `<sync>/done` with its success count, exits 0. */
 object CrossProcessWriterMain {
+
+  /** Runs `commit`, re-running it up to `attempts` times in all while it
+    * raises [[SnapshotTable.CommitConflictException]]: across processes
+    * every commit, a plain append included, conflicts when the other
+    * process logs a version above its claim. */
+  @annotation.tailrec
+  def retryingConflicts[T](attempts: Int)(commit: => T): T =
+    scala.util.Try(commit) match {
+      case scala.util.Failure(_: SnapshotTable.CommitConflictException)
+          if attempts > 1 => retryingConflicts(attempts - 1)(commit)
+      case done => done.get
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(root, lockDir, syncDir, nStr) = args
     val n = nStr.toInt
@@ -35,7 +48,8 @@ object CrossProcessWriterMain {
       val t = new SnapshotTable(spark, root)
       var ok = 0
       (0 until n).foreach { i =>
-        t.commit(Seq((1000L + i, "B")).toDF("id", "w"), op = "append")
+        retryingConflicts(30)(
+          t.commit(Seq((1000L + i, "B")).toDF("id", "w"), op = "append"))
         ok += 1
       }
       Files.writeString(Paths.get(syncDir, "done"), s"$ok\n")

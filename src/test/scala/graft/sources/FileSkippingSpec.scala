@@ -224,21 +224,4 @@ class FileSkippingSpec extends SparkSpec {
     assert(SnapshotTable.scanStats(root) === ((1L, 4L)))
     assert(got.columns.toSeq === Seq("id", "event_ts"))
   }
-
-  test("pre-r12 manifests (no stats field) read fine and simply never prune") {
-    import spark.implicits._
-    import java.nio.file.{Files => JFiles, Paths}
-    val root = Files.createTempDirectory("skip_legacy").toFile.getAbsolutePath
-    val t = new SnapshotTable(spark, root)
-    t.commit(Seq((1L, "a"), (200L, "b")).toDF("id", "v").coalesce(1))
-    // rewrite the manifest to the 3-field pre-r12 format
-    val mf = Paths.get(root, "_graft_manifest", "v=0.tsv")
-    val stripped = JFiles.readAllLines(mf).toArray.map(_.toString).map { l =>
-      if (l.startsWith("#")) l else l.split("\t", 4).take(3).mkString("\t")
-    }.mkString("", "\n", "\n")
-    JFiles.writeString(mf, stripped)
-    val t2 = new SnapshotTable(spark, root) // fresh manifest cache
-    assert(t2.readWhere(col("id") > 100L).count() === 1)
-    assert(t2.lastPruneStats === ((1L, 1L))) // no stats → kept, not dropped
-  }
 }

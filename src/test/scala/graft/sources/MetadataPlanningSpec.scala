@@ -12,9 +12,10 @@ import graft.SparkSpec
 
 /** Store, Iceberg and key-file reads plan from the metadata the engine
   * wrote: building a read frame launches no Spark job (no parquet schema
-  * inference) and lists no directory. Also pins the claimed-key record's
-  * back-compat fallback and lifecycle, and the `listStatus` walk that
-  * replaced `FileSystem.listFiles` on the commit and export listings. */
+  * inference) and lists no directory. Also pins the manifest records every
+  * data-writing commit kind leaves (the format readers assume), the
+  * claimed-key record's lifecycle, and the `listStatus` walk that replaced
+  * `FileSystem.listFiles` on the commit and export listings. */
 class MetadataPlanningSpec extends SparkSpec {
 
   import spark.implicits._
@@ -127,42 +128,50 @@ class MetadataPlanningSpec extends SparkSpec {
       asModel(rows(0 until 40)) -- Seq(3L, 4L, 30L))
   }
 
-  private def stripKeyRecords(root: String): Int = {
-    val dir = JPaths.get(root, "_graft_manifest")
-    var stripped = 0
-    JFiles.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path]).foreach { p =>
-      val lines = JFiles.readAllLines(p).toArray.map(_.toString).toSeq
-      val kept = lines.filterNot(l =>
-        l.startsWith("#keyschema\t") || l.startsWith("#keyfile\t"))
-      if (kept.size != lines.size) {
-        stripped += 1
-        JFiles.writeString(p, kept.mkString("", "\n", "\n"))
-      }
-    }
-    stripped
-  }
-
-  test("a store whose manifests carry no key record reads the same rows " +
-      "through the listing fallback") {
-    val root = JFiles.createTempDirectory("planmeta_compat").toFile.getAbsolutePath
-    buildChain(root)
-    def snapshot(t: SnapshotTable) = Seq(
-      sortedRows(t.read()), sortedRows(t.readWhere(pred)),
-      sortedRows(t.read(Some(5L))), sortedRows(t.changes(3L, 6L, "id")),
-      sortedRows(t.changesForCommit(4L, Seq("id"))),
-      sortedRows(t.changesForCommit(5L, Seq("id"))),
-      sortedRows(t.changesForCommit(6L, Seq("id"))),
-      Seq(4L, 5L, 6L).map(v => t.morClaimedKeys(v).map(sortedRows)).toString)
-    val recorded = snapshot(new SnapshotTable(spark, root))
-    // v4 (mor update), v5 (merge with keys) and v6 (insert-only merge)
-    assert(stripKeyRecords(root) === 3)
-    assert(snapshot(new SnapshotTable(spark, root)) === recorded)
-    assert(new SnapshotTable(spark, root).morClaimedKeys(6L).isEmpty)
-  }
-
   private def manifestText(root: String, v: Long): Option[String] = {
     val p = JPaths.get(root, "_graft_manifest", s"v=$v.tsv")
     if (JFiles.exists(p)) Some(JFiles.readString(p)) else None
+  }
+
+  test("every data-writing commit kind records the manifest readers assume: " +
+      "#schema first, four-field file lines, #keyschema for mor update/merge") {
+    val root = JFiles.createTempDirectory("planmeta_format").toFile.getAbsolutePath
+    val t = new SnapshotTable(spark, root)
+    val claimText = Seq((None, Some(Map("text" -> lit("m")))))
+    val kinds: Seq[(String, () => Long)] = Seq(
+      "overwrite" -> (() => t.commit(rows(0 until 50))),
+      "append" -> (() => t.commit(rows(50 until 60), op = "append")),
+      "cow delete" -> (() => t.deleteWhere(col("id") === 1L)),
+      "deleteWhereMor" -> (() => t.deleteWhereMor(col("id") === 2L, "id")),
+      "deleteWherePos" -> (() => t.deleteWherePos(col("id") === 3L)),
+      "updateMor" -> (() =>
+        t.updateMor(col("id") === 4L, Map("n" -> lit(-1L)), "id")),
+      "mergeIntoMor" -> (() =>
+        t.mergeIntoMor(rows(5 until 6), "id", claimText, Seq((None, None)))),
+      "insert-only mergeIntoMor" -> (() =>
+        t.mergeIntoMor(rows(70 until 71), "id", claimText, Seq((None, None)))),
+      "compact" -> (() => t.compact(targetFiles = 1)),
+      "commitToBranch" -> { () =>
+        t.createBranch("dev"); t.commitToBranch("dev", rows(80 until 81), "append") },
+      "rollback to an asof target" -> (() => t.rollback(1L)))
+    val landed = kinds.map { case (kind, commit) => commit() -> kind }.toMap
+    assert(landed.size === kinds.size)
+    val log = t.commitOps()
+    val owners = log.map(_._1).filter(v => JFiles.isDirectory(JPaths.get(root, s"v=$v")))
+    assert(owners.map(landed) === kinds.map(_._1).dropRight(1),
+      "every kind but the metadata-only rollback owns a v=N dir")
+    owners.foreach { v =>
+      val lines = manifestText(root, v).getOrElse(fail(s"${landed(v)} v=$v: no manifest"))
+        .split('\n').toSeq.filter(_.nonEmpty)
+      assert(lines.head.startsWith("#schema\t"), s"${landed(v)} v=$v")
+      assert(lines.filterNot(_.startsWith("#")).forall(_.split("\t", -1).length == 4),
+        s"${landed(v)} v=$v: a file line without four fields")
+    }
+    val morLike = log.collect { case (v, op) if t.isMorUpdateLike(op) => v }
+    assert(morLike.map(landed) ===
+      Seq("updateMor", "mergeIntoMor", "insert-only mergeIntoMor"))
+    morLike.foreach(v => assert(manifestText(root, v).exists(
+      _.split('\n').exists(_.startsWith("#keyschema\t"))), s"${landed(v)} v=$v"))
   }
 
   test("expiry and orphan removal treat a version's manifest and key " +

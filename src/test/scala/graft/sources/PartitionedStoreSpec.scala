@@ -330,7 +330,7 @@ class PartitionedStoreSpec extends SparkSpec {
     assert(kept < total, s"partition pruning should have fired: $kept/$total")
   }
 
-  test("commit markers self-GC once logged; expiry sweeps legacy markers") {
+  test("commit markers self-GC; expiry sweeps crashed writers' markers") {
     import spark.implicits._
     val root = Files.createTempDirectory("pstore_markers").toFile.getAbsolutePath
     val t = new SnapshotTable(spark, root)
@@ -343,8 +343,8 @@ class PartitionedStoreSpec extends SparkSpec {
     // O(in-flight), never O(versions) — each commit's listing stays cheap
     // on an object store
     assert(markers() === Nil, s"markers not GC'd: ${markers()}")
-    // legacy stores (pre-self-GC) carry one marker per version: expiry
-    // sweeps AGED markers below the log head, keeps possible in-flight ones
+    // crashed writers leave their markers behind: expiry sweeps AGED
+    // markers below the log head, keeps possible in-flight ones
     // (at/above head) AND young below-head markers — a slow writer the log
     // moved past still needs its marker's removeOrphans protection until
     // the sweep grace period passes

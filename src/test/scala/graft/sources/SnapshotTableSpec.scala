@@ -503,27 +503,30 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().count() === 2) // nothing committed
   }
 
-  test("legacy full-copy append dirs (no manifest) resolve as their own base") {
+  test("a store whose _graft_format is missing or another value is refused, " +
+      "naming the root") {
     import spark.implicits._
-    import java.nio.file.{Files => JFiles, Paths, StandardOpenOption}
-    val root = Files.createTempDirectory("snap_legacy").toFile.getAbsolutePath
-    val t = new SnapshotTable(spark, root)
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))            // v0
-    // hand-write what the PRE-r11 code produced for an append: a FULL copy
-    // (base + delta) in v=1 with an `append` log line and NO manifest
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      .write.parquet(s"$root/v=1")
-    JFiles.writeString(Paths.get(root, "_graft_meta.jsonl"),
-      s"1,${System.currentTimeMillis()},append,3\n",
-      StandardOpenOption.APPEND)
-    // resolving v1 as a delta would union base rows twice (5 rows) — the
-    // manifest-less dir must be recognized as a legacy full copy
-    assert(t.read().count() === 3)
-    assert(t.read().as[(Long, String)].collect().toSet ===
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // and a NEW delta append on top of the legacy store still works
-    t.commit(Seq((4L, "d")).toDF("id", "v"), op = "append")
-    assert(t.read().count() === 4)
+    import java.nio.file.{Files => JFiles, Paths}
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    def dir() = Files.createTempDirectory("snap_format").toFile.getAbsolutePath
+    val (local, remote) = (dir(), dir())
+    Seq(local -> local, s"graftfs://$remote" -> remote).foreach { case (root, path) =>
+      val stamp = Paths.get(path, "_graft_format")
+      new SnapshotTable(spark, root).commit(Seq((1L, "a")).toDF("id", "v"))
+      assert(JFiles.readString(stamp).trim === SnapshotTable.FormatVersion)
+      def refusal(): String = intercept[IllegalStateException](
+        new SnapshotTable(spark, root).read().collect()).getMessage
+      JFiles.delete(stamp)
+      val missing = refusal()
+      assert(missing.contains(root) && missing.contains("no _graft_format"), missing)
+      JFiles.writeString(stamp, "0\n")
+      val other = refusal()
+      assert(other.contains(root) && other.contains("'0'") &&
+        other.contains(s"'${SnapshotTable.FormatVersion}'"), other)
+      JFiles.writeString(stamp, SnapshotTable.FormatVersion + "\n")
+      assert(new SnapshotTable(spark, root).read().count() === 1)
+    }
   }
 
   test("mor-update writes only the changed rows + keys; reads resolve ≡ cow") {
