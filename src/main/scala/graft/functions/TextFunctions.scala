@@ -119,9 +119,6 @@ object TextFunctions {
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[^.,!?;:]", ""))
 
-  def upperCount(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", ""))
-
   def stopwordCount(toks: Column): Column =
     markerHits(toks, defaultMarkers.head._2)
 

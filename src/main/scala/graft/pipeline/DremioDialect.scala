@@ -22,11 +22,6 @@ object DremioDialect {
     s.replace("\"", "'")
   }
 
-  /** TO_TIMESTAMP(s, dremioFmt, 1): lenient 3-arg form — returns NULL on
-    * parse failure instead of raising (semantic_example.sql:113-121). */
-  def toTimestampLenient(c: Column, dremioFmt: String): Column =
-    try_to_timestamp(c, lit(translateFormat(dremioFmt)))
-
   /** The reference's mixed-format timestamp sniffing CASE
     * (semantic_example.sql:110-128): four formats distinguished by
     * REGEXP_LIKE anchors, with an epoch-seconds branch. Returns NULL for

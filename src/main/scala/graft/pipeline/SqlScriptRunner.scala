@@ -1,54 +1,53 @@
 package graft.pipeline
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+  UnresolvedInlineTable, UnresolvedRelation, UnresolvedTable}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AlterColumns,
+  DeleteAction, DeleteFromTable, DropColumns, InsertAction, InsertIntoStatement,
+  InsertStarAction, LocalRelation, LogicalPlan, MergeIntoTable, RenameColumn,
+  SubqueryAlias, UnresolvedWith, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.functions.{col, expr, lit, when}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 
 import graft.sources.Catalog
 
 /** Executes a Dremio-style SQL script statement-by-statement (the reference's
-  * pipeline lifecycle, SURVEY.md §3.2: each industry .sql file is a sequence
-  * of CREATE FOLDER / CREATE TABLE / INSERT / CREATE VIEW / SELECT run in
-  * order), translating the dialect gaps:
+  * pipeline lifecycle, SURVEY.md §3.2).
   *
-  *  - `CREATE FOLDER IF NOT EXISTS a.b.c` → a REAL nested namespace: the
-  *    first path segment (`a` — the reference's `dremio` root) is
-  *    auto-registered as a GraftCatalog (DSv2, parquet warehouse), and the
-  *    folder becomes `CREATE NAMESPACE a.b.c` on it. Tables then resolve
-  *    their full dotted paths natively — `a.b.c.t` stays `a.b.c.t` through
-  *    DDL, DML and queries, matching the reference hierarchy
-  *    (semantics.sql:8-23) with no name mangling.
-  *  - `CREATE [OR REPLACE] VIEW a.b.v` → session temp view `a_b_v`, with
-  *    references in later statements rewritten. Views are the one surface
-  *    kept session-scoped: Spark's v2 catalog API hosts tables, not views
-  *    (a ViewCatalog SPI exists but CREATE VIEW doesn't route to it), and
-  *    the reference's views are session-lifecycle pipeline steps anyway.
-  *  - `DELETE FROM t` (unqualified) → v2 truncate (overwrite with the empty
-  *    set), the reference's repeatable-run reset (logistics_AI.sql:60).
-  *  - Row-level DML on snapshot-bound tables (`graft.snapshot.<name>`, the
-  *    time-travel binding): `DELETE FROM t WHERE …` (copy-on-write, or
-  *    merge-on-read when `graft.snapshot.<name>.delete_mode=mor`),
-  *    `UPDATE t SET … [WHERE …]`, whole-row `MERGE INTO … SET * / INSERT *`,
-  *    and `ROLLBACK TABLE t TO SNAPSHOT 'v'` — the Iceberg v2 DML surface
-  *    over [[graft.sources.SnapshotTable]].
-  *  - `GRANT …` → recorded as governance metadata (Catalog.grant), not
-  *    executed (Spark has no ACL store).
-  *  - `AI_GENERATE(… WITH SCHEMA ROW(…))` → schema-typed generic path
-  *    (DremioDialect.rewriteAiGenerate); AI functions pre-registered.
-  *  - `ALTER DATASET d CREATE REFLECTION r USING RAW` (readme.md:322-326,
-  *    plus the public `CREATE RAW REFLECTION … USING DISPLAY (…)` /
-  *    `CREATE AGGREGATE REFLECTION … USING DIMENSIONS (…) MEASURES (…)`
-  *    spellings) → a refreshed [[graft.plans.Materializations]] entry with
-  *    [[graft.plans.MaterializationSubstitution]] installed, so later
-  *    SELECTs over the dataset are served from the materialization
-  *    transparently — the Dremio acceleration contract.
-  *  - `TABLE(table_snapshot('t'))` / `TABLE(table_history('t'))`
-  *    (readme.md:357-369) → [[graft.sources.MetadataFunctions]] metadata
-  *    scans bound as temp views in place.
-  *  - Comments (`-- …`) are stripped; statements split on top-level `;`
-  *    (quote-aware).
+  * Spark's parser reads the store statements: DELETE, UPDATE, MERGE INTO,
+  * and INSERT INTO or ALTER TABLE … ADD/DROP/RENAME/ALTER COLUMN on a
+  * snapshot-bound table (`graft.snapshot.<name>`). Their plan nodes become
+  * [[graft.sources.SnapshotTable]] calls in each table's declared
+  * `delete_mode`/`update_mode`/`merge_mode` — the Iceberg v2 DML surface —
+  * after one rewrite that strips Dremio's `AT BRANCH b` from a DML target
+  * and spells `SET DATA TYPE` as `TYPE`. A DELETE with no WHERE truncates,
+  * bound and catalog tables alike (logistics_AI.sql:60). Every other
+  * statement runs as Spark SQL with plain bound names bound to their stores
+  * ([[bindSnapshotReads]]). Only the Dremio and Iceberg-extension arms
+  * translate text:
   *
-  * Returns the result of every statement that produced rows (SELECTs), by
-  * statement index.
+  *  - `CREATE FOLDER a.b.c` → `CREATE NAMESPACE` on a GraftCatalog
+  *    registered for `a`, so dotted table paths resolve natively;
+  *  - `CREATE VIEW a.b.v` → session temp view `a_b_v`, references
+  *    rewritten; `CREATE TABLE … PARTITION BY|DISTRIBUTE BY (…)` → recorded
+  *    intent (DISTRIBUTE BY becomes a REPARTITION hint);
+  *  - `GRANT …` → Catalog.grant, enforced in `asUser` mode;
+  *  - `ALTER DATASET d CREATE [RAW|AGGREGATE] REFLECTION …` → a refreshed,
+  *    substituted [[graft.plans.Materializations]] entry;
+  *  - `OPTIMIZE TABLE`, `VACUUM TABLE`, `ROLLBACK TABLE t TO SNAPSHOT 'v'`,
+  *    branch/tag DDL and `WRITE ORDERED BY` → the store's maintenance, ref
+  *    and sort-order calls;
+  *  - `t AT SNAPSHOT|TIMESTAMP|BRANCH|TAG …`, `TABLE(table_*('t'))` and
+  *    `TABLE(LIST_FILES('@src/…'))` → statement-scoped temp views;
+  *  - [[DremioDialect]]'s spellings (AI_GENERATE, TO_TIMESTAMP, …).
+  *
+  * Comments are stripped and statements split on top-level `;`. Returns the
+  * result of every statement that produced rows (SELECTs), by index.
   */
 final class SqlScriptRunner(spark: SparkSession,
                             asUser: Option[String] = None,
@@ -78,6 +77,15 @@ final class SqlScriptRunner(spark: SparkSession,
     * statement is denied, and each statement's views are dropped after it
     * executes, so no rewrite artifact outlives its statement. */
   private val stmtViews = scala.collection.mutable.Set.empty[String]
+
+  /** Binds `df` as this statement's next `graft_<kind>_N` view; its name. */
+  private def statementView(kind: String, df: DataFrame): String = {
+    metaViewCount += 1
+    val v = s"graft_${kind}_$metaViewCount"
+    df.createOrReplaceTempView(v)
+    stmtViews += v
+    v
+  }
 
   def run(script: String): Map[Int, DataFrame] = {
     graft.ai.AiFunctions.register(spark)
@@ -149,12 +157,7 @@ final class SqlScriptRunner(spark: SparkSession,
               DremioDialect.rewriteQuotedIdentifiers(
                 rewriteViewPaths(raw)))))))
     val upper = stmt.toUpperCase.replaceAll("\\s+", " ").trim
-    // DML dispatch must see only TOP-LEVEL keywords: a WHERE inside a string
-    // literal must not make a truncate look row-level (or vice versa), and
-    // `WHERE(pred)` — no trailing space — is legal SQL. Length-preserving
-    // masking lets clause regexes match on `masked` and slice `stmt`.
-    val masked = maskStringLiterals(stmt)
-    val hasTopLevelWhere = "(?i)\\bWHERE\\b".r.findFirstIn(masked).isDefined
+    val (text, target, branch) = normalise(stmt)
     if (upper.startsWith("CREATE FOLDER")) {
       val path = stmt.trim.split("\\s+").last.stripSuffix(";")
       ensureCatalog(path.split("\\.").head)
@@ -256,142 +259,64 @@ final class SqlScriptRunner(spark: SparkSession,
         case None => Catalog.compactTable(spark, table)
       }
       None
-    } else if (upper.startsWith("DELETE FROM ") && hasTopLevelWhere) {
-      // Row-level DELETE … WHERE over a snapshot-bound table (Iceberg v2
-      // DML; the truncate form below remains the catalog-table reset). The
-      // write mode follows the table's declared property, like Iceberg's
-      // write.delete.mode:
-      //   graft.snapshot.<name>.delete_mode = cow (default) | mor | pos
-      //   graft.snapshot.<name>.key         = equality-delete key (mor only)
-      // `DELETE FROM t AT BRANCH b WHERE …` (Dremio's branch-targeted DML
-      // spelling) applies the delete to the BRANCH's head — the
-      // write-audit-publish staging write; main is untouched.
-      val m = ("(?is)DELETE\\s+FROM\\s+([\\w.]+)" +
-        "(?:\\s+AT\\s+BRANCH\\s+(\\w+))?\\s+WHERE\\b\\s*(.+)").r
-        .findFirstMatchIn(masked).get
-      val name = stmt.substring(m.start(1), m.end(1))
-      val st = snapshotStore(name, "DELETE")
-      val pred = expr(stmt.substring(m.start(3), m.end(3)).trim.stripSuffix(";"))
-      Option(m.group(2)).map(_ => stmt.substring(m.start(2), m.end(2))) match {
-        case Some(b) =>
-          // branch-side copy-on-write: survivors become the branch's head
-          st.commitToBranch(b,
-            st.readBranch(b).filter(!(pred <=> lit(true))), "overwrite")
-        case None =>
-          spark.conf.getOption(s"graft.snapshot.$name.delete_mode").getOrElse("cow") match {
-            case "mor" =>
-              // the declared key may be a comma-separated COMPOSITE key
-              // (Iceberg equality deletes span identifier fields)
-              val key = spark.conf.getOption(s"graft.snapshot.$name.key").getOrElse(
-                throw new IllegalArgumentException(s"DELETE (merge-on-read) on " +
-                  s"$name: set graft.snapshot.$name.key to the equality-delete key"))
-              st.deleteWhereMor(pred,
-                key.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-            case "pos" =>
-              // Iceberg v2 position deletes: no key needed — the delete
-              // form for tables without a unique key (duplicate rows keep
-              // their unmatched copies)
-              st.deleteWherePos(pred)
-            case _ => st.deleteWhere(pred)
-          }
-      }
-      None
-    } else if (upper.startsWith("UPDATE ") && upper.contains(" SET ")) {
-      // UPDATE t [AT BRANCH b] SET col = expr[, …] [WHERE pred] on a
-      // snapshot-bound table (copy-on-write; the AT BRANCH form targets the
-      // branch's head, leaving main untouched). Assignment expressions are
-      // any Spark SQL scalar over the table's columns.
-      // match on the masked body so a WHERE inside an assignment's string
-      // literal (SET note = 'kept where found') can't split the SET clause;
-      // masking is length-preserving, so offsets slice the real text
-      val body = stmt.trim.stripSuffix(";")
-      val m = ("(?is)UPDATE\\s+([\\w.]+)(?:\\s+AT\\s+BRANCH\\s+(\\w+))?" +
-        "\\s+SET\\s+(.+?)(?:\\s+WHERE\\b\\s*(.+))?$").r
-        .findFirstMatchIn(maskStringLiterals(body)).get
-      val st = snapshotStore(body.substring(m.start(1), m.end(1)), "UPDATE")
-      val assigns = topLevelSplit(body.substring(m.start(3), m.end(3))).map { a =>
-        val eq = a.indexOf('=')
-        require(eq > 0, s"UPDATE assignment not of form col = expr: $a")
-        a.substring(0, eq).trim -> expr(a.substring(eq + 1).trim)
-      }
-      val pred = Option(m.group(4))
-        .map(_ => expr(body.substring(m.start(4), m.end(4)).trim))
-        .getOrElse(lit(true))
-      val updName = body.substring(m.start(1), m.end(1))
-      Option(m.group(2)).map(_ => body.substring(m.start(2), m.end(2))) match {
-        case Some(b) =>
-          val updated = assigns.foldLeft(st.readBranch(b)) { case (df, (c, e)) =>
-            df.withColumn(c, when(pred, e).otherwise(col(c)))
-          }
-          st.commitToBranch(b, updated, "overwrite")
-        case None =>
-          // like DELETE, the write mode follows the table's declared
-          // property (Iceberg's write.update.mode): merge-on-read commits
-          // only the updated copies + their equality-delete keys — O(changed)
-          spark.conf.getOption(s"graft.snapshot.$updName.update_mode")
-            .getOrElse("cow") match {
-            case "mor" =>
-              val key = spark.conf.getOption(s"graft.snapshot.$updName.key").getOrElse(
-                throw new IllegalArgumentException(s"UPDATE (merge-on-read) on " +
-                  s"$updName: set graft.snapshot.$updName.key to the equality-delete key"))
-              st.updateMor(pred, assigns.toMap,
-                key.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-            case _ => st.update(pred, assigns.toMap)
-          }
-      }
-      None
-    } else if (upper.startsWith("INSERT INTO ") && {
-        "(?is)^INSERT\\s+INTO\\s+([\\w.]+)".r.findFirstMatchIn(stmt.trim)
-          .exists(n => spark.conf.getOption(s"graft.snapshot.${n.group(1)}").isDefined)
-      }) {
-      // INSERT INTO t [AT BRANCH b] <query|VALUES …> on a SNAPSHOT-BOUND
-      // table: an O(DELTA) append commit — only the new rows are written
-      // (the Iceberg append cost model; reference spark.py:88-89). The AT
-      // BRANCH form (Dremio's branch-targeted DML) appends to the branch's
-      // head — the write-audit-publish staging write. SELECT sources align
-      // BY NAME (alias your columns; missing ones null-fill — the schema-
-      // evolution union semantic); VALUES align positionally to the table's
-      // schema, like SQL INSERT. Catalog-table INSERTs are untouched (the
-      // default spark.sql path below).
-      val body = stmt.trim.stripSuffix(";")
-      // `\\s*` before the body: `INSERT INTO t(a,b) VALUES …` (no space
-      // before the column list) is the common SQL spelling
-      val m = ("(?is)^INSERT\\s+INTO\\s+([\\w.]+)" +
-        "(?:\\s+AT\\s+BRANCH\\s+(\\w+))?\\s*(\\(.*|\\S.*)$").r
-        .findFirstMatchIn(maskStringLiterals(body)).get
-      val name = body.substring(m.start(1), m.end(1))
-      val st = snapshotStore(name, "INSERT")
-      val branch = Option(m.group(2)).map(_ => body.substring(m.start(2), m.end(2)))
-      val q = body.substring(m.start(3), m.end(3)).trim
-      // optional explicit column list: INSERT INTO t (a, b) <query|VALUES …>
-      // — the query's output maps positionally onto the listed columns
-      val colsPrefix = "(?s)^\\(([\\w\\s,]+)\\)\\s*(.+)$".r
-      val (explicitCols, qBody) = q match {
-        case colsPrefix(cols, rest0)
-            if "(?is)^(SELECT|VALUES|WITH|\\()".r.findFirstIn(rest0.trim).isDefined =>
-          (Some(cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq), rest0.trim)
-        case _ => (None, q)
-      }
-      // strip a wrapping paren only when it encloses the WHOLE body — the
-      // close matching `(SELECT …` must be the final char, or forms like
-      // `(SELECT …) UNION ALL (SELECT …)` would be mangled
-      def fullyWrapped(t: String): Boolean = {
-        if (!t.startsWith("(") || !t.endsWith(")")) return false
-        var depth = 0; var i = 0; var ok = true; var inS = false
-        while (i < t.length) {
-          t.charAt(i) match {
-            case '\\' if inS && i + 1 < t.length => i += 1
-            case '\'' => inS = !inS
-            case '(' if !inS => depth += 1
-            case ')' if !inS => depth -= 1; if (depth == 0 && i != t.length - 1) ok = false
-            case _ =>
-          }
-          i += 1
+    } else if (upper.startsWith("DELETE FROM ")) {
+      // Row-level DELETE on a bound table, in its declared delete_mode (cow
+      // default | mor, keyed by graft.snapshot.<name>.key | pos — Iceberg's
+      // write.delete.mode). No WHERE truncates: a bound store commits an
+      // empty snapshot; a catalog table is dropped and recreated (Spark's
+      // FileTable has no v2 TRUNCATE). AT BRANCH writes the branch's head.
+      val d = parseAs[DeleteFromTable](text, "DELETE")
+      val (name, alias) = targetOf(d.table)
+      val truncate = d.condition == Literal.TrueLiteral
+      if (truncate && !isBound(name)) {
+        asUser.foreach(u =>
+          requirePrivilege(u, "DELETE", Seq("WRITE"), datasetPath(name)))
+        val schema = spark.table(name).schema
+        spark.sql(s"DROP TABLE $name")
+        spark.sql(s"CREATE TABLE $name (${schema.toDDL}) USING parquet")
+      } else {
+        val st = snapshotStore(name, "DELETE")
+        val pred = column(d.condition, targetNames(name, alias))
+        (branch, if (truncate) "cow" else mode(name, "delete")) match {
+          case (Some(b), _) => // survivors become the branch's head
+            st.commitToBranch(b, st.readBranch(b).filter(!(pred <=> lit(true))), "overwrite")
+          case (_, "mor") => st.deleteWhereMor(pred, keyOf(name, "DELETE"))
+          case (_, "pos") => st.deleteWherePos(pred) // keyless position deletes
+          case _ => st.deleteWhere(pred)
         }
-        ok && depth == 0
       }
-      val qText = if (fullyWrapped(qBody)) qBody.substring(1, qBody.length - 1) else qBody
-      val df0 = sqlWithSnapshotReads(qText)
+      None
+    } else if (upper.startsWith("UPDATE ")) {
+      // UPDATE on a bound table, in its declared update_mode (cow default |
+      // mor: only the updated copies + their equality-delete keys).
+      val u = parseAs[UpdateTable](text, "UPDATE")
+      val (name, alias) = targetOf(u.table)
+      val st = snapshotStore(name, "UPDATE")
+      val names = targetNames(name, alias)
+      val set = u.assignments.map(a =>
+        assigned(a.key, names, "UPDATE") -> column(a.value, names)).toMap
+      val pred = u.condition.fold(lit(true))(column(_, names))
+      (branch, mode(name, "update")) match {
+        case (Some(b), _) =>
+          val head = st.readBranch(b)
+          st.commitToBranch(b, st.onFields(head.schema, set, "UPDATE").foldLeft(head) {
+            case (df, (c, e)) => df.withColumn(c, when(pred, e).otherwise(col(c)))
+          }, "overwrite")
+        case (_, "mor") => st.updateMor(pred, set, keyOf(name, "UPDATE"))
+        case _ => st.update(pred, set)
+      }
+      None
+    } else if (upper.startsWith("INSERT INTO ") && target.exists(isBound)) {
+      // INSERT on a bound table: an O(DELTA) append commit (the Iceberg
+      // append cost model; reference spark.py:88-89). A column list maps the
+      // output by position; otherwise SELECT output aligns BY NAME (missing
+      // columns null-fill) and VALUES by position, like SQL INSERT.
+      val ins = parseAs[InsertIntoStatement](text, "INSERT")
+      val (name, _) = targetOf(ins.table)
+      require(ins.partitionSpec.isEmpty, s"INSERT INTO $name PARTITION (…): " +
+        "unsupported clause — the store lays rows out by its own partition spec")
+      val st = snapshotStore(name, "INSERT")
+      val df0 = PlanBridge.ofRows(spark, bindSnapshotReads(ins.query))
       // the table's current schema (branch head when AT BRANCH): inserted
       // values are CAST to the target column types, like SQL INSERT — an
       // integer literal landing as INT in a BIGINT table would otherwise
@@ -441,8 +366,9 @@ final class SqlScriptRunner(spark: SparkSession,
         df.select(df.columns.toSeq.map(c =>
           types.get(c.toLowerCase).map(col(c).cast(_)).getOrElse(col(c)).as(c)): _*)
       }
-      val df = explicitCols match {
-        case Some(cols) =>
+      val cols = ins.userSpecifiedCols
+      val df =
+        if (cols.nonEmpty) {
           require(df0.columns.length == cols.length,
             s"INSERT INTO $name (${cols.length} columns): query produced ${df0.columns.length}")
           // every listed column must exist in the table: a typo'd name would
@@ -453,181 +379,70 @@ final class SqlScriptRunner(spark: SparkSession,
             s"INSERT INTO $name: unknown column(s) ${unknown.mkString(", ")} — " +
               "use ALTER TABLE ADD COLUMN for schema evolution")
           castTo(df0.toDF(cols: _*))
-        case None if qText.toUpperCase.startsWith("VALUES") =>
-          val cols = tSchema.fields.map(_.name)
-          require(df0.columns.length == cols.length,
-            s"INSERT INTO $name VALUES: ${df0.columns.length} values for ${cols.length} columns")
-          castTo(df0.toDF(cols.toSeq: _*))
-        case None => df0
-      }
+        } else ins.query match {
+          case _: LocalRelation | _: UnresolvedInlineTable => // VALUES
+            val tCols = tSchema.fields.map(_.name)
+            require(df0.columns.length == tCols.length,
+              s"INSERT INTO $name VALUES: ${df0.columns.length} values for ${tCols.length} columns")
+            castTo(df0.toDF(tCols.toSeq: _*))
+          case _ => df0
+        }
       branch match {
         case Some(b) => st.commitToBranch(b, df, "append")
         case None    => st.commit(df, "append")
       }
       None
     } else if (upper.startsWith("MERGE INTO ")) {
-      // MERGE INTO t [AS a] USING <src> [AS b] ON t.k = s.k, then any mix of
-      // Iceberg/Spark MERGE clauses, first-match-wins:
-      //   WHEN MATCHED [AND cond] THEN UPDATE SET * | UPDATE SET c = e, … | DELETE
-      //   WHEN NOT MATCHED [AND cond] THEN INSERT * | INSERT (c, …) VALUES (e, …)
-      // <src> is a (sub-select) or a table/view name; the ON clause must be
-      // a single equality on the SAME column name both sides (the merge
-      // key), and its qualifiers must be exactly the target and source
-      // aliases (in either order) — a typo'd `ON t.id = t.id` is an error,
-      // never a silent key-merge. The whole-row SET */INSERT * pair keeps
-      // the cheaper anti-join+union plan (SnapshotTable.merge); any other
-      // clause mix runs the general broadcast-outer-join executor
-      // (SnapshotTable.mergeInto — the target side never shuffles).
-      def unsupported = new IllegalArgumentException(
-        "unsupported MERGE form; expected: MERGE INTO t USING src ON " +
-          "t.k = s.k followed by WHEN [NOT] MATCHED [AND cond] THEN " +
-          "UPDATE SET */UPDATE SET c = e, …/DELETE/INSERT */INSERT (…) VALUES (…)")
-      val trimmed = stmt.trim.stripSuffix(";")
-      val hm = "(?is)^MERGE\\s+INTO\\s+([\\w.]+)(?:\\s+(?:AS\\s+)?(\\w+))?\\s+USING\\s+".r
-        .findFirstMatchIn(trimmed).getOrElse(throw unsupported)
-      // the USING source: a balanced-paren (sub-select) scan — regex can't
-      // bound arbitrary nesting — or a bare table/view name. Quote-aware,
-      // with backslash-escaped quotes skipped.
-      val rest = trimmed.substring(hm.end)
-      val (srcText, afterSrc) =
-        if (rest.startsWith("(")) {
-          var depth = 0; var i = 0; var end = -1; var inS = false
-          while (i < rest.length && end < 0) {
-            rest.charAt(i) match {
-              case '\\' if inS && i + 1 < rest.length => i += 1
-              case '\'' => inS = !inS
-              case '(' if !inS => depth += 1
-              case ')' if !inS => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          if (end <= 0) throw unsupported
-          (rest.substring(0, end + 1), rest.substring(end + 1))
-        } else {
-          val m2 = "(?s)^([\\w.]+)".r.findFirstMatchIn(rest).getOrElse(throw unsupported)
-          (m2.group(1), rest.substring(m2.end))
-        }
-      val am = "(?is)^\\s*(?:(?:AS\\s+)?(\\w+)\\s+)?ON\\s+".r
-        .findFirstMatchIn(afterSrc).getOrElse(throw unsupported)
-      val srcAlias = Option(am.group(1))
-      val afterOn = afterSrc.substring(am.end)
-      val maskedAfterOn = maskStringLiterals(afterOn)
-      val clauseStarts = "(?is)\\bWHEN\\s+(?:NOT\\s+)?MATCHED\\b".r
-        .findAllMatchIn(maskedAfterOn).map(_.start).toList
-      if (clauseStarts.isEmpty) throw unsupported
-      val onCond = afterOn.substring(0, clauseStarts.head).trim
-      val st = snapshotStore(hm.group(1), "INSERT")
-      // ON validation: same column name both sides AND the qualifiers are
-      // the declared target/source names (either order)
-      val targetNames = (Option(hm.group(2)).toSeq :+ hm.group(1)).map(_.toLowerCase)
-      val sourceNames = (srcAlias.toSeq ++
-        (if (srcText.startsWith("(")) Nil else Seq(srcText))).map(_.toLowerCase)
-      require(srcAlias.nonEmpty || !srcText.startsWith("("),
-        "MERGE USING (sub-select) needs an alias")
-      require(targetNames.intersect(sourceNames).isEmpty,
-        s"MERGE target and source aliases collide: ${targetNames.intersect(sourceNames).mkString(",")}")
-      val onRe = "(?is)^\\s*([\\w.]+)\\.(\\w+)\\s*=\\s*([\\w.]+)\\.(\\w+)\\s*$".r
-      val key = onRe.findFirstMatchIn(onCond) match {
-        case Some(o) if o.group(2).equalsIgnoreCase(o.group(4)) =>
-          val (q1, q2) = (o.group(1).toLowerCase, o.group(3).toLowerCase)
-          require((targetNames.contains(q1) && sourceNames.contains(q2)) ||
-            (targetNames.contains(q2) && sourceNames.contains(q1)),
-            s"MERGE ON qualifiers must be the target and source aliases " +
-              s"(${targetNames.head}, ${sourceNames.headOption.getOrElse("?")}): $onCond")
-          o.group(2)
-        case _ => throw new IllegalArgumentException(
-          s"MERGE ON clause must be t.<key> = s.<key>: $onCond")
+      // MERGE INTO a bound table, first matching clause wins: WHEN MATCHED
+      // [AND c] THEN UPDATE SET */c = e, …/DELETE; WHEN NOT MATCHED [AND c]
+      // THEN INSERT */(c, …) VALUES (…). The source is a name or an aliased
+      // sub-select; ON must be one key equality (mergeKey). SET * + INSERT *
+      // is the anti-join+union upsert (SnapshotTable.merge); any other mix
+      // runs mergeInto (the target never shuffles), and merge_mode=mor one
+      // O(source) mergeIntoMor commit.
+      val m = parseAs[MergeIntoTable](text, "MERGE")
+      val (name, alias) = targetOf(m.targetTable)
+      val st = snapshotStore(name, "INSERT")
+      val (srcPlan, srcAlias) = m.sourceTable match {
+        case SubqueryAlias(a, p) => (p, Some(a.name))
+        case p => (p, None)
       }
-      // clause expressions: target columns by plain name, source columns as
-      // __src_<name> (the SnapshotTable.mergeInto convention). Rewrites run
-      // OUTSIDE string literals only — a literal like 't.co/xyz' must never
-      // lose its alias-shaped prefix.
-      def rewriteRefs(e: String): String = mapOutsideLiterals(e) { seg =>
-        var out = seg
-        sourceNames.foreach(a => out = out.replaceAll(
-          "(?i)\\b" + java.util.regex.Pattern.quote(a) + "\\.(\\w+)", "__src_$1"))
-        targetNames.foreach(a => out = out.replaceAll(
-          "(?i)\\b" + java.util.regex.Pattern.quote(a) + "\\.(\\w+)", "$1"))
-        out
-      }
-      val clauseTexts = clauseStarts.zip(clauseStarts.tail :+ afterOn.length)
-        .map { case (a, b) => afterOn.substring(a, b).trim }
-      val cRe = ("(?is)^WHEN\\s+(NOT\\s+)?MATCHED(?:\\s+AND\\s+(.+?))?\\s+THEN\\s+" +
-        "(UPDATE\\s+SET\\s+.+|DELETE\\s*|INSERT\\s+.+)$").r
-      sealed trait Clause
-      case class MatchedC(cond: Option[String], set: Option[String]) extends Clause
-      case class NotMatchedC(cond: Option[String], insert: String) extends Clause
-      val parsed: Seq[Clause] = clauseTexts.map { txt =>
-        // split cond/action on the MASKED text so a literal containing
-        // ' THEN ' can't cut the condition; offsets slice the raw text
-        val m = cRe.findFirstMatchIn(maskStringLiterals(txt)).getOrElse(throw unsupported)
-        val cond = Option(m.group(2)).map(_ => txt.substring(m.start(2), m.end(2)).trim)
-        val action = txt.substring(m.start(3), m.end(3)).trim
-        if (m.group(1) == null) { // WHEN MATCHED
-          if (action.toUpperCase.startsWith("UPDATE"))
-            MatchedC(cond, Some("(?is)^UPDATE\\s+SET\\s+".r.replaceFirstIn(action, "").trim))
-          else if (action.toUpperCase.startsWith("DELETE")) MatchedC(cond, None)
-          else throw unsupported
-        } else {
-          if (!action.toUpperCase.startsWith("INSERT")) throw unsupported
-          NotMatchedC(cond, "(?is)^INSERT\\s+".r.replaceFirstIn(action, "").trim)
-        }
-      }
-      // resolve the source only after the statement parses — a garbled MERGE
-      // must fail as a MERGE-form error, not a missing-table analysis error
-      val source =
-        if (srcText.startsWith("("))
-          sqlWithSnapshotReads(srcText.stripPrefix("(").stripSuffix(")"))
-        else spark.conf.getOption(s"graft.snapshot.$srcText") match {
-          // a snapshot-bound table can be a MERGE source by plain name too;
-          // reading it is a SELECT like any other — a user holding only
-          // WRITE on the merge TARGET must not read arbitrary bound datasets
-          // by naming them as the source (mirrors rewriteSnapshotTables)
-          case Some(r) if scala.util.Try(spark.table(srcText)).isFailure =>
-            asUser.foreach(u =>
-              requirePrivilege(u, "SELECT", Nil, datasetPath(srcText)))
-            new graft.sources.SnapshotTable(spark, r).read()
-          case _ => spark.table(srcText)
-        }
-      val wholeRow = parsed == Seq(MatchedC(None, Some("*")), NotMatchedC(None, "*")) ||
-        parsed == Seq(NotMatchedC(None, "*"), MatchedC(None, Some("*")))
-      // merge-on-read mode (Iceberg write.merge.mode=merge-on-read): ONE
-      // O(source) commit of updated copies + equality-delete keys + inserts
-      // instead of a copy-on-write table rewrite
-      val morMode = spark.conf
-        .getOption(s"graft.snapshot.${hm.group(1)}.merge_mode").contains("mor")
-      if (wholeRow && !morMode) st.merge(source, key)
-      else {
-        val matched = parsed.collect { case MatchedC(cond, set) =>
-          val assigns = set.map { s0 =>
+      val srcName = Some(srcPlan).collect { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") }
+      require(srcAlias.nonEmpty || srcName.nonEmpty, "MERGE USING (sub-select) needs an alias")
+      val tNames = targetNames(name, alias)
+      val sNames = (srcAlias.toSeq ++ srcName).map(_.toLowerCase)
+      require(tNames.intersect(sNames).isEmpty,
+        s"MERGE target and source aliases collide: ${tNames.intersect(sNames).mkString(",")}")
+      require(m.notMatchedBySourceActions.isEmpty, "MERGE clause WHEN NOT MATCHED " +
+        "BY SOURCE is unsupported: the store reads only target rows a source key matches")
+      require(!m.withSchemaEvolution, "MERGE WITH SCHEMA EVOLUTION is unsupported")
+      val key = mergeKey(m.mergeCondition, tNames, sNames)
+      // clause expressions see target columns by plain name and source
+      // columns as __src_<name> (the SnapshotTable.mergeInto convention)
+      def bind(e: Expression): Column = column(e, tNames, sNames)
+      val source = PlanBridge.ofRows(spark, bindSnapshotReads(srcPlan))
+      val morMode = mode(name, "merge") == "mor"
+      (m.matchedActions, m.notMatchedActions) match {
+        case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None))) if !morMode =>
+          st.merge(source, key)
+        case (matchedActions, notMatchedActions) =>
+          val matched = matchedActions.map {
             // SET * in a clause mix = assign every source column by name
-            if (s0 == "*") source.columns.filterNot(_ == key).toSeq
-              .map(c => c -> expr(s"__src_$c")).toMap
-            else topLevelSplit(s0).map { a =>
-              val eq = a.indexOf('=')
-              require(eq > 0, s"MERGE assignment not of form col = expr: $a")
-              rewriteRefs(a.substring(0, eq).trim) -> expr(rewriteRefs(a.substring(eq + 1).trim))
-            }.toMap
+            case UpdateStarAction(c) => (c.map(bind), Some(source.columns.filterNot(_ == key)
+              .toSeq.map(c => c -> expr(s"__src_$c")).toMap))
+            case UpdateAction(c, set, _) => (c.map(bind), Some(set.map(a =>
+              assigned(a.key, tNames, "MERGE UPDATE") -> bind(a.value)).toMap))
+            case DeleteAction(c) => (c.map(bind), None)
+            case other => throw new IllegalArgumentException(s"unsupported MERGE action: $other")
           }
-          (cond.map(c => expr(rewriteRefs(c))), assigns)
-        }
-        val notMatched = parsed.collect { case NotMatchedC(cond, ins) =>
-          val values: Option[Map[String, Column]] =
-            if (ins == "*") None
-            else {
-              val im = ("(?is)^\\(([^)]*)\\)\\s*VALUES\\s*\\((.*)\\)\\s*$").r
-                .findFirstMatchIn(ins).getOrElse(throw unsupported)
-              val cols = im.group(1).split(",").map(c => rewriteRefs(c.trim)).toSeq
-              val vals = topLevelSplit(im.group(2))
-              require(cols.length == vals.length,
-                s"INSERT (${cols.length} columns) VALUES (${vals.length} expressions)")
-              Some(cols.zip(vals.map(v => expr(rewriteRefs(v)))).toMap)
-            }
-          (cond.map(c => expr(rewriteRefs(c))), values)
-        }
-        if (morMode) st.mergeIntoMor(source, key, matched, notMatched)
-        else st.mergeInto(source, key, matched, notMatched)
+          val notMatched = notMatchedActions.map {
+            case InsertStarAction(c) => (c.map(bind), None)
+            case InsertAction(c, set) => (c.map(bind), Some(set.map(a =>
+              assigned(a.key, tNames, "MERGE INSERT") -> bind(a.value)).toMap))
+            case other => throw new IllegalArgumentException(s"unsupported MERGE action: $other")
+          }
+          if (morMode) st.mergeIntoMor(source, key, matched, notMatched)
+          else st.mergeInto(source, key, matched, notMatched)
       }
       None
     } else if (upper.startsWith("ROLLBACK TABLE ")) {
@@ -683,63 +498,9 @@ final class SqlScriptRunner(spark: SparkSession,
             java.sql.Timestamp.valueOf(m.group(3).trim).getTime)
       }
       None
-    } else if ("(?is)^ALTER\\s+TABLE\\s+[\\w.]+\\s+((ADD|DROP|RENAME)\\s+COLUMN|ALTER\\s+COLUMN)\\b".r
-        .findFirstIn(masked.trim).isDefined && {
-        "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)".r.findFirstMatchIn(stmt.trim)
-          .exists(n => spark.conf.getOption(s"graft.snapshot.${n.group(1)}").isDefined)
-      }) {
-      // Schema-evolution DDL on a snapshot-bound table (the Iceberg ALTER
-      // TABLE surface — BASELINE's "reads, writes, schema evolution, and
-      // time-travel" north star): METADATA-ONLY commits, no data rewritten
-      // at any table size; versions before the change keep their original
-      // schema (time travel returns what the table looked like).
-      //   ALTER TABLE t ADD COLUMN c type
-      //   ALTER TABLE t DROP COLUMN c
-      //   ALTER TABLE t RENAME COLUMN a TO b
-      //   ALTER TABLE t ALTER COLUMN c TYPE type   -- widening only
-      // Column names may be DOTTED paths into struct columns (Iceberg's
-      // nested evolution, r19 adds + r20 rename/drop/widen): `nest.b`
-      // routes to the nested evolve ops.
-      // Unbound tables fall through to Spark's own ALTER TABLE.
-      val body = stmt.trim.stripSuffix(";")
-      val pAdd = "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)\\s+ADD\\s+COLUMN\\s+([\\w.]+)\\s+(.+)$".r
-      val pDrop = "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)\\s+DROP\\s+COLUMN\\s+([\\w.]+)\\s*$".r
-      val pRen = "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)\\s+RENAME\\s+COLUMN\\s+([\\w.]+)\\s+TO\\s+(\\w+)\\s*$".r
-      val pWiden = "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)\\s+ALTER\\s+COLUMN\\s+([\\w.]+)\\s+(?:SET\\s+DATA\\s+)?TYPE\\s+(.+)$".r
-      def split(c: String): Option[(String, String)] = {
-        val i = c.indexOf('.')
-        if (i < 0) None else Some((c.substring(0, i), c.substring(i + 1)))
-      }
-      body match {
-        case pAdd(t, c, ty) => split(c) match {
-          case Some((p, rest)) =>
-            snapshotStore(t, "ALTER").addNestedColumn(p, rest, ty.trim)
-          case None => snapshotStore(t, "ALTER").addColumn(c, ty.trim)
-        }
-        case pDrop(t, c) => split(c) match {
-          case Some((p, rest)) =>
-            snapshotStore(t, "ALTER").dropNestedColumn(p, rest)
-          case None => snapshotStore(t, "ALTER").dropColumn(c)
-        }
-        case pRen(t, a, b) => split(a) match {
-          case Some((p, rest)) =>
-            snapshotStore(t, "ALTER").renameNestedColumn(p, rest, b)
-          case None => snapshotStore(t, "ALTER").renameColumn(a, b)
-        }
-        case pWiden(t, c, ty) => split(c) match {
-          case Some((p, rest)) =>
-            snapshotStore(t, "ALTER").alterNestedColumnType(p, rest, ty.trim)
-          case None => snapshotStore(t, "ALTER").alterColumnType(c, ty.trim)
-        }
-        case _ => throw new IllegalArgumentException(
-          "expected: ALTER TABLE t ADD COLUMN c type | DROP COLUMN c | " +
-            "RENAME COLUMN a TO b | ALTER COLUMN c TYPE type " +
-            "(column may be a dotted struct path)")
-      }
-      None
     } else if (("(?is)^ALTER\\s+TABLE\\s+[\\w.]+\\s+" +
         "(CREATE|REPLACE|DROP|FAST\\s+FORWARD)\\s+(BRANCH|TAG)\\b").r
-        .findFirstIn(masked.trim).isDefined) {
+        .findFirstIn(stmt.trim).isDefined) {
       // Branch/tag DDL on a snapshot-bound table, in Apache Iceberg's Spark
       // SQL extension syntax (public: iceberg branching DDL):
       //   ALTER TABLE t CREATE BRANCH b [AS OF VERSION v]
@@ -781,10 +542,7 @@ final class SqlScriptRunner(spark: SparkSession,
       }
       None
     } else if ("(?is)^ALTER\\s+TABLE\\s+[\\w.]+\\s+WRITE\\s+(ORDERED\\s+BY|UNORDERED)\\b".r
-        .findFirstIn(masked.trim).isDefined && {
-        "(?is)^ALTER\\s+TABLE\\s+([\\w.]+)".r.findFirstMatchIn(stmt.trim)
-          .exists(n => spark.conf.getOption(s"graft.snapshot.${n.group(1)}").isDefined)
-      }) {
+        .findFirstIn(stmt.trim).isDefined && target.exists(isBound)) {
       // Write sort-order DDL on a SNAPSHOT-BOUND table (Apache Iceberg's
       // public Spark SQL extension syntax; unbound tables fall through to
       // Spark, where a real Iceberg catalog handles the same statement):
@@ -857,85 +615,92 @@ final class SqlScriptRunner(spark: SparkSession,
             "[INTO n FILES] | WRITE UNORDERED")
       }
       None
-    } else if (upper.startsWith("DELETE FROM ") && !hasTopLevelWhere) {
-      // repeatable-run truncate (logistics_AI.sql:60). A SNAPSHOT-BOUND
-      // table truncates as an empty overwrite snapshot (history preserved;
-      // the catalog drop+recreate below would miss — or desync — the
-      // snapshot store); `AT BRANCH b` truncates the branch's head only.
-      // Catalog tables: Spark's FileTable doesn't advertise the v2 TRUNCATE
-      // capability, so truncate = drop + recreate with the saved schema —
-      // same observable state for the script's managed tables.
-      val tm = "(?is)DELETE\\s+FROM\\s+([\\w.]+)(?:\\s+AT\\s+BRANCH\\s+(\\w+))?".r
-        .findFirstMatchIn(masked).get
-      val table = stmt.substring(tm.start(1), tm.end(1))
-      if (spark.conf.getOption(s"graft.snapshot.$table").isDefined) {
-        val st = snapshotStore(table, "DELETE")
-        Option(tm.group(2)).map(_ => stmt.substring(tm.start(2), tm.end(2))) match {
-          case Some(b) => st.commitToBranch(b, st.readBranch(b).limit(0), "overwrite")
-          case None    => st.deleteWhere(lit(true))
-        }
-      } else {
-        asUser.foreach(u =>
-          requirePrivilege(u, "DELETE", Seq("WRITE"), datasetPath(table)))
-        val schema = spark.table(table).schema
-        spark.sql(s"DROP TABLE $table")
-        spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING parquet")
+    } else if (upper.startsWith("ALTER TABLE ") && target.exists(isBound)) {
+      // Schema evolution on a bound table (Iceberg's ALTER TABLE surface):
+      // ADD, DROP, RENAME and ALTER COLUMN … TYPE (widening only) are
+      // METADATA-ONLY commits; older versions keep their schema. A dotted
+      // column (`nest.b`) takes the nested evolve op. Other ALTER TABLE forms
+      // take the generic path.
+      lazy val st = snapshotStore(target.get, "ALTER")
+      def onPath[A](path: Seq[String])(top: String => A, nested: (String, String) => A): A =
+        if (path.length == 1) top(path.head) else nested(path.head, path.tail.mkString("."))
+      parseAs[LogicalPlan](text, "ALTER TABLE") match {
+        case AddColumns(_, cols) =>
+          val c = cols.head
+          storeRuns("ADD COLUMN", "more than one column" -> (cols.length > 1),
+            "COMMENT" -> c.comment.isDefined, "FIRST/AFTER" -> c.position.isDefined,
+            "DEFAULT" -> c.default.isDefined, "NOT NULL" -> !c.nullable)
+          val ty = c.dataType.sql
+          onPath(c.path.toSeq.flatMap(_.name) :+ c.colName)(
+            st.addColumn(_, ty), st.addNestedColumn(_, _, ty))
+        case DropColumns(_, cols, ifExists) =>
+          storeRuns("DROP COLUMN", "more than one column" -> (cols.length > 1),
+            "IF EXISTS" -> ifExists)
+          onPath(cols.head.name)(st.dropColumn, st.dropNestedColumn)
+        case RenameColumn(_, from, to) =>
+          onPath(from.name)(st.renameColumn(_, to), st.renameNestedColumn(_, _, to))
+        case AlterColumns(_, specs) =>
+          val s = specs.head
+          storeRuns("ALTER COLUMN", "more than one column" -> (specs.length > 1),
+            "NULL/NOT NULL" -> s.newNullability.isDefined,
+            "COMMENT" -> s.newComment.isDefined, "FIRST/AFTER" -> s.newPosition.isDefined,
+            "DEFAULT" -> (s.newDefaultExpression.isDefined || s.dropDefault),
+            "a change other than TYPE" -> s.newDataType.isEmpty)
+          val ty = s.newDataType.get.sql
+          onPath(s.column.name)(st.alterColumnType(_, ty), st.alterNestedColumnType(_, _, ty))
+        case _ => return runGeneric(stmt, upper)
       }
       None
-    } else {
-      stmtViews.clear()
-      // graft_* rewrite views are internal: a direct reference in user SQL
-      // would read a snapshot bound under an earlier statement's (possibly
-      // higher) privilege, bypassing the dataset check — deny it outright.
-      asUser.foreach { u =>
-        if ("(?i)\\bgraft_(?:tt|files|meta|snap)_\\d+\\b".r.findFirstIn(stmt).isDefined)
-          throw new Catalog.AccessDeniedException(
-            s"user $u may not reference internal graft_* rewrite views directly")
-      }
-      val rewritten = rewriteSnapshotTables(
-        rewriteMetadataTables(rewriteListFiles(rewriteTimeTravel(stmt))))
-      asUser.foreach(u => enforce(u, upper, rewritten))
-      // Dataset construction analyzes eagerly (temp views inline into the
-      // plan), so the statement's rewrite views can be dropped immediately —
-      // the returned DataFrame stays valid for later actions.
-      val df = spark.sql(rewritten)
-      stmtViews.foreach(spark.catalog.dropTempView)
-      stmtViews.clear()
-      if (upper.startsWith("SELECT") || upper.startsWith("WITH")) {
-        // Feed the scripted surface into the autonomous workload monitor
-        // (when one is attached): aggregate shapes become reflection
-        // candidates and equi-joins become skew-diagnosis candidates, the
-        // same as API-path queries — the reference's monitor watches every
-        // query, not just a favored entry point (readme.md:381-389). A
-        // driver-side plan walk; no data is touched. COST (ADVICE r9):
-        // observe() forces full optimization of every scripted SELECT at
-        // script-run time (it walks queryExecution.optimizedPlan), roughly
-        // doubling driver planning work on this path even when the result
-        // is never consumed — accepted by design: scripted statements are
-        // few and driver-side, and observing at run time (not first action)
-        // is what lets a script's LAST statement benefit from shapes its
-        // EARLIER statements established. Run scripts with advisor = None
-        // to opt out.
-        advisor.foreach(_.observe(df))
-        Some(df)
-      } else None
+    } else runGeneric(stmt, upper)
+  }
+
+  /** Any other statement: Spark SQL after the time-travel, LIST_FILES and
+    * metadata-table rewrites, with bound store names bound. */
+  private def runGeneric(stmt: String, upper: String): Option[DataFrame] = {
+    stmtViews.clear()
+    // graft_* rewrite views are internal: a direct reference in user SQL
+    // would read a snapshot bound under an earlier statement's (possibly
+    // higher) privilege, bypassing the dataset check — deny it outright.
+    asUser.foreach { u =>
+      if ("(?i)\\bgraft_(?:tt|files|meta)_\\d+\\b".r.findFirstIn(stmt).isDefined)
+        throw new Catalog.AccessDeniedException(
+          s"user $u may not reference internal graft_* rewrite views directly")
     }
+    val rewritten = rewriteMetadataTables(rewriteListFiles(rewriteTimeTravel(stmt)))
+    val plan = bindSnapshotReads(spark.sessionState.sqlParser.parsePlan(rewritten))
+    asUser.foreach(u => enforce(u, upper, rewritten, plan))
+    // Dataset construction analyzes eagerly (temp views inline into the
+    // plan), so the statement's rewrite views can be dropped immediately —
+    // the returned DataFrame stays valid for later actions.
+    val df = PlanBridge.ofRows(spark, plan)
+    stmtViews.foreach(spark.catalog.dropTempView)
+    stmtViews.clear()
+    if (upper.startsWith("SELECT") || upper.startsWith("WITH")) {
+      // Feed scripted SELECTs to the workload monitor when one is attached
+      // (readme.md:381-389), like API-path queries. observe() optimizes the
+      // plan at script-run time, roughly doubling driver planning on this
+      // path — accepted so that a script's LAST statement benefits from its
+      // earlier ones' shapes; run with advisor = None to opt out.
+      advisor.foreach(_.observe(df))
+      Some(df)
+    } else None
   }
 
   /** RBAC enforcement for `asUser` mode (reference permissions.sql:1-11):
-    * SELECTs need SELECT on every referenced dataset (folder grants cover
-    * their subtree; PROJECT covers everything); writes need their DML
-    * privilege or the folder-level WRITE. Views declared by this script are
-    * checked by their original dotted path. */
-  private def enforce(user: String, upper: String, sql: String): Unit = {
+    * SELECTs need SELECT on every dataset the parsed plan reads, subqueries
+    * included (folder grants cover their subtree; PROJECT covers
+    * everything); writes need their DML privilege or the folder-level
+    * WRITE. Views declared by this script are checked by their original
+    * dotted path. */
+  private def enforce(user: String, upper: String, sql: String, plan: LogicalPlan): Unit = {
     def target(pattern: String): Option[Seq[String]] =
       pattern.r.findFirstMatchIn(sql).map(m => datasetPath(m.group(1)))
     if (upper.startsWith("SELECT") || upper.startsWith("WITH")) {
-      // Only THIS statement's rewrite artifacts are exempt: time travel
-      // checks SELECT on the ORIGINAL dataset name inside rewriteTimeTravel,
-      // and LIST_FILES targets sources (no dataset path to check). Any other
-      // graft_* reference was already denied pre-rewrite in execute().
-      referencedRelations(sql)
+      // Only THIS statement's rewrite views are exempt (their datasets were
+      // checked at rewrite time; other graft_* names were denied before
+      // it), and bound store names are no relations here: the binder
+      // checked them.
+      referencedRelations(plan)
         .map(ds => if (ds.length == 1) datasetPath(ds.head) else ds)
         .filterNot(ds => ds.length == 1 && stmtViews.contains(ds.head))
         .foreach(ds => requirePrivilege(user, "SELECT", Nil, ds))
@@ -962,20 +727,17 @@ final class SqlScriptRunner(spark: SparkSession,
   private def datasetPath(name: String): Seq[String] =
     viewPathsByFlat.getOrElse(name, name.split("\\.").toSeq)
 
-  /** Dataset names a statement reads, from the PARSED (unresolved) plan —
-    * CTE-local names are excluded. */
-  private def referencedRelations(sql: String): Seq[Seq[String]] = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sql)
-    val cteNames = plan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
-        w.cteRelations.map(_._1.toLowerCase)
-    }.flatten.toSet
-    plan.collect {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-        u.multipartIdentifier
-    }.distinct.filterNot(ds =>
-      ds.length == 1 && cteNames.contains(ds.head.toLowerCase))
+  /** Dataset names a statement reads, from the PARSED (unresolved) plan,
+    * subqueries included — CTE-local names are excluded. */
+  private def referencedRelations(plan: LogicalPlan): Seq[Seq[String]] = {
+    val ctes = cteNames(plan)
+    plan.collectWithSubqueries { case u: UnresolvedRelation => u.multipartIdentifier }
+      .distinct.filterNot(ds => ds.length == 1 && ctes(ds.head.toLowerCase))
   }
+
+  private def cteNames(plan: LogicalPlan): Set[String] = plan.collectWithSubqueries {
+    case w: UnresolvedWith => w.cteRelations.map(_._1.toLowerCase)
+  }.flatten.toSet
 
   /** `ALTER DATASET d CREATE [RAW|AGGREGATE] REFLECTION r USING …` — the
     * reference's acceleration DDL (readme.md:322-326). RAW materializes the
@@ -1081,11 +843,7 @@ final class SqlScriptRunner(spark: SparkSession,
           org.apache.spark.sql.functions.col("length").as("size"),
           org.apache.spark.sql.functions.col("modificationTime").as("mtime"))
           .as("file"))
-      metaViewCount += 1
-      val v = s"graft_files_$metaViewCount"
-      listing.createOrReplaceTempView(v)
-      stmtViews += v
-      java.util.regex.Matcher.quoteReplacement(v)
+      java.util.regex.Matcher.quoteReplacement(statementView("files", listing))
     })
   }
 
@@ -1103,9 +861,8 @@ final class SqlScriptRunner(spark: SparkSession,
     new graft.sources.SnapshotTable(spark, root)
   }
 
-  /** Split a SET list on top-level commas (quote- and paren-aware, with
-    * backslash-escaped quotes skipped), so an assignment expression may
-    * itself contain calls, commas, and quoted strings. */
+  /** Split a WRITE ORDERED BY list on top-level commas (quote- and
+    * paren-aware, with backslash-escaped quotes skipped). */
   private def topLevelSplit(s: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val sb = new StringBuilder
@@ -1186,98 +943,148 @@ final class SqlScriptRunner(spark: SparkSession,
           else throw new IllegalArgumentException(
             s"$name AT BRANCH ${arg.trim}: no such branch")
       }
-      metaViewCount += 1
-      val v = s"graft_tt_$metaViewCount"
-      df.createOrReplaceTempView(v)
-      stmtViews += v
-      sb.append(v)
+      sb.append(statementView("tt", df))
       last = m.end
     }
     sb.append(stmt.substring(last))
     sb.toString
   }
 
-  /** Bind every referenced SNAPSHOT-BOUND table (`graft.snapshot.<name>`
-    * session conf) that doesn't already resolve as a relation, as a
-    * statement-scoped temp view of the store's CURRENT content — so a PLAIN
-    * `SELECT … FROM t WHERE ts >= …` works without an AT clause, and
-    * PRUNES: the bound frame plans over
-    * [[graft.sources.ManifestFileIndex]], so the statement's own WHERE
-    * conjuncts skip data files at physical-planning time. This is the
-    * reference's central performance promise — a day query over a
-    * partitioned table reads one partition NO MATTER WHO ASKS
-    * (clinicdata.sql:38-39, finance_example.sql:14) — previously available
-    * only to callers of the explicit `readWhere` API. Names already served
-    * by a real table/temp view are left alone (callers may bind their own
-    * frames); in `asUser` mode the SELECT privilege is checked against the
-    * original dataset name, like the time-travel rewrite. */
-  private def rewriteSnapshotTables(stmt: String): String = {
-    val refs = scala.util.Try(referencedRelations(stmt)).getOrElse(Nil)
-    refs.foldLeft(stmt) { (sql, parts) =>
-      val dotted = parts.mkString(".")
-      val bound = spark.conf.getOption(s"graft.snapshot.$dotted")
-      if (bound.isEmpty || scala.util.Try(spark.table(dotted)).isSuccess) sql
-      else {
-        asUser.foreach(u => requirePrivilege(u, "SELECT", Nil, datasetPath(dotted)))
-        val st = new graft.sources.SnapshotTable(spark, bound.get)
-        if (!dotted.contains(".")) {
-          // single-part names bind as a temp view UNDER THE NAME ITSELF (it
-          // resolves to nothing, or we wouldn't be here): no textual rewrite
-          // at all, so qualified column refs (`SELECT t.col FROM t`) keep
-          // resolving — a rename-style rewrite would fix the FROM but leave
-          // the qualifier dangling
-          st.read().createOrReplaceTempView(dotted)
-          stmtViews += dotted
-          sql
-        } else {
-          metaViewCount += 1
-          val v = s"graft_snap_$metaViewCount"
-          st.read().createOrReplaceTempView(v)
-          stmtViews += v
-          mapOutsideLiterals(sql)(_.replaceAll(
-            "(?i)(?<![\\w.])" + java.util.regex.Pattern.quote(dotted) + "(?![\\w.])",
-            java.util.regex.Matcher.quoteReplacement(v)))
-        }
-      }
+  /** The one binder of snapshot-bound names: every relation a bound store
+    * answers (`graft.snapshot.<name>`) and no real table, view or CTE
+    * serves, in subqueries too, becomes the store's CURRENT read aliased to
+    * the name. A plain `SELECT … FROM t WHERE …` then reads the store and
+    * PRUNES: the read scans [[graft.sources.ManifestFileIndex]], so the
+    * statement's own WHERE skips data files (clinicdata.sql:38-39). In
+    * `asUser` mode each bound name needs SELECT on its dataset. */
+  private def bindSnapshotReads(plan: LogicalPlan): LogicalPlan = {
+    val ctes = cteNames(plan)
+    val reads = scala.collection.mutable.Map.empty[String, Option[LogicalPlan]]
+    def read(name: String): Option[LogicalPlan] = reads.getOrElseUpdate(name,
+      spark.conf.getOption(s"graft.snapshot.$name")
+        .filter(_ => scala.util.Try(spark.table(name)).isFailure)
+        .map { root =>
+          asUser.foreach(u => requirePrivilege(u, "SELECT", Nil, datasetPath(name)))
+          new graft.sources.SnapshotTable(spark, root).read().queryExecution.analyzed
+        })
+    plan.transformUpWithSubqueries {
+      case r: UnresolvedRelation if !(r.multipartIdentifier.length == 1 &&
+          ctes(r.multipartIdentifier.head.toLowerCase)) =>
+        read(r.multipartIdentifier.mkString("."))
+          .fold[LogicalPlan](r)(SubqueryAlias(r.multipartIdentifier, _))
     }
   }
 
-  /** `spark.sql` with snapshot-bound tables auto-bound (and their
-    * statement-scoped views dropped immediately — Dataset construction
-    * analyzes eagerly, so the returned frame stays valid): the read side of
-    * INSERT bodies and MERGE sources gets the same plain-name resolution
-    * and manifest pruning as scripted SELECTs. */
-  private def sqlWithSnapshotReads(q: String): DataFrame = {
-    val before = stmtViews.toSet
-    val df = spark.sql(rewriteSnapshotTables(q))
-    (stmtViews -- before).foreach { v =>
-      spark.catalog.dropTempView(v); stmtViews -= v
+  private def isBound(name: String): Boolean =
+    spark.conf.getOption(s"graft.snapshot.$name").isDefined
+
+  /** The one rewrite a store statement gets before Spark parses it: a
+    * `DELETE FROM`/`UPDATE`/`INSERT INTO t AT BRANCH b` target loses the
+    * clause, and `SET DATA TYPE` becomes `TYPE` in ALTER TABLE. Returns
+    * (text to parse, target name, branch). */
+  private def normalise(stmt: String): (String, Option[String], Option[String]) =
+    StoreTarget.findFirstMatchIn(stmt) match {
+      case None => (stmt, None, None)
+      case Some(m) if m.group(1).toUpperCase.startsWith("ALTER") =>
+        (SetDataType.replaceAllIn(stmt, "TYPE"), Some(m.group(2)), None)
+      case Some(m) =>
+        val branch = Option(m.group(3))
+        (branch.fold(stmt)(_ => stmt.substring(0, m.end(2)) + stmt.substring(m.end)),
+          Some(m.group(2)), branch)
     }
-    df
+
+  private val StoreTarget = ("(?is)^\\s*(DELETE\\s+FROM|UPDATE|INSERT\\s+INTO|ALTER\\s+TABLE)" +
+    "\\s+([\\w.]+)(?:\\s+AT\\s+BRANCH\\s+(\\w+))?").r
+  private val SetDataType = "(?i)\\bSET\\s+DATA\\s+TYPE\\b".r
+
+  /** Spark's parse of a store statement. A syntax error, or a statement
+    * that parses to another node, is refused naming the statement form. */
+  private def parseAs[T <: LogicalPlan: ClassTag](text: String, form: String): T =
+    try spark.sessionState.sqlParser.parsePlan(text) match {
+      case p: T => p
+      case p => throw new IllegalArgumentException(s"unsupported $form form: ${p.nodeName}")
+    } catch { case e: ParseException =>
+      throw new IllegalArgumentException(s"unsupported $form form: ${e.getMessage}", e)
+    }
+
+  /** The dotted table name a parsed DML/DDL target names, and its alias. */
+  private def targetOf(plan: LogicalPlan): (String, Option[String]) = plan match {
+    case SubqueryAlias(a, child) => (targetOf(child)._1, Some(a.name))
+    case r: UnresolvedRelation => (r.multipartIdentifier.mkString("."), None)
+    case t: UnresolvedTable => (t.multipartIdentifier.mkString("."), None)
+    case other => throw new IllegalArgumentException(
+      s"unsupported DML target ${other.nodeName}: name a snapshot-bound table")
   }
 
-  /** Apply `f` to every NON-LITERAL segment of `s`, leaving single-quoted
-    * literal contents (and their backslash escapes) byte-identical — the
-    * safe way to run textual rewrites over SQL fragments. */
-  private def mapOutsideLiterals(s: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val seg = new StringBuilder
-    var inS = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) {
-        out += c
-        if (c == '\\' && i + 1 < s.length) { out += s.charAt(i + 1); i += 1 }
-        else if (c == '\'') inS = false
-      } else if (c == '\'') {
-        out.append(f(seg.toString)); seg.clear()
-        out += c; inS = true
-      } else seg += c
-      i += 1
+  /** A target's alias, then its (dotted) name, lower-cased. */
+  private def targetNames(name: String, alias: Option[String]): Seq[String] =
+    (alias.toSeq :+ name).map(_.toLowerCase)
+
+  /** `e` as a Column, with a column qualified by one of the `target` names
+    * made plain and one qualified by a `source` name renamed
+    * `__src_<name>` (the SnapshotTable.mergeInto convention). */
+  private def column(e: Expression, target: Seq[String],
+                     source: Seq[String] = Nil): Column =
+    ColumnBridge.column(unqualify(e, target, source))
+
+  private def unqualify(e: Expression, target: Seq[String],
+                        source: Seq[String] = Nil): Expression =
+    e.transformUp { case a: UnresolvedAttribute =>
+      def rest(names: Seq[String]): Option[Seq[String]] = names.map(_.split('.').toSeq)
+        .find(q => a.nameParts.length > q.length &&
+          a.nameParts.take(q.length).map(_.toLowerCase) == q)
+        .map(q => a.nameParts.drop(q.length))
+      rest(source).map(p => UnresolvedAttribute(s"__src_${p.head}" +: p.tail))
+        .orElse(rest(target).map(UnresolvedAttribute(_)))
+        .getOrElse(a)
     }
-    out.append(f(seg.toString))
-    out.toString
+
+  /** The column an UPDATE or MERGE assignment writes: a plain or
+    * target-qualified top-level name. */
+  private def assigned(key: Expression, target: Seq[String], form: String): String =
+    unqualify(key, target) match {
+      case UnresolvedAttribute(Seq(c)) => c
+      case other => throw new IllegalArgumentException(
+        s"$form assigns ${other.sql}: only a top-level column of the target can be assigned")
+    }
+
+  /** The merge key of a MERGE's ON clause: exactly ONE equality of the same
+    * column name on both sides, qualified by the target's and the source's
+    * names (either order). */
+  private def mergeKey(on: Expression, target: Seq[String], source: Seq[String]): String =
+    on match {
+      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute)
+          if a.nameParts.length > 1 && b.nameParts.length > 1 &&
+            a.nameParts.last.equalsIgnoreCase(b.nameParts.last) =>
+        def qualifier(x: UnresolvedAttribute) = x.nameParts.init.mkString(".").toLowerCase
+        val (qa, qb) = (qualifier(a), qualifier(b))
+        require((target.contains(qa) && source.contains(qb)) ||
+          (target.contains(qb) && source.contains(qa)),
+          s"MERGE ON qualifiers must be the target and source aliases " +
+            s"(${target.head}, ${source.headOption.getOrElse("?")}): ${on.sql}")
+        (if (target.contains(qa)) a else b).nameParts.last
+      case _ => throw new IllegalArgumentException(
+        s"MERGE ON clause must be t.<key> = s.<key>: ${on.sql}")
+    }
+
+  /** A bound table's declared `<kind>_mode` (cow when unset). */
+  private def mode(name: String, kind: String): String =
+    spark.conf.getOption(s"graft.snapshot.$name.${kind}_mode").getOrElse("cow")
+
+  /** A merge-on-read store's declared equality-delete key; a comma-separated
+    * key is COMPOSITE (Iceberg equality deletes span identifier fields). */
+  private def keyOf(name: String, op: String): Seq[String] =
+    spark.conf.getOption(s"graft.snapshot.$name.key").getOrElse(
+      throw new IllegalArgumentException(s"$op (merge-on-read) on $name: " +
+        s"set graft.snapshot.$name.key to the equality-delete key"))
+      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** Refuses the Spark column-DDL clauses an evolve commit cannot record. */
+  private def storeRuns(ddl: String, clauses: (String, Boolean)*): Unit = {
+    val unsupported = clauses.collect { case (c, true) => c }
+    require(unsupported.isEmpty, s"ALTER TABLE … $ddl on a snapshot-bound " +
+      s"table: ${unsupported.mkString(", ")} unsupported — the store records " +
+      "one column's name and type per statement")
   }
 
   /** Length-preserving mask of single-quoted literal CONTENTS (quote chars
@@ -1348,11 +1155,7 @@ final class SqlScriptRunner(spark: SparkSession,
           st.changes(refArg(2, 3), refArg(4, 5), keys)
         case None => st.changes(refArg(2, 3), refArg(4, 5))
       }
-      metaViewCount += 1
-      val v = s"graft_meta_$metaViewCount"
-      df.createOrReplaceTempView(v)
-      stmtViews += v
-      java.util.regex.Matcher.quoteReplacement(v)
+      java.util.regex.Matcher.quoteReplacement(statementView("meta", df))
     })
     val p = ("(?is)TABLE\\s*\\(\\s*(table_snapshot|table_history|table_files" +
       "|table_refs|table_partitions)\\s*\\(\\s*'([^']+)'\\s*\\)\\s*\\)").r
@@ -1373,11 +1176,7 @@ final class SqlScriptRunner(spark: SparkSession,
         case _ =>
           graft.sources.MetadataFunctions.tableHistory(spark, m.group(2))
       }
-      metaViewCount += 1
-      val v = s"graft_meta_$metaViewCount"
-      df.createOrReplaceTempView(v)
-      stmtViews += v
-      java.util.regex.Matcher.quoteReplacement(v)
+      java.util.regex.Matcher.quoteReplacement(statementView("meta", df))
     })
   }
 

@@ -217,8 +217,6 @@ final class Materializations(spark: SparkSession, warehouseDir: Option[String] =
   private def classic(df: DataFrame): org.apache.spark.sql.classic.Dataset[_] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
 
-  def refreshAll(): Unit = synchronized(entries.keys.foreach(refresh))
-
   /** Serve the materialization when fresh; fall back to the live definition
     * (a query against a reflection-less dataset still answers correctly —
     * the reference's "autonomous" behavior, readme.md:381-389). */

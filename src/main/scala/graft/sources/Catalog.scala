@@ -174,7 +174,6 @@ object Catalog {
     parseGrant(statement).foreach(parsedGrants += _)
   }
   def recordedGrants: Seq[String] = synchronized(grants.toSeq)
-  def structuredGrants: Seq[Grant] = synchronized(parsedGrants.toSeq)
 
   /** One parsed GRANT: privileges on a scope (PROJECT = everything; FOLDER =
     * the namespace subtree; TABLE/VIEW/PDS/VDS = one dataset) to a grantee. */
@@ -219,12 +218,6 @@ object Catalog {
       parsedGrants.exists(g =>
         g.grantee.equalsIgnoreCase(user) && g.covers(privilege, dataset))
     }
-
-  /** Throw unless authorized — the enforcement hook for `asUser` mode. */
-  def requireAuthorized(user: String, privilege: String, dataset: Seq[String]): Unit =
-    if (!authorized(user, privilege, dataset))
-      throw new AccessDeniedException(
-        s"user $user lacks $privilege on ${dataset.mkString(".")}")
 
   /** X2 — `OPTIMIZE TABLE t` (Dremio's manual table-optimization surface;
     * readme.md:393-401 describes the managed version: "file compaction

@@ -40,8 +40,6 @@ object SemanticLayer {
     labelStore(path) = (labelStore.getOrElse(path, Nil) ++ ls).distinct
   }
 
-  def labelsOf(path: String): Seq[String] = synchronized(labelStore.getOrElse(path, Nil))
-
   def clear(): Unit = synchronized { wikis.clear(); labelStore.clear() }
 
   /** lower-cased a-z0-9 word tokens of a column, empty strings dropped. */

@@ -2886,11 +2886,34 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * applies only where `pred` holds; all other rows pass through. */
   def update(pred: Column, set: Map[String, Column]): Long = {
     val head = currentVersion
-    val updated = set.foldLeft(read()) { case (df, (c, expr)) =>
-      df.withColumn(c, when(pred, expr).otherwise(col(c)))
+    val base = read()
+    val updated = onFields(base.schema, set, "UPDATE").foldLeft(base) {
+      case (df, (c, expr)) => df.withColumn(c, when(pred, expr).otherwise(col(c)))
     }
     commit(updated, op = "update", Some(head))
   }
+
+  /** `set` keyed by the schema's own names for the columns it assigns,
+    * matched through the session's resolver (Spark's case rule). A name
+    * no column answers is an error: an assignment never adds a column
+    * (that is ALTER TABLE … ADD COLUMN) and never vanishes unapplied. */
+  private[graft] def onFields(schema: StructType, set: Map[String, Column],
+      op: String): Map[String, Column] = {
+    val resolver = spark.sessionState.conf.resolver
+    val named = set.toSeq.map { case (c, e) =>
+      schema.fieldNames.find(resolver(_, c)).getOrElse(throw new IllegalArgumentException(
+        s"$op: no column $c in $root (columns: ${schema.fieldNames.mkString(", ")})")) -> e
+    }
+    require(named.map(_._1).distinct.size == named.size,
+      s"$op assigns a column twice: ${set.keys.mkString(", ")}")
+    named.toMap
+  }
+
+  /** MERGE clauses with their assignments keyed by [[onFields]]. */
+  private def clausesOn(schema: StructType,
+      clauses: Seq[(Option[Column], Option[Map[String, Column]])],
+      op: String): Seq[(Option[Column], Option[Map[String, Column]])] =
+    clauses.map { case (cond, set) => (cond, set.map(onFields(schema, _, op))) }
 
   /** UPDATE … SET …, merge-on-read (Iceberg's write.update.mode =
     * merge-on-read): ONE commit whose data files are the UPDATED copies of
@@ -2916,9 +2939,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       s"merge-on-read UPDATE cannot reassign the key column ${clash.getOrElse("")}; " +
         "use the copy-on-write mode (or DELETE + INSERT) to change identifiers")
     transact(OnMain()) { (_, _, next) =>
-      val updated = set.foldLeft(read().filter(pred <=> lit(true))) {
-        case (df, (c, e)) => df.withColumn(c, e)
-      }
+      val base = read()
+      val updated = onFields(base.schema, set, "UPDATE")
+        .foldLeft(base.filter(pred <=> lit(true))) { case (df, (c, e)) => df.withColumn(c, e) }
       writeDataDir(updated, next)
       // the delete keys come from the just-written REPLACEMENT files — a
       // delta-sized read, not a second predicate pass over the table
@@ -2989,21 +3012,23 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       matched: Seq[(Option[Column], Option[Map[String, Column]])],
       notMatched: Seq[(Option[Column], Option[Map[String, Column]])]): DataFrame = {
     val target = read()
+    val mClauses = clausesOn(target.schema, matched, "MERGE UPDATE")
+    val iClauses = clausesOn(target.schema, notMatched, "MERGE INSERT")
     val src = source.select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
     val joined = target.join(src, col(keyCol) === col(s"__src_$keyCol"), "left_outer")
     val isMatched = col(s"__src_$keyCol").isNotNull
     // first-match-wins clause index; -1 = no clause applies → row unchanged
-    val clauseIdx = matched.zipWithIndex.foldLeft(when(!isMatched, lit(-1))) {
+    val clauseIdx = mClauses.zipWithIndex.foldLeft(when(!isMatched, lit(-1))) {
       case (acc, ((cond, _), i)) =>
         acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
     }.otherwise(lit(-1))
     val withIdx = joined.withColumn("__mclause", clauseIdx)
-    val deleteIdx = matched.zipWithIndex.collect { case ((_, None), i) => i }
+    val deleteIdx = mClauses.zipWithIndex.collect { case ((_, None), i) => i }
     val kept =
       if (deleteIdx.isEmpty) withIdx
       else withIdx.filter(!col("__mclause").isin(deleteIdx: _*))
     val outCols = target.columns.toSeq.map { c =>
-      val upd = matched.zipWithIndex.collect {
+      val upd = mClauses.zipWithIndex.collect {
         case ((_, Some(set)), i) if set.contains(c) => (i, set(c))
       }
       upd.foldLeft(col(c): Column) { case (acc, (i, e)) =>
@@ -3017,14 +3042,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .join(broadcast(srcKeys), Seq(keyCol), "left_semi").distinct()
     val unmatchedSrc = src.join(broadcast(matchedKeys),
       col(s"__src_$keyCol") === col(keyCol), "left_anti")
-    val insIdx = notMatched.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
+    val insIdx = iClauses.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
       case (acc, ((cond, _), i)) =>
         acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
     }.otherwise(lit(-1))
     val insWithIdx = unmatchedSrc.withColumn("__iclause", insIdx)
       .filter(col("__iclause") >= 0)
     val tSchema = target.schema
-    val insertRows = notMatched.zipWithIndex.map { case ((_, values), i) =>
+    val insertRows = iClauses.zipWithIndex.map { case ((_, values), i) =>
       val sel = tSchema.fields.toSeq.map { f =>
         val e = values match {
           case Some(m) => m.getOrElse(f.name, lit(null))
@@ -3060,6 +3085,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     requireUniqueKeys(source, keyCol)
     val target = resolveVersion(meta, headOrThrow(head), None)
     val tSchema = target.schema
+    val mClauses = clausesOn(tSchema, matched, "MERGE UPDATE")
+    val iClauses = clausesOn(tSchema, notMatched, "MERGE INSERT")
     val src = source.select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
     // matched target rows only — delta-sized via a broadcast semi-join
     val srcKeys = source.select(col(keyCol)).distinct()
@@ -3067,18 +3094,18 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val joined = matchedTarget.join(broadcast(src),
       col(keyCol) === col(s"__src_$keyCol"), "inner")
     // first-match-wins clause index; -1 = unclaimed → stays in the base
-    val clauseIdx = matched.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
+    val clauseIdx = mClauses.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
       case (acc, ((cond, _), i)) =>
         acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
     }.otherwise(lit(-1))
     val claimed = joined.withColumn("__mclause", clauseIdx)
       .filter(col("__mclause") >= 0)
-    val deleteIdx = matched.zipWithIndex.collect { case ((_, None), i) => i }
+    val deleteIdx = mClauses.zipWithIndex.collect { case ((_, None), i) => i }
     val updates =
       if (deleteIdx.isEmpty) claimed
       else claimed.filter(!col("__mclause").isin(deleteIdx: _*))
     val outCols = tSchema.fields.toSeq.map { f =>
-      val upd = matched.zipWithIndex.collect {
+      val upd = mClauses.zipWithIndex.collect {
         case ((_, Some(set)), i) if set.contains(f.name) => (i, set(f.name))
       }
       upd.foldLeft(col(f.name): Column) { case (acc, (i, e)) =>
@@ -3090,13 +3117,13 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val matchedKeys = matchedTarget.select(col(keyCol)).distinct()
     val unmatchedSrc = src.join(broadcast(matchedKeys),
       col(s"__src_$keyCol") === col(keyCol), "left_anti")
-    val insIdx = notMatched.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
+    val insIdx = iClauses.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
       case (acc, ((cond, _), i)) =>
         acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
     }.otherwise(lit(-1))
     val insWithIdx = unmatchedSrc.withColumn("__iclause", insIdx)
       .filter(col("__iclause") >= 0)
-    val insertRows = notMatched.zipWithIndex.map { case ((_, values), i) =>
+    val insertRows = iClauses.zipWithIndex.map { case ((_, values), i) =>
       val sel = tSchema.fields.toSeq.map { f =>
         val e = values match {
           case Some(m) => m.getOrElse(f.name, lit(null))

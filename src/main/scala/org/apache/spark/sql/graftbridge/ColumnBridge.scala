@@ -4,7 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The door between [[Column]] and Catalyst [[Expression]] for graft's
-  * native kernels (`graft.functions`). `classic.ExpressionUtils` is
+  * native kernels (`graft.functions`) and for the clause expressions of
+  * SQL statements Spark's parser read (`graft.pipeline`).
+  * `classic.ExpressionUtils` is
   * `private[sql]`, so the conversion lives in this package, like
   * [[PlanBridge]].
   *

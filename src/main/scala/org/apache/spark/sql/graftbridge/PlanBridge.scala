@@ -13,8 +13,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * library (Delta Lake, Iceberg's Spark runtime) opens the same way: a helper
   * object inside the `org.apache.spark.sql` package hierarchy.
   *
-  * Nothing else may import this from outside `graft.plans` and
-  * `graft.streaming`.
+  * `graft.pipeline` opens it for the other direction: a statement Spark's
+  * parser read, with snapshot-bound names bound to their stores, becomes
+  * the frame a script statement returns.
+  *
+  * Nothing else may import this from outside `graft.plans`,
+  * `graft.streaming` and `graft.pipeline`.
   */
 object PlanBridge {
 

@@ -18,9 +18,15 @@ class ReferenceScriptsSpec extends SparkSpec {
 
   private val dir = new java.io.File("/root/reference/industry-examples")
 
+  /** The scripts directory; a test without it fails naming it. */
+  private def scripts: java.io.File = {
+    assert(dir.isDirectory, s"the reference scripts directory $dir is absent")
+    dir
+  }
+
   private def scriptText(name: String): String =
     new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, name).toPath), "UTF-8")
+      new java.io.File(scripts, name).toPath), "UTF-8")
 
   private def dropTempViews(): Unit =
     spark.catalog.listTables().collect()
@@ -28,7 +34,7 @@ class ReferenceScriptsSpec extends SparkSpec {
       .foreach(spark.catalog.dropTempView(_))
 
   test("all 16 reference scripts run statement-for-statement; every view evaluates") {
-    val files = dir.listFiles().filter(_.getName.endsWith(".sql")).sortBy(_.getName)
+    val files = scripts.listFiles().filter(_.getName.endsWith(".sql")).sortBy(_.getName)
     assert(files.length === 16)
     var totalStmts = 0
     var totalViews = 0

@@ -608,6 +608,19 @@ class SqlScriptRunnerSpec extends SparkSpec {
     assert(st.history().count() === 3)
   }
 
+  test("asUser SELECT checks the datasets its subqueries read") {
+    import graft.sources.Catalog
+    import spark.implicits._
+    Seq(1L, 2L).toDF("id").createOrReplaceTempView("subq_public")
+    Seq(2L).toDF("id").createOrReplaceTempView("subq_secret")
+    Catalog.grant("GRANT SELECT ON TABLE subq_public TO USER subq_reader")
+    val r = new SqlScriptRunner(spark, asUser = Some("subq_reader"))
+    assert(r.run("SELECT count(*) AS n FROM subq_public").values.head.head.getLong(0) === 2L)
+    val denied = intercept[Catalog.AccessDeniedException](r.run(
+      "SELECT count(*) AS n FROM subq_public WHERE id IN (SELECT id FROM subq_secret)"))
+    assert(denied.getMessage.contains("subq_secret"))
+  }
+
   test("scripted DML in asUser mode requires the write privilege") {
     import graft.sources.{Catalog, SnapshotTable}
     import spark.implicits._
@@ -1000,5 +1013,127 @@ class SqlScriptRunnerSpec extends SparkSpec {
       assert(!e.getMessage.contains("no snapshot store bound"), e.getMessage)
       throw e
     }
+  }
+
+  /** A 3-row bound store `(id, note, n)` in the default cow modes. */
+  private def targetsStore(name: String): graft.sources.SnapshotTable = {
+    import spark.implicits._
+    val root = Files.createTempDirectory(name).toString
+    val st = new graft.sources.SnapshotTable(spark, root)
+    st.commit(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)).toDF("id", "note", "n"))
+    spark.conf.set(s"graft.snapshot.ops.$name", root)
+    st
+  }
+
+  private def rowsOf(st: graft.sources.SnapshotTable): Seq[(Long, String, Long)] = {
+    import spark.implicits._
+    st.read().orderBy("id").as[(Long, String, Long)].collect().toSeq
+  }
+
+  test("UPDATE with a backquoted target assigns the column itself") {
+    val st = targetsStore("upd_quoted")
+    val r = new SqlScriptRunner(spark)
+    r.run("UPDATE ops.upd_quoted SET `note` = 'x' WHERE id = 1")
+    assert(st.read().columns.toSeq === Seq("id", "note", "n"))
+    assert(rowsOf(st) === Seq((1L, "x", 10L), (2L, "b", 20L), (3L, "c", 30L)))
+    // the table stays writable: a later DELETE resolves its columns
+    r.run("DELETE FROM ops.upd_quoted WHERE id = 3")
+    assert(rowsOf(st).map(_._1) === Seq(1L, 2L))
+  }
+
+  test("MERGE UPDATE SET resolves its target column case-insensitively") {
+    val st = targetsStore("merge_case")
+    new SqlScriptRunner(spark).run(
+      """MERGE INTO ops.merge_case t USING (SELECT 2 AS id, 'B' AS note) s
+        |ON t.id = s.id WHEN MATCHED THEN UPDATE SET NOTE = s.note""".stripMargin)
+    assert(rowsOf(st) === Seq((1L, "a", 10L), (2L, "B", 20L), (3L, "c", 30L)))
+  }
+
+  test("MERGE INSERT naming an unknown column is refused, never dropped") {
+    val st = targetsStore("merge_unknown")
+    val e = intercept[IllegalArgumentException](new SqlScriptRunner(spark).run(
+      """MERGE INTO ops.merge_unknown t USING (SELECT 7 AS id, 'n' AS note) s
+        |ON t.id = s.id
+        |WHEN NOT MATCHED THEN INSERT (id, nope) VALUES (s.id, s.note)""".stripMargin))
+    assert(e.getMessage.contains("nope"), e.getMessage)
+    assert(rowsOf(st).map(_._1) === Seq(1L, 2L, 3L))
+  }
+
+  test("MERGE front end: NOT MATCHED BY SOURCE and non-key ON clauses are " +
+      "refused; a parenthesized key equality runs") {
+    val st = targetsStore("merge_edges")
+    val r = new SqlScriptRunner(spark)
+    val eBySource = intercept[IllegalArgumentException](r.run(
+      """MERGE INTO ops.merge_edges t USING (SELECT 1 AS id) s ON t.id = s.id
+        |WHEN MATCHED THEN DELETE
+        |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin))
+    assert(eBySource.getMessage.contains("NOT MATCHED BY SOURCE"), eBySource.getMessage)
+    val eSame = intercept[IllegalArgumentException](r.run(
+      "MERGE INTO ops.merge_edges t USING (SELECT 1 AS id) s ON t.id = t.id " +
+        "WHEN MATCHED THEN DELETE"))
+    assert(eSame.getMessage.contains("qualifiers"), eSame.getMessage)
+    val eNames = intercept[IllegalArgumentException](r.run(
+      "MERGE INTO ops.merge_edges t USING (SELECT 1 AS id, 1 AS b) s ON t.id = s.b " +
+        "WHEN MATCHED THEN DELETE"))
+    assert(eNames.getMessage.contains("t.<key> = s.<key>"), eNames.getMessage)
+    assert(rowsOf(st).map(_._1) === Seq(1L, 2L, 3L))
+    r.run("MERGE INTO ops.merge_edges t USING (SELECT 1 AS id) s ON (t.id = s.id) " +
+      "WHEN MATCHED THEN DELETE")
+    assert(rowsOf(st).map(_._1) === Seq(2L, 3L))
+  }
+
+  test("ALTER COLUMN … SET DATA TYPE widens like ALTER COLUMN … TYPE") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("widen_spelling").toString
+    val st = new graft.sources.SnapshotTable(spark, root)
+    st.commit(Seq((1L, 7)).toDF("id", "c"))
+    spark.conf.set("graft.snapshot.ops.widen_spelling", root)
+    new SqlScriptRunner(spark)
+      .run("ALTER TABLE ops.widen_spelling ALTER COLUMN c SET DATA TYPE bigint")
+    assert(st.read().schema("c").dataType === org.apache.spark.sql.types.LongType)
+    assert(st.read().as[(Long, Long)].collect().toSeq === Seq((1L, 7L)))
+  }
+
+  test("DELETE, UPDATE and INSERT … AT BRANCH write the branch; main never moves") {
+    val st = targetsStore("branch_dml")
+    st.createBranch("b", None)
+    val r = new SqlScriptRunner(spark)
+    val main = rowsOf(st)
+    r.run("DELETE FROM ops.branch_dml AT BRANCH b WHERE id = 1")
+    assert(rowsOf(st) === main)
+    r.run("UPDATE ops.branch_dml AT BRANCH b SET note = upper(note) WHERE n >= 20")
+    assert(rowsOf(st) === main)
+    r.run("INSERT INTO ops.branch_dml AT BRANCH b (id, note, n) VALUES (4, 'd', 40)")
+    assert(rowsOf(st) === main)
+    import spark.implicits._
+    assert(st.readBranch("b").orderBy("id").as[(Long, String, Long)].collect().toSeq ===
+      Seq((2L, "B", 20L), (3L, "C", 30L), (4L, "d", 40L)))
+  }
+
+  test("a sql_merge-shaped MERGE on a merge_mode=mor store is one mor-merge commit") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("sql_merge_shape").toString
+    val st = new graft.sources.SnapshotTable(spark, root)
+    st.commit(Seq.tabulate(20)(i => (i.toLong, i % 3, i * 1.5)).toDF("event_id", "user_id", "value"))
+    spark.conf.set("graft.snapshot.ops.etl_shape", root)
+    spark.conf.set("graft.snapshot.ops.etl_shape.key", "event_id")
+    spark.conf.set("graft.snapshot.ops.etl_shape.delete_mode", "mor")
+    spark.conf.set("graft.snapshot.ops.etl_shape.merge_mode", "mor")
+    // 3 updates of existing keys and 2 new keys, from a temp view by name
+    Seq((1L, 0, -1.0), (5L, 2, -5.0), (9L, 0, -9.0), (100L, 1, 1.0), (101L, 2, 2.0))
+      .toDF("event_id", "user_id", "value").createOrReplaceTempView("etl_shape_src")
+    val r = new SqlScriptRunner(spark)
+    r.run("""MERGE INTO ops.etl_shape t USING etl_shape_src s ON t.event_id = s.event_id
+        WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    val last = st.history().orderBy($"version".desc).limit(1).collect().head
+    assert(last.getString(2) === "mor-merge")
+    assert(last.getLong(3) === 22L)
+    assert(spark.read.parquet(s"$root/v=1").count() === 5) // the delta only
+    assert(st.read().filter($"value" < 0).count() === 3)
+    r.run("DELETE FROM ops.etl_shape WHERE user_id = 2")
+    val del = st.history().orderBy($"version".desc).limit(1).collect().head
+    assert(del.getString(2) === "mor-delete")
+    assert(del.getLong(3) === 7L) // a mor delete logs its equality-delete key count
+    assert(st.read().count() === 15L)
   }
 }
