@@ -52,7 +52,8 @@ import org.json4s.jackson.JsonMethods
   *    field-ids from 1000), and per-file partition TUPLES in the manifest
   *    entries; [[readTable]] with predicates prunes on the tuples before
   *    it prunes on bounds. The FULL transform family is supported with
-  *    the spec's own functions — `identity`, `day`/`month`/`year`/`hour`
+  *    the spec's own functions ([[FilePruning]]'s, which the store lays
+  *    out its hidden partitions with too) — `identity`, `day`/`month`/`year`/`hour`
   *    (epoch-based int tuples), `bucket[N]` (canonical murmur3, seed 0 —
   *    Appendix B, NOT Spark's seed-42 hash), `truncate[W]` — written in
   *    the store's own grammar ("days(ts)", "bucket(8, id)", …), so a
@@ -95,7 +96,7 @@ import org.json4s.jackson.JsonMethods
   * transforms. */
 object IcebergExport {
 
-  import FilePruning.{SpecField, entryOf, parseSpecEntry}
+  import FilePruning.{SpecField, entryOf, parseSpecEntry, partColumn, partResultType}
 
   /** One export's receipt: the snapshot id written, the data files THIS
     * export added, and their row count. */
@@ -520,149 +521,6 @@ object IcebergExport {
       case _ => None
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  // ── partition transforms (spec §"Partition Transforms") ────────────────
-
-  /** Partition tuple type of a spec field (spec transform result types:
-    * day → date; month/year/hour/bucket → int; identity/truncate → the
-    * source type). */
-  private def partResultType(sf: SpecField, srcType: DataType): DataType =
-    sf.transform match {
-      case "identity" => srcType
-      case "day" => DateType
-      case "month" | "year" | "hour" => IntegerType
-      case b if b.startsWith("bucket[") => IntegerType
-      case _ => srcType // truncate[W]
-    }
-
-  /** Canonical 32-bit murmur3 (Austin Appleby's public algorithm), seed 0
-    * — the hash Iceberg's bucket transform REQUIRES (spec Appendix B).
-    * Deliberately NOT Spark's `hash()` (murmur3 seed 42 over Catalyst's
-    * own byte layouts): a foreign Iceberg engine recomputes these bucket
-    * values from the spec, so the exported layout must match it exactly. */
-  private[sources] def murmur3x86(data: Array[Byte]): Int = {
-    val c1 = 0xcc9e2d51; val c2 = 0x1b873593
-    var h = 0
-    val n4 = (data.length / 4) * 4
-    var i = 0
-    while (i < n4) {
-      var k = (data(i) & 0xff) | ((data(i + 1) & 0xff) << 8) |
-        ((data(i + 2) & 0xff) << 16) | ((data(i + 3) & 0xff) << 24)
-      k *= c1; k = Integer.rotateLeft(k, 15); k *= c2
-      h ^= k; h = Integer.rotateLeft(h, 13); h = h * 5 + 0xe6546b64
-      i += 4
-    }
-    var k = 0
-    val tail = data.length & 3
-    if (tail == 3) k ^= (data(n4 + 2) & 0xff) << 16
-    if (tail >= 2) k ^= (data(n4 + 1) & 0xff) << 8
-    if (tail >= 1) {
-      k ^= data(n4) & 0xff
-      k *= c1; k = Integer.rotateLeft(k, 15); k *= c2; h ^= k
-    }
-    h ^= data.length
-    h ^= h >>> 16; h *= 0x85ebca6b; h ^= h >>> 13; h *= 0xc2b2ae35
-    h ^ (h >>> 16)
-  }
-
-  /** Iceberg bucket of a long-domain value (ints/longs as the long value,
-    * dates as epoch days, timestamps as epoch micros — spec Appendix B):
-    * murmur3 of the 8-byte little-endian value, positive mod N. */
-  private[sources] def bucketLong(v: Long, n: Int): Int = {
-    val b = new Array[Byte](8)
-    var x = v; var i = 0
-    while (i < 8) { b(i) = (x & 0xff).toByte; x >>>= 8; i += 1 }
-    (murmur3x86(b) & Int.MaxValue) % n
-  }
-
-  /** Iceberg bucket of a string: murmur3 of its UTF-8 bytes, positive
-    * mod N. */
-  private[sources] def bucketString(s: String, n: Int): Int =
-    (murmur3x86(s.getBytes("UTF-8")) & Int.MaxValue) % n
-
-  /** The derived write-side Column computing a spec field's partition
-    * value from its source column (the hive-layout + manifest-tuple value;
-    * Spark's partitionBy drops it from file contents, so data files keep
-    * the SOURCE column — transform partitioning is hidden, as in the
-    * store). */
-  private def partColumn(sf: SpecField, srcType: DataType): Column = {
-    val c = col(sf.source)
-    def unsupported() = throw new IllegalArgumentException(
-      s"iceberg export: transform ${sf.transform} unsupported over " +
-        s"${srcType.simpleString} column ${sf.source}")
-    // the UTC calendar date of the source: dates are tz-free; timestamps
-    // are instants and the spec's time transforms are UTC — session-tz
-    // to_date/year/month would mis-bucket in non-UTC sessions and then
-    // MIS-PRUNE against evalTransform's UTC epoch math
-    def utcDate: Column = srcType match {
-      case DateType => c
-      case _: TimestampType =>
-        // exact long-domain floor division (decimal, not `/`'s double —
-        // |micros| can exceed 2^53 and a rounded quotient would mis-place
-        // boundary rows vs evalTransform's Math.floorDiv)
-        date_add(to_date(lit("1970-01-01")),
-          ((unix_micros(c) - pmod(unix_micros(c), lit(86400000000L)))
-            .cast(DecimalType(28, 0)) / lit(86400000000L)).cast("int"))
-      case _ => unsupported()
-    }
-    sf.transform match {
-      case "identity" => c
-      case "day" => utcDate
-      case "month" =>
-        ((year(utcDate) - lit(1970)) * lit(12) + month(utcDate) - lit(1))
-          .cast("int")
-      case "year" => (year(utcDate) - lit(1970)).cast("int")
-      case "hour" => srcType match {
-        case _: TimestampType =>
-          // exact floor division of micros (matches evalTransform's
-          // Math.floorDiv) — unix_timestamp truncates toward zero, which
-          // mis-cells pre-1970 fractional-second instants and then
-          // MIS-PRUNES '=' predicates on them
-          ((unix_micros(c) - pmod(unix_micros(c), lit(3600000000L)))
-            .cast(DecimalType(28, 0)) / lit(3600000000L)).cast("int")
-        case _ => unsupported()
-      }
-      case b if b.startsWith("bucket[") =>
-        val n = sf.arg
-        val hashLong = udf((v: java.lang.Long) =>
-          if (v == null) null else Int.box(bucketLong(v, n)))
-        srcType match {
-          case StringType =>
-            val hashBytes = udf((b: Array[Byte]) => if (b == null) null
-              else Int.box((murmur3x86(b) & Int.MaxValue) % n))
-            hashBytes(encode(c, "UTF-8"))
-          case DateType =>
-            hashLong(datediff(c, to_date(lit("1970-01-01"))).cast("long"))
-          case _: TimestampType => hashLong(unix_micros(c))
-          case IntegerType | LongType | ShortType | ByteType =>
-            hashLong(c.cast("long"))
-          case _ => unsupported()
-        }
-      case t if t.startsWith("truncate[") =>
-        val w = sf.arg
-        srcType match {
-          case StringType => substring(c, 1, w)
-          case LongType =>
-            // Java long arithmetic (wraps silently at Long.MinValue, like
-            // Iceberg's TruncateLong) — an ANSI-mode Column subtraction
-            // would THROW on the wrap cell instead
-            val f = udf((v: java.lang.Long) => if (v == null) null
-              else java.lang.Long.valueOf(v - Math.floorMod(v, w.toLong)))
-            f(c)
-          case IntegerType | ShortType | ByteType =>
-            // iceberg surfaces these as int: truncation computes in 32-bit
-            // arithmetic and wraps at Int.MinValue exactly like Iceberg's
-            // TruncateInteger (byte/short values can never overflow int,
-            // so only the int source has a wrap cell)
-            val f = udf((v: java.lang.Long) => if (v == null) null
-              else Int.box(v.toInt - Math.floorMod(v.toInt, w)))
-            f(c.cast("long"))
-          case _ => unsupported()
-        }
-      case other => throw new IllegalArgumentException(
-        s"iceberg export: unsupported transform $other")
-    }
-  }
-
   // ── the spec's Avro record layouts (field-id properties included) ──────
 
   /** manifest_entry schema; the r102 partition record's fields are the
@@ -860,7 +718,7 @@ object IcebergExport {
       extraSummary: Map[String, String] = Map.empty,
       renames: Map[String, String] = Map.empty): Export = {
     val spark = df.sparkSession
-    val specs = partitionBy.map(parseSpecEntry)
+    val specs = partitionBy.map(FilePruning.validateSpecEntry(df.schema, _))
     specs.foreach { sf =>
       require(df.columns.contains(sf.source),
         s"partition source column ${sf.source} not in schema")
@@ -2489,18 +2347,13 @@ object IcebergExport {
   /** The file filter for `conj` over files written under `specs`: each
     * file's binary bounds, null/value counts and partition tuple become a
     * [[FilePruning.FileMetrics]] record, and [[FilePruning.keep]] decides
-    * over the conjuncts with their tuple conjuncts derived — the bucket
-    * cell computed with the spec's own murmur3 (Appendix B). */
+    * over the conjuncts with their tuple conjuncts derived. */
   private def pruner(st: TableState, specs: Seq[SpecField],
       conj: Seq[Expression]): PlannedFile => Boolean = {
     val byName = st.fields.fields.map(f => f.name -> f.dataType).toMap
     val types = FilePruning.typesOf(st.fields) ++ specs.filterNot(_.isIdentity)
       .flatMap(sf => byName.get(sf.source).map(sf.name.toLowerCase -> partResultType(sf, _)))
-    def bucket(l: Literal, ct: DataType, n: Int) = FilePruning.domainValue(l, ct).collect {
-      case s: String => bucketString(s, n)
-      case x: Long => bucketLong(x, n)
-    }
-    val derived = FilePruning.deriveTuples(conj, specs, types, bucket)
+    val derived = FilePruning.deriveTuples(conj, specs, types)
     val ids = st.fieldIds.map { case (n, id) => n.toLowerCase -> id }
     f => {
       // a tuple pins its field (an identity tuple: its source column) to

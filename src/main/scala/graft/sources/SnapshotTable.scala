@@ -42,10 +42,10 @@ object SnapshotTable {
   private final case class OnBranch(name: String) extends Basis
 
   /** What a write op's stage leaves for `transact` to log: the op string,
-    * the logged row count as a function of (log, head) — evaluated on the
-    * log read fresh inside the commit section, `head` being the version the
-    * commit lands on — and a step that must follow the log record (a
-    * branch's ref move, the partition spec file). */
+    * the table's row total after the commit as a function of (log, head) —
+    * evaluated on the log read fresh inside the commit section, `head`
+    * being the version the commit lands on — and a step that must follow
+    * the log record (a branch's ref move, the partition spec file). */
   private final case class Staged(op: String,
       rows: (Seq[Meta], Option[Long]) => Long, afterLog: () => Unit = () => ())
 
@@ -175,7 +175,7 @@ object SnapshotTable {
     * `_graft_format` when the store is created. Readers refuse any other
     * value, so a layout change bumps this instead of keeping a reader for
     * the old layout. */
-  private[sources] val FormatVersion = "1"
+  private[sources] val FormatVersion = "2"
 
   /** Record count from one parquet FOOTER — a metadata read, no data pages
     * opened. The shared helper for every consumer that needs ONLY the
@@ -440,8 +440,9 @@ object SnapshotTable {
   *                                  store holding another value (or none) is
   *                                  refused, never read through a fallback
   *   root/_graft_meta.jsonl         commit log, one `version,ts_ms,op,rows`
-  *                                  line per commit (on scheme'd roots a
-  *                                  cache of `_graft_log/`)
+  *                                  line per commit, `rows` being the
+  *                                  table's row total after it (on scheme'd
+  *                                  roots a cache of `_graft_log/`)
   *   root/_graft_log/v=N.rec        scheme'd roots only: one immutable record
   *                                  per commit, holding its log line — the
   *                                  commit point there
@@ -450,7 +451,10 @@ object SnapshotTable {
   *   root/v=N/…/part-*.parquet      one immutable directory per commit that
   *                                  wrote data (full snapshots, append deltas,
   *                                  delete files, mor replacement rows), hive
-  *                                  `col=value/` dirs under a partition spec
+  *                                  `col=value/` dirs under a partition spec:
+  *                                  identity values, and the Iceberg spec's
+  *                                  tuple for a transform (`graft__month=661`
+  *                                  is February 2025, UTC)
   *   root/v=N/_graft_deletes/       a mor UPDATE/MERGE commit's claimed keys
   *   root/_graft_manifest/v=N.tsv   every `v=N` dir's manifest: a `#schema`
   *                                  first line; `#spec` (the partition spec
@@ -740,12 +744,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   // ── hidden partitioning (Iceberg partition specs; reference
   //    clinicdata.sql:51, finance_example.sql:25, insurance_example.sql:23 —
   //    every workshop table is partitioned). A store-level spec of identity
-  //    columns and/or `days(ts)` transforms lays every version dir out as
-  //    `v=N/<col>=…/part-*.parquet`; the day transform derives a HIDDEN
-  //    `__graft_day` date column (readers never see it — Iceberg's hidden
-  //    partitioning contract), manifests record partition values as per-file
-  //    stats so [[readWhere]] prunes partition files, and Spark's own
-  //    partition discovery gives PartitionFilters pruning on plain reads. ──
+  //    columns and/or transforms lays every version dir out as
+  //    `v=N/<col>=…/part-*.parquet`. Each transform derives a HIDDEN column
+  //    holding the spec's tuple ([[FilePruning.partColumn]]: UTC epoch
+  //    ints for months/years/hours, a UTC date for days, the seed-0
+  //    murmur3 bucket, the truncated value) that readers never see
+  //    (Iceberg's hidden-partitioning contract). Manifests record each
+  //    dir value as a per-file pin, and a time transform's source column
+  //    as the tuple's period, so [[readWhere]] and Spark's own partition
+  //    filters prune partition files with predicates on the source. ──
 
   private val PartitionSpecFile = "_graft_partition"
 
@@ -756,13 +763,23 @@ final class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Hidden columns of the coarser time transforms (Iceberg's full standard
     * set: `months(ts)`/`years(ts)` for archive tables whose day grain would
-    * make too many partitions, `hours(ts)` for high-rate streams). Derived
-    * as `yyyy-MM` / `yyyy` / `yyyy-MM-dd-HH` strings; like the day column,
-    * manifests pin each file's SOURCE timestamp to the period's range, so
-    * predicates stay on the timestamp itself (hidden partitioning). */
+    * make too many partitions, `hours(ts)` for high-rate streams). */
   private[sources] val MonthCol = "graft__month"
   private[sources] val YearCol = "graft__year"
   private[sources] val HourCol = "graft__hour"
+
+  /** Hidden column of the `bucket(N, col)` transform (Iceberg's
+    * high-cardinality layout). */
+  private[sources] val BucketCol = "graft__bucket"
+
+  /** Hidden column of the `truncate(W, col)` transform (width-W value
+    * truncation: an ORDER-PRESERVING clustering, so per-file footer ranges
+    * stay tight and range predicates prune without transform-aware logic). */
+  private[sources] val TruncCol = "graft__trunc"
+
+  /** The hidden column each transform kind derives. */
+  private val hiddenColOf = Map("day" -> DayCol, "month" -> MonthCol,
+    "year" -> YearCol, "hour" -> HourCol, "bucket" -> BucketCol, "truncate" -> TruncCol)
 
   /** Every hidden column a partition transform can derive (the read-path
     * drop list — users never see them). */
@@ -773,16 +790,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * full set a resolved read strips before handing rows to the user. */
   private[sources] def hiddenReadCols: Seq[String] =
     hiddenPartitionCols ++ Seq(FileCol, PosCol)
-
-  /** Hidden column of the `bucket(N, col)` transform (Iceberg's
-    * high-cardinality layout: murmur3 hash mod N). */
-  private[sources] val BucketCol = "graft__bucket"
-
-  /** Hidden column of the `truncate(W, col)` transform (width-W value
-    * truncation: ints floor to multiples of W, strings to W-char prefixes —
-    * an ORDER-PRESERVING clustering, so per-file footer ranges stay tight
-    * and range predicates prune without any transform-aware logic). */
-  private[sources] val TruncCol = "graft__trunc"
 
   /** The store's declared partition spec, e.g.
     * Seq("region", "days(ts)", "bucket(8, doc_id)") — split on TOP-LEVEL
@@ -809,51 +816,22 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     out.toSeq
   }
 
-  /** The store's bucket of literal `l` for a source column of type `ct`:
-    * the write path's own Catalyst expression (Spark `hash`, seed 42, pmod
-    * N) evaluated on the driver, so derivation cannot drift from the files.
-    * Only a literal of the column's declared type derives. */
-  private def storeBucket(l: Expression, ct: DataType, n: Int): Option[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
-    if (l.dataType != ct) None
-    else scala.util.Try(Pmod(new Murmur3Hash(Seq(l)), Literal(n)).eval(null))
-      .toOption.collect { case i: Int => i }
-  }
-
   /** (physical partition columns, hidden transform columns derived) for the
-    * recorded spec: `days(ts)` → `graft__day`, `bucket(N, c)` →
-    * `graft__bucket`, `truncate(W, c)` → `graft__trunc`, identity entries
-    * pass through. Entries whose source column is absent from the frame are
+    * recorded spec: each transform entry derives its hidden column with
+    * the spec's own [[FilePruning.partColumn]], identity entries pass
+    * through. Entries whose source column is absent from the frame are
     * skipped conservatively (schema-evolution windows). */
-  private def applyPartitionSpec(df: DataFrame): (DataFrame, Seq[String]) = {
-    val spec = partitionSpec
-    if (spec.isEmpty) (df, Nil)
-    else {
-      def field(c: String) = df.schema.fields.find(_.name.equalsIgnoreCase(c))
-      def ok(src: String) = field(src).isDefined
-      var out = df
-      def derive(hidden: String, src: String, e: Column): Some[String] = {
-        out = out.withColumn(hidden, e); Some(hidden)
-      }
-      val cols = spec.map(FilePruning.parseSpecEntry).flatMap { sf =>
-        val src = sf.source
-        if (!ok(src)) None
-        else sf.kind match {
-          case "identity" => Some(src)
-          case "day" => derive(DayCol, src, to_date(col(src)))
-          case "month" => derive(MonthCol, src, date_format(col(src), "yyyy-MM"))
-          case "year" => derive(YearCol, src, date_format(col(src), "yyyy"))
-          case "hour" => derive(HourCol, src, date_format(col(src), "yyyy-MM-dd-HH"))
-          case "bucket" => derive(BucketCol, src, pmod(hash(col(src)), lit(sf.arg)))
-          case "truncate" => derive(TruncCol, src, field(src).get.dataType match {
-            case StringType => substring(col(src), 1, sf.arg)
-            case dt => (floor(col(src).cast("double") / sf.arg) * sf.arg).cast(dt)
-          })
+  private def applyPartitionSpec(df: DataFrame): (DataFrame, Seq[String]) =
+    partitionSpec.map(FilePruning.parseSpecEntry).foldLeft((df, Seq.empty[String])) {
+      case ((out, cols), sf) =>
+        df.schema.fields.find(_.name.equalsIgnoreCase(sf.source)) match {
+          case None => (out, cols)
+          case Some(f) if sf.isIdentity => (out, cols :+ f.name)
+          case Some(f) =>
+            val hidden = hiddenColOf(sf.kind)
+            (out.withColumn(hidden, FilePruning.partColumn(sf, f.dataType)), cols :+ hidden)
         }
-      }
-      (out, cols)
     }
-  }
 
   /** Transform-derived pruning conjuncts: key equality (or IN) on a bucket
     * transform's source derives equality on the hidden bucket column, whose
@@ -868,7 +846,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       case None => conj
       case Some(sf) =>
         val derived = FilePruning.deriveTuples(conj, Seq(sf.copy(name = BucketCol)),
-          FilePruning.typesOf(schema), storeBucket)
+          FilePruning.typesOf(schema))
         if (derived == conj || !bucketDerivationSound(sf, windowVersions)) conj
         else derived
     }
@@ -998,91 +976,34 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   /** Per-file stats carried by the file's PARTITION PATH: each `k=v` dir
-    * segment pins column k to the single value v (min = max), in the same
-    * canonical domain [[SnapshotTable.footerColumnStats]] uses; the hidden
-    * day column additionally pins its SOURCE timestamp to the day's micros
-    * range, so a timestamp predicate prunes day-partitioned files even when
-    * the footer carries no usable timestamp stats. Unparseable values just
-    * contribute nothing (pruning stays conservative). */
-  private def partitionPathStats(rel: String,
-      schema: StructType): Map[String, (String, String)] = {
-    // hidden time-transform column → its source column, per the CURRENT
-    // spec (this runs at COMMIT time, so "current" is the spec the file was
-    // just written under — the recorded stats stay correct across later
-    // spec evolution)
-    val hiddenOf = Map("day" -> DayCol, "month" -> MonthCol, "year" -> YearCol,
-      "hour" -> HourCol)
-    val timeSrc: Map[String, String] = partitionSpec.map(FilePruning.parseSpecEntry)
-      .flatMap(sf => hiddenOf.get(sf.kind).map(_ -> sf.source))
-      .distinctBy(_._1).toMap
-    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    def micros(t: java.time.LocalDateTime): Long =
-      t.atZone(zone).toInstant.toEpochMilli * 1000L
-    rel.split('/').dropRight(1).flatMap { seg =>
+    * segment pins column k to the single value v (min = max), decoded as
+    * the read path decodes it ([[partitionValueInternal]]) into the
+    * canonical domain [[SnapshotTable.footerColumnStats]] uses. A hidden
+    * time-transform column (`timeFields`: hidden column → its spec field)
+    * also pins its SOURCE column to the tuple's UTC period
+    * ([[FilePruning.sourceRange]]), so a source predicate prunes time
+    * partitioned files even when the footer carries no usable stats for
+    * it. Unparseable values contribute nothing (pruning stays
+    * conservative). */
+  private def partitionPathStats(rel: String, schema: StructType,
+      timeFields: Map[String, FilePruning.SpecField]): Map[String, (String, String)] = {
+    def field(name: String) = schema.fields.find(_.name.equalsIgnoreCase(name))
+    rel.split('/').dropRight(1).toSeq.flatMap { seg =>
       val i = seg.indexOf('=')
-      if (i <= 0) Nil
-      else {
-        val k = seg.substring(0, i)
-        val raw = ExternalCatalogUtils.unescapePathName(seg.substring(i + 1))
-        if (raw == "__HIVE_DEFAULT_PARTITION__") Nil // null partition value
-        else if (timeSrc.contains(k)) {
-          // the dir value's [start, end) period, as LocalDateTimes in the
-          // SESSION time zone (the derivation ran there)
-          val period = scala.util.Try(k match {
-            case DayCol =>
-              val d = java.time.LocalDate.parse(raw)
-              (d.atStartOfDay, d.plusDays(1).atStartOfDay)
-            case MonthCol =>
-              val m = java.time.YearMonth.parse(raw)
-              (m.atDay(1).atStartOfDay, m.plusMonths(1).atDay(1).atStartOfDay)
-            case YearCol =>
-              val y = java.time.Year.parse(raw)
-              (y.atDay(1).atStartOfDay, y.plusYears(1).atDay(1).atStartOfDay)
-            case HourCol =>
-              val s = java.time.LocalDate.parse(raw.substring(0, 10))
-                .atTime(raw.substring(11).toInt, 0)
-              (s, s.plusHours(1))
-          }).toOption
-          // hidden-col self-pin (day keeps its epochDay domain for manifest
-          // back-compat; the string transforms pin their own dir value)
-          val selfPin =
-            if (k == DayCol) period.map { case (s, _) =>
-              DayCol -> (s.toLocalDate.toEpochDay.toString,
-                s.toLocalDate.toEpochDay.toString)
-            } else Some(k -> (raw, raw))
-          val srcRange = for {
-            (s, e) <- period
-            src <- timeSrc.get(k)
-            f <- schema.fields.find(_.name.equalsIgnoreCase(src))
-            pin <- f.dataType match {
-              case TimestampType =>
-                Some((micros(s).toString, (micros(e) - 1).toString))
-              case DateType =>
-                Some((s.toLocalDate.toEpochDay.toString,
-                  e.toLocalDate.minusDays(1).toEpochDay.toString))
-              case _ => None
-            }
-          } yield f.name -> pin
-          selfPin.toSeq ++ srcRange.toSeq
-        } else schema.fields.find(_.name.equalsIgnoreCase(k)).flatMap { f =>
-          val canon = scala.util.Try(f.dataType match {
-            case StringType => Some(raw)
-            case ByteType | ShortType | IntegerType | LongType =>
-              Some(raw.toLong.toString)
-            case DateType =>
-              Some(java.time.LocalDate.parse(raw).toEpochDay.toString)
-            case TimestampType => // identity-partitioned timestamps prune too
-              org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestamp(
-                org.apache.spark.unsafe.types.UTF8String.fromString(raw), zone)
-                .map(_.toString)
-            case FloatType => Some(raw.toFloat.toString)
-            case DoubleType => Some(raw.toDouble.toString)
-            case BooleanType => Some(raw.toBoolean.toString)
-            case _ => None
-          }).toOption.flatten
-          canon.map(c => f.name -> (c, c))
-        }.toSeq
-      }
+      val raw = ExternalCatalogUtils.unescapePathName(seg.substring(i + 1))
+      if (i <= 0 || raw == "__HIVE_DEFAULT_PARTITION__") Nil // null value
+      else (for {
+        f <- field(seg.substring(0, i))
+        v <- partitionValueInternal(raw, f.dataType)
+      } yield {
+        val pin = v.toString
+        val period = for {
+          sf <- timeFields.get(f.name)
+          src <- field(sf.source)
+          (lo, hi) <- FilePruning.sourceRange(sf, src.dataType, pin.toLong)
+        } yield src.name -> (lo.toString, hi.toString)
+        (f.name -> (pin, pin)) +: period.toSeq
+      }).getOrElse(Nil)
     }.toMap
   }
 
@@ -1656,7 +1577,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * relative, so stats and metadata scans see through the partition dirs). */
   private def writeVersionDir(df: DataFrame, v: Long,
       partitionBy: Seq[String] = Nil, spec: Seq[String] = Nil): Long = {
-    val stats = writeFiles(df, s"$root/v=$v", partitionBy)
+    val stats = writeFiles(df, s"$root/v=$v", partitionBy, spec)
     // the spec in force when these files were WRITTEN rides the manifest
     // (Iceberg's spec-id-per-file): transform-derived pruning conjuncts are
     // only sound against files whose recorded spec matches the derivation
@@ -1674,19 +1595,23 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * name relative to `dir`, footer record count, byte size and column
     * ranges (footer stats win; partition-path values fill in the columns
     * hive layout removed from the files, plus a period range for a time
-    * transform's source column when its own footer stats are unavailable). */
-  private def writeFiles(df: DataFrame, dir: String,
-      partitionBy: Seq[String]): Seq[SnapshotTable.ManifestFile] = {
+    * transform of `spec` on its source column when its own footer stats
+    * are unavailable). */
+  private def writeFiles(df: DataFrame, dir: String, partitionBy: Seq[String],
+      spec: Seq[String] = Nil): Seq[SnapshotTable.ManifestFile] = {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val base = new Path(dir)
+    val timeFields = spec.map(FilePruning.parseSpecEntry)
+      .filter(sf => Set("day", "month", "year", "hour")(sf.kind))
+      .map(sf => hiddenColOf(sf.kind) -> sf).toMap
     SnapshotTable.listVisibleFiles(base.getFileSystem(hconf), base).map {
       case (rel, st) =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
         try SnapshotTable.ManifestFile(rel, reader.getRecordCount, st.getLen,
-          partitionPathStats(rel, df.schema) ++
+          partitionPathStats(rel, df.schema, timeFields) ++
             SnapshotTable.footerColumnStats(reader.getFooter))
         finally reader.close()
     }
@@ -2089,40 +2014,27 @@ final class SnapshotTable(spark: SparkSession, root: String) {
           else written)
     }
 
-  /** Declare the store's partition spec (identity columns and/or one
-    * `days(ts)` transform — the D4/D5 forms the catalog tables support) and
+  /** Declare the store's partition spec (identity columns and/or the
+    * Iceberg transforms [[FilePruning.validateSpecEntry]] admits) and
     * commit `df` under it. The spec persists: every later commit (appends,
     * mor replacement files, streaming micro-batches, compaction) lays its
     * data out in the same hive partition dirs, so partition pruning holds
-    * across the whole chain. Readers never see the hidden day column
-    * (Iceberg's hidden-partitioning contract — predicates stay on the
-    * timestamp itself). */
+    * across the whole chain. Readers never see the hidden transform
+    * columns (Iceberg's hidden-partitioning contract — predicates stay on
+    * the source column itself). */
   def commitPartitioned(df: DataFrame, spec: Seq[String],
       op: String = "overwrite",
       expectedHead: Option[Option[Long]] = None): Long = {
     require(spec.nonEmpty, "commitPartitioned needs at least one spec entry")
-    spec.foreach(e => validateSpecEntry(df.schema, e))
+    spec.foreach(FilePruning.validateSpecEntry(df.schema, _))
     metaWriteString(PartitionSpecFile, spec.mkString(","))
     commit(df, op, expectedHead)
   }
 
-  /** Table row count as of main version `v`, from the commit log alone:
-    * every op records its resulting total except mor-delete (which records
-    * its delete-key count; keys are unique per row by the mode's contract,
-    * so the total is the previous total minus the keys). */
-  private def tableRowsAsOf(meta: Seq[Meta], v: Long): Long = {
-    val entry = meta.find(_._1 == v).getOrElse(
-      throw new IllegalStateException(s"no snapshot v=$v at $root"))
-    if (entry._3 == MorDeleteOp || isPosDelete(entry._3)) {
-      // both delete-file kinds log their delete count; each delete row
-      // removes exactly one table row ((file, pos) is unique per row; mor
-      // keys are unique by the mode's contract)
-      val prev = meta.filter(m => m._1 < v && !isBranchOp(m._3)).lastOption
-        .getOrElse(throw new IllegalStateException(
-          s"delete-file commit v=$v has no preceding main snapshot at $root"))
-      tableRowsAsOf(meta, prev._1) - entry._4
-    } else entry._4
-  }
+  /** Table row count as of version `v`: the total its commit logged. */
+  private def tableRowsAsOf(meta: Seq[Meta], v: Long): Long =
+    meta.find(_._1 == v).getOrElse(
+      throw new IllegalStateException(s"no snapshot v=$v at $root"))._4
 
   /** Read latest, or `VERSION AS OF` when a version is given.
     *
@@ -2517,9 +2429,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     read(Some(v._1))
   }
 
-  /** S3/S4 — snapshot/history metadata as a DataFrame. `row_count` is each
-    * op's own record: resulting table rows for data ops, delete-key count
-    * for mor-deletes. */
+  /** S3/S4 — snapshot/history metadata as a DataFrame. `row_count` is the
+    * table's row total as of each version (a branch commit: the branch's). */
   def history(): DataFrame = {
     import spark.implicits._
     readMeta().toDF("version", "committed_at_ms", "operation", "row_count")
@@ -2782,9 +2693,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
 
   /** DELETE FROM … WHERE, merge-on-read: commits ONLY the distinct matching
     * `keyCol` values (an Iceberg-style equality-delete file; the file's
-    * column names record the key). `rows` in the commit log is the
-    * delete-key count, not a table row count. Keys must identify rows
-    * uniquely for delete semantics to match the copy-on-write form. */
+    * column names record the key). Keys must identify rows uniquely for
+    * delete semantics to match the copy-on-write form. */
   def deleteWhereMor(pred: Column, keyCol: String): Long =
     deleteWhereMor(pred, Seq(keyCol))
 
@@ -2796,7 +2706,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     transact(OnMain()) { (_, _, next) =>
       val n = writeVersionDir(
         read().filter(pred).select(keyCols.map(col): _*).distinct(), next)
-      Staged(MorDeleteOp, (_, _) => n)
+      Staged(MorDeleteOp, (log, h) => headRows(log, h) - n)
     }
   }
 
@@ -2811,10 +2721,10 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
     transact(OnMain()) { (_, _, next) =>
       val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
-      // the logged row delta must be the MATCHED row count, not the key
-      // count: tableRowsAsOf subtracts it, and foreign keys may match zero
-      // rows (replays) or be absent entirely — deleteWhereMor's keys are
-      // head-selected so the two coincide there, not here
+      // the logged total drops by the MATCHED row count, not the key
+      // count: foreign keys may match zero rows (replays) or be absent
+      // entirely — deleteWhereMor's keys are head-selected so the two
+      // coincide there, not here
       val cur = read()
       // null-safe: a foreign delete file may carry NULL key values, and the
       // resolution anti-join (applyChainOp) removes null-keyed rows for them
@@ -2822,7 +2732,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         keyCols.map(c => cur(c) <=> distinctKeys(c)).reduce(_ && _),
         "left_semi").count()
       writeVersionDir(distinctKeys, next)
-      Staged(MorDeleteOp, (_, _) => matched)
+      Staged(MorDeleteOp, (log, h) => headRows(log, h) - matched)
     }
   }
 
@@ -2832,8 +2742,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * form for tables WITHOUT a unique key, including removing some copies
     * of duplicated rows (an equality delete would remove every copy).
     * O(matching rows) like the equality form; readers fold it as one
-    * broadcast anti-join on the provenance pair until compact(). `rows` in
-    * the commit log is the deleted-position count. */
+    * broadcast anti-join on the provenance pair until compact(). */
   def deleteWherePos(pred: Column): Long = transact(OnMain()) { (meta, head, next) =>
     val positions = resolveVersion(meta, headOrThrow(head), None, withPos = true)
       .filter(pred <=> lit(true))
@@ -2841,7 +2750,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .filter(col(FileCol).isNotNull) // rows with no file provenance can't
                                       // be named by a position-delete file
     val n = writeVersionDir(positions, next)
-    Staged(PosDeleteOp, (_, _) => n)
+    Staged(PosDeleteOp, (log, h) => headRows(log, h) - n)
   }
 
   /** Position-delete commit from a MULTISET of row VALUES: removes exactly
@@ -2879,7 +2788,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     if (n != asked) throw new IllegalStateException(
       s"deleteRowsMultiset: $asked copies requested but only $n live " +
         s"copies found at $root — the store has drifted from the source")
-    Staged(tag.fold(PosDeleteOp)(t => s"$PosDeleteOp@$t"), (_, _) => n)
+    Staged(tag.fold(PosDeleteOp)(t => s"$PosDeleteOp@$t"),
+      (log, h) => headRows(log, h) - n)
   }
 
   /** UPDATE … SET col = expr, … WHERE pred (copy-on-write): each assignment
@@ -3148,7 +3058,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val removedN =
       if (keysN == 0) 0L
       else matchedTarget.join(broadcast(keys), Seq(keyCol), "left_semi").count()
-    Staged(MorMergeOp, (log, h) => tableRowsAsOf(log, h.get) - removedN + written)
+    Staged(MorMergeOp, (log, h) => headRows(log, h) - removedN + written)
   }
 
   // ── schema evolution (Iceberg ALTER TABLE … ADD/DROP/RENAME COLUMN) ────
@@ -3324,30 +3234,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     Seq("widen", field.name, typeDdl)
   }
 
-  /** One partition-spec entry validated against a schema: identity columns
-    * must exist; `days()` needs a timestamp/date source; `bucket(N, c)`
-    * needs N > 0; `truncate(W, c)` needs W > 0 and an integral or string
-    * source (the width-truncation domains). */
-  private def validateSpecEntry(schema: StructType, e: String): Unit = {
-    val sf = FilePruning.parseSpecEntry(e)
-    val src = sf.source
-    val f = schema.fields.find(_.name.equalsIgnoreCase(src))
-    require(f.isDefined, s"partition spec entry '$e' names no column $src")
-    val dt = f.get.dataType
-    def need(ok: Boolean, what: String) =
-      require(ok, s"${sf.entry} needs $what, got ${dt.simpleString}")
-    sf.kind match {
-      case "day" | "month" | "year" =>
-        need(dt == TimestampType || dt == DateType, "a timestamp/date column")
-      case "hour" => need(dt == TimestampType, "a timestamp column")
-      case "bucket" => need(sf.arg > 0, "a positive bucket count")
-      case "truncate" => need(sf.arg > 0 && (dt == StringType ||
-        Seq(ByteType, ShortType, IntegerType, LongType).contains(dt)),
-        "a positive width over an integral or string column")
-      case _ =>
-    }
-  }
-
   /** PARTITION SPEC EVOLUTION (Iceberg `ALTER TABLE … ADD/DROP PARTITION
     * FIELD`): re-declare the store's partition spec WITHOUT rewriting any
     * data — Iceberg's signature capability. The change is a metadata-only
@@ -3357,7 +3243,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * merge the mixed layouts per file. Time travel before the change sees
     * the table exactly as it was. An empty `newSpec` drops partitioning. */
   def evolvePartition(newSpec: Seq[String]): Long = evolve({ schema =>
-    newSpec.foreach(e => validateSpecEntry(schema, e))
+    newSpec.foreach(FilePruning.validateSpecEntry(schema, _))
     newSpec.map(FilePruning.parseSpecEntry).filterNot(_.isIdentity)
       .groupBy(_.kind).foreach { case (_, fs) =>
         require(fs.size <= 1,
@@ -3392,12 +3278,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   def rollback(toVersion: Long): Long = transact(Commutes) { (meta, _, _) =>
     val entry = meta.find(_._1 == toVersion).getOrElse(
       throw new IllegalStateException(s"no snapshot v=$toVersion at $root"))
-    if (!isBranchOp(entry._3) && isRestart(entry._3) && !entry._3.startsWith(AsOfOpPrefix))
-      Staged(s"$AliasOpPrefix${dataDirVersion(entry)}:rollback-to-$toVersion",
-        (_, _) => entry._4)
-    else
-      Staged(s"$AsOfOpPrefix$toVersion:rollback-to-$toVersion",
-        (log, _) => tableRowsAsOf(log, toVersion))
+    val op =
+      if (!isBranchOp(entry._3) && isRestart(entry._3) && !entry._3.startsWith(AsOfOpPrefix))
+        s"$AliasOpPrefix${dataDirVersion(entry)}:rollback-to-$toVersion"
+      else s"$AsOfOpPrefix$toVersion:rollback-to-$toVersion"
+    Staged(op, (_, _) => entry._4)
   }
 
   /** Both snapshots aligned for diffing: the before-image re-expressed
@@ -3584,14 +3469,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     // (kept, total) must describe THIS derivation: the unpruned fallbacks
     // report (0, 0) — "no pruning ran" — never a previous operation's stats
     pruneKept = 0L; pruneTotal = 0L
-    // inline the claimed keys as IN conjuncts when the set is small: the
-    // commit log records the delete count for delete files; mor update/merge
-    // key files are delta-sized, and take(bound + 1) answers the size check
-    // and the collect in ONE bounded driver job
+    // inline the claimed keys as IN conjuncts when the set is small: an
+    // equality-delete file's key count is its manifest's record total; mor
+    // update/merge key files are delta-sized, and take(bound + 1) answers
+    // the size check and the collect in ONE bounded driver job
     val keyRows: Array[Row] = op match {
       case o if isPosDelete(o) => Array.empty // (file, pos) pairs derive no ranges
       case MorDeleteOp =>
-        if (entry._4 > 0 && entry._4 <= MaxInlineCdcKeys) keyFrame.collect()
+        val keys = readManifest(v)._2.map(_.records).sum
+        if (keys > 0 && keys <= MaxInlineCdcKeys) keyFrame.collect()
         else Array.empty
       case _ =>
         val taken = keyFrame.take(MaxInlineCdcKeys.toInt + 1)
@@ -3707,7 +3593,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       val moveRef = () => writeRef(branch, "branch", next)
       if (op == DeltaAppendOp)
         Staged(s"$BranchOpPrefix$branch:$DeltaAppendOp:${head.get}",
-          (log, h) => tableRowsAsOf(log, h.get) + written, moveRef)
+          (log, h) => headRows(log, h) + written, moveRef)
       else Staged(s"$BranchOpPrefix$branch:$op", (_, _) => written, moveRef)
     }
   }
@@ -3757,14 +3643,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       throw new IllegalStateException(s"no snapshot v=$head at $root"))
     val isSingleDir = isBranchOp(entry._3) &&
       branchOpParts(entry._3)._2 != DeltaAppendOp
-    if (isSingleDir)
-      Staged(s"$AliasOpPrefix${dataDirVersion(entry)}:publish-$fromBranch",
-        (_, _) => entry._4)
-    else
-      // the head may be a delta chain or a mor commit whose own log entry
-      // records a delta/key count, not the table total — resolve the real
-      // total like rollback() does, or later appends inherit a wrong base
-      Staged(s"$AsOfOpPrefix$head:publish-$fromBranch",
-        (log, _) => tableRowsAsOf(log, head))
+    val op =
+      if (isSingleDir) s"$AliasOpPrefix${dataDirVersion(entry)}:publish-$fromBranch"
+      else s"$AsOfOpPrefix$head:publish-$fromBranch"
+    Staged(op, (_, _) => entry._4)
   }
 }

@@ -1133,7 +1133,7 @@ class SqlScriptRunnerSpec extends SparkSpec {
     r.run("DELETE FROM ops.etl_shape WHERE user_id = 2")
     val del = st.history().orderBy($"version".desc).limit(1).collect().head
     assert(del.getString(2) === "mor-delete")
-    assert(del.getLong(3) === 7L) // a mor delete logs its equality-delete key count
+    assert(del.getLong(3) === 15L) // every commit logs the table's row total
     assert(st.read().count() === 15L)
   }
 }

@@ -374,21 +374,21 @@ class IcebergExportSpec extends SparkSpec {
     // independent implementation agreement: Spark's Murmur3_x86_32.hashLong
     // (same algorithm, processes the long as two LE 4-byte blocks) at seed 0
     for (v <- Seq(0L, 1L, -1L, 34L, 17486L, 1510871468000000L, Long.MaxValue))
-      assert(IcebergExport.murmur3x86(le(v)) ===
+      assert(FilePruning.murmur3x86(le(v)) ===
         org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(v, 0),
         s"long $v")
     // the spec's own Appendix B vectors: hash(34 as int/long) = 2017239379,
     // hash("iceberg") = 1210000089, hash(date 2017-11-16 = 17486 days) =
     // -653330422 (https://iceberg.apache.org/spec/#appendix-b)
-    assert(IcebergExport.murmur3x86(le(34L)) === 2017239379)
-    assert(IcebergExport.murmur3x86("iceberg".getBytes("UTF-8")) === 1210000089)
-    assert(IcebergExport.murmur3x86(le(17486L)) === -653330422)
+    assert(FilePruning.murmur3x86(le(34L)) === 2017239379)
+    assert(FilePruning.murmur3x86("iceberg".getBytes("UTF-8")) === 1210000089)
+    assert(FilePruning.murmur3x86(le(17486L)) === -653330422)
     // and it is NOT Spark's seed-42 hash() — the distinction foreign
     // engines would mis-prune on
-    assert(IcebergExport.murmur3x86(le(34L)) !==
+    assert(FilePruning.murmur3x86(le(34L)) !==
       org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(34L, 42))
-    assert(IcebergExport.bucketLong(34L, 16) === (2017239379 & Int.MaxValue) % 16)
-    assert(IcebergExport.bucketString("iceberg", 16) ===
+    assert(FilePruning.bucketLong(34L, 16) === (2017239379 & Int.MaxValue) % 16)
+    assert(FilePruning.bucketString("iceberg", 16) ===
       (1210000089 & Int.MaxValue) % 16)
   }
 

@@ -156,6 +156,16 @@ class MetadataPlanningSpec extends SparkSpec {
       "rollback to an asof target" -> (() => t.rollback(1L)))
     val landed = kinds.map { case (kind, commit) => commit() -> kind }.toMap
     assert(landed.size === kinds.size)
+    // every commit logs the table's row total: what its version reads back
+    // (a branch commit: the branch's)
+    val logged = t.history().select("version", "row_count").as[(Long, Long)]
+      .collect().toMap
+    val wrong = landed.toSeq.sortBy(_._1).flatMap { case (v, kind) =>
+      val total =
+        if (kind == "commitToBranch") t.readBranch("dev").count() else t.read(Some(v)).count()
+      if (logged(v) == total) None else Some(s"$kind v=$v logs ${logged(v)}, reads $total")
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
     val log = t.commitOps()
     val owners = log.map(_._1).filter(v => JFiles.isDirectory(JPaths.get(root, s"v=$v")))
     assert(owners.map(landed) === kinds.map(_._1).dropRight(1),

@@ -1,6 +1,10 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
+import java.time.Instant
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -227,7 +231,8 @@ class PartitionedStoreSpec extends SparkSpec {
       (m * 100L + d, ts(f"2025-$m%02d-$d%02d 10:00:00"))
     t1.commitPartitioned(rows.toDF("id", "event_ts").coalesce(1),
       Seq("months(event_ts)"))
-    assert(Files.isDirectory(Paths.get(r1, "v=0", "graft__month=2025-02")))
+    // the spec's tuple: months since 1970-01 (February 2025 = 661)
+    assert(Files.isDirectory(Paths.get(r1, "v=0", "graft__month=661")))
     assert(t1.read().columns.toSeq === Seq("id", "event_ts"))
     val got = t1.readWhere(
       col("event_ts") >= lit("2025-02-01 00:00:00").cast("timestamp") &&
@@ -247,7 +252,7 @@ class PartitionedStoreSpec extends SparkSpec {
     t2.commitPartitioned(Seq((1L, ts("2023-06-01 00:00:00")),
       (2L, ts("2024-06-01 00:00:00")), (3L, ts("2025-06-01 00:00:00")))
       .toDF("id", "event_ts").coalesce(1), Seq("years(event_ts)"))
-    assert(Files.isDirectory(Paths.get(r2, "v=0", "graft__year=2024")))
+    assert(Files.isDirectory(Paths.get(r2, "v=0", "graft__year=54"))) // 2024 - 1970
     assert(t2.readWhere(year(col("event_ts")) === 2024).count() === 1)
     // year() wraps the column, so stats can't see through it — but a RANGE
     // predicate on the timestamp itself prunes
@@ -263,7 +268,8 @@ class PartitionedStoreSpec extends SparkSpec {
       (h * 100L + m, ts(f"2025-03-01 $h%02d:$m%02d:00"))
     t3.commitPartitioned(hr.toDF("id", "event_ts").coalesce(1),
       Seq("hours(event_ts)"))
-    assert(Files.isDirectory(Paths.get(r3, "v=0", "graft__hour=2025-03-01-10")))
+    // hours since the epoch: 20148 days to 2025-03-01, then 10 more hours
+    assert(Files.isDirectory(Paths.get(r3, "v=0", "graft__hour=483562")))
     val g3 = t3.readWhere(
       col("event_ts") >= lit("2025-03-01 10:00:00").cast("timestamp") &&
       col("event_ts") < lit("2025-03-01 11:00:00").cast("timestamp"))
@@ -277,6 +283,112 @@ class PartitionedStoreSpec extends SparkSpec {
           .toDF("id", "d"), Seq("hours(d)"))
     }
     assert(bad.getMessage.contains("hours"))
+  }
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  private def utc(s: String): Timestamp = Timestamp.from(Instant.parse(s))
+
+  /** Every parquet file under `dir`, as paths relative to it. */
+  private def parquetFiles(dir: String): Seq[String] = {
+    val base = Paths.get(dir)
+    val walk = Files.walk(base)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".parquet"))
+      .map(p => base.relativize(p).toString).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("store buckets are the Iceberg spec's seed-0 murmur3 (Appendix B: " +
+      "34 hashes to 2017239379, 'iceberg' to 1210000089)") {
+    import spark.implicits._
+    def bucketDirs(root: String): Set[String] =
+      parquetFiles(s"$root/v=0").map(_.takeWhile(_ != '/')).toSet
+    val long = tmp("pstore_b34")
+    new SnapshotTable(spark, long).commitPartitioned(
+      Seq((34L, "x")).toDF("id", "v"), Seq("bucket(16, id)"))
+    assert(bucketDirs(long) === Set("graft__bucket=3")) // 2017239379 mod 16
+    // an int hashes as its long value
+    val int = tmp("pstore_b34i")
+    new SnapshotTable(spark, int).commitPartitioned(
+      Seq((34, "x")).toDF("id", "v"), Seq("bucket(16, id)"))
+    assert(bucketDirs(int) === Set("graft__bucket=3"))
+    val str = tmp("pstore_bstr")
+    new SnapshotTable(spark, str).commitPartitioned(
+      Seq((1L, "iceberg")).toDF("id", "s"), Seq("bucket(16, s)"))
+    assert(bucketDirs(str) === Set("graft__bucket=9")) // 1210000089 mod 16
+  }
+
+  test("days(ts) + hours(ts) tuples are UTC: a commit under a non-UTC session " +
+      "writes the dirs and prunes as under UTC") {
+    import spark.implicits._
+    // instants within an hour of midnight UTC, which Los Angeles puts on
+    // the afternoon of 2025-03-01
+    val df = Seq("2025-03-01T22:30:00Z", "2025-03-01T23:05:00Z",
+      "2025-03-01T23:40:00Z", "2025-03-02T00:10:00Z", "2025-03-02T00:50:00Z")
+      .zipWithIndex.map { case (s, i) => (i.toLong, utc(s)) }.toDF("id", "ts")
+    val window = col("ts") >= lit(utc("2025-03-02T00:00:00Z")) &&
+      col("ts") < lit(utc("2025-03-02T01:00:00Z"))
+    def run(zone: String) = {
+      val key = "spark.sql.session.timeZone"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, zone)
+      try {
+        val root = tmp("pstore_zone")
+        val t = new SnapshotTable(spark, root)
+        t.commitPartitioned(df.coalesce(1), Seq("days(ts)", "hours(ts)"))
+        val ids = t.readWhere(window).select("id").as[Long].collect().sorted.toSeq
+        (parquetFiles(s"$root/v=0").map(f => f.substring(0, f.lastIndexOf('/'))),
+          t.lastPruneStats, ids)
+      } finally spark.conf.set(key, prev)
+    }
+    val (dirs, stats, ids) = run("UTC")
+    assert(run("America/Los_Angeles") === ((dirs, stats, ids)))
+    // 2025-03-01 is epoch day 20148, so its 22:00 UTC is hour 483574
+    assert(dirs === Seq("graft__day=2025-03-01/graft__hour=483574",
+      "graft__day=2025-03-01/graft__hour=483575",
+      "graft__day=2025-03-02/graft__hour=483576"))
+    assert(stats === ((1L, 3L)) && ids === Seq(3L, 4L))
+  }
+
+  test("store dirs hold the partition tuples the Iceberg export writes for " +
+      "the same spec") {
+    import spark.implicits._
+    val df = Seq.tabulate(24)(i =>
+      (i.toLong, Timestamp.from(Instant.parse("2025-03-01T00:00:00Z")
+        .plusSeconds(i * 7L * 3600)))).toDF("id", "ts").coalesce(1)
+    val spec = Seq("days(ts)", "bucket(4, id)")
+    val root = tmp("pstore_vs_ice")
+    new SnapshotTable(spark, root).commitPartitioned(df, spec)
+    val ice = tmp("pstore_vs_ice_dest")
+    IcebergExport.export(df, ice, partitionBy = spec)
+    // id → its file's dir values for `keys`
+    def tuples(files: Seq[String], keys: Seq[String]): Map[Long, Seq[String]] =
+      files.flatMap { p =>
+        val dirs = p.split('/').filter(_.contains('=')).map { seg =>
+          seg.substring(0, seg.indexOf('=')) -> seg.substring(seg.indexOf('=') + 1)
+        }.toMap
+        spark.read.parquet(p).select("id").as[Long].collect().map(_ -> keys.map(dirs))
+      }.toMap
+    val store = tuples(parquetFiles(s"$root/v=0").map(f => s"$root/v=0/$f"),
+      Seq("graft__day", "graft__bucket"))
+    val exported = tuples(IcebergExport.plannedFiles(spark, ice).map(_._1),
+      Seq("ts_day", "id_bucket"))
+    assert(store.size === 24)
+    assert(store === exported)
+  }
+
+  test("one admission check: the store and the Iceberg export refuse a " +
+      "bucket over a double column with the same message") {
+    import spark.implicits._
+    val df = Seq((1L, 1.5)).toDF("id", "x")
+    val store = intercept[IllegalArgumentException](
+      new SnapshotTable(spark, tmp("pstore_admit"))
+        .commitPartitioned(df, Seq("bucket(4, x)")))
+    val export = intercept[IllegalArgumentException](
+      IcebergExport.export(df, tmp("pstore_admit_ice"), partitionBy = Seq("bucket(4, x)")))
+    assert(store.getMessage === export.getMessage)
+    assert(store.getMessage.contains("bucket(4, x) needs"), store.getMessage)
   }
 
   test("identity TIMESTAMP partitioning prunes (no silent unpruned fallback)") {

@@ -60,7 +60,8 @@ class SnapshotTableSpec extends SparkSpec {
       t.read().as[(Long, String, Int)].collect().toSet
     assert(rows(cow) === expectSurvivors)
     assert(rows(mor) === expectSurvivors)
-    // MOR wrote a delete FILE, not a rewritten table: commit log rows = keys.
+    // MOR wrote a delete FILE, not a rewritten table; the log records the
+    // table's row total (the 2 survivors).
     val morMeta = mor.history().orderBy("version").collect()
     assert(morMeta.last.getString(2) === "mor-delete" && morMeta.last.getLong(3) === 2L)
     // the MOR read plan applies deletes as a broadcast anti-join (no shuffle
@@ -169,8 +170,8 @@ class SnapshotTableSpec extends SparkSpec {
     t.deleteWhereMor(col("id") < 3L, "id")                              // v1: 3 KEYS
     t.createBranch("hold", at = Some(1L))
     val pub = t.fastForward("hold")
-    // the publish entry must record the resolved table total (7), not the
-    // mor-delete entry's delete-KEY count (3) — review finding
+    // the publish entry must record the table total (7), not the
+    // mor-delete's delete-KEY count (3)
     val pubRow = t.history().filter(col("version") === pub).collect().head
     assert(pubRow.getLong(3) === 7L)
     // and a later delta append inherits the right cumulative count
@@ -520,10 +521,13 @@ class SnapshotTableSpec extends SparkSpec {
       JFiles.delete(stamp)
       val missing = refusal()
       assert(missing.contains(root) && missing.contains("no _graft_format"), missing)
-      JFiles.writeString(stamp, "0\n")
-      val other = refusal()
-      assert(other.contains(root) && other.contains("'0'") &&
-        other.contains(s"'${SnapshotTable.FormatVersion}'"), other)
+      // "1" is the layout before the partition tuples became the spec's
+      Seq("0", "1").foreach { old =>
+        JFiles.writeString(stamp, old + "\n")
+        val other = refusal()
+        assert(other.contains(root) && other.contains(s"'$old'") &&
+          other.contains(s"'${SnapshotTable.FormatVersion}'"), other)
+      }
       JFiles.writeString(stamp, SnapshotTable.FormatVersion + "\n")
       assert(new SnapshotTable(spark, root).read().count() === 1)
     }
@@ -713,9 +717,9 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().filter(col("tag") === "dup").count() === 0)
     // provenance columns never leak to the reader
     assert(t.read().columns.toSeq.sorted === Seq("k", "tag", "x"))
-    // the delete file is position-sized, not table-sized
+    // the commit logs the table's row total after the delete
     assert(t.history().filter(col("version") === v2)
-      .select("row_count").as[Long].head() === 2L)
+      .select("row_count").as[Long].head() === 21L)
     // time travel before the delete still sees the duplicates
     assert(t.read(Some(1L)).filter(col("tag") === "dup").count() === 2)
     // a LATER append of identical values survives: the delete names old
@@ -756,10 +760,10 @@ class SnapshotTableSpec extends SparkSpec {
     // both null-keyed rows AND k=3 are gone (IcebergExport.readTable's
     // <=> semantics — plain equality would leave the null-keyed rows)
     assert(t.read().select("v").as[String].collect().toSeq === Seq("a"))
-    // the logged delta is the MATCHED row count — 3 (two null-keyed rows
-    // plus k=3), not the 2-key count: row accounting subtracts it exactly
+    // the logged total drops by the MATCHED row count — 3 (two null-keyed
+    // rows plus k=3), not the 2-key count: 4 - 3 = 1
     assert(t.history().orderBy(col("version").desc)
-      .select("row_count").as[Long].head() === 3L)
+      .select("row_count").as[Long].head() === 1L)
     // CDC derives the same three deletions from the commit file alone
     val ch = t.changesForCommit(ver)
     assert(ch.filter(col("_change_type") === "delete").count() === 3L)
