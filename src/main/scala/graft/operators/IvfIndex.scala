@@ -47,7 +47,7 @@ object IvfIndex {
 
   /** The nested centroid store of an index rooted at `root`. The `_` prefix
     * keeps it invisible to the assignment store's data listing and orphan
-    * sweep (both only consider `v=N` dirs). */
+    * sweep (both only consider `data/<id>` dirs). */
   private def centroidsRoot(root: String) = s"$root/_graft_ivf_centroids"
 
   /** Content hash of a centroid generation — the pairing key between the

@@ -464,7 +464,7 @@ final class SqlScriptRunner(spark: SparkSession,
       // SnapshotTable.expireSnapshots' — VACUUM can never orphan a readable
       // snapshot's files; REMOVE ORPHAN FILES is the crashed-writer
       // cleanup (Iceberg's remove_orphan_files), age-guarded and never
-      // touching logged or marker-protected versions.
+      // touching a dir a log record names.
       val om = ("(?is)VACUUM\\s+TABLE\\s+([\\w.]+)\\s+REMOVE\\s+ORPHAN\\s+FILES" +
         "(?:\\s+OLDER_THAN\\s+'([^']+)')?").r.findFirstMatchIn(stmt)
       om match {

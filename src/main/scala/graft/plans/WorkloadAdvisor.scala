@@ -525,7 +525,7 @@ final class WorkloadAdvisor(spark: SparkSession, mats: Materializations) {
     * the registered sync mirrors advanced (key → versions/snapshots
     * carried). */
   final case class MaintenanceTick(
-      compacted: Seq[(String, Long)], orphansRemoved: Seq[(String, Seq[Long])],
+      compacted: Seq[(String, Long)], orphansRemoved: Seq[(String, Seq[String])],
       indexesRetrained: Seq[(String, Long)] = Nil,
       mirrorsSynced: Seq[(String, Int)] = Nil)
 

@@ -2571,7 +2571,7 @@ object DataPipelineQueries {
     // reference partitions every workshop table — clinicdata.sql:51,
     // finance_example.sql:25): the events stream commits under a
     // `days(ts)` spec in two ingest waves, version dirs lay out as
-    // `v=N/graft__day=…` hive partitions (one file per day), the spec is
+    // `data/<id>/graft__day=…` hive partitions (one file per day), the spec is
     // INHERITED by the append wave, and a 3-day timestamp predicate —
     // on ts itself, the hidden day column is never user-visible — plans
     // over exactly 3 of the 30 live day files via the manifest's day-range

@@ -1,451 +1,27 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.hadoop.fs.Path
-
-/** Durable [[SnapshotTable.ClaimArbiter]]: version claims are arbitrated by
-  * create-exclusive LOCK FILES on a SEPARATE root that genuinely provides
-  * atomic create-exclusive — a POSIX/NFS directory, an HDFS path — backing a
-  * data root that does not (S3-class stores, where a PUT silently
-  * overwrites). This is Iceberg's lock-table/HadoopCatalog pattern with the
-  * catalog service replaced by the smallest durable primitive a fleet
-  * already has: one shared filesystem path (reference spark.py:26-28 solves
-  * the same problem with a REST catalog's CAS).
+/** Durable [[SnapshotTable.ClaimArbiter]]: a data root's log records live as
+  * files on a SEPARATE root that genuinely publishes without replacing — a
+  * POSIX/NFS directory, an HDFS path — backing a data root that cannot (an
+  * S3-class store, where a PUT silently overwrites). This is Iceberg's
+  * HadoopCatalog pattern with the catalog service replaced by the smallest
+  * durable primitive a fleet already has: one shared filesystem path
+  * (reference spark.py:26-28 solves the same problem with a REST catalog's
+  * compare-and-swap).
   *
-  * Unlike [[SnapshotTable.InProcessClaimArbiter]] — whose claims live in
-  * process memory and therefore only arbitrate threads of ONE JVM — the
-  * lock files are visible to every process and host that mounts `lockRoot`,
-  * so two OS processes with no shared memory get a real cross-process CAS
-  * (proved by `CrossProcessClaimSpec`, which forks a second JVM).
+  * The records are visible to every process and host that mounts
+  * `lockRoot`, so two OS processes with no shared memory publish distinct
+  * versions (proved by `CrossProcessClaimSpec`, which forks a second JVM).
   *
-  * Layout: `lockRoot/<md5(canonical data root)>/v=<version>.lock`, one
-  * create-exclusive file per in-flight claim, plus a best-effort `root.txt`
-  * naming the data root for operators. Claims are RELEASED (deleted) once
-  * their version is logged or the race is lost, mirroring the marker
-  * self-GC, so the dir stays O(in-flight claims). A claim leaked by a
-  * crashed writer only makes later writers skip that number — the log
-  * re-validation in `claimVersion` keeps correctness regardless — and can
-  * be swept manually once the writer is known dead.
-  *
-  * Requirements on `lockRoot`'s filesystem: atomic create-exclusive
-  * (`O_EXCL` / HDFS `create(overwrite=false)`) and list-after-create
-  * visibility. Do NOT point it at an S3-class store — that would reproduce
-  * the exact gap this arbiter closes.
+  * Layout: `lockRoot/<md5(canonical data root)>/v=<version>.rec`, one
+  * record per commit. Requirements on `lockRoot`'s filesystem: a publish
+  * that refuses an existing name (`link(2)` / HDFS `rename`) and
+  * list-after-publish visibility. Do NOT point it at an S3-class store —
+  * that would reproduce the exact gap this arbiter closes.
   */
 final class LockDirClaimArbiter(lockRoot: String,
     hconf: org.apache.hadoop.conf.Configuration =
       new org.apache.hadoop.conf.Configuration())
-    extends SnapshotTable.ClaimArbiter {
-
-  private val lockUri = new Path(lockRoot).toUri
-  private val isLocal = lockUri.getScheme == null || lockUri.getScheme == "file"
-  private lazy val fs = new Path(lockRoot).getFileSystem(hconf)
-  private val localBase =
-    if (lockUri.getScheme == null) lockRoot else lockUri.getPath
-
-  /** Stable per-data-root subdirectory (the root string arrives already
-    * canonicalized by [[SnapshotTable]]'s arbiter seam). */
-  private def slug(root: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def lockName(version: Long) = s"v=$version.lock"
-
-  /** Best-effort operator breadcrumb: which data root this slug arbitrates. */
-  private def writeRootHint(root: String, dir: String): Unit =
-    try {
-      if (isLocal) {
-        val p = Paths.get(dir, "root.txt")
-        if (!Files.exists(p)) Files.writeString(p, root + "\n")
-      } else {
-        val p = new Path(dir, "root.txt")
-        if (!fs.exists(p)) {
-          val out = fs.create(p, false)
-          try out.write((root + "\n").getBytes("UTF-8")) finally out.close()
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  def tryClaim(root: String, version: Long): Boolean =
-    if (isLocal) {
-      val dir = Paths.get(localBase, slug(root))
-      Files.createDirectories(dir)
-      writeRootHint(root, dir.toString)
-      try { Files.createFile(dir.resolve(lockName(version))); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      val dir = new Path(lockRoot, slug(root))
-      fs.mkdirs(dir)
-      writeRootHint(root, dir.toString)
-      val p = new Path(dir, lockName(version))
-      try { fs.create(p, false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.io.IOException if fs.exists(p) => false
-      }
-    }
-
-  def release(root: String, version: Long): Unit =
-    if (isLocal)
-      Files.deleteIfExists(Paths.get(localBase, slug(root), lockName(version)))
-    else
-      fs.delete(new Path(new Path(lockRoot, slug(root)), lockName(version)),
-        false)
-
-  /** Age past which a `commit.lock` is treated as a crashed holder's leak
-    * and taken over. The commit critical section is a metadata tail (one
-    * fresh log read + one record write), so a healthy holder exits in
-    * milliseconds; two minutes is orders of magnitude of headroom. Tests
-    * shorten it to exercise the takeover. */
-  @volatile var staleCommitLockMillis: Long = 120000L
-
-  /** Hard cap on waiting for the section — a deployment where commits
-    * genuinely block this long has an operational problem that deserves an
-    * exception, not an unbounded hang. */
-  @volatile var commitLockTimeoutMillis: Long = 600000L
-
-  private def commitLock(root: String): (java.nio.file.Path, Path) =
-    (Paths.get(localBase, slug(root), "commit.lock"),
-      new Path(new Path(lockRoot, slug(root)), "commit.lock"))
-
-  private def epochPaths(root: String): (java.nio.file.Path, Path) =
-    (Paths.get(localBase, slug(root), "commit.epoch"),
-      new Path(new Path(lockRoot, slug(root)), "commit.epoch"))
-
-  /** FENCING epoch of the commit section: bumped by every stale-lock
-    * TAKEOVER (under the exclusive break marker, so bumps are serialized).
-    * A holder records the epoch at acquisition; `verifyFence` rejects the
-    * log-tail write when the epoch moved — the paused-but-alive holder
-    * whose lock was broken cannot append with a section it no longer
-    * owns. */
-  private def readEpoch(root: String): Long = {
-    val (np, hp) = epochPaths(root)
-    try {
-      val txt =
-        if (isLocal) { if (!Files.exists(np)) return 0L; Files.readString(np) }
-        else {
-          if (!fs.exists(hp)) return 0L
-          val in = fs.open(hp)
-          try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        }
-      txt.trim.toLongOption.getOrElse(0L)
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-  }
-
-  private def writeEpoch(root: String, e: Long): Unit = {
-    val (np, hp) = epochPaths(root)
-    // ATOMIC replace: an in-place truncate would let a concurrent
-    // readEpoch observe an empty file and parse epoch 0 — defeating the
-    // fence exactly in the takeover window
-    if (isLocal) withEpochOsLock(root) {
-      val tmp = np.resolveSibling(np.getFileName.toString + ".tmp")
-      Files.writeString(tmp, e.toString + "\n")
-      Files.move(tmp, np, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val tmp = new Path(hp.getParent, hp.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write((e.toString + "\n").getBytes("UTF-8")) finally out.close()
-      fs.delete(hp, false)
-      fs.rename(tmp, hp)
-    }
-  }
-
-  /** OS file lock (flock/fcntl — a TRUE cross-process mutex the kernel
-    * releases on process death, so it can never go stale) over the slug's
-    * `commit.epoch.lck`, plus a JVM-wide monitor for same-process threads
-    * (overlapping FileLocks from one JVM throw instead of blocking). This
-    * is what makes [[conditionalTailWrite]]'s epoch-check-then-write
-    * ATOMIC against a takeover's epoch bump on POSIX lock roots. */
-  private def withEpochOsLock[T](root: String)(body: => T): T = {
-    val dir = Paths.get(localBase, slug(root))
-    Files.createDirectories(dir)
-    val key = dir.resolve("commit.epoch.lck").toAbsolutePath.toString
-    val monitor = LockDirClaimArbiter.epochMonitors
-      .computeIfAbsent(key, _ => new Object)
-    monitor.synchronized {
-      val ch = java.nio.channels.FileChannel.open(Paths.get(key),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val l = ch.lock()
-        try body finally l.release()
-      } finally ch.close()
-    }
-  }
-
-  /** Token-conditional log-tail write: on a POSIX lock root the section
-    * epoch is re-read and the write executed under ONE OS file lock shared
-    * with [[writeEpoch]] — a takeover's bump either precedes the check
-    * (write rejected) or waits for the write to finish (the holder was
-    * still the legitimate owner at the serialization point). This closes
-    * the r18 fencing residual (a holder paused between `verifyFence` and
-    * the write).
-    *
-    * On NON-LOCAL (Hadoop-FS) lock roots (r20) the same atomicity comes
-    * from a CREATE-EXCLUSIVE fence marker named by the held epoch
-    * (`fence-e<E>.marker`): the holder must create it before the write,
-    * and a takeover creates the SAME name before breaking the lock — so
-    * exactly one of them wins the create. A holder that lost finds the
-    * name occupied and is rejected; a breaker that lost (the holder is
-    * mid-write) aborts its takeover and retries after the marker itself
-    * goes stale. A taken-over epoch's marker is left in place forever
-    * (one tiny file per takeover) — deleting it would re-admit the very
-    * holder it fences. The residual now needs a holder paused LONGER than
-    * the staleness threshold BETWEEN its marker create and its write —
-    * the same two-independent-stale-observations class as the break
-    * marker's documented residual. */
-  override def conditionalTailWrite(root: String, write: () => Unit): Unit = {
-    val held = heldEpoch.get(holderKey(root))
-    if (held == null) { verifyFence(root); write(); return }
-    if (isLocal) {
-      withEpochOsLock(root) {
-        val now = readEpoch(root)
-        if (now != held.longValue)
-          throw new IllegalStateException(
-            s"commit section for $root was TAKEN OVER while this holder was " +
-              s"paused (fencing epoch $held -> $now, stale threshold " +
-              s"$staleCommitLockMillis ms): the conditional tail write is " +
-              "rejected — re-read and retry")
-        write()
-      }
-    } else {
-      val key = holderKey(root)
-      if (!ownMarker.containsKey(key)) {
-        val m = fenceMarkerPath(root, held.longValue)
-        def claim(): Boolean =
-          try { fs.create(m, false).close(); true }
-          catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-            case _: java.io.IOException if fs.exists(m) => false
-          }
-        var won = claim()
-        if (!won && readEpoch(root) == held.longValue) {
-          // epoch unchanged → no completed takeover owns this marker. A
-          // STALE marker here is a previous holder's leak (its unlock
-          // delete failed, or it crashed before unlocking while we hold
-          // the re-acquired section): reclaim it, or every future commit
-          // of this epoch would be rejected forever. A FRESH marker stays
-          // authoritative — an in-flight breaker claims the marker before
-          // it bumps the epoch, so rejecting on fresh is the safe side.
-          val stale =
-            try System.currentTimeMillis() -
-              fs.getFileStatus(m).getModificationTime > staleCommitLockMillis
-            catch { case _: java.io.FileNotFoundException => true }
-          if (stale) {
-            try fs.delete(m, false)
-            catch { case scala.util.control.NonFatal(_) => () }
-            won = claim()
-          }
-        }
-        if (!won)
-          throw new IllegalStateException(
-            s"commit section for $root was TAKEN OVER while this holder " +
-              s"was paused (fence marker for epoch $held already claimed, " +
-              s"stale threshold $staleCommitLockMillis ms): the " +
-              "conditional tail write is rejected — re-read and retry")
-        ownMarker.put(key, held)
-      }
-      write()
-    }
-  }
-
-  private def fenceMarkerPath(root: String, epoch: Long): Path =
-    new Path(new Path(lockRoot, slug(root)), s"fence-e$epoch.marker")
-
-  /** Holder threads that created their section's fence marker (non-local
-    * roots): the marker is created once per section and deleted on a clean
-    * unlock. */
-  private val ownMarker =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Epoch each held section was acquired at, per (canonical data root,
-    * holder thread): lock, fence check and unlock all run on the commit's
-    * thread, and a same-JVM taker must never overwrite the paused
-    * holder's recorded epoch (that would disarm its fence). */
-  private val heldEpoch =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def holderKey(root: String): String =
-    root + "#" + Thread.currentThread().getId
-
-  override def verifyFence(root: String): Unit = {
-    val held = heldEpoch.get(holderKey(root))
-    if (held != null) {
-      val now = readEpoch(root)
-      if (now != held.longValue)
-        throw new IllegalStateException(
-          s"commit section for $root was TAKEN OVER while this holder was " +
-            s"paused (fencing epoch $held -> $now, stale threshold " +
-            s"$staleCommitLockMillis ms): its lock was broken as crashed; " +
-            "the commit is rejected — re-read and retry")
-    }
-  }
-
-  override def lockCommit(root: String): Unit = {
-    val (np, hp) = commitLock(root)
-    if (isLocal) Files.createDirectories(np.getParent) else fs.mkdirs(hp.getParent)
-    val deadline = System.currentTimeMillis() + commitLockTimeoutMillis
-    val rnd = new java.util.Random()
-    while (true) {
-      // read the epoch BEFORE the create: a holder paused between its
-      // acquisition and an after-the-fact read would adopt the epoch its
-      // own takeover bumped, and the fence would pass for both writers. A
-      // stale pre-read can only cause a safe spurious rejection.
-      val epochBefore = readEpoch(root)
-      val acquired =
-        if (isLocal)
-          try { Files.createFile(np); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        else
-          try { fs.create(hp, false).close(); true }
-          catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-            case _: java.io.IOException if fs.exists(hp) => false
-          }
-      if (acquired) { heldEpoch.put(holderKey(root), epochBefore); return }
-      // crashed-holder takeover, serialized through an exclusive BREAK
-      // marker: two waiters that both observed a stale mtime must not both
-      // delete — the second delete would remove the first waiter's FRESH
-      // lock and let two processes into the critical section (the
-      // delete-race TOCTOU). Only the breaker that owns the marker may
-      // delete, and it re-stats INSIDE the marker: the lock path is
-      // continuously occupied by the stale file until the delete (creates
-      // fail on an occupied path), so a fresh lock cannot appear between
-      // the breaker's re-stat and its delete. A crashed breaker leaks the
-      // marker; a marker past the staleness threshold is itself removed —
-      // the residual window now needs two crashed writers plus exact
-      // timing, not one crash plus any contention.
-      try tryBreakStale(root, np, hp)
-      catch { case scala.util.control.NonFatal(_) => () }
-      if (System.currentTimeMillis() > deadline)
-        throw new IllegalStateException(
-          s"commit lock for $root not acquired within " +
-            s"$commitLockTimeoutMillis ms — holder crashed without cleanup " +
-            s"or the section is badly contended; lock: ${if (isLocal) np else hp}")
-      Thread.sleep(5L + rnd.nextInt(25))
-    }
-  }
-
-  override def unlockCommit(root: String): Unit = {
-    val held = heldEpoch.remove(holderKey(root))
-    val marked = ownMarker.remove(holderKey(root))
-    // after a takeover the lock FILE belongs to the taker: deleting it
-    // here would let a third process into the taker's critical section
-    // (and the fence marker now belongs to the takeover — leave it)
-    if (held != null && readEpoch(root) != held.longValue) return
-    // clean exit: release the fence marker so the NEXT holder of this
-    // (unchanged) epoch can claim it afresh
-    if (marked != null && !isLocal)
-      try fs.delete(fenceMarkerPath(root, marked.longValue), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    val (np, hp) = commitLock(root)
-    if (isLocal) Files.deleteIfExists(np) else fs.delete(hp, false)
-  }
-
-  private def mtimeOf(np: java.nio.file.Path, hp: Path): Option[Long] =
-    try Some(
-      if (isLocal) Files.getLastModifiedTime(np).toMillis
-      else fs.getFileStatus(hp).getModificationTime)
-    catch {
-      case _: java.nio.file.NoSuchFileException => None
-      case _: java.io.FileNotFoundException => None
-    }
-
-  /** Takeover of a crashed holder's `commit.lock` (see the call-site note):
-    * examine + delete only under the exclusive `.break` marker. */
-  private def tryBreakStale(root: String, np: java.nio.file.Path,
-      hp: Path): Unit = {
-    val now = System.currentTimeMillis()
-    if (!mtimeOf(np, hp).exists(now - _ > staleCommitLockMillis)) return
-    val bNp = np.resolveSibling(np.getFileName.toString + ".break")
-    val bHp = new Path(hp.getParent, hp.getName + ".break")
-    // a crashed BREAKER's leaked marker: remove once stale (best-effort)
-    if (mtimeOf(bNp, bHp).exists(now - _ > staleCommitLockMillis)) {
-      if (isLocal) Files.deleteIfExists(bNp) else fs.delete(bHp, false)
-    }
-    val owned =
-      if (isLocal)
-        try { Files.createFile(bNp); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      else
-        try { fs.create(bHp, false).close(); true }
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.io.IOException if fs.exists(bHp) => false
-        }
-    if (!owned) return
-    try {
-      // re-validate INSIDE the marker; the stale file has occupied the
-      // path continuously, so this delete can only remove the stale lock
-      if (mtimeOf(np, hp)
-          .exists(System.currentTimeMillis() - _ > staleCommitLockMillis)) {
-        // On a NON-LOCAL root (r20), claim the dying epoch's FENCE MARKER
-        // before anything else: the holder must create the same name
-        // before its tail write, so winning this create guarantees the
-        // paused holder can never land its line. Losing it means the
-        // holder is alive and mid-write — abort the takeover unless the
-        // marker itself has gone stale (holder crashed mid-section after
-        // marking).
-        if (!isLocal) {
-          val e = readEpoch(root)
-          val m = fenceMarkerPath(root, e)
-          def claim(): Boolean =
-            try { fs.create(m, false).close(); true }
-            catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-              case _: java.io.IOException if fs.exists(m) => false
-            }
-          if (!claim()) {
-            val mMtime =
-              try Some(fs.getFileStatus(m).getModificationTime)
-              catch { case _: java.io.FileNotFoundException => None }
-            val markerStale = mMtime.exists(t =>
-              System.currentTimeMillis() - t > staleCommitLockMillis)
-            if (!markerStale) return // live writer — do not break
-            fs.delete(m, false)
-            if (!claim()) return
-          }
-        }
-        // FENCE the broken holder first: bump the epoch while the stale
-        // lock still occupies the path, so by the time anyone can acquire,
-        // the old holder's recorded epoch is already dead
-        writeEpoch(root, readEpoch(root) + 1)
-        if (isLocal) Files.deleteIfExists(np) else fs.delete(hp, false)
-      }
-    } finally {
-      if (isLocal) Files.deleteIfExists(bNp) else fs.delete(bHp, false)
-    }
-  }
-
-  def maxClaimed(root: String): Long = {
-    val names: Seq[String] =
-      if (isLocal) {
-        val dir = Paths.get(localBase, slug(root))
-        if (!Files.isDirectory(dir)) Nil
-        else {
-          val s = Files.list(dir)
-          try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala.map(_.getFileName.toString).toList
-          } finally s.close()
-        }
-      } else {
-        val dir = new Path(lockRoot, slug(root))
-        if (!fs.exists(dir)) Nil
-        else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      }
-    names.filter(n => n.startsWith("v=") && n.endsWith(".lock"))
-      .flatMap(_.stripPrefix("v=").stripSuffix(".lock").toLongOption)
-      .foldLeft(-1L)(math.max)
-  }
-}
-
-object LockDirClaimArbiter {
-  /** JVM-wide monitors per epoch-lock file: same-process threads serialize
-    * here (an overlapping OS FileLock from one JVM throws rather than
-    * blocks), cross-process writers serialize on the OS lock itself. */
-  private val epochMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-}
+    extends SnapshotTable.RecordDir(hconf, root =>
+      s"$lockRoot/" + java.security.MessageDigest.getInstance("MD5")
+        .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString)

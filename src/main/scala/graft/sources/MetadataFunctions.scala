@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
   * queries, or monitor file-level metrics").
   *
   * Two backing shapes, resolved automatically:
-  *  - a `SnapshotTable`-managed root (versioned `v=N` directories plus a
-  *    `_graft_meta.jsonl` commit log): every committed version is a snapshot
-  *    row with real file-level metrics per version;
+  *  - a `SnapshotTable`-managed root (`data/<id>` directories plus a
+  *    `_graft_format` stamp): every committed version is a snapshot row
+  *    with real file-level metrics per version;
   *  - any other resolvable table (nested-catalog parquet, temp view over a
   *    parquet directory): the current state is surfaced as a single
   *    synthesized snapshot from file statistics — the Iceberg equivalence for
@@ -139,9 +139,9 @@ object MetadataFunctions {
     resolveRoot(spark, table) match {
       case Some(root) =>
         val st = new SnapshotTable(spark, root)
-        st.currentDataDirs.flatMap { dirStr =>
-          st.readManifest(st.dirVersionOf(dirStr))._2.map(f =>
-            (new Path(dirStr, f.name).toUri.getPath, f.records, f.bytes))
+        st.currentDataVersions.flatMap { v =>
+          st.readManifest(v)._2.map(f =>
+            (new Path(st.versionDir(v), f.name).toUri.getPath, f.records, f.bytes))
         }.sortBy(_._1)
       case None => footerStatsAll(spark, inputFiles(spark, table))
     }
@@ -177,16 +177,10 @@ object MetadataFunctions {
   def tablePartitions(spark: SparkSession, table: String): DataFrame = {
     val perFile = fileStats(spark, table).map { case (f, records, bytes) =>
       val p = new Path(f)
-      // partition key = the key=value directory segments above the file; a
-      // `v=N` dir that is a SnapshotTable's versioning level (its parent
-      // holds the commit log) is the root boundary, not a partition — a
-      // genuine partition column named `v` (no commit log beside it) keeps
-      // its segments
+      // partition key = the key=value directory segments above the file (a
+      // store's `data/<id>` level has no `=`, so it ends the walk)
       val segs = Iterator.iterate(p.getParent)(_.getParent)
-        .takeWhile(_ != null)
-        .takeWhile(d => d.getName.contains("=") &&
-          !(d.getName.matches("v=\\d+") && d.getParent != null &&
-            Files.exists(Paths.get(d.getParent.toUri.getPath, "_graft_meta.jsonl"))))
+        .takeWhile(d => d != null && d.getName.contains("="))
         .map(_.getName).toSeq.reverse
       val part = if (segs.isEmpty) null else segs.mkString("/")
       (part, records, bytes)
@@ -232,36 +226,35 @@ object MetadataFunctions {
           lit(true).as("is_current_ancestor"))
     }
 
-  /** A versioned root when `table` reads a SnapshotTable layout (input files
-    * under `root/v=N` with the commit log beside them), else None. */
+  /** A store root when `table` reads a SnapshotTable layout (input files
+    * under `root/data/<id>` with the format stamp beside `data`), else
+    * None. */
   private def snapshotRoot(spark: SparkSession, table: String): Option[String] = {
     val files = inputFiles(spark, table)
     files.headOption.flatMap { f =>
       // walk up through partition dirs (`region=eu`, `graft__day=…`) to the
-      // versioning level — partitioned stores nest hive dirs inside `v=N`
+      // data dir — partitioned stores nest hive dirs inside `data/<id>`
       Iterator.iterate(new Path(f).getParent)(_.getParent)
         .takeWhile(_ != null)
         .collectFirst {
-          case p if p.getName.matches("v=\\d+") && p.getParent != null &&
-              Files.exists(Paths.get(p.getParent.toUri.getPath, "_graft_meta.jsonl")) =>
+          case p if p.getName == "data" && p.getParent != null &&
+              Files.exists(Paths.get(p.getParent.toUri.getPath, "_graft_format")) =>
             p.getParent.toUri.getPath
         }
     }
   }
 
+  /** One row per logged version; a version's files and bytes are those
+    * its own commit wrote, read from its manifest (a metadata-only commit
+    * wrote none). */
   private def snapshotRows(spark: SparkSession, root: String): DataFrame = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows = new SnapshotTable(spark, root).history().collect().toSeq.map { r =>
+    val st = new SnapshotTable(spark, root)
+    val rows = st.history().collect().toSeq.map { r =>
       val v = r.getAs[Long]("version")
-      val dir = new Path(root, s"v=$v")
-      val stats =
-        if (fs.exists(dir))
-          fs.listStatus(dir).filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-        else Array.empty[org.apache.hadoop.fs.FileStatus] // expired snapshot
+      val files = st.ownFiles(v)
       Row(v, if (v == 0L) null else v - 1L, r.getAs[String]("operation"),
         new java.sql.Timestamp(r.getAs[Long]("committed_at_ms")),
-        stats.length.toLong, r.getAs[Long]("row_count"),
-        stats.map(_.getLen).sum)
+        files.size.toLong, r.getAs[Long]("row_count"), files.map(_.bytes).sum)
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), snapshotSchema)
   }

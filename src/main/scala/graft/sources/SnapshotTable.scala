@@ -29,11 +29,11 @@ object SnapshotTable {
       keys: Option[(StructType, Seq[ManifestFile])])
 
   /** The head a write op's staged content was derived from:
-    * [[SnapshotTable#transact]] logs the op only while that head still
-    * stands. */
+    * [[SnapshotTable#transact]] publishes the op only while no record
+    * logged since its log read moved that head. */
   private sealed trait Basis
   /** Derived from no head: a plain append, a blind overwrite, a rollback or
-    * a publish commutes with whatever was logged before its claim. */
+    * a publish commutes with whatever was logged before it lands. */
   private case object Commutes extends Basis
   /** Derived from main's head: the one the caller read before calling
     * (`pinned`), else the one `transact` reads. */
@@ -43,14 +43,19 @@ object SnapshotTable {
 
   /** What a write op's stage leaves for `transact` to log: the op string,
     * the table's row total after the commit as a function of (log, head) —
-    * evaluated on the log read fresh inside the commit section, `head`
-    * being the version the commit lands on — and a step that must follow
-    * the log record (a branch's ref move, the partition spec file). */
+    * evaluated on the log the record is published onto, `head` being the
+    * version it lands on — and a step that must follow the log record
+    * (a branch's ref move, the partition spec file), given the version
+    * that landed. */
   private final case class Staged(op: String,
-      rows: (Seq[Meta], Option[Long]) => Long, afterLog: () => Unit = () => ())
+      rows: (Seq[Meta], Option[Long]) => Long, afterLog: Long => Unit = _ => ())
 
   /** One commit-log entry: (version, committed-at ms, op, row count). */
-  private type Meta = (Long, Long, String, Long)
+  private[sources] type Meta = (Long, Long, String, Long)
+
+  /** A parsed log record: its entry and the data id of the `data/<id>/`
+    * dir the commit wrote (None for a metadata-only commit). */
+  private[sources] type LogRecord = (Meta, Option[String])
 
   /** Raised when an optimistic commit loses its conflict check: the table
     * head moved between the operation's snapshot read and its commit attempt
@@ -64,93 +69,132 @@ object SnapshotTable {
   /** Same-millisecond tiebreaker for ref-record sequence names. */
   private[sources] val refSeqCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  // ── pluggable claim arbiter ──────────────────────────────────────────────
-  //    The ONE primitive the commit protocol still needs from its storage is
-  //    an atomic "claim (root, version)" CAS. POSIX/HDFS provide it natively
-  //    (create-exclusive markers); S3-class stores do NOT — a PUT silently
-  //    overwrites — which is exactly why Iceberg delegates its head swap to
-  //    a catalog-side CAS (REST catalog / lock table; reference spark.py:
-  //    26-28, SURVEY §3.1 step 5). Registering an arbiter for a root routes
-  //    claims through it: markers are still written (best-effort) so
-  //    removeOrphans keeps protecting in-flight writers' dirs, but claim
-  //    ATOMICITY comes from the arbiter. Everything else in the protocol —
-  //    record-ledger commit points, head validation, claim release — is
-  //    already storage-agnostic.
+  /** Parsed log records per canonical root, keyed by record name, each with
+    * the listing stamp it was parsed under. Records are immutable, so a log
+    * read lists the records and parses only the names (or stamps) it has
+    * not seen; a store deleted and recreated at the same path re-publishes
+    * its names with new stamps, which are parsed afresh. */
+  private[sources] val logMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, (String, LogRecord)]]()
 
-  /** The catalog-CAS seam: implement with any service that can do an
-    * atomic per-(root, version) claim — a REST catalog, a database row, a
-    * lock table. */
+  // ── the commit log's record store ─────────────────────────────────────────
+  //    A commit is ONE record, `v=N.rec`, published complete-or-absent and
+  //    only if no record of that name exists: the claim, the commit point
+  //    and the order in one step (Delta Lake's put-if-absent log entry;
+  //    Iceberg gets the same from its catalog's compare-and-swap, reference
+  //    spark.py:26-28). POSIX and HDFS publish without replacing natively;
+  //    S3-class stores do NOT (a PUT silently overwrites), so a registered
+  //    arbiter keeps a root's records where publish-if-absent holds.
+
+  /** Where a root's log records live: publish-if-absent, list, read and
+    * delete of small immutable records. Implement with any service that
+    * refuses a second publish of one name — a REST catalog, a database
+    * row, a lock table, a POSIX or HDFS directory ([[LockDirClaimArbiter]]). */
   trait ClaimArbiter {
-    /** Atomically claim `version` of the table at `root`; true = owned. */
-    def tryClaim(root: String, version: Long): Boolean
-    /** Release a claim (after its commit is logged, or on a lost race). */
-    def release(root: String, version: Long): Unit
-    /** Highest currently-claimed version for `root`, -1 when none. */
-    def maxClaimed(root: String): Long
-    /** Enter the commit CRITICAL SECTION for `root` — the final head
-      * validation + log-record write of every commit runs inside it, so a
-      * read-dependent commit's validate→append tail and a concurrent
-      * append's record write can never interleave ACROSS PROCESSES (the
-      * optimistic window Iceberg closes with its catalog CAS: without this,
-      * an append logged between another process's head check and its
-      * full-copy commit would be silently erased by the restart point).
-      * In-JVM the per-root lock already serializes; the default no-op is
-      * correct for single-process fleets. Durable arbiters MUST implement
-      * both methods, blocking in lockCommit until the section is free. */
-    def lockCommit(root: String): Unit = ()
-    /** Leave the commit critical section for `root`. */
-    def unlockCommit(root: String): Unit = ()
-    /** FENCING check, called by the log-tail write while the section is
-      * held: throw if this holder's section was TAKEN OVER since
-      * `lockCommit` returned (a stale-lock break by another process — the
-      * GC-pause hazard: a paused-but-alive holder must not append with a
-      * lock it no longer owns). Default no-op: an in-process section is
-      * never broken. */
-    def verifyFence(root: String): Unit = ()
-    /** TOKEN-CONDITIONAL log-tail write — the catalog-CAS shape: run
-      * `write` only if this holder's section epoch is still current, with
-      * check and write ATOMIC against takeovers (a takeover's epoch bump
-      * must either precede the check or wait for the write). The default
-      * composes `verifyFence` + `write` — correct for arbiters whose
-      * sections are never broken (in-process); durable arbiters with a
-      * takeover path must override with a genuinely conditional form, or
-      * a holder paused between the fence check and the write lands a
-      * record with a section it no longer owns. */
-    def conditionalTailWrite(root: String, write: () => Unit): Unit = {
-      verifyFence(root); write()
-    }
+    /** Publish `content` as record `name` of the table at `root`, complete
+      * or not at all, unless a record of that name exists; true = this
+      * call published it. */
+    def publish(root: String, name: String, content: String): Boolean
+    /** Every record of `root` as (name, stamp), the stamp changing
+      * whenever a record of that name is published anew. */
+    def list(root: String): Seq[(String, String)]
+    /** A record's content; None once it was deleted. */
+    def read(root: String, name: String): Option[String]
+    def delete(root: String, name: String): Unit
   }
 
-  /** Arbiter backed by PROCESS MEMORY: atomic for every thread of ONE JVM
-    * (a single-driver writer fleet — Spark executors never claim, only the
-    * driver does), and the spec's stand-in for a catalog CAS service. It
-    * provides NO cross-process protection — two processes each registering
-    * their own instance share nothing; a multi-process fleet on an S3-class
-    * store needs [[LockDirClaimArbiter]] (durable lock files on a
-    * create-exclusive-capable root) or a real catalog-side CAS. */
-  final class InProcessClaimArbiter extends ClaimArbiter {
-    private val claims = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]]()
-    private def set(root: String) = claims.computeIfAbsent(root,
-      _ => new java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]())
-    def tryClaim(root: String, version: Long): Boolean = set(root).add(version)
-    def release(root: String, version: Long): Unit = set(root).remove(version)
-    def maxClaimed(root: String): Long =
-      // one atomic navigation call — isEmpty-then-last would be a
-      // check-then-act racing a concurrent release
-      Option(set(root).floor(java.lang.Long.MAX_VALUE))
-        .map(_.longValue).getOrElse(-1L)
+  /** Records as files of the directory `dirOf(root)`. A publish writes a
+    * hidden temp file and then links it to its name: `Files.createLink` on
+    * local paths (an `ATOMIC_MOVE` replaces an existing file on Linux),
+    * `FileSystem.rename` elsewhere, which HDFS refuses onto an existing
+    * file. */
+  class RecordDir(hconf: org.apache.hadoop.conf.Configuration,
+      dirOf: String => String) extends ClaimArbiter {
+    private def localDir(dir: String): Option[java.nio.file.Path] = {
+      val u = new Path(dir).toUri
+      if (u.getScheme == null) Some(Paths.get(dir))
+      else if (u.getScheme == "file") Some(Paths.get(u.getPath))
+      else None
+    }
+    private def fs(dir: String) = new Path(dir).getFileSystem(hconf)
+
+    def publish(root: String, name: String, content: String): Boolean = {
+      val dir = dirOf(root)
+      val tmpName = s".tmp-${java.util.UUID.randomUUID()}"
+      localDir(dir) match {
+        case Some(d) =>
+          Files.createDirectories(d)
+          val tmp = d.resolve(tmpName)
+          Files.writeString(tmp, content)
+          try { Files.createLink(d.resolve(name), tmp); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+          finally scala.util.Try(Files.deleteIfExists(tmp))
+        case None =>
+          val tmp = new Path(dir, tmpName)
+          val out = fs(dir).create(tmp, false)
+          try out.write(content.getBytes("UTF-8")) finally out.close()
+          fs(dir).rename(tmp, new Path(dir, name)) || {
+            scala.util.Try(fs(dir).delete(tmp, false)); false
+          }
+      }
+    }
+
+    def list(root: String): Seq[(String, String)] = {
+      val dir = dirOf(root)
+      localDir(dir) match {
+        case Some(d) =>
+          if (!Files.isDirectory(d)) Nil
+          else {
+            val s = Files.list(d)
+            try {
+              import scala.jdk.CollectionConverters._
+              s.iterator().asScala.toList.flatMap { p =>
+                val n = p.getFileName.toString
+                if (n.startsWith(".")) None
+                else scala.util.Try(Files.readAttributes(p,
+                    classOf[java.nio.file.attribute.BasicFileAttributes]))
+                  .toOption.map(a => n -> s"${a.lastModifiedTime.to(
+                    java.util.concurrent.TimeUnit.NANOSECONDS)}:${a.size}")
+              }
+            } finally s.close()
+          }
+        case None =>
+          val d = new Path(dir)
+          try fs(dir).listStatus(d).toSeq.map(st => st.getPath.getName ->
+              s"${st.getModificationTime}:${st.getLen}")
+            .filterNot(_._1.startsWith("."))
+          catch { case _: java.io.FileNotFoundException => Nil }
+      }
+    }
+
+    def read(root: String, name: String): Option[String] = {
+      val dir = dirOf(root)
+      try Some(localDir(dir) match {
+        case Some(d) => Files.readString(d.resolve(name))
+        case None =>
+          val in = fs(dir).open(new Path(dir, name))
+          try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }) catch {
+        case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException => None
+      }
+    }
+
+    def delete(root: String, name: String): Unit = {
+      val dir = dirOf(root)
+      localDir(dir) match {
+        case Some(d) => Files.deleteIfExists(d.resolve(name))
+        case None => fs(dir).delete(new Path(dir, name), false)
+      }
+    }
   }
 
   private val claimArbiters =
     new java.util.concurrent.ConcurrentHashMap[String, ClaimArbiter]()
 
-  /** Route version claims for `root` through `arbiter` — required for
-    * multi-process writers on stores whose create-exclusive is best-effort
-    * (S3-class); a no-op improvement elsewhere. Cross-PROCESS fleets need a
-    * durable arbiter ([[LockDirClaimArbiter]], or a catalog CAS behind this
-    * trait) registered by EVERY writer process; [[InProcessClaimArbiter]]
-    * only arbitrates threads of one JVM. */
+  /** Keep `root`'s log records in `arbiter` instead of the root's own
+    * `_graft_log/` — required on stores that cannot publish without
+    * replacing (S3-class). Every process that opens the root, reader or
+    * writer, registers the same arbiter. */
   def registerClaimArbiter(root: String, arbiter: ClaimArbiter): Unit =
     claimArbiters.put(canonicalRoot(root), arbiter)
 
@@ -165,17 +209,11 @@ object SnapshotTable {
     * slow-writer reason). Overridable per call with `force = true`. */
   val MinOrphanAgeMillis: Long = 24L * 3600 * 1000
 
-  /** Grace period the expiry marker sweep gives below-log-head markers: a
-    * marker younger than this may belong to a SLOW writer still mid-commit
-    * (data written, log append pending) whose dir the marker protects from
-    * [[SnapshotTable#removeOrphans]]; only stale markers are swept. */
-  val MarkerSweepGraceMillis: Long = 3600L * 1000
-
   /** The on-disk layout every store is written in, stamped into
     * `_graft_format` when the store is created. Readers refuse any other
     * value, so a layout change bumps this instead of keeping a reader for
     * the old layout. */
-  private[sources] val FormatVersion = "2"
+  private[sources] val FormatVersion = "3"
 
   /** Record count from one parquet FOOTER — a metadata read, no data pages
     * opened. The shared helper for every consumer that needs ONLY the
@@ -439,24 +477,24 @@ object SnapshotTable {
   *                                  written before the first log record; a
   *                                  store holding another value (or none) is
   *                                  refused, never read through a fallback
-  *   root/_graft_meta.jsonl         commit log, one `version,ts_ms,op,rows`
-  *                                  line per commit, `rows` being the
-  *                                  table's row total after it (on scheme'd
-  *                                  roots a cache of `_graft_log/`)
-  *   root/_graft_log/v=N.rec        scheme'd roots only: one immutable record
-  *                                  per commit, holding its log line — the
-  *                                  commit point there
-  *   root/_graft_commits/v=N        claim markers of in-flight commits,
-  *                                  deleted once the version is logged
-  *   root/v=N/…/part-*.parquet      one immutable directory per commit that
+  *   root/_graft_log/v=N.rec        the commit log: one immutable record per
+  *                                  commit, `version,ts_ms,rows,dataId,op`,
+  *                                  `rows` being the table's row total after
+  *                                  it; publishing it is the commit point
+  *                                  (under a registered
+  *                                  [[SnapshotTable.ClaimArbiter]] the
+  *                                  records live in the arbiter instead)
+  *   root/data/<id>/…/part-*.parquet  one immutable directory per commit that
   *                                  wrote data (full snapshots, append deltas,
-  *                                  delete files, mor replacement rows), hive
-  *                                  `col=value/` dirs under a partition spec:
-  *                                  identity values, and the Iceberg spec's
-  *                                  tuple for a transform (`graft__month=661`
-  *                                  is February 2025, UTC)
-  *   root/v=N/_graft_deletes/       a mor UPDATE/MERGE commit's claimed keys
-  *   root/_graft_manifest/v=N.tsv   every `v=N` dir's manifest: a `#schema`
+  *                                  delete files, mor replacement rows), named
+  *                                  by a fresh id its log record carries;
+  *                                  hive `col=value/` dirs under a partition
+  *                                  spec: identity values (timestamps in UTC),
+  *                                  and the Iceberg spec's tuple for a
+  *                                  transform (`graft__month=661` is February
+  *                                  2025, UTC)
+  *   root/data/<id>/_graft_deletes/ a mor UPDATE/MERGE commit's claimed keys
+  *   root/_graft_manifest/<id>.tsv  every data dir's manifest: a `#schema`
   *                                  first line; `#spec` (the partition spec
   *                                  the files were written under); one
   *                                  `name records bytes stats` line per file,
@@ -465,10 +503,8 @@ object SnapshotTable {
   *                                  metadata scans never re-open data files);
   *                                  for a mor UPDATE/MERGE a `#keyschema`
   *                                  line and one `#keyfile` line per key file
-  *   root/_graft_refs.jsonl         local roots: branch/tag log, one
-  *                                  `name,kind,version` line per ref write
-  *   root/_graft_reflog/r-….rec     scheme'd roots: the same, one immutable
-  *                                  record per ref write
+  *   root/_graft_reflog/r-….rec     branch/tag log, one immutable
+  *                                  `name,kind,version` record per ref write
   *   root/_graft_partition          the declared partition spec
   *   root/_graft_sortorder          the declared write sort order
   *   root/_graft_mirror/            [[IcebergExport]]'s foreign-chain mirror
@@ -476,7 +512,7 @@ object SnapshotTable {
   *
   * Commit kinds (the `op` column of the log):
   *  - full-data ops (`overwrite`, `compact`, `update`, `cow-delete`, `merge`,
-  *    or any caller-supplied label): the `v=N` dir holds the whole table —
+  *    or any caller-supplied label): the data dir holds the whole table —
   *    copy-on-write commits, for mutations that touch a large table fraction;
   *  - `append`: the dir holds ONLY the delta (O(delta), the Iceberg
   *    `writeTo(...).append()` cost model — reference spark.py:88-89); readers
@@ -498,24 +534,22 @@ object SnapshotTable {
   * the commit log as a DataFrame; `expireSnapshots` mirrors Iceberg's
   * expire_snapshots maintenance procedure with reachability-based retention.
   * Commits use OPTIMISTIC CONCURRENCY (Iceberg's atomic-swap contract):
-  * versions are claimed via create-exclusive markers so concurrent writers
-  * always land distinct versions, and read-dependent mutations raise
-  * [[SnapshotTable.CommitConflictException]] when the head moved under them
-  * (re-read and retry). Plain appends commute with commits logged before
-  * their claim; a commit another process logs above the claim (only
-  * possible across processes) conflicts, so the log stays in claim order.
+  * an op writes its data under a fresh `data/<id>/` first, then publishes
+  * the record `v=N.rec` with N = last logged version + 1, only if no record
+  * of that name exists. A lost publish re-reads the log and tries the next
+  * number, so concurrent writers always land distinct versions, in log
+  * order, and a plain append never conflicts. Read-dependent mutations
+  * raise [[SnapshotTable.CommitConflictException]] when a record logged
+  * since their read moved the head they derived from (re-read and retry).
   */
 final class SnapshotTable(spark: SparkSession, root: String) {
-  import SnapshotTable.{Basis, Commutes, Meta, OnBranch, OnMain, Staged}
-
-  private val MetaFile = "_graft_meta.jsonl"
+  import SnapshotTable.{Basis, Commutes, LogRecord, Meta, OnBranch, OnMain, Staged}
 
   // ── metadata IO seam ─────────────────────────────────────────────────────
-  //    Every commit-log / refs / manifest / spec-file read and write goes
-  //    through these helpers: `file:` (and bare) roots keep java.nio — its
-  //    O_EXCL create and cheap appends are exactly right locally — while
-  //    scheme'd roots (`hdfs:`, `s3a:`, test schemes) route through Hadoop's
-  //    FileSystem, the same discipline the commit-marker CAS already follows.
+  //    Every manifest / spec-file read and write goes through these
+  //    helpers: `file:` (and bare) roots keep java.nio, which is cheap
+  //    locally, while scheme'd roots (`hdfs:`, `s3a:`, test schemes) route
+  //    through Hadoop's FileSystem (log and ref records: [[SnapshotTable.RecordDir]]).
   //    Without this the store could not operate at all on the object-store
   //    roots its 100 TB deployment story assumes (reference spark.py:52-59,
   //    readme.md:393-401: tables live on object storage).
@@ -555,70 +589,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     } else {
       val out = rootFs.create(hPath(rel), true) // creates parent dirs
       try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-
-  /** Test seam: invoked inside the no-append read-modify-write fallback,
-    * between the cache read and the cache rewrite — lets specs inject a
-    * cross-process writer into the exact window where an interleaved RMW
-    * drops the other writer's cache line (which the record ledger must
-    * survive). Production: no-op. */
-  private[sources] var beforeCacheRmwWrite: String => Unit = _ => ()
-
-  /** Create-or-append. HDFS (and local) append natively; filesystems
-    * without append (object stores) fall back to read-modify-write. On
-    * scheme'd roots the files written through here are CACHES of the
-    * per-entry record ledgers (`_graft_log/`, `_graft_reflog/` — see the
-    * commit-record note above [[readMeta]]), so a cross-process RMW
-    * interleave can at worst stale the cache, never lose a committed
-    * entry; readers reconcile against the records. The RMW still verifies
-    * its own line landed and retries a bounded number of times, narrowing
-    * even the cache-staleness window. */
-  private def metaAppendString(rel: String, content: String): Unit =
-    if (rootIsLocal) {
-      Files.createDirectories(nPath(rel).getParent)
-      Files.writeString(nPath(rel), content,
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    } else {
-      // create-exclusive first write; a concurrent creator (cross-process)
-      // throwing FileAlreadyExistsException just means the file now exists —
-      // fall through to the append/RMW path instead of failing the commit
-      val created =
-        if (rootFs.exists(hPath(rel))) false
-        else
-          try {
-            val out = rootFs.create(hPath(rel), false)
-            try out.write(content.getBytes("UTF-8")) finally out.close()
-            true
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-            case _: java.nio.file.FileAlreadyExistsException => false
-            case _: java.io.IOException if rootFs.exists(hPath(rel)) => false
-          }
-      if (!created)
-        try {
-          val out = rootFs.append(hPath(rel))
-          try out.write(content.getBytes("UTF-8")) finally out.close()
-        } catch {
-          case _: UnsupportedOperationException =>
-            // no-append store: read-modify-write, then re-read and verify
-            // OUR line survived (a concurrent RMW landing after ours would
-            // have dropped it); bounded retries — on exhaustion the cache
-            // is stale but the record ledger still holds the entry
-            var attempts = 0
-            var landed = false
-            while (!landed && attempts < 5) {
-              attempts += 1
-              val base = metaReadString(rel)
-              // a retry may find its line already restored by a third
-              // writer's rewrite — appending again would DUPLICATE it
-              if (base.contains(content)) landed = true
-              else {
-                beforeCacheRmwWrite(rel)
-                metaWriteString(rel, base + content)
-                landed = metaReadString(rel).contains(content)
-              }
-            }
-        }
     }
 
   private def metaDelete(rel: String): Unit =
@@ -692,7 +662,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * insert-only merge still appends). */
   private val MorMergeOp = "mor-merge"
 
-  private def morUpdateDeletesDir(v: Long) = s"$root/v=$v/_graft_deletes"
+  private def keysDirOf(id: String) = s"${dataDirOf(id)}/_graft_deletes"
 
   /** Is this a mor UPDATE/MERGE commit — (claimed keys, replacement rows)?
     * The shape `IcebergExport.syncStore` mirrors as an equality-delete
@@ -704,10 +674,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * key record in the version's manifest; None when the commit claimed
     * none (an insert-only merge). */
   private[graft] def morClaimedKeys(v: Long): Option[DataFrame] = {
-    val (schema, files) = manifestOf(v).keys.getOrElse(
+    val id = idOf(v)
+    val (schema, files) = manifestOf(id).keys.getOrElse(
       throw new IllegalStateException(
         s"manifest of mor commit v=$v at $root has no $KeySchemaTag record"))
-    filesRelation(schema, files.map(morUpdateDeletesDir(v) -> _), Seq(v),
+    filesRelation(schema, files.map(keysDirOf(id) -> _), Seq(id),
       recordScans = false)
   }
 
@@ -739,13 +710,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * schema and new reads see the evolved one. */
   private val EvolveOpPrefix = "evolve:"
 
-  private val RefsFile = "_graft_refs.jsonl"
-
   // ── hidden partitioning (Iceberg partition specs; reference
   //    clinicdata.sql:51, finance_example.sql:25, insurance_example.sql:23 —
   //    every workshop table is partitioned). A store-level spec of identity
   //    columns and/or transforms lays every version dir out as
-  //    `v=N/<col>=…/part-*.parquet`. Each transform derives a HIDDEN column
+  //    `data/<id>/<col>=…/part-*.parquet`. Each transform derives a HIDDEN column
   //    holding the spec's tuple ([[FilePruning.partColumn]]: UTC epoch
   //    ints for months/years/hours, a UTC date for days, the seed-0
   //    murmur3 bucket, the truncated value) that readers never see
@@ -841,13 +810,13 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * commit time, and a file's footer range already lies in its truncate
     * cell. */
   private def transformConjuncts(schema: StructType,
-      conj: Seq[Expression], windowVersions: Seq[Long]): Seq[Expression] =
+      conj: Seq[Expression], windowIds: Seq[String]): Seq[Expression] =
     partitionSpec.map(FilePruning.parseSpecEntry).find(_.kind == "bucket") match {
       case None => conj
       case Some(sf) =>
         val derived = FilePruning.deriveTuples(conj, Seq(sf.copy(name = BucketCol)),
           FilePruning.typesOf(schema))
-        if (derived == conj || !bucketDerivationSound(sf, windowVersions)) conj
+        if (derived == conj || !bucketDerivationSound(sf, windowIds)) conj
         else derived
     }
 
@@ -855,15 +824,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * field `sf` sound for every file this read resolves? Files written
     * under a DIFFERENT bucket entry (spec evolution changing N or the
     * source) carry pins from the old hash-mod. Like Iceberg's per-file spec
-    * id, each manifest records its write spec ([[manifestSpec]]); an
-    * unpartitioned write records none, and its files carry no bucket dirs.
-    * Checked over the resolved window's data dirs only, so planning stays
-    * O(chain), not O(history). */
+    * id, each manifest records its write spec (`#spec`); an unpartitioned
+    * write records none, and its files carry no bucket dirs. Checked over
+    * the resolved window's data dirs only, so planning stays O(chain), not
+    * O(history). */
   private def bucketDerivationSound(sf: FilePruning.SpecField,
-      windowVersions: Seq[Long]): Boolean =
-    windowVersions.forall { v =>
-      !readManifest(v)._2.exists(_.name.contains(BucketCol + "=")) ||
-        manifestSpec(v).exists(_.map(FilePruning.parseSpecEntry).exists(w =>
+      windowIds: Seq[String]): Boolean =
+    windowIds.map(manifestOf).forall { m =>
+      !m.files.exists(_.name.contains(BucketCol + "=")) ||
+        m.spec.exists(_.map(FilePruning.parseSpecEntry).exists(w =>
           w.transform == sf.transform && w.source.equalsIgnoreCase(sf.source)))
     }
 
@@ -970,9 +939,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   /** Data-dir write with the store's partition spec and write sort order
     * applied (every data commit of a partitioned store lays out hive dirs;
     * key files don't). */
-  private def writeDataDir(df: DataFrame, v: Long): Long = {
+  private def writeDataDir(df: DataFrame, id: String): Long = {
     val (derived, pcols) = applyPartitionSpec(df)
-    writeVersionDir(applySortOrder(derived), v, pcols, partitionSpec)
+    writeVersionDir(applySortOrder(derived), id, pcols, partitionSpec)
   }
 
   /** Per-file stats carried by the file's PARTITION PATH: each `k=v` dir
@@ -1008,37 +977,31 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   private val ManifestDir = "_graft_manifest"
-  private def manifestRel(v: Long) = s"$ManifestDir/v=$v.tsv"
+  private def manifestRel(id: String) = s"$ManifestDir/$id.tsv"
 
-  // ── commit log / refs log ──────────────────────────────────────────────
+  // ── refs ───────────────────────────────────────────────────────────────
 
-  /** Named refs (Iceberg branches/tags): append-only `name,kind,version`
-    * log, last line per name wins; a `dropped` line is a tombstone — the
-    * name is free for re-creation and its pins are released. */
-  // Refs pin retention (expiry's reachability reads them), so on scheme'd
-  // roots they get the same create-only-object treatment as the commit
-  // ledger: each ref WRITE is its own immutable record
-  // `_graft_reflog/r-<b64url(name)>.<seq>.rec` (never mutated in place — an
-  // in-place overwrite would open a truncation window where a concurrent
-  // expiry reads an empty record and loses the ref's retention pin); per
-  // name the HIGHEST sequence wins, `dropped` is a tombstone, and each
-  // write opportunistically GC's the name's superseded records. Writers to
-  // different names never touch the same object; concurrent writers to the
-  // SAME name race highest-seq-wins, which is the append log's
-  // last-line-wins semantics. Local roots keep the appended log; each root
-  // kind reads only the form it writes.
-  private val RefRecordsDir = "_graft_reflog"
+  /** Named refs (Iceberg branches/tags). Each ref WRITE is its own
+    * immutable record `_graft_reflog/r-<b64url(name)>.<seq>.rec` holding
+    * `name,kind,version`; per name the HIGHEST sequence wins, `dropped` is
+    * a tombstone (the name is free for re-creation and its pins are
+    * released), and each write GC's the name's superseded records. Writers
+    * to different names never touch the same record; concurrent writers to
+    * the SAME name race highest-seq-wins (last write wins). Refs pin
+    * retention (expiry's reachability reads them), so a record is never
+    * mutated in place: an in-place rewrite would open a window where a
+    * concurrent expiry reads no ref and loses its pin. */
+  private lazy val refRecords = new SnapshotTable.RecordDir(
+    spark.sparkContext.hadoopConfiguration, _ => s"$root/_graft_reflog")
   private def refRecordPrefix(name: String) = "r-" +
     java.util.Base64.getUrlEncoder.withoutPadding
       .encodeToString(name.getBytes("UTF-8"))
-  private def refRecordRel(name: String, seq: String) =
-    s"$RefRecordsDir/${refRecordPrefix(name)}.$seq.rec"
 
   /** Test seam: invoked between readRefs' record LIST and its per-record
-    * GETs — lets specs inject a concurrent [[writeRef]] (whose opportunistic
-    * GC deletes every record the LIST returned) into the exact window the
-    * re-list recovery protects. Production: no-op. */
-    private[sources] var afterRefsList: () => Unit = () => ()
+    * GETs — lets specs inject a concurrent [[writeRef]] (whose GC deletes
+    * every record the LIST returned) into the exact window the re-list
+    * recovery protects. Production: no-op. */
+  private[sources] var afterRefsList: () => Unit = () => ()
 
   private def readRefs(): Map[String, (String, Long)] = {
     def parse(line: String): (String, (String, Long)) = {
@@ -1047,71 +1010,49 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }
     // One LIST + per-name GETs. Returns (resolved entries, true when some
     // listed name yielded NO readable record — the LIST-then-GET race with
-    // a concurrent writeRef whose opportunistic GC deleted every record the
-    // list returned; the caller re-lists once and the fresh list contains
-    // the writer's newer record). Without the retry a ref would transiently
-    // VANISH from readRefs, and an expiry in that window would lose the
-    // branch/tag's retention pin — the loss class the create-only record
-    // design exists to prevent.
+    // a concurrent writeRef whose GC deleted every record the list
+    // returned; the caller re-lists once and the fresh list contains the
+    // writer's newer record). Without the retry a ref would transiently
+    // VANISH, and an expiry in that window would lose its retention pin.
     def listOnce(): (Seq[(String, (String, Long))], Boolean) = {
-      val dir = hPath(RefRecordsDir)
-      if (!rootFs.exists(dir)) (Nil, false)
-      else {
-        val listed = rootFs.listStatus(dir).toSeq
-          .map(_.getPath.getName)
-          .filter(n => n.startsWith("r-") && n.endsWith(".rec"))
-        afterRefsList()
-        var vanished = false
-        val entries = listed
-          .groupBy(_.split('.').head) // records of one name share a prefix
-          .toSeq.sortBy(_._1)
-          .flatMap { case (_, names) =>
-            // highest sequence wins; a mid-write record (no terminating
-            // newline yet) is skipped and its predecessor still serves
-            val best = names.sorted.reverseIterator.flatMap { n =>
-              scala.util.Try {
-                val raw = metaReadString(s"$RefRecordsDir/$n")
-                require(raw.endsWith("\n"), s"mid-write record $n")
-                parse(raw.split('\n').head)
-              }.toOption
-            }.nextOption()
-            if (best.isEmpty) vanished = true
-            best
-          }
-        (entries, vanished)
-      }
+      val listed = refRecords.list(root).map(_._1)
+        .filter(n => n.startsWith("r-") && n.endsWith(".rec"))
+      afterRefsList()
+      var vanished = false
+      val entries = listed
+        .groupBy(_.split('.').head) // records of one name share a prefix
+        .toSeq.sortBy(_._1)
+        .flatMap { case (_, names) =>
+          val best = names.sorted.reverseIterator
+            .flatMap(n => refRecords.read(root, n)).nextOption()
+            .map(raw => parse(raw.split('\n').head))
+          if (best.isEmpty) vanished = true
+          best
+        }
+      (entries, vanished)
     }
-    val entries =
-      if (rootIsLocal) {
-        if (!metaExists(RefsFile)) Nil else metaReadLines(RefsFile).map(parse)
-      } else {
-        val (first, vanished) = listOnce()
-        if (!vanished) first else listOnce()._1
-      }
-    entries.toMap.filter(_._2._1 != "dropped")
+    val (first, vanished) = listOnce()
+    (if (!vanished) first else listOnce()._1).toMap.filter(_._2._1 != "dropped")
   }
 
   private def writeRef(name: String, kind: String, v: Long): Unit = {
-    // the refs log is line/comma-delimited and branch names ride inside
+    // the ref record is comma-delimited and branch names ride inside
     // colon-delimited op markers — a name containing any of those would
-    // corrupt every later read of the whole log, so reject at write time
+    // corrupt every later read, so reject at write time
     require(name.nonEmpty && !name.exists(c => c == ',' || c == ':' || c == '\n' || c == '\r'),
       s"invalid ref name '$name': must be non-empty, no ',' ':' or line breaks")
-    if (rootIsLocal) metaAppendString(RefsFile, s"$name,$kind,$v\n")
-    else {
-      val seq = "%020d-%06d".format(System.currentTimeMillis(),
-        SnapshotTable.refSeqCounter.getAndIncrement() % 1000000)
-      metaWriteString(refRecordRel(name, seq), s"$name,$kind,$v\n")
-      // opportunistic GC of this name's superseded records — readers pick
-      // the highest seq, so deleting lower ones is always safe
-      val dir = hPath(RefRecordsDir)
-      val mine = s"${refRecordPrefix(name)}.$seq.rec"
-      if (rootFs.exists(dir))
-        rootFs.listStatus(dir).map(_.getPath.getName)
-          .filter(n => n.startsWith(refRecordPrefix(name) + ".") &&
-            n.endsWith(".rec") && n < mine)
-          .foreach(n => metaDelete(s"$RefRecordsDir/$n"))
-    }
+    def mine() = "%s.%020d-%06d.rec".format(refRecordPrefix(name),
+      System.currentTimeMillis(),
+      SnapshotTable.refSeqCounter.getAndIncrement() % 1000000)
+    // a same-millisecond name from another process is taken: next sequence
+    val published = Iterator.continually(mine())
+      .find(n => refRecords.publish(root, n, s"$name,$kind,$v\n")).get
+    // GC of this name's superseded records — readers pick the highest seq,
+    // so deleting lower ones is always safe
+    refRecords.list(root).map(_._1)
+      .filter(n => n.startsWith(refRecordPrefix(name) + ".") &&
+        n.endsWith(".rec") && n < published)
+      .foreach(refRecords.delete(root, _))
   }
 
   private def isBranchOp(op: String): Boolean = op.startsWith(BranchOpPrefix)
@@ -1122,7 +1063,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     (p(1), p(2), if (p.length > 3) Some(p(3).toLong) else None)
   }
 
-  /** The version whose `v=N` dir holds this entry's data (itself, unless
+  /** The version whose own data dir holds this entry's data (itself, unless
     * the entry is an alias commit). Only meaningful for entries that have a
     * single data dir (full-data and alias ops). */
   private def dataDirVersion(m: Meta): Long =
@@ -1156,82 +1097,86 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   private def nextVersion(meta: Seq[Meta]): Long =
     meta.lastOption.map(_._1 + 1).getOrElse(0L)
 
-  // ── commit-record ledger (scheme'd roots only) ─────────────────────────
-  //    On object-store roots the shared log FILE cannot be the correctness
-  //    anchor: stores without native append fall back to read-modify-write
-  //    in [[metaAppendString]], and two cross-PROCESS writers can interleave
-  //    that RMW and silently drop an already-committed line. So on non-local
-  //    roots the COMMIT POINT is instead the creation of a per-version
-  //    record file `_graft_log/v=N.rec` holding exactly the log line: the
-  //    name is unique per claimed version (the marker CAS hands out distinct
-  //    numbers), so no two writers ever touch the same record and nothing
-  //    can be lost to an overwrite. The shared log file is then a derivable
-  //    CACHE — [[readMeta]] reconciles it against the records (one LIST per
-  //    read; missing lines are re-read from their records), and expiry's
-  //    full rewrite heals it. This is Iceberg's shape: immutable per-commit
-  //    metadata + a swap/record that is the only mutable step (spark.py:
-  //    26-28, SURVEY §3.1 step 5). `file:`/bare roots keep the plain
-  //    appended log — local appends are serialized by the root lock and
-  //    cheap, and the record ledger would only add IO.
+  // ── commit log ─────────────────────────────────────────────────────────
+  //    One immutable record per commit, `_graft_log/v=N.rec` (or in the
+  //    root's registered arbiter), holding `version,ts_ms,rows,dataId,op`:
+  //    the op goes last so a caller's label may contain commas, and `-` is
+  //    the data id of a metadata-only commit. The record names the commit's
+  //    `data/<id>/` dir, so the log is the one version → dir map.
+
   private val LogRecordsDir = "_graft_log"
-  private def logRecordRel(v: Long) = s"$LogRecordsDir/v=$v.rec"
+  private def logRecordName(v: Long) = s"v=$v.rec"
 
-  private def parseMetaLine(line: String): Meta = {
-    val m = line.split(",", 4)
-    (m(0).toLong, m(1).toLong, m(2), m(3).toLong)
+  private lazy val ownRecords = new SnapshotTable.RecordDir(
+    spark.sparkContext.hadoopConfiguration, _ => s"$root/$LogRecordsDir")
+
+  /** This root's log record store, looked up per call: an arbiter may be
+    * registered after the instance was made. */
+  private def records: SnapshotTable.ClaimArbiter =
+    SnapshotTable.arbiterFor(root).getOrElse(ownRecords)
+
+  private lazy val canonRoot = SnapshotTable.canonicalRoot(root)
+
+  private def parseRecord(raw: String): LogRecord = {
+    val m = raw.stripSuffix("\n").split(",", 5)
+    ((m(0).toLong, m(1).toLong, m(4), m(2).toLong), Some(m(3)).filter(_ != "-"))
   }
 
-  /** Versions with a commit record on disk (scheme'd roots). One LIST. */
-  private def listLogRecordVersions(): Seq[Long] = {
-    val dir = hPath(LogRecordsDir)
-    if (!rootFs.exists(dir)) Nil
-    else rootFs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v=") && n.endsWith(".rec"))
-      .flatMap(_.stripPrefix("v=").stripSuffix(".rec").toLongOption)
+  /** The log, oldest first: one listing, plus one read per record this JVM
+    * has not parsed under its current stamp ([[SnapshotTable.logMemo]]). A
+    * record deleted between the listing and its read (a concurrent expiry)
+    * is skipped. */
+  private def readLog(): Seq[LogRecord] = {
+    val listed = records.list(canonRoot)
+      .filter { case (n, _) => n.startsWith("v=") && n.endsWith(".rec") }
+    // an empty log may still be another layout's store: its stamp refuses it
+    if (!formatChecked && (listed.nonEmpty || metaExists(FormatFile))) requireFormat()
+    val memo = SnapshotTable.logMemo.getOrDefault(canonRoot, Map.empty)
+    val parsed = listed.flatMap { case (name, stamp) =>
+      memo.get(name).filter(_._1 == stamp).orElse(
+        records.read(canonRoot, name).map(raw => (stamp, parseRecord(raw))))
+        .map(name -> _)
+    }.toMap
+    SnapshotTable.logMemo.put(canonRoot, parsed)
+    parsed.values.map(_._2).toSeq.sortBy(_._1._1)
   }
 
-  /** Reconciliation memo for scheme'd roots, keyed by the cache file's
-    * (modificationTime, length): EVERY cache mutation — including the RMW
-    * rewrites that can lose lines — changes the file, so the memo can
-    * never hide a lost line; the one staleness it admits is a crashed
-    * writer's record-only commit staying invisible TO THIS INSTANCE until
-    * any later cache write (fresh instances — recovery reads, new
-    * readers — always reconcile anew). What it buys: an offset poll or
-    * repeat commit-path read costs ONE status RPC instead of a cache GET +
-    * a `_graft_log` LIST per call — the remote metadata hot path. */
-  @volatile private var metaMemo: Option[(Long, Long, Seq[Meta])] = None
+  private def readMeta(): Seq[Meta] = readLog().map(_._1)
 
-  /** `fresh = true` bypasses [[metaMemo]] and reconciles anew — REQUIRED on
-    * the commit/claim validation path: the memo's (mtime, length) key can
-    * ALIAS on object stores with coarse mtime granularity (S3: 1 s) when two
-    * interleaved RMW cache rewrites land equal-length content within one
-    * tick, and a claim re-validation served from that stale memo could
-    * re-claim — and clobber — an already-committed version whose marker
-    * self-GC'd. Reads that only serve data keep the memo (their staleness
-    * window is the documented crashed-writer one); the correctness decisions
-    * (claim re-validation, final head check) pay one fresh LIST instead. */
-  private def readMeta(fresh: Boolean = false): Seq[Meta] = {
-    val log =
-      if (!rootIsLocal) {
-        val status =
-          try Some(rootFs.getFileStatus(hPath(MetaFile)))
-          catch { case _: java.io.FileNotFoundException => None }
-        readMetaRemote(status, fresh)
-      } else if (!metaExists(MetaFile)) Nil
-      // defensive: interleaved RMW repairs could land one version's line
-      // twice in the cache — a duplicate entry would double that delta in
-      // chain resolution, so keep the first occurrence per version
-      else metaReadLines(MetaFile).map(parseMetaLine).distinctBy(_._1).sortBy(_._1)
-    if (!formatChecked && log.nonEmpty) requireFormat()
-    log
+  /** Version `v`'s log record, from the log as last read here (read anew
+    * when `v` is not in it). */
+  private def recordOf(v: Long): Option[LogRecord] = {
+    def memoized = Option(SnapshotTable.logMemo.get(canonRoot))
+      .flatMap(_.get(logRecordName(v))).map(_._2)
+    memoized.orElse { readLog(); memoized }
   }
+
+  /** The data id of version `v`'s own dir. */
+  private def idOf(v: Long): String = recordOf(v).flatMap(_._2).getOrElse(
+    throw new IllegalStateException(s"no data dir for v=$v at $root"))
+
+  /** The data files version `v`'s own commit wrote, from its manifest (none
+    * for a metadata-only commit). */
+  private[sources] def ownFiles(v: Long): Seq[SnapshotTable.ManifestFile] =
+    recordOf(v).flatMap(_._2).fold(Seq.empty[SnapshotTable.ManifestFile])(
+      manifestOf(_).files)
+
+  private val DataDir = "data"
+  private def dataDirOf(id: String) = s"$root/$DataDir/$id"
+
+  /** Version `v`'s own data dir: the one version → path lookup. */
+  private[graft] def versionDir(v: Long): String = dataDirOf(idOf(v))
+
+  /** Commits that write no data: their record names no dir. */
+  private def isMetadataOnly(op: String): Boolean =
+    op.startsWith(AliasOpPrefix) || op.startsWith(AsOfOpPrefix) ||
+      op.startsWith(EvolveOpPrefix)
 
   private val FormatFile = "_graft_format"
 
-  /** Set once this instance has seen a non-empty log with the right
-    * format stamp: the stamp is written before the first log record and
-    * never changes, so one check per instance covers every later read. */
+  /** Set once this instance has seen the right format stamp: the stamp is
+    * written before the first log record and never changes, so one check
+    * per instance covers every later read. */
   @volatile private var formatChecked = false
 
   private def requireFormat(): Unit = {
@@ -1244,107 +1189,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     formatChecked = true
   }
 
-  private def readMetaRemote(
-      status: Option[org.apache.hadoop.fs.FileStatus],
-      fresh: Boolean = false): Seq[Meta] = {
-    val key = status.map(s => (s.getModificationTime, s.getLen))
-    if (!fresh) metaMemo.foreach { case (m, l, res) =>
-      if (key.contains((m, l))) return res
-    }
-    val cached =
-      if (status.isEmpty) Nil
-      else metaReadLines(MetaFile).map(parseMetaLine)
-    val all = {
-        // reconcile: any committed record the cache is missing (a lost RMW
-        // append, or a writer that died between its record write and its
-        // cache append) is read back from its own file. A record is only
-        // accepted with its terminating newline — on stores where
-        // create+write+close is not atomic (HDFS-shape) a reader can see a
-        // PREFIX of a mid-write record, and a prefix truncated inside the
-        // final number would otherwise parse as a wrong row count; the
-        // newline is the record's last byte, so requiring it rejects every
-        // truncation. A record that does not parse is likewise mid-write —
-        // its commit point has not landed yet.
-        val inCache = cached.map(_._1).toSet
-        cached ++ listLogRecordVersions().filterNot(inCache).flatMap { v =>
-          scala.util.Try {
-            val raw = metaReadString(logRecordRel(v))
-            require(raw.endsWith("\n"), s"mid-write record v=$v")
-            parseMetaLine(raw.split('\n').head)
-          }.toOption
-        }
-      }
-    // defensive: interleaved RMW repairs could land one version's line
-    // twice in the cache — a duplicate entry would double that delta in
-    // chain resolution, so keep the first occurrence per version
-    val res = all.distinctBy(_._1).sortBy(_._1)
-    key.foreach { case (m, l) => metaMemo = Some((m, l, res)) }
-    res
-  }
-
-  /** Test seam: runs inside the commit section just before the fence
-    * check + log-tail write (models a GC pause at the worst point). */
-  private[sources] var beforeLogTail: () => Unit = () => ()
-
-  /** Test seam: runs AFTER the early fence check passes, just before the
-    * token-conditional tail write (models a GC pause in the residual
-    * window the r18 fence left open — the conditional write closes it). */
-  private[sources] var afterFenceBeforeTail: () => Unit = () => ()
-
-  /** Step 6 of [[transact]]: write the log record, inside the commit
-    * section. */
-  private def appendMeta(version: Long, op: String, rows: Long): Unit = {
-    beforeLogTail()
-    // fencing, early reject: a holder whose commit.lock was taken over
-    // (stale-break by another process after a long pause) must NOT
-    // write the tail
-    SnapshotTable.arbiterFor(root)
-      .foreach(_.verifyFence(SnapshotTable.canonicalRoot(root)))
-    afterFenceBeforeTail()
-    val line = s"$version,${System.currentTimeMillis()},$op,$rows\n"
-    // the tail write itself is TOKEN-CONDITIONAL on the arbiter seam:
-    // epoch check + write are atomic against takeovers, so a pause
-    // between the fence check above and here cannot land the record
-    def writeTail(): Unit = {
-      // scheme'd roots: the record file IS the commit point (see the
-      // ledger note above); the shared log below is only a cache of it
-      if (!rootIsLocal) metaWriteString(logRecordRel(version), line)
-      metaAppendString(MetaFile, line)
-    }
-    SnapshotTable.arbiterFor(root) match {
-      case Some(a) => a.conditionalTailWrite(
-        SnapshotTable.canonicalRoot(root), () => writeTail())
-      case None => writeTail()
-    }
-    // self-GC: once the version is LOGGED the marker has done its job —
-    // `claimVersion` re-validates against the log after every create, so a
-    // racer that re-creates this number can never keep it. Without this a
-    // long-lived table accrues one empty file per version forever and every
-    // commit pays an O(total-versions) marker listing (on an object store,
-    // the classic metadata bottleneck).
-    deleteMarker(version)
-  }
-
-  // ── optimistic concurrency (Iceberg's atomic-swap commit: SURVEY §3.1
-  //    step 5, reference spark.py:88-89 → REST-catalog CAS). A version is
-  //    CLAIMED by atomically creating `_graft_commits/v=N` (create-exclusive
-  //    — POSIX atomic); losing the race re-reads and retries with the next
-  //    number, so two concurrent writers always land DISTINCT versions and
-  //    neither overwrites the other's files or log entry. Every write op
-  //    commits through [[transact]], which also validates that the head the
-  //    op's content was derived from still stands — a moved head means the
-  //    computed result is stale, and the commit raises
-  //    [[SnapshotTable.CommitConflictException]] for the caller to re-read
-  //    and retry, exactly Iceberg's conflict-detection contract. Plain
-  //    appends commute with whatever was logged before their claim; one
-  //    logged above it (another process's) conflicts. ───────────────────
-
-  // Marker IO goes through Hadoop's FileSystem so the CAS discipline holds
-  // on `hdfs:`/`s3a:` roots, not just the local FS (the DedupStream
-  // discipline). Local roots keep java.nio's O_EXCL create — RawLocalFS's
-  // create(overwrite=false) is check-then-act, strictly weaker; HDFS's is
-  // atomic server-side; S3A is best-effort (a real deployment closes that
-  // window with a catalog-side CAS, as [[transact]] documents).
   private lazy val rootFs: org.apache.hadoop.fs.FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -1353,124 +1197,29 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     scheme == null || scheme == "file"
   }
 
-  private def commitMarkersDir = new Path(root, "_graft_commits")
-  private def markerPath(v: Long) = new Path(commitMarkersDir, s"v=$v")
-
-  /** Create-exclusive on the marker: true = this writer owns version `v`.
-    * With a registered [[SnapshotTable.ClaimArbiter]] the CAS is the
-    * arbiter's (the catalog-CAS seam for stores whose create-exclusive is
-    * best-effort); the marker file is still written, best-effort, so
-    * [[removeOrphans]] keeps protecting this in-flight writer's dir. */
-  private def tryClaimMarker(v: Long): Boolean =
-    SnapshotTable.arbiterFor(root) match {
-      case Some(arb) =>
-        if (!arb.tryClaim(SnapshotTable.canonicalRoot(root), v)) false
-        else {
-          try {
-            rootFs.mkdirs(commitMarkersDir)
-            rootFs.create(markerPath(v), true).close()
-          } catch { case scala.util.control.NonFatal(_) => () }
-          true
-        }
-      case None => tryClaimMarkerFs(v)
-    }
-
-  private def tryClaimMarkerFs(v: Long): Boolean =
-    if (rootIsLocal) {
-      try {
-        Files.createDirectories(Paths.get(localRootPath, "_graft_commits"))
-        Files.createFile(Paths.get(localRootPath, "_graft_commits", s"v=$v")); true
-      }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try { rootFs.create(markerPath(v), false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.io.IOException if rootFs.exists(markerPath(v)) => false
-      }
-    }
-
-  private def deleteMarker(v: Long): Unit = {
-    SnapshotTable.arbiterFor(root)
-      .foreach(_.release(SnapshotTable.canonicalRoot(root), v))
-    rootFs.delete(markerPath(v), false)
-  }
-
-  /** Highest marker currently on disk (or held by the arbiter, when one is
-    * registered). Markers self-GC once logged ([[appendMeta]]), so this
-    * lists O(in-flight claims), not O(versions). */
-  private def maxClaimed(): Long = {
-    val fsMax =
-      if (!rootFs.exists(commitMarkersDir)) -1L
-      else rootFs.listStatus(commitMarkersDir).iterator
-        .flatMap(s => s.getPath.getName.stripPrefix("v=").toLongOption)
-        .foldLeft(-1L)(math.max)
-    math.max(fsMax, SnapshotTable.arbiterFor(root)
-      .map(_.maxClaimed(SnapshotTable.canonicalRoot(root))).getOrElse(-1L))
-  }
-
-  /** Test seam: invoked right after a marker create SUCCEEDS, before the
-    * claim's log re-validation — lets specs inject a cross-process writer
-    * landing (log append + marker self-GC) into the exact window the
-    * re-validation protects. Production: no-op. */
-  private[sources] var afterMarkerClaim: Long => Unit = _ => ()
-
-  /** Step 2 of [[transact]]: atomically claim the next free version number.
-    * Never returns a version another writer holds; a lost race simply moves
-    * to the next number. After winning a create, the claim is RE-VALIDATED
-    * against the log: markers self-GC once their version is logged, so a
-    * racer whose meta read predated that append could re-create a spent
-    * number — the re-validation releases it and moves past the log
-    * instead. */
-  private def claimVersion(meta: Seq[Meta]): Long = {
-    rootFs.mkdirs(commitMarkersDir)
-    var next = math.max(nextVersion(meta), maxClaimed() + 1)
-    var claimed = false
-    while (!claimed) {
-      if (!tryClaimMarker(next)) next += 1
-      else {
-        afterMarkerClaim(next)
-        val logged = nextVersion(readMeta(fresh = true))
-        if (next < logged) { deleteMarker(next); next = math.max(logged, maxClaimed() + 1) }
-        else claimed = true
-      }
-    }
-    next
-  }
-
   /** Per-root in-process lock: commits from concurrent threads of one JVM
-    * serialize their claim→write→log section (cross-process writers are
-    * ordered by the marker CAS and the arbiter's commit section). Keyed by
-    * the SAME canonical form the scan-stats map uses — java.nio
-    * canonicalization garbles scheme'd roots (`s3a://b/x` →
+    * serialize (cross-process writers are ordered by the record publish
+    * alone). Keyed by the SAME canonical form the scan-stats map uses —
+    * java.nio canonicalization garbles scheme'd roots (`s3a://b/x` →
     * `<cwd>/s3a:/b/x`), so two spellings of one remote root would take
     * different locks. */
   private def withRootLock[T](body: => T): T =
-    SnapshotTable.rootLocks
-      .computeIfAbsent(SnapshotTable.canonicalRoot(root), _ => new Object)
+    SnapshotTable.rootLocks.computeIfAbsent(canonRoot, _ => new Object)
       .synchronized(body)
 
-  /** Test seam: invoked after a commit's stage has written its data, just
-    * before [[transact]] enters the commit section for the final head
-    * validation — lets specs inject a cross-process writer into the exact
-    * window the re-check protects, or a crash whose debris the claim
-    * marker protects until removeOrphans. Production: no-op. */
+  /** Test seam: invoked after a commit's stage has written its data, before
+    * each log read that precedes a record publish — lets specs inject
+    * another process's commit into the window the publish loop handles.
+    * Production: no-op. */
   private[sources] var beforeFinalHeadCheck: () => Unit = () => ()
 
-  /** Undo a claim whose commit will not be logged (a failed stage or a lost
-    * conflict check): delete everything written under the claimed version
-    * (data dir with any `_graft_deletes` key file inside it, manifest
-    * sidecar, cached manifest) and then the claim marker itself, so the
-    * attempt leaves NO orphaned files. Releasing the marker is safe: a
-    * conflict is raised only after the winning writer logged its entry, so
-    * `claimVersion`'s `max(nextVersion, maxClaimed + 1)` floor has moved
-    * past every live version, and a re-claim of this number can only happen
-    * after this cleanup completed (marker deletion is last). */
-  private def releaseClaim(v: Long): Unit = {
-    rootFs.delete(new Path(root, s"v=$v"), true)
-    metaDelete(manifestRel(v))
-    manifestCache.synchronized { manifestCache.remove(v) }
-    deleteMarker(v)
+  /** Delete what an unlogged commit wrote: its data dir (with any
+    * `_graft_deletes` key file inside it), its manifest, the cached
+    * manifest. */
+  private def discardData(id: String): Unit = {
+    rootFs.delete(new Path(dataDirOf(id)), true)
+    metaDelete(manifestRel(id))
+    manifestCache.synchronized { manifestCache.remove(id) }
   }
 
   /** The row count of a commit that leaves its head's rows as they were. */
@@ -1490,37 +1239,28 @@ final class SnapshotTable(spark: SparkSession, root: String) {
 
   /** The one write protocol: every store write op commits through here.
     *  1. Under the root lock, read the log and `basis`'s head; a head the
-    *     caller pinned that has already moved conflicts before any claim.
-    *  2. Claim a version ([[claimVersion]]).
-    *  3. Run `stage(log, head, version)`: the op's data and key-file writes.
-    *  4. Enter the commit section and read the log fresh.
-    *  5. Validate that no version above the claim was logged and that
-    *     `basis`'s head still stands (a [[Commutes]] op skips the head
-    *     check), then evaluate the staged row count on the fresh log.
-    *  6. Stamp `_graft_format` if the log is empty, then append the log
-    *     record ([[appendMeta]]).
-    *  7. Run the staged post-log step, still inside the section, so a
-    *     branch's validate → log → ref move cannot interleave with another
-    *     writer's.
-    * A throw in steps 3–5 releases the claim ([[releaseClaim]]); a conflict
-    * raises [[SnapshotTable.CommitConflictException]] for the caller to
-    * re-read and retry.
+    *     caller pinned that has already moved conflicts before any write.
+    *  2. Run `stage(log, head, id)`: the op writes its data and key files
+    *     under the fresh `data/<id>/`, and its manifest.
+    *  3. Loop: read the log; conflict when a record logged since step 1
+    *     moved `basis`'s head ([[Commutes]]: none does); evaluate the
+    *     staged row count on that log; stamp `_graft_format` on an empty
+    *     log; publish `v=N.rec`, N = last logged version + 1, unless a
+    *     record of that name exists. A lost publish goes round again.
+    *  4. Run the staged post-log step with the version that landed.
+    * A throw before the record lands deletes `data/<id>/` and its
+    * manifest; a conflict raises [[SnapshotTable.CommitConflictException]]
+    * for the caller to re-read and retry.
     *
-    * The commit section is a registered arbiter's commit mutex
-    * ([[SnapshotTable.ClaimArbiter.lockCommit]]; [[LockDirClaimArbiter]] is
-    * the durable implementation): entered before the fresh read, so no
-    * record lands between the check and the append, and left after step 7.
-    * Data writes stay OUTSIDE it — at 100 TB the heavy parquet writes of
-    * concurrent commits proceed in parallel and only the short metadata
-    * tail serializes, the split Iceberg gets from its catalog-side CAS.
-    * Within one JVM the root lock alone serializes; without an arbiter,
-    * cross-process writers get Iceberg's optimistic window, which a real
-    * deployment closes with a catalog-side CAS.
+    * No lock spans processes: concurrent commits write disjoint dirs, and
+    * the publish alone orders them, so the log holds every commit in the
+    * order it landed and each row total is counted on the log beneath it.
+    * Within one JVM the root lock serializes writers.
     *
     * A stage must not call another write op: the root lock is reentrant,
-    * so a nested claim would go unnoticed. */
+    * so a nested commit would go unnoticed. */
   private def transact(basis: Basis)(
-      stage: (Seq[Meta], Option[Long], Long) => Staged): Long = withRootLock {
+      stage: (Seq[Meta], Option[Long], String) => Staged): Long = withRootLock {
     def headIn(log: Seq[Meta]): Option[Long] = basis match {
       case OnBranch(b) => Some(branchHead(b).getOrElse(
         throw new IllegalStateException(s"no branch $b at $root")))
@@ -1533,41 +1273,45 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       case _                    => head
     }
     if (head != expected) headConflict(basis, expected, head)
-    val next = claimVersion(meta)
-    def releasedOnThrow[T](body: => T): T =
-      try body catch { case e: Throwable => releaseClaim(next); throw e }
-    val staged = releasedOnThrow(stage(meta, head, next))
-    // outside the release: a throw here models a crash after the data write
-    beforeFinalHeadCheck()
-    val arbiter = SnapshotTable.arbiterFor(root)
-    val canon = SnapshotTable.canonicalRoot(root)
-    arbiter.foreach(_.lockCommit(canon))
-    try {
-      val rows = releasedOnThrow {
-        val log = readMeta(fresh = true)
-        // another process logged above this claim: landing below it would
-        // put this commit under a restart point (its rows leave main) or
-        // under an append whose count misses them — keep claim order
-        log.lastOption.filter(_._1 > next).foreach(above =>
-          throw new SnapshotTable.CommitConflictException(
-            s"commit conflict at $root: v=${above._1} was logged above this " +
-              s"commit's claim v=$next; re-read and retry"))
-        val landsOn = headIn(log)
-        if (basis != Commutes && landsOn != expected)
-          headConflict(basis, expected, landsOn)
-        // a new store: stamp its format before its first log record
-        if (log.isEmpty) metaWriteString(FormatFile, SnapshotTable.FormatVersion + "\n")
-        staged.rows(log, landsOn)
+    val readUpTo = meta.lastOption.fold(-1L)(_._1)
+    val id = java.util.UUID.randomUUID().toString
+    val (landed, staged) =
+      try {
+        val staged = stage(meta, head, id)
+        val dataId = if (isMetadataOnly(staged.op)) None else Some(id)
+        var landed = -1L
+        while (landed < 0) {
+          beforeFinalHeadCheck()
+          val log = readMeta()
+          val since = log.filter(_._1 > readUpTo)
+          val now = headIn(log)
+          val moved = basis match {
+            case Commutes    => false
+            case OnMain(_)   => since.exists(m => !isBranchOp(m._3))
+            case OnBranch(b) => now != expected ||
+              since.exists(m => isBranchOp(m._3) && branchOpParts(m._3)._1 == b)
+          }
+          if (moved) headConflict(basis, expected, now)
+          val v = nextVersion(log)
+          val line = s"$v,${System.currentTimeMillis()},${staged.rows(log, now)}," +
+            s"${dataId.getOrElse("-")},${staged.op}\n"
+          // a new store: stamp its format before its first log record
+          if (log.isEmpty) metaWriteString(FormatFile, SnapshotTable.FormatVersion + "\n")
+          if (records.publish(canonRoot, logRecordName(v), line)) landed = v
+        }
+        (landed, staged)
+      } catch {
+        case e: Throwable =>
+          scala.util.Try(discardData(id))
+          throw e
       }
-      appendMeta(next, staged.op, rows)
-      staged.afterLog()
-    } finally arbiter.foreach(_.unlockCommit(canon))
-    next
+    staged.afterLog(landed)
+    landed
   }
 
   // ── data-dir write path (manifest-producing) ───────────────────────────
 
-  /** Write `df` as version `v`'s data dir and its manifest sidecar, reading
+  /** Write `df` as data dir `id` and its manifest sidecar, reading
     * per-file record counts AND per-column (min, max) ranges from parquet
     * FOOTERS (driver-side, O(files just written) — the commit-time stats
     * pass Iceberg does when it writes manifests; the ranges are what
@@ -1575,9 +1319,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * never re-scan the data they just wrote. `partitionBy` lays the dir out
     * as `<col>=…/part-*.parquet` hive partitions (manifest names stay
     * relative, so stats and metadata scans see through the partition dirs). */
-  private def writeVersionDir(df: DataFrame, v: Long,
+  private def writeVersionDir(df: DataFrame, id: String,
       partitionBy: Seq[String] = Nil, spec: Seq[String] = Nil): Long = {
-    val stats = writeFiles(df, s"$root/v=$v", partitionBy, spec)
+    val stats = writeFiles(df, dataDirOf(id), partitionBy, spec)
     // the spec in force when these files were WRITTEN rides the manifest
     // (Iceberg's spec-id-per-file): transform-derived pruning conjuncts are
     // only sound against files whose recorded spec matches the derivation
@@ -1585,7 +1329,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       if (spec.isEmpty) Nil
       else Seq("#spec\t" + java.util.Base64.getEncoder.encodeToString(
         spec.mkString(",").getBytes("UTF-8")))
-    metaWriteString(manifestRel(v),
+    metaWriteString(manifestRel(id),
       ((schemaLine(SchemaTag, df.schema) +: specLine) ++ stats.map(fileLine))
         .mkString("", "\n", "\n"))
     stats.map(_.records).sum
@@ -1599,7 +1343,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * are unavailable). */
   private def writeFiles(df: DataFrame, dir: String, partitionBy: Seq[String],
       spec: Seq[String] = Nil): Seq[SnapshotTable.ManifestFile] = {
-    val w = df.write.mode("overwrite")
+    // identity TIMESTAMP partition dirs are formatted in the writer's
+    // `timeZone` option (else the session zone): UTC keeps them zone-free
+    val w = df.write.mode("overwrite").option("timeZone", "UTC")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val base = new Path(dir)
@@ -1633,16 +1379,17 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   private def fileLine(f: SnapshotTable.ManifestFile): String =
     s"${f.name}\t${f.records}\t${f.bytes}\t${SnapshotTable.encodeStats(f.stats)}"
 
-  /** Write a mor UPDATE/MERGE commit's claimed keys into version `v`'s
+  /** Write a mor UPDATE/MERGE commit's claimed keys into data dir `id`'s
     * `_graft_deletes/` (only when `nonEmpty`: a commit that claimed nothing
-    * writes no key file) and append their record to `v`'s manifest. Runs
-    * before the commit is logged, so crash debris is the unlogged version's
-    * dir and manifest, which removeOrphans reclaims together. */
-  private def writeKeyFiles(v: Long, keys: DataFrame, nonEmpty: Boolean): Unit = {
-    val files = if (nonEmpty) writeFiles(keys, morUpdateDeletesDir(v), Nil) else Nil
-    metaAppendString(manifestRel(v), (schemaLine(KeySchemaTag, keys.schema) +:
-      files.map(f => KeyFileTag + "\t" + fileLine(f))).mkString("", "\n", "\n"))
-    manifestCache.synchronized { manifestCache.remove(v) }
+    * writes no key file) and add their record to `id`'s manifest. Runs
+    * before the commit is logged, so crash debris is the unlogged dir and
+    * manifest, which removeOrphans reclaims together. */
+  private def writeKeyFiles(id: String, keys: DataFrame, nonEmpty: Boolean): Unit = {
+    val files = if (nonEmpty) writeFiles(keys, keysDirOf(id), Nil) else Nil
+    metaWriteString(manifestRel(id), metaReadString(manifestRel(id)) +
+      (schemaLine(KeySchemaTag, keys.schema) +: files.map(f =>
+        KeyFileTag + "\t" + fileLine(f))).mkString("", "\n", "\n"))
+    manifestCache.synchronized { manifestCache.remove(id) }
   }
 
   /** Per-instance manifest cache: a version's manifest is immutable once
@@ -1652,32 +1399,27 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * must not re-open 1000 files. Synchronized: concurrent committers
     * share the instance. */
   private val manifestCache =
-    scala.collection.mutable.HashMap.empty[Long, SnapshotTable.Manifest]
+    scala.collection.mutable.HashMap.empty[String, SnapshotTable.Manifest]
 
-  private def manifestOf(v: Long): SnapshotTable.Manifest =
+  private def manifestOf(id: String): SnapshotTable.Manifest =
     manifestCache.synchronized {
-      manifestCache.getOrElseUpdate(v, readManifestUncached(v))
+      manifestCache.getOrElseUpdate(id, readManifestUncached(id))
     }
-
-  /** The partition spec version `v`'s files were WRITTEN under, when its
-    * manifest recorded one (partitioned writes do). */
-  private[sources] def manifestSpec(v: Long): Option[Seq[String]] =
-    manifestOf(v).spec
 
   /** The manifest written with version `v`'s data dir: (schema, per-file
     * name/records/bytes/column-ranges). */
   private[sources] def readManifest(v: Long): (StructType, Seq[SnapshotTable.ManifestFile]) = {
-    val m = manifestOf(v)
+    val m = manifestOf(idOf(v))
     (m.schema, m.files)
   }
 
-  /** Every data version has a manifest headed by `#schema` whose file lines
+  /** Every data dir has a manifest headed by `#schema` whose file lines
     * carry four fields; anything else is not this store's format. */
-  private def readManifestUncached(v: Long): SnapshotTable.Manifest = {
+  private def readManifestUncached(id: String): SnapshotTable.Manifest = {
     def corrupt(what: String) = new IllegalStateException(
-      s"manifest of v=$v at $root $what")
-    if (!metaExists(manifestRel(v))) throw corrupt(s"is missing (${manifestRel(v)})")
-    val lines = metaReadLines(manifestRel(v))
+      s"manifest of data dir $id at $root $what")
+    if (!metaExists(manifestRel(id))) throw corrupt(s"is missing (${manifestRel(id)})")
+    val lines = metaReadLines(manifestRel(id))
     def payload(l: String) = new String(
       java.util.Base64.getDecoder.decode(l.split("\t", 2)(1)), "UTF-8")
     def schemaOf(l: String) =
@@ -1703,10 +1445,12 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * the manifest recorded, where a bare parquet read would fail. Every
     * other dir plans over [[ManifestFileIndex]], so pushed-down predicates
     * skip files at physical-planning time on EVERY read path. */
-  private def readVersionDir(v: Long): DataFrame = {
-    val (schema, files) = readManifest(v)
-    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else manifestRelation(Seq(v)).getOrElse(keptFrame(schema, files.map(v -> _)))
+  private def readVersionDir(v: Long): DataFrame = readDataDir(idOf(v))
+
+  private def readDataDir(id: String): DataFrame = {
+    val m = manifestOf(id)
+    if (m.files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+    else manifestRelation(Seq(id)).getOrElse(keptFrame(m.schema, m.files.map(id -> _)))
   }
 
   /** A hive partition-dir value string in Catalyst INTERNAL form for the
@@ -1725,24 +1469,24 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     case DateType =>
       scala.util.Try(java.time.LocalDate.parse(raw).toEpochDay.toInt).toOption
     case TimestampType =>
-      // hive layout writes timestamp partition values in the session zone
+      // store writes format timestamp partition values in UTC (writeFiles)
       org.apache.spark.sql.catalyst.util.DateTimeUtils.stringToTimestamp(
         org.apache.spark.unsafe.types.UTF8String.fromString(raw),
-        java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+        java.time.ZoneOffset.UTC)
     case _ => None
   }
 
-  /** The given version dirs as ONE manifest-backed parquet relation over
+  /** The given data dirs as ONE manifest-backed parquet relation over
     * every manifest-listed file ([[filesRelation]]). None when schemas
     * differ across dirs or [[filesRelation]] declines the layout; the
     * caller's fallback read only costs the pruning, never correctness. */
-  private def manifestRelation(versions: Seq[Long]): Option[DataFrame] = {
-    val manifests = versions.map(v => v -> readManifest(v))
-    val schema = manifests.head._2._1
-    if (manifests.exists(_._2._1.json != schema.json)) return None
+  private def manifestRelation(ids: Seq[String]): Option[DataFrame] = {
+    val manifests = ids.map(id => id -> manifestOf(id))
+    val schema = manifests.head._2.schema
+    if (manifests.exists(_._2.schema.json != schema.json)) return None
     filesRelation(schema,
-      manifests.flatMap { case (v, (_, fs)) => fs.map(s"$root/v=$v" -> _) },
-      versions, recordScans = true)
+      manifests.flatMap { case (id, m) => m.files.map(dataDirOf(id) -> _) },
+      ids, recordScans = true)
   }
 
   /** Manifest-recorded files as ONE parquet relation planned from the
@@ -1757,8 +1501,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * eagerly-measured variant.
     *
     * `files` pairs each file with the dir its manifest name is relative
-    * to; `versions` are the version dirs read (transform-derivation
-    * soundness). `recordScans = false` is for pruned subsets and key
+    * to; `ids` are the data dirs read (transform-derivation soundness). `recordScans = false` is for pruned subsets and key
     * files: the scan records nothing into [[SnapshotTable.scanStats]]
     * ([[lastPruneStats]] counted the subset eagerly) and every field reads
     * nullable, nested ones too, as the schema-inferring reads of these
@@ -1767,7 +1510,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * None when there are no files, or the partition layout is inconsistent
     * / carries a value the declared type cannot parse. */
   private def filesRelation(schema: StructType,
-      files: Seq[(String, SnapshotTable.ManifestFile)], versions: Seq[Long],
+      files: Seq[(String, SnapshotTable.ManifestFile)], ids: Seq[String],
       recordScans: Boolean): Option[DataFrame] = {
     if (files.isEmpty) return None
     def dirPairs(name: String): Seq[(String, String)] =
@@ -1806,7 +1549,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }
     if (entryOpts.exists(_.isEmpty)) return None
     val index = new ManifestFileIndex(spark, root, schema, partitionSchema,
-      entryOpts.flatten, conj => transformConjuncts(schema, conj, versions),
+      entryOpts.flatten, conj => transformConjuncts(schema, conj, ids),
       recordScans)
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, partitionSchema, dataSchema, None,
@@ -1827,15 +1570,16 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * [[filesRelation]] declines reads per dir with the schema given
     * explicitly, partition columns recovered from the hive dirs. */
   private def keptFrame(schema: StructType,
-      kept: Seq[(Long, SnapshotTable.ManifestFile)],
+      kept: Seq[(String, SnapshotTable.ManifestFile)],
       wrap: DataFrame => DataFrame = identity): DataFrame =
-    filesRelation(schema, kept.map { case (v, f) => s"$root/v=$v" -> f },
+    filesRelation(schema, kept.map { case (id, f) => dataDirOf(id) -> f },
       kept.map(_._1).distinct, recordScans = false).map(wrap).getOrElse(
-      kept.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, fs) =>
+      kept.map(_._1).distinct.map(id => id -> kept.filter(_._1 == id)).map { case (id, fs) =>
         wrap(inSchemaOrder(schema, spark.read
           .schema(SnapshotTable.allNullable(schema).asInstanceOf[StructType])
-          .option("basePath", s"$root/v=$v")
-          .parquet(fs.map(f => s"$root/v=$v/${f._2.name}"): _*)))
+          .option("basePath", dataDirOf(id))
+          .option("timeZone", "UTC")
+          .parquet(fs.map(f => s"${dataDirOf(id)}/${f._2.name}"): _*)))
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
 
   // ── resolution ─────────────────────────────────────────────────────────
@@ -2000,15 +1744,14 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     commit(df, op, expectedHead = None)
 
   /** [[commit]] with optimistic conflict detection: when `expectedHead` is
-    * given, the commit claims its version atomically and then verifies
-    * main's head is still exactly that value — raising
-    * [[SnapshotTable.CommitConflictException]] (and releasing the claim) if
-    * another writer moved it. Pass the head the operation's data was READ
+    * given, the commit lands only while main's head is still exactly that
+    * value — raising [[SnapshotTable.CommitConflictException]] (and
+    * deleting what it wrote) if another writer moved it. Pass the head the operation's data was READ
     * from; ops whose result doesn't depend on prior state pass None. */
   def commit(df: DataFrame, op: String, expectedHead: Option[Option[Long]]): Long =
     transact(expectedHead.fold[Basis](Commutes)(e => OnMain(Some(e)))) {
-      (_, _, next) =>
-        val written = writeDataDir(df, next)
+      (_, _, id) =>
+        val written = writeDataDir(df, id)
         Staged(op, (log, head) =>
           if (isDeltaAppend(op)) head.fold(0L)(tableRowsAsOf(log, _)) + written
           else written)
@@ -2070,7 +1813,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     // derivation soundness is checked against the dirs THIS read resolves
     // (O(chain)), never the full commit log (O(history))
     val conj = transformConjuncts(resolved.schema, conj0,
-      dataDirsOf(meta, v).map(dirVersionOf))
+      dataDirsOf(meta, v).map(idOf))
     pruneKept = 0L; pruneTotal = 0L
     resolveVersion(meta, v, Some(conj)).filter(pred).drop(hiddenReadCols: _*)
   }
@@ -2108,7 +1851,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         if (kept.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else if (kept.size == files.size) readVersionDir(v)
-        else keptFrame(schema, kept.map(v -> _))
+        else keptFrame(schema, kept.map(idOf(v) -> _))
       case None => readVersionDir(v)
     }
 
@@ -2186,15 +1929,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
                 val (schema, files) = readManifest(m._1)
                 val kept = SnapshotTable.keptFiles(schema, files, cs)
                 pruneKept += kept.size; pruneTotal += files.size
-                (schema, kept.map(m._1 -> _))
+                (schema, kept.map(idOf(m._1) -> _))
               }
               val kept = perDir.flatMap(_._2)
               if (kept.isEmpty)
                 spark.createDataFrame(spark.sparkContext.emptyRDD[Row], perDir.head._1)
               else keptFrame(perDir.head._1, kept, posWrap)
-            case None => manifestRelation(run.map(_._1)).getOrElse(
+            case None => manifestRelation(run.map(m => idOf(m._1))).getOrElse(
               keptFrame(readManifest(run.head._1)._1, run.flatMap(m =>
-                readManifest(m._1)._2.map(m._1 -> _)), posWrap))
+                readManifest(m._1)._2.map(idOf(m._1) -> _)), posWrap))
           }
           Some(acc.map(_.unionByName(posWrap(df), allowMissingColumns = true))
             .getOrElse(posWrap(df)))
@@ -2461,50 +2204,30 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         } else Set(v)
     }
 
-  /** Expire every version not reachable from `keepSeed`, main's head, or a
-    * live ref — the shared retention core of both VACUUM forms. Reachability
+  /** Expire every version not reachable from `keepSeed`, main's head, the
+    * last logged version, or a live ref — the shared retention core of both
+    * VACUUM forms. The last record stays because the next commit numbers
+    * itself from it: deleting it would hand its version to a new commit,
+    * and a reader pinned at that version would see other content. Reachability
     * extends each kept version to everything its resolution reads (delta
     * chains back to their base, mor-delete bases, alias/asof targets), so
     * expiry can never orphan a readable snapshot's files. Returns the
     * expired versions (dirs + manifests deleted, log entries dropped). */
   private def expireExcept(keepSeed: Set[Long]): Seq[Long] = {
-    val meta = readMeta()
-    val seed = keepSeed ++ mainHead(meta) ++ readRefs().values.map(_._2)
+    val log = readLog()
+    val meta = log.map(_._1)
+    val seed = keepSeed ++ mainHead(meta) ++ meta.lastOption.map(_._1) ++
+      readRefs().values.map(_._2)
     val keep = seed.flatMap(v => reachable(meta, v))
-    val expire = meta.map(_._1).filterNot(keep).sorted
-    expire.foreach { v =>
-      rootFs.delete(new Path(root, s"v=$v"), true)
-      metaDelete(manifestRel(v))
-      // drop the commit record too (scheme'd roots), or readMeta's
-      // reconciliation would resurrect the expired entry from it
-      metaDelete(logRecordRel(v))
+    // newest first, each record before its files: whatever a crash leaves
+    // logged still reads (an expired version's base goes after it), and a
+    // dir whose record is gone is an orphan removeOrphans reclaims
+    val expire = log.filterNot(r => keep(r._1._1)).sortBy(-_._1._1)
+    expire.foreach { case (m, dataId) =>
+      records.delete(canonRoot, logRecordName(m._1))
+      dataId.foreach(discardData)
     }
-    val expired = expire.toSet
-    val remaining = meta.filterNot(m => expired(m._1))
-    val content = remaining.map { case (v, t, o, r) => s"$v,$t,$o,$r" }
-      .mkString("", "\n", if (remaining.nonEmpty) "\n" else "")
-    metaWriteString(MetaFile, content)
-    // marker sweep for crashed writers (nothing else reclaims their
-    // markers): any marker BELOW the log's next version is spent (its
-    // writer either logged — and the re-validation in claimVersion keeps a
-    // re-created number from being kept — or died after other writers
-    // moved the log past it). Markers at or above the log head may be
-    // in-flight claims and are never touched; below-head markers
-    // additionally get a GRACE PERIOD — a SLOW writer whose claimed number
-    // the log moved past is still mid-write (it will conflict and release
-    // its files), and sweeping its young marker would let a removeOrphans
-    // pass delete the dir under it.
-    if (rootFs.exists(commitMarkersDir)) {
-      val floor = nextVersion(remaining)
-      val graceCutoff =
-        System.currentTimeMillis() - SnapshotTable.MarkerSweepGraceMillis
-      rootFs.listStatus(commitMarkersDir).foreach { s =>
-        s.getPath.getName.stripPrefix("v=").toLongOption
-          .filter(v => v < floor && s.getModificationTime < graceCutoff)
-          .foreach(deleteMarker)
-      }
-    }
-    expire
+    expire.map(_._1._1).reverse
   }
 
   /** X2 — expire old snapshots, keeping the most recent `keep` versions
@@ -2523,49 +2246,37 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   def expireSnapshotsOlderThan(tsMillis: Long): Seq[Long] =
     expireExcept(readMeta().filter(_._2 >= tsMillis).map(_._1).toSet)
 
-  /** Iceberg's remove_orphan_files: delete `v=N` dirs that NO commit
-    * references and NO claim marker protects, and that are older than the
-    * age threshold (the slow-writer guard Iceberg's procedure also takes,
-    * default 3 days). Orphans arise when a writer crashes between its data
-    * write and its log append and its claim marker is later swept by
-    * expiry — from then on nothing ever deletes the dir, and at 100 TB
-    * crashed-ingest leftovers are real money. Never touches logged
-    * versions (including expired-then-aliased targets — their log entries
-    * are retained by expiry's reachability), marker-protected in-flight
-    * claims, or dirs younger than the threshold.
+  /** Iceberg's remove_orphan_files: delete `data/<id>` dirs and manifests
+    * that NO log record names and that are older than the age threshold
+    * (the slow-writer guard Iceberg's procedure also takes, default 3
+    * days). Orphans arise when a writer crashes between its data write and
+    * its record publish, or an expiry between a record delete and its
+    * files' — nothing else ever deletes them, and at 100 TB
+    * crashed-ingest leftovers are real money.
     *
     * The threshold has a FLOOR of [[SnapshotTable.MinOrphanAgeMillis]]
     * (24 h — Iceberg's remove_orphan_files refuses short intervals the
-    * same way): a marker-swept but still-in-flight slow writer's dir must
-    * never qualify, or its eventual log append would point at a deleted
-    * dir. Callers that genuinely need a shorter window (tests, forensic
-    * cleanup of a known-dead writer) must pass `force = true`, taking on
-    * the slow-writer risk explicitly. Returns removed versions. */
+    * same way): a still-in-flight slow writer's dir must never qualify, or
+    * its record would name a deleted dir. Callers that genuinely need a
+    * shorter window (tests, forensic cleanup of a known-dead writer) must
+    * pass `force = true`, taking on the slow-writer risk explicitly.
+    * Returns the removed data ids. */
   def removeOrphans(olderThanMillis: Long = 3L * 24 * 3600 * 1000,
-      force: Boolean = false): Seq[Long] = withRootLock {
+      force: Boolean = false): Seq[String] = withRootLock {
     require(force || olderThanMillis >= SnapshotTable.MinOrphanAgeMillis,
       s"removeOrphans(olderThanMillis = $olderThanMillis): intervals under " +
         s"${SnapshotTable.MinOrphanAgeMillis / 3600000} h risk deleting a " +
-        "slow in-flight writer's data dir (its claim marker may already be " +
-        "swept); pass force = true to accept that explicitly")
-    val meta = readMeta()
-    val logged = meta.map(_._1).toSet
-    val aliased = meta.map(dataDirVersion).toSet // defensive: alias targets
+        "slow in-flight writer's data dir; pass force = true to accept that explicitly")
+    val named = readLog().flatMap(_._2).toSet
     val cutoff = System.currentTimeMillis() - olderThanMillis
-    if (!rootFs.exists(new Path(root))) Nil
-    else rootFs.listStatus(new Path(root)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .flatMap { s =>
-        s.getPath.getName.stripPrefix("v=").toLongOption.filter { v =>
-          !logged(v) && !aliased(v) && !rootFs.exists(markerPath(v)) &&
-            s.getModificationTime < cutoff
-        }.map { v =>
-          rootFs.delete(s.getPath, true)
-          metaDelete(manifestRel(v))
-          manifestCache.synchronized { manifestCache.remove(v) }
-          v
-        }
-      }.sorted
+    def aged(dir: Path): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+      try rootFs.listStatus(dir).toSeq.map(st => st.getPath.getName -> st)
+        .filter(_._2.getModificationTime < cutoff)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val dirs = aged(hPath(DataDir)).map(_._1).filterNot(named)
+    val manifests = aged(hPath(ManifestDir)).map(_._1.stripSuffix(".tsv"))
+      .filterNot(named)
+    (dirs ++ manifests).distinct.sorted.map { id => discardData(id); id }
   }
 
   /** Directories holding the CURRENT snapshot's DATA files (base + live
@@ -2573,20 +2284,24 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * file-level metadata scans should list — Iceberg's files/partitions
     * tables likewise report data files, with delete files accounted
     * separately. */
-  def currentDataDirs: Seq[String] = {
+  def currentDataDirs: Seq[String] = currentDataVersions.map(versionDir)
+
+  /** The versions whose own dirs are [[currentDataDirs]]. */
+  private[sources] def currentDataVersions: Seq[Long] = {
     val meta = readMeta()
     val v = mainHead(meta).getOrElse(
       throw new IllegalStateException(s"no snapshots at $root"))
     dataDirsOf(meta, v)
   }
 
-  private def dataDirsOf(meta: Seq[Meta], v: Long): Seq[String] = {
+  /** The versions whose own data dirs version `v` reads. */
+  private def dataDirsOf(meta: Seq[Meta], v: Long): Seq[Long] = {
     val entry = meta.find(_._1 == v).getOrElse(
       throw new IllegalStateException(s"no snapshot v=$v at $root"))
     if (isBranchOp(entry._3)) {
       val (_, subOp, parent) = branchOpParts(entry._3)
-      if (subOp == DeltaAppendOp) dataDirsOf(meta, parent.get) :+ s"$root/v=$v"
-      else Seq(s"$root/v=$v")
+      if (subOp == DeltaAppendOp) dataDirsOf(meta, parent.get) :+ v
+      else Seq(v)
     } else {
       val upTo = meta.filter(m => m._1 <= v && !isBranchOp(m._3))
       val baseIdx = upTo.lastIndexWhere(m => isRestart(m._3))
@@ -2594,11 +2309,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         if (baseIdx < 0) (None, upTo) else (Some(upTo(baseIdx)), upTo.drop(baseIdx + 1))
       val baseDirs = start.toSeq.flatMap { m =>
         if (m._3.startsWith(AsOfOpPrefix)) dataDirsOf(meta, asOfTarget(m._3))
-        else Seq(s"$root/v=${dataDirVersion(m)}")
+        else Seq(dataDirVersion(m))
       }
       baseDirs ++ tail.collect {
         case m if isDeltaAppend(m._3) || m._3 == MorUpdateOp ||
-          m._3 == MorMergeOp => s"$root/v=${m._1}"
+          m._3 == MorMergeOp => m._1
       }
     }
   }
@@ -2614,7 +2329,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val meta = readMeta()
     val head = mainHead(meta).getOrElse(
       throw new IllegalStateException(s"no snapshots at $root"))
-    val perDir = dataDirsOf(meta, head).map(dirVersionOf).map { v =>
+    val perDir = dataDirsOf(meta, head).map { v =>
       (v, readManifest(v)._2.map(_.bytes))
     }
     val upTo = meta.filter(m => m._1 <= head && !isBranchOp(m._3))
@@ -2623,11 +2338,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       m._3 == MorUpdateOp || m._3 == MorMergeOp)
     (perDir, folds.toLong)
   }
-
-  /** The data-dir version number encoded in a current data dir path (for
-    * manifest lookup by consumers that walk [[currentDataDirs]]). */
-  private[sources] def dirVersionOf(dir: String): Long =
-    dir.substring(dir.lastIndexOf("v=") + 2).toLong
 
   /** X2 — compaction (mirror of rewrite_data_files): rewrite the current
     * version's data as `targetFiles` files in a new FULL snapshot, folding
@@ -2703,9 +2413,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * and readers anti-join on all of them. */
   def deleteWhereMor(pred: Column, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteWhereMor needs at least one key column")
-    transact(OnMain()) { (_, _, next) =>
+    transact(OnMain()) { (_, _, id) =>
       val n = writeVersionDir(
-        read().filter(pred).select(keyCols.map(col): _*).distinct(), next)
+        read().filter(pred).select(keyCols.map(col): _*).distinct(), id)
       Staged(MorDeleteOp, (log, h) => headRows(log, h) - n)
     }
   }
@@ -2719,7 +2429,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * are idempotent by value. */
   def deleteKeysMor(keys: DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteKeysMor needs at least one key column")
-    transact(OnMain()) { (_, _, next) =>
+    transact(OnMain()) { (_, _, id) =>
       val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
       // the logged total drops by the MATCHED row count, not the key
       // count: foreign keys may match zero rows (replays) or be absent
@@ -2731,7 +2441,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       val matched = cur.join(broadcast(distinctKeys),
         keyCols.map(c => cur(c) <=> distinctKeys(c)).reduce(_ && _),
         "left_semi").count()
-      writeVersionDir(distinctKeys, next)
+      writeVersionDir(distinctKeys, id)
       Staged(MorDeleteOp, (log, h) => headRows(log, h) - matched)
     }
   }
@@ -2743,13 +2453,13 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * of duplicated rows (an equality delete would remove every copy).
     * O(matching rows) like the equality form; readers fold it as one
     * broadcast anti-join on the provenance pair until compact(). */
-  def deleteWherePos(pred: Column): Long = transact(OnMain()) { (meta, head, next) =>
+  def deleteWherePos(pred: Column): Long = transact(OnMain()) { (meta, head, id) =>
     val positions = resolveVersion(meta, headOrThrow(head), None, withPos = true)
       .filter(pred <=> lit(true))
       .select(col(FileCol), col(PosCol))
       .filter(col(FileCol).isNotNull) // rows with no file provenance can't
                                       // be named by a position-delete file
-    val n = writeVersionDir(positions, next)
+    val n = writeVersionDir(positions, id)
     Staged(PosDeleteOp, (log, h) => headRows(log, h) - n)
   }
 
@@ -2766,7 +2476,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * mirror drift, not a no-op. O(delta) commit: one table scan with a
     * broadcast semi-join gate, the shuffle holds only matched copies. */
   def deleteRowsMultiset(rows: DataFrame, tag: Option[String] = None): Long =
-    transact(OnMain()) { (meta, head, next) =>
+    transact(OnMain()) { (meta, head, id) =>
     import org.apache.spark.sql.expressions.Window
     val live = resolveVersion(meta, headOrThrow(head), None, withPos = true)
     val valueCols = live.columns.filterNot(hiddenReadCols.contains).toSeq
@@ -2783,7 +2493,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= col("__del_n") && col(FileCol).isNotNull)
       .select(col(FileCol), col(PosCol))
-    val n = writeVersionDir(chosen, next)
+    val n = writeVersionDir(chosen, id)
     val asked = rows.count()
     if (n != asked) throw new IllegalStateException(
       s"deleteRowsMultiset: $asked copies requested but only $n live " +
@@ -2848,15 +2558,15 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     require(clash.isEmpty,
       s"merge-on-read UPDATE cannot reassign the key column ${clash.getOrElse("")}; " +
         "use the copy-on-write mode (or DELETE + INSERT) to change identifiers")
-    transact(OnMain()) { (_, _, next) =>
+    transact(OnMain()) { (_, _, id) =>
       val base = read()
       val updated = onFields(base.schema, set, "UPDATE")
         .foldLeft(base.filter(pred <=> lit(true))) { case (df, (c, e)) => df.withColumn(c, e) }
-      writeDataDir(updated, next)
+      writeDataDir(updated, id)
       // the delete keys come from the just-written REPLACEMENT files — a
       // delta-sized read, not a second predicate pass over the table
-      val written = readVersionDir(next)
-      writeKeyFiles(next, written.select(keyCols.map(col): _*).distinct(),
+      val written = readDataDir(id)
+      writeKeyFiles(id, written.select(keyCols.map(col): _*).distinct(),
         nonEmpty = !written.isEmpty)
       Staged(MorUpdateOp, headRows)
     }
@@ -2991,7 +2701,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   def mergeIntoMor(source: DataFrame, keyCol: String,
       matched: Seq[(Option[Column], Option[Map[String, Column]])],
       notMatched: Seq[(Option[Column], Option[Map[String, Column]])]): Long =
-    transact(OnMain()) { (meta, head, next) =>
+    transact(OnMain()) { (meta, head, id) =>
     requireUniqueKeys(source, keyCol)
     val target = resolveVersion(meta, headOrThrow(head), None)
     val tSchema = target.schema
@@ -3046,10 +2756,10 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }.reduceOption(_ unionByName _)
     val data = insertRows.map(replacements.unionByName(_)).getOrElse(replacements)
     // ONE commit: data files (updated copies + inserts) + claimed keys
-    val written = writeDataDir(data, next)
+    val written = writeDataDir(data, id)
     val keys = claimed.select(col(keyCol)).distinct()
     val keysN = keys.count()
-    writeKeyFiles(next, keys, nonEmpty = keysN > 0)
+    writeKeyFiles(id, keys, nonEmpty = keysN > 0)
     // rows the read-path anti-join will actually remove: every TARGET row
     // whose key is claimed. With duplicate-keyed base rows (appends can
     // create them; nothing enforces target-key uniqueness) this exceeds the
@@ -3069,7 +2779,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * returns the evolve op's parts; the commit conflicts if the head moves
     * before it is logged, since the validation was against that head. */
   private def evolve(change: StructType => Seq[String],
-      afterLog: () => Unit = () => ()): Long =
+      afterLog: Long => Unit = _ => ()): Long =
     transact(OnMain()) { (meta, head, _) =>
       val parts = change(resolveVersion(meta, headOrThrow(head), None).schema)
       Staged(encodeEvolve(parts), headRows, afterLog)
@@ -3252,7 +2962,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     require(newSpec.map(_.trim.toLowerCase).distinct.size == newSpec.size,
       s"duplicate partition fields in ${newSpec.mkString(", ")}")
     Seq("partition", newSpec.mkString(","))
-  }, afterLog = () =>
+  }, afterLog = _ =>
     if (newSpec.isEmpty) metaDelete(PartitionSpecFile)
     else metaWriteString(PartitionSpecFile, newSpec.mkString(",")))
 
@@ -3503,7 +3213,7 @@ final class SnapshotTable(spark: SparkSession, root: String) {
         }.reduce(_ && _)
         val conj0 = SnapshotTable.conjunctsOf(resolvedPrev, pred)
         val conj = transformConjuncts(resolvedPrev.schema, conj0,
-          dataDirsOf(meta, prev).map(dirVersionOf))
+          dataDirsOf(meta, prev).map(idOf))
         resolveVersion(meta, prev, Some(conj))
       } else resolvedPrev
     // equality deletes match null-safely (mirrors applyChainOp's
@@ -3588,9 +3298,9 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   def commitToBranch(branch: String, df: DataFrame, op: String = "overwrite"): Long = {
     require(op == "overwrite" || op == DeltaAppendOp,
       s"commitToBranch op must be overwrite|append, got $op")
-    transact(OnBranch(branch)) { (_, head, next) =>
-      val written = writeDataDir(df, next)
-      val moveRef = () => writeRef(branch, "branch", next)
+    transact(OnBranch(branch)) { (_, head, id) =>
+      val written = writeDataDir(df, id)
+      val moveRef = (v: Long) => writeRef(branch, "branch", v)
       if (op == DeltaAppendOp)
         Staged(s"$BranchOpPrefix$branch:$DeltaAppendOp:${head.get}",
           (log, h) => headRows(log, h) + written, moveRef)

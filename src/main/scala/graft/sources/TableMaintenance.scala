@@ -104,11 +104,11 @@ object TableMaintenance {
   }
 
   /** Iceberg's remove_orphan_files, for crashed-writer leftovers (see
-    * [[SnapshotTable.removeOrphans]]): unreferenced, unclaimed `v=N` dirs
-    * older than the threshold are deleted. Part of the same automated
+    * [[SnapshotTable.removeOrphans]]): `data/<id>` dirs no log record
+    * names, older than the threshold, are deleted. Part of the same automated
     * maintenance loop as [[maintain]]. */
   def removeOrphans(spark: SparkSession, root: String,
       olderThanMillis: Long = 3L * 24 * 3600 * 1000,
-      force: Boolean = false): Seq[Long] =
+      force: Boolean = false): Seq[String] =
     new SnapshotTable(spark, root).removeOrphans(olderThanMillis, force)
 }

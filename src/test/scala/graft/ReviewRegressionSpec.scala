@@ -431,38 +431,4 @@ class ReviewRegressionSpec extends SparkSpec {
       .collect().sortBy(_._1)
       === Array((1L, Some(7L)), (2L, Some(8L)), (3L, None)))
   }
-
-  test("r20 review: a LEAKED fence marker (unlock delete failed) does not " +
-      "wedge the table forever — the next holder of the unchanged epoch " +
-      "reclaims a STALE marker and commits") {
-    import spark.implicits._
-    import graft.sources.{LockDirClaimArbiter, SnapshotTable, GraftTestFs}
-    val hconf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    hconf.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val lockLocal = Files.createTempDirectory("rr_leak").toFile.getAbsolutePath
-    val lockRoot = s"graftfs://$lockLocal"
-    val root = Files.createTempDirectory("rr_leak_t").toFile.getAbsolutePath
-    val arb = new LockDirClaimArbiter(lockRoot, hconf)
-    arb.staleCommitLockMillis = 80L
-    SnapshotTable.registerClaimArbiter(root, arb)
-    try {
-      val t = new SnapshotTable(spark, root)
-      t.commit(Seq((1L, "a")).toDF("id", "v"))
-      // simulate the leak: epoch 0's marker left on disk by a crashed
-      // holder / failed unlock delete
-      // the arbiter slugs the CANONICAL root (absolute, normalized)
-      val canon = java.nio.file.Paths.get(root)
-        .toAbsolutePath.normalize.toString
-      val slug = java.security.MessageDigest.getInstance("MD5")
-        .digest(canon.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val marker = java.nio.file.Paths.get(lockLocal, slug, "fence-e0.marker")
-      java.nio.file.Files.createDirectories(marker.getParent)
-      java.nio.file.Files.createFile(marker)
-      Thread.sleep(120) // past staleness: the leak is reclaimable
-      t.commit(Seq((2L, "b")).toDF("id", "v"), op = "append")
-      assert(t.read().count() === 2,
-        "a stale leaked marker must not reject the next holder")
-    } finally SnapshotTable.unregisterClaimArbiter(root)
-  }
 }

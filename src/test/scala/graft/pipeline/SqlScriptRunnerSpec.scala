@@ -584,7 +584,7 @@ class SqlScriptRunnerSpec extends SparkSpec {
     assert(last.getString(2) === "mor-merge")
     assert(last.getLong(3) === 4L) // resulting total in the log
     // the commit's data dir is delta-sized: 1 updated copy + 1 insert
-    assert(spark.read.parquet(s"$root/v=1").count() === 2)
+    assert(spark.read.parquet(st.versionDir(1L)).count() === 2)
   }
 
   test("snapshot-bound INSERT VALUES casts to the table's column types") {
@@ -731,7 +731,7 @@ class SqlScriptRunnerSpec extends SparkSpec {
       Set((1L, "a"), (3L, "c+"), (9L, "z")))
     // the branch INSERT was an O(delta) commit: its dir holds one row
     val head = st.branchHead("wip").get
-    assert(spark.read.parquet(s"$root/v=$head").count() === 1)
+    assert(spark.read.parquet(st.versionDir(head)).count() === 1)
     // publish, then the staged state is main's
     r.run("ALTER TABLE ops.staged FAST FORWARD BRANCH wip")
     assert(st.read().as[(Long, String)].collect().toSet ===
@@ -1128,7 +1128,7 @@ class SqlScriptRunnerSpec extends SparkSpec {
     val last = st.history().orderBy($"version".desc).limit(1).collect().head
     assert(last.getString(2) === "mor-merge")
     assert(last.getLong(3) === 22L)
-    assert(spark.read.parquet(s"$root/v=1").count() === 5) // the delta only
+    assert(spark.read.parquet(st.versionDir(1L)).count() === 5) // the delta only
     assert(st.read().filter($"value" < 0).count() === 3)
     r.run("DELETE FROM ops.etl_shape WHERE user_id = 2")
     val del = st.history().orderBy($"version".desc).limit(1).collect().head

@@ -57,7 +57,7 @@ class CdcDeltaSpec extends SparkSpec {
     val t = new SnapshotTable(spark, root)
     t.setSortOrder(Seq("id"), files = 8)
     t.commit(docs(400))                                                    // v0: 8 range files
-    assert(new java.io.File(s"$root/v=0").listFiles()
+    assert(new java.io.File(t.versionDir(0L)).listFiles()
       .count(f => f.getName.endsWith(".parquet")) === 8)
     t.updateMor(col("id") < 3L, Map("n" -> lit(555L)), "id")               // v1
     val fast = t.changesForCommit(1L, Seq("id"))

@@ -7,32 +7,51 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Optimistic-concurrency commit protocol (Iceberg's atomic-swap contract,
-  * SURVEY §3.1 step 5): versions are claimed by create-exclusive marker
-  * files, so concurrent writers always land DISTINCT versions; operations
-  * that derived their data from a snapshot read raise
-  * [[SnapshotTable.CommitConflictException]] when the head moved under them. */
+  * SURVEY §3.1 step 5): a commit lands by publishing its log record only
+  * if no record of that version exists, so concurrent writers always land
+  * DISTINCT versions; operations that derived their data from a snapshot
+  * read raise [[SnapshotTable.CommitConflictException]] when the head moved
+  * under them. */
 class CommitConcurrencySpec extends SparkSpec {
+
+  /** Data dirs and manifests under `root` that no log record names: what an
+    * unlogged commit left behind. */
+  private def unlogged(root: String): Seq[String] = {
+    val t = new SnapshotTable(spark, root)
+    val named = t.history().select("version").collect().map(_.getLong(0))
+      .flatMap(v => scala.util.Try(Paths.get(t.versionDir(v)).getFileName.toString).toOption)
+      .toSet
+    def names(dir: String) = Option(Paths.get(root, dir).toFile.list())
+      .map(_.toSeq).getOrElse(Nil)
+    names("data").filterNot(named) ++
+      names("_graft_manifest").map(_.stripSuffix(".tsv")).filterNot(named)
+  }
+
+  /** Lands `foreign` once inside `t`'s next write window: after its stage
+    * wrote the data and before it publishes its record, where another
+    * process's whole commit can fall. */
+  private def inWriteWindow(t: SnapshotTable)(foreign: => Unit): Unit = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    t.beforeFinalHeadCheck = () => if (fired.compareAndSet(false, true)) foreign
+  }
 
   test("a version claimed by a foreign writer is never reused (no lost update)") {
     import spark.implicits._
     val root = JFiles.createTempDirectory("occ_claim").toFile.getAbsolutePath
     val a = new SnapshotTable(spark, root)
     a.commit(Seq((1L, "a")).toDF("id", "v")) // v0
-    // a second process has CLAIMED v1 (its marker exists, its log line is
-    // still in flight) — our commit must skip to v2, never steal v1's dir
-    JFiles.createFile(Paths.get(root, "_graft_commits", "v=1"))
+    // a second process lands v1 after our log read: our append must take
+    // v2, never v1's record or dir
+    inWriteWindow(a)(new SnapshotTable(spark, root)
+      .commit(Seq((99L, "z")).toDF("id", "v"), op = "append"))
     val va = a.commit(Seq((2L, "b")).toDF("id", "v"), op = "append")
     assert(va === 2L)
-    assert(a.read().count() === 2)
-    // the foreign writer's line lands late: out-of-order log lines are
-    // sorted by version at read, and its version is exactly the claimed one
-    Seq((99L, "z")).toDF("id", "v").write.parquet(s"$root/v=1")
-    JFiles.writeString(Paths.get(root, "_graft_meta.jsonl"),
-      s"1,${System.currentTimeMillis()},append,1\n",
-      java.nio.file.StandardOpenOption.APPEND)
     val fresh = new SnapshotTable(spark, root)
     assert(fresh.history().orderBy("version").collect().map(_.getLong(0)).toSeq
       === Seq(0L, 1L, 2L))
+    assert(fresh.read().select("id").as[Long].collect().sorted === Array(1L, 2L, 99L))
+    assert(fresh.versionDir(1L) !== fresh.versionDir(2L))
+    assert(fresh.read(Some(1L)).count() === 2)
   }
 
   test("a read-dependent commit raises CommitConflictException on a moved head") {
@@ -55,7 +74,7 @@ class CommitConcurrencySpec extends SparkSpec {
     assert(a.read().count() === 11)
     a.deleteWhere(col("id") < 5L) // fresh read → fresh expected head → ok
     assert(a.read().count() === 6)
-    // a plain append commutes with what was logged before its claim, even
+    // a plain append commutes with whatever was logged before it, even
     // with a stale view
     val vA = a.commit(Seq((200L, "y")).toDF("id", "v"), op = "append")
     assert(vA === a.currentVersion.get)
@@ -69,31 +88,23 @@ class CommitConcurrencySpec extends SparkSpec {
     val a = new SnapshotTable(spark, root)
     a.commit(Seq.tabulate(10)(i => (i.toLong, s"v$i")).toDF("id", "v")) // v0
     // a cross-process writer commits DURING a's write window — between a's
-    // data write and its final head validation. The test seam injects it on
-    // the same thread (withRootLock is reentrant there), exactly where a
+    // data write and its record publish. The test seam injects it on the
+    // same thread (withRootLock is reentrant there), exactly where a
     // foreign process would slip past the in-JVM lock.
-    a.beforeFinalHeadCheck = () => {
-      a.beforeFinalHeadCheck = () => () // fire once
-      new SnapshotTable(spark, root)
-        .commit(Seq((100L, "x")).toDF("id", "v"), op = "append")
-    }
+    inWriteWindow(a)(new SnapshotTable(spark, root)
+      .commit(Seq((100L, "x")).toDF("id", "v"), op = "append"))
     intercept[SnapshotTable.CommitConflictException](
       a.deleteWhereMor(col("id") < 3L, "id"))
-    // a claimed v1; the foreign writer claimed v2. The lost claim must be
-    // fully released: marker, data dir and manifest all gone (nothing for
-    // maintenance to ever orphan-collect), and the claim number is free.
-    assert(!JFiles.exists(Paths.get(root, "v=1")), "conflicted data dir leaked")
-    assert(!JFiles.exists(Paths.get(root, "_graft_commits", "v=1")),
-      "conflicted claim marker leaked")
-    assert(!JFiles.exists(Paths.get(root, "_graft_manifest", "v=1.tsv")),
-      "conflicted manifest leaked")
+    // the conflicted commit left nothing: its data dir and manifest are
+    // gone (nothing for maintenance to ever orphan-collect)
+    assert(unlogged(root) === Nil, "conflicted data dir or manifest leaked")
     val fresh = new SnapshotTable(spark, root)
     assert(fresh.read().count() === 11)
     // the standard Iceberg retry: re-read, re-derive, commit clean
     fresh.deleteWhereMor(col("id") < 3L, "id")
     assert(fresh.read().count() === 8)
     assert(fresh.history().orderBy("version").collect().map(_.getLong(0)).toSeq
-      === Seq(0L, 2L, 3L))
+      === Seq(0L, 1L, 2L))
   }
 
   test("concurrent threaded appends all land with distinct versions") {
@@ -125,29 +136,31 @@ class CommitConcurrencySpec extends SparkSpec {
     val t = new SnapshotTable(spark, root)
     t.commit(Seq((0L, "seed")).toDF("id", "v"))                 // v0
     t.commit(Seq((1L, "a")).toDF("id", "v"), op = "append")     // v1
-    // simulate the race the marker self-GC opens: our writer read the log
-    // (head v1), a FOREIGN process then logs v2 and GC's its own marker —
-    // so our create-exclusive on marker v=2 SUCCEEDS even though v2 is
-    // spent. The post-create re-validation must release it and move on.
-    val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-    t.afterMarkerClaim = { claimed =>
-      if (fired.getAndIncrement() == 0) {
-        assert(claimed === 2L, s"expected first claim on spent v2, got $claimed")
-        // the foreign commit: a metadata-only pointer line (resolvable) with
-        // its marker already self-GC'd — appended directly, as another
-        // process would
-        JFiles.writeString(Paths.get(root, "_graft_meta.jsonl"),
-          s"2,${System.currentTimeMillis()},asof:0:foreign,1\n",
-          java.nio.file.StandardOpenOption.APPEND)
+    // our writer read the log (head v1); a FOREIGN process publishes v2
+    // right before our publish of v2, which therefore loses and must move
+    // past the spent number after re-reading the log
+    val own = new SnapshotTable.RecordDir(
+      spark.sparkContext.hadoopConfiguration, _ => s"$root/_graft_log")
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    SnapshotTable.registerClaimArbiter(root, new SnapshotTable.ClaimArbiter {
+      def publish(r: String, name: String, content: String): Boolean = {
+        if (attempts.getAndIncrement() == 0) {
+          assert(name === "v=2.rec", s"expected the first publish on v2, got $name")
+          // the foreign commit: a metadata-only pointer record
+          assert(own.publish(r, name,
+            s"2,${System.currentTimeMillis()},1,-,asof:0:foreign\n"))
+        }
+        own.publish(r, name, content)
       }
-    }
-    val mine = t.commit(Seq((2L, "b")).toDF("id", "v"), op = "append")
-    t.afterMarkerClaim = _ => ()
-    assert(fired.get() >= 2, "the claim loop must have retried after the release")
+      def list(r: String) = own.list(r)
+      def read(r: String, name: String) = own.read(r, name)
+      def delete(r: String, name: String) = own.delete(r, name)
+    })
+    val mine =
+      try t.commit(Seq((2L, "b")).toDF("id", "v"), op = "append")
+      finally SnapshotTable.unregisterClaimArbiter(root)
+    assert(attempts.get() === 2, "the publish loop must have gone round once")
     assert(mine === 3L, s"spent v2 must not be kept; landed $mine")
-    // the spent number's marker was released, ours self-GC'd after logging
-    assert(Option(Paths.get(root, "_graft_commits").toFile.list())
-      .map(_.toSeq).getOrElse(Nil) === Nil)
     // nothing was lost: the foreign pointer (a rollback to v0's 1-row
     // content) resolves as the base under our append — 2 rows at head
     val fresh = new SnapshotTable(spark, root)
@@ -155,14 +168,8 @@ class CommitConcurrencySpec extends SparkSpec {
       Set((0L, "seed"), (2L, "b")))
     assert(fresh.currentVersion === Some(3L))
     assert(fresh.read(Some(2L)).count() === 1) // the foreign asof:0 pointer
-  }
-
-  /** Lands `foreign` once inside `t`'s next claim window: right after its
-    * marker create and before the claim's log re-validation, which is
-    * where another process's whole commit can fall. */
-  private def inClaimWindow(t: SnapshotTable)(foreign: => Unit): Unit = {
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    t.afterMarkerClaim = _ => if (fired.compareAndSet(false, true)) foreign
+    assert(Paths.get(root, "_graft_log").toFile.list().sorted.toSeq ===
+      Seq("v=0.rec", "v=1.rec", "v=2.rec", "v=3.rec"), "a temp record was left")
   }
 
   private def headRows(t: SnapshotTable): Long = {
@@ -183,19 +190,19 @@ class CommitConcurrencySpec extends SparkSpec {
       "head's true row count") {
     import spark.implicits._
     val (root, t) = seeded("occ_rows_append")
-    inClaimWindow(t)(new SnapshotTable(spark, root)
+    inWriteWindow(t)(new SnapshotTable(spark, root)
       .commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
     t.commit(Seq((3L, "d")).toDF("id", "w"), op = "append")
     assert(t.read().count() === 4)
     assert(headRows(t) === 4L, "the append counted from the log it read " +
-      "before claiming, missing the foreign append")
+      "before its data write, missing the foreign append")
   }
 
   test("addColumn with a foreign append in its claim window conflicts, and " +
       "the re-run logs the true row count") {
     import spark.implicits._
     val (root, t) = seeded("occ_add_append")
-    inClaimWindow(t)(new SnapshotTable(spark, root)
+    inWriteWindow(t)(new SnapshotTable(spark, root)
       .commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
     intercept[SnapshotTable.CommitConflictException](t.addColumn("x", "STRING"))
     assert(!t.read().columns.contains("x"))
@@ -208,7 +215,7 @@ class CommitConcurrencySpec extends SparkSpec {
   test("two same-name addColumns racing: the second conflicts and exactly " +
       "one add of the column is logged") {
     val (root, t) = seeded("occ_add_add")
-    inClaimWindow(t)(new SnapshotTable(spark, root).addColumn("x", "INT"))
+    inWriteWindow(t)(new SnapshotTable(spark, root).addColumn("x", "INT"))
     intercept[SnapshotTable.CommitConflictException](t.addColumn("x", "STRING"))
     assert(t.commitOps().count { case (_, op) =>
       t.evolveNewColumns(op) == Seq("x") } === 1)
@@ -218,7 +225,7 @@ class CommitConcurrencySpec extends SparkSpec {
 
   test("dropColumn against a foreign rename of the same column conflicts") {
     val (root, t) = seeded("occ_drop_rename")
-    inClaimWindow(t)(new SnapshotTable(spark, root).renameColumn("w", "w2"))
+    inWriteWindow(t)(new SnapshotTable(spark, root).renameColumn("w", "w2"))
     intercept[SnapshotTable.CommitConflictException](t.dropColumn("w"))
     assert(t.read().columns.toSeq === Seq("id", "w2"))
   }
@@ -228,7 +235,7 @@ class CommitConcurrencySpec extends SparkSpec {
     import spark.implicits._
     val (root, t) = seeded("occ_branch")
     t.createBranch("dev")
-    inClaimWindow(t)(new SnapshotTable(spark, root)
+    inWriteWindow(t)(new SnapshotTable(spark, root)
       .commitToBranch("dev", Seq((5L, "f")).toDF("id", "w"), "append"))
     intercept[SnapshotTable.CommitConflictException](
       t.commitToBranch("dev", Seq((2L, "c")).toDF("id", "w"), "append"))
@@ -239,56 +246,39 @@ class CommitConcurrencySpec extends SparkSpec {
     assert(t.read().count() === 2, "main is untouched by branch commits")
   }
 
-  /** Lands `foreign` once inside `t`'s next write window: after its stage
-    * wrote the data and before the commit section, where another process
-    * can log a version above the claim. */
-  private def inWriteWindow(t: SnapshotTable)(foreign: => Unit): Unit = {
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    t.beforeFinalHeadCheck = () => if (fired.compareAndSet(false, true)) foreign
-  }
-
-  /** Runs `commit`, and once more if it raised (the caller's retry);
-    * returns the first attempt's failure. */
-  private def withOneRetry(commit: => Long): Option[Throwable] =
-    scala.util.Try(commit).failed.toOption.map { e => commit; e }
-
-  test("an append with a foreign delete logged above its claim conflicts; " +
-      "the re-run keeps the appended row") {
+  test("an append with a foreign delete landing first lands above it " +
+      "with no retry, and keeps its row") {
     import spark.implicits._
     val (root, t) = seeded("occ_below_delete")
     inWriteWindow(t)(new SnapshotTable(spark, root).deleteWhere(col("id") === 0L))
-    val first = withOneRetry(t.commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
+    assert(t.commit(Seq((2L, "c")).toDF("id", "w"), op = "append") === 2L)
     assert(t.read().select("id").as[Long].collect().toSet === Set(1L, 2L),
       "the append landed below the foreign restart point and its row left main")
     assert(headRows(t) === 2L)
-    assert(first.exists(_.isInstanceOf[SnapshotTable.CommitConflictException]))
   }
 
-  test("an append with a foreign append logged above its claim conflicts; " +
-      "the re-run logs the head's true row count") {
+  test("an append with a foreign append landing first lands above it " +
+      "with no retry, and logs the head's true row count") {
     import spark.implicits._
     val (root, t) = seeded("occ_below_append")
     inWriteWindow(t)(new SnapshotTable(spark, root)
       .commit(Seq((2L, "c")).toDF("id", "w"), op = "append"))
-    val first = withOneRetry(t.commit(Seq((3L, "d")).toDF("id", "w"), op = "append"))
-    assert(headRows(t) === t.read().count())
-    assert(first.exists(_.isInstanceOf[SnapshotTable.CommitConflictException]))
+    assert(t.commit(Seq((3L, "d")).toDF("id", "w"), op = "append") === 2L)
+    assert(t.read().count() === 4)
+    assert(headRows(t) === 4L)
   }
 
   test("a stage that fails at write time releases its claim: no marker, no " +
       "data dir, no manifest, and the next commit takes the same version") {
     import spark.implicits._
     val (root, t) = seeded("occ_stage_fail")
-    def leftovers = Seq(Paths.get(root, "_graft_commits", "v=1"),
-      Paths.get(root, "v=1"), Paths.get(root, "_graft_manifest", "v=1.tsv"))
-      .filter(JFiles.exists(_))
     val boom = raise_error(lit("boom")).cast("string")
     intercept[Exception](
       t.updateMor(col("id") === 0L, Map("w" -> boom), "id"))
-    assert(leftovers === Nil)
+    assert(unlogged(root) === Nil)
     intercept[Exception](t.commit(
       Seq((2L, "c")).toDF("id", "w").withColumn("w", boom), op = "append"))
-    assert(leftovers === Nil)
+    assert(unlogged(root) === Nil)
     assert(t.commit(Seq((2L, "c")).toDF("id", "w"), op = "append") === 1L)
     assert(t.read().count() === 3 && headRows(t) === 3L)
   }

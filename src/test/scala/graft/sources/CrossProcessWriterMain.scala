@@ -9,18 +9,21 @@ import org.apache.spark.sql.SparkSession
   * under the same durable [[LockDirClaimArbiter]] lock dir. File-based
   * barrier: writes `<sync>/ready` once its session + arbiter are up, waits
   * for `<sync>/go`, appends `n` rows one commit at a time, writes
-  * `<sync>/done` with its success count, exits 0. */
+  * `<sync>/done` with its success count and conflict-retry count, exits
+  * 0. */
 object CrossProcessWriterMain {
 
   /** Runs `commit`, re-running it up to `attempts` times in all while it
-    * raises [[SnapshotTable.CommitConflictException]]: across processes
-    * every commit, a plain append included, conflicts when the other
-    * process logs a version above its claim. */
+    * raises [[SnapshotTable.CommitConflictException]], and counts each
+    * re-run in `retries`. */
   @annotation.tailrec
-  def retryingConflicts[T](attempts: Int)(commit: => T): T =
+  def retryingConflicts[T](attempts: Int, retries: java.util.concurrent.atomic.AtomicInteger)(
+      commit: => T): T =
     scala.util.Try(commit) match {
       case scala.util.Failure(_: SnapshotTable.CommitConflictException)
-          if attempts > 1 => retryingConflicts(attempts - 1)(commit)
+          if attempts > 1 =>
+        retries.incrementAndGet()
+        retryingConflicts(attempts - 1, retries)(commit)
       case done => done.get
     }
 
@@ -47,12 +50,13 @@ object CrossProcessWriterMain {
       require(Files.exists(Paths.get(syncDir, "go")), "no go signal in 120 s")
       val t = new SnapshotTable(spark, root)
       var ok = 0
+      val retries = new java.util.concurrent.atomic.AtomicInteger(0)
       (0 until n).foreach { i =>
-        retryingConflicts(30)(
+        retryingConflicts(30, retries)(
           t.commit(Seq((1000L + i, "B")).toDF("id", "w"), op = "append"))
         ok += 1
       }
-      Files.writeString(Paths.get(syncDir, "done"), s"$ok\n")
+      Files.writeString(Paths.get(syncDir, "done"), s"$ok ${retries.get}\n")
       println(s"[xproc] child committed $ok appends")
     } finally spark.stop()
     sys.exit(0)

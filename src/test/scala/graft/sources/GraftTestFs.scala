@@ -12,10 +12,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * scheme'd roots: a stray `Paths.get("graftfs:///…")` would resolve the
   * whole URI as a RELATIVE file name and create a literal `graftfs:`
   * directory under the CWD instead of touching the store root, which the
-  * spec asserts never happens. RawLocalFileSystem supports `append()`, so
-  * the commit log exercises the native-append branch (the HDFS shape);
-  * object stores without append take the documented read-modify-write
-  * fallback instead. */
+  * spec asserts never happens. `rename` refuses an existing target, the
+  * HDFS shape the log's record publish relies on (RawLocalFileSystem's own
+  * rename replaces it). */
 class GraftTestFs extends RawLocalFileSystem {
   override def getScheme: String = "graftfs"
   override def getUri: URI = URI.create("graftfs:///")
@@ -34,12 +33,26 @@ class GraftTestFs extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] =
     super.listStatus(f).map(eager)
+
+  /** HDFS rename: false when `dst` exists. A file moves by hard link then
+    * unlink, which refuses an existing target atomically; a directory
+    * (Spark's committer moves them) keeps the replace-free local rename. */
+  override def rename(src: Path, dst: Path): Boolean = {
+    val (s, d) = (pathToFile(src).toPath, pathToFile(dst).toPath)
+    if (java.nio.file.Files.isDirectory(s) || java.nio.file.Files.isDirectory(d))
+      super.rename(src, dst)
+    else
+      try {
+        java.nio.file.Files.createLink(d, s)
+        java.nio.file.Files.delete(s)
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  }
 }
 
 /** [[GraftTestFs]] minus `append()` — the OBJECT-STORE shape (S3A has no
-  * native append), forcing the commit-log cache onto the read-modify-write
-  * fallback so specs can prove the record ledger survives an interleaved
-  * RMW that drops a cache line. */
+  * native append); the store never appends, so every surface must work on
+  * it. */
 class GraftNoAppendFs extends GraftTestFs {
   override def getScheme: String = "graftnoap"
   override def getUri: URI = URI.create("graftnoap:///")
@@ -51,12 +64,12 @@ class GraftNoAppendFs extends GraftTestFs {
       "graftnoap: object-store semantics — no append")
 }
 
-/** The full S3 shape: no append AND no atomic create-exclusive — a PUT
-  * silently replaces an existing object, so `create(f, overwrite=false)`
-  * succeeds even when the file exists. This is the filesystem on which the
-  * marker CAS alone cannot arbitrate claims and a registered
-  * [[SnapshotTable.ClaimArbiter]] (Iceberg's catalog-CAS role) is the
-  * correctness requirement, not an optimization. */
+/** The full S3 shape: no append AND no publish-if-absent — a PUT silently
+  * replaces an existing object, so `create(f, overwrite=false)` succeeds
+  * even when the file exists and a rename (copy + delete) replaces its
+  * target. On this filesystem two writers can publish the same record name,
+  * and a registered [[SnapshotTable.ClaimArbiter]] (Iceberg's catalog-CAS
+  * role) is the correctness requirement, not an optimization. */
 final class GraftS3LikeFs extends GraftNoAppendFs {
   override def getScheme: String = "grafts3"
   override def getUri: URI = URI.create("grafts3:///")
@@ -76,4 +89,66 @@ final class GraftS3LikeFs extends GraftNoAppendFs {
       : org.apache.hadoop.fs.FSDataOutputStream =
     super.create(f, permission, true, bufferSize, replication, blockSize,
       progress)
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    val d = pathToFile(dst).toPath
+    if (java.nio.file.Files.isRegularFile(d)) java.nio.file.Files.delete(d)
+    super.rename(src, dst)
+  }
+}
+
+/** [[GraftTestFs]] that models a crash: once armed, the Nth
+  * `create`/`rename`/`delete` and every later one throw before doing
+  * anything, until disarmed — whatever runs (the store's own writes, its
+  * clean-up, Spark's task commits) stops at that write point as a dead
+  * process would. The counter is JVM-wide: Spark's tasks get their own
+  * instances from the FileSystem cache. */
+final class GraftFaultFs extends GraftTestFs {
+  override def getScheme: String = "graftfault"
+  override def getUri: URI = URI.create("graftfault:///")
+
+  private def step(what: String, f: Path): Unit =
+    if (GraftFaultFs.armed.get &&
+        GraftFaultFs.calls.incrementAndGet() >= GraftFaultFs.failAt.get &&
+        GraftFaultFs.failAt.get > 0)
+      throw new java.io.IOException(s"injected crash at $what $f")
+
+  override def create(f: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    step("create", f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    step("create", f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    step("rename", src)
+    super.rename(src, dst)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    step("delete", f)
+    super.delete(f, recursive)
+  }
+}
+
+object GraftFaultFs {
+  private val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val failAt = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Count calls from now on, crashing at the `n`th (0 = count only). */
+  def arm(n: Long): Unit = { calls.set(0L); failAt.set(n); armed.set(true) }
+
+  /** Stop counting and crashing; the calls counted since [[arm]]. */
+  def disarm(): Long = { armed.set(false); calls.get }
 }

@@ -33,6 +33,26 @@ class MetadataFunctionsSpec extends SparkSpec {
     assert(hist.forall(_.getBoolean(3))) // linear log: all current ancestors
   }
 
+  test("table_snapshot reports a partitioned version's files and bytes " +
+      "from its manifest") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("metapart").toFile.getAbsolutePath
+    val t = new SnapshotTable(spark, root)
+    val ts = (s: String) => java.sql.Timestamp.from(java.time.Instant.parse(s))
+    t.commitPartitioned(Seq((1L, ts("2025-03-01T10:00:00Z")),
+      (2L, ts("2025-03-02T10:00:00Z"))).toDF("id", "ts"), Seq("days(ts)"))
+    t.commit(Seq((3L, ts("2025-03-03T10:00:00Z"))).toDF("id", "ts"), op = "append")
+    t.addColumn("note", "STRING") // metadata-only: no files of its own
+    t.read().createOrReplaceTempView("meta_partsnap")
+    val snaps = MetadataFunctions.tableSnapshot(spark, "meta_partsnap")
+      .orderBy("snapshot_id").collect()
+    // (files, bytes) each version's own commit wrote: one file per day
+    def manifestBytes(v: Long) = t.readManifest(v)._2.map(_.bytes).sum
+    assert(snaps.map(r => (r.getLong(0), r.getLong(4), r.getLong(6))).toSeq ===
+      Seq((0L, 2L, manifestBytes(0L)), (1L, 1L, manifestBytes(1L)), (2L, 0L, 0L)))
+    assert(snaps.take(2).forall(_.getLong(6) > 0L))
+  }
+
   test("expired snapshot stays in history with zero remaining files") {
     import spark.implicits._
     val root = Files.createTempDirectory("metaexp").toFile.getAbsolutePath
@@ -95,10 +115,10 @@ class MetadataFunctionsSpec extends SparkSpec {
     // equality-delete file is not a data file and must not be counted
     val files = MetadataFunctions.tableFiles(spark, "meta.mor").collect()
     assert(files.map(_.getLong(2)).sum === 10L)
-    assert(files.forall(_.getString(0).contains("v=0")))
+    assert(files.forall(_.getString(0).startsWith(t.versionDir(0L) + "/")))
     val parts = MetadataFunctions.tablePartitions(spark, "meta.mor").collect()
     assert(parts.length === 1 && parts(0).isNullAt(0))
-    assert(parts(0).getLong(2) === 10L) // versioning v=0 dir is not a partition
+    assert(parts(0).getLong(2) === 10L) // the store's data/<id> dir is not a partition
   }
 
   test("a genuine partition column named v keeps its segments") {
@@ -147,8 +167,8 @@ class MetadataFunctionsSpec extends SparkSpec {
       "metadata scan re-opened parquet footers despite commit manifests")
     // the listing spans the base AND the append delta, and the manifest
     // counts agree with the live data
-    assert(files.exists(_.getString(0).contains("v=0")) &&
-      files.exists(_.getString(0).contains("v=1")))
+    assert(files.exists(_.getString(0).startsWith(t.versionDir(0L) + "/")) &&
+      files.exists(_.getString(0).startsWith(t.versionDir(1L) + "/")))
     assert(files.map(_.getLong(2)).sum === 21L)
     assert(parts.map(_.getLong(2)).sum === 21L)
     // a FOREIGN dir (no manifest) still works via the footer fallback

@@ -105,7 +105,7 @@ class MetadataPlanningSpec extends SparkSpec {
     val (kept, total) = fresh.lastPruneStats
     assert(kept > 0 && kept < total, s"readWhere should prune: $kept/$total")
 
-    val inferred = shape(spark.read.parquet(s"$root/v=0").schema)
+    val inferred = shape(spark.read.parquet(fresh.versionDir(0L)).schema)
     Seq("read()", "readWhere(p)", "read(Some(4))").foreach(n =>
       assert(shape(built(n).schema) === inferred, n))
     Seq("changes(2, 7)", "changes(2, 7, id)").foreach(n =>
@@ -128,10 +128,14 @@ class MetadataPlanningSpec extends SparkSpec {
       asModel(rows(0 until 40)) -- Seq(3L, 4L, 30L))
   }
 
-  private def manifestText(root: String, v: Long): Option[String] = {
-    val p = JPaths.get(root, "_graft_manifest", s"v=$v.tsv")
+  /** The manifest of data dir `dir` (a `data/<id>` path), if present. */
+  private def manifestText(dir: String): Option[String] = {
+    val p = JPaths.get(new Path(dir).getParent.getParent.toUri.getPath,
+      "_graft_manifest", new Path(dir).getName + ".tsv")
     if (JFiles.exists(p)) Some(JFiles.readString(p)) else None
   }
+
+  private def localPath(dir: String) = JPaths.get(new Path(dir).toUri.getPath)
 
   test("every data-writing commit kind records the manifest readers assume: " +
       "#schema first, four-field file lines, #keyschema for mor update/merge") {
@@ -167,11 +171,12 @@ class MetadataPlanningSpec extends SparkSpec {
     }
     assert(wrong.isEmpty, wrong.mkString("; "))
     val log = t.commitOps()
-    val owners = log.map(_._1).filter(v => JFiles.isDirectory(JPaths.get(root, s"v=$v")))
+    val owners = log.map(_._1).filter(v =>
+      scala.util.Try(t.versionDir(v)).toOption.exists(d => JFiles.isDirectory(JPaths.get(d))))
     assert(owners.map(landed) === kinds.map(_._1).dropRight(1),
-      "every kind but the metadata-only rollback owns a v=N dir")
+      "every kind but the metadata-only rollback owns a data dir")
     owners.foreach { v =>
-      val lines = manifestText(root, v).getOrElse(fail(s"${landed(v)} v=$v: no manifest"))
+      val lines = manifestText(t.versionDir(v)).getOrElse(fail(s"${landed(v)} v=$v: no manifest"))
         .split('\n').toSeq.filter(_.nonEmpty)
       assert(lines.head.startsWith("#schema\t"), s"${landed(v)} v=$v")
       assert(lines.filterNot(_.startsWith("#")).forall(_.split("\t", -1).length == 4),
@@ -180,43 +185,55 @@ class MetadataPlanningSpec extends SparkSpec {
     val morLike = log.collect { case (v, op) if t.isMorUpdateLike(op) => v }
     assert(morLike.map(landed) ===
       Seq("updateMor", "mergeIntoMor", "insert-only mergeIntoMor"))
-    morLike.foreach(v => assert(manifestText(root, v).exists(
+    morLike.foreach(v => assert(manifestText(t.versionDir(v)).exists(
       _.split('\n').exists(_.startsWith("#keyschema\t"))), s"${landed(v)} v=$v"))
   }
 
   test("expiry and orphan removal treat a version's manifest and key " +
       "files as one unit; a crash after the key record is reclaimed") {
-    val root = JFiles.createTempDirectory("planmeta_life").toFile.getAbsolutePath
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[GraftFaultFs].getName)
+    val root = "graftfault://" +
+      JFiles.createTempDirectory("planmeta_life").toFile.getAbsolutePath
     val t = new SnapshotTable(spark, root)
     t.commit(rows(0 until 50))                                          // v0
     t.updateMor(col("id") < 5L, Map("n" -> lit(-1L)), "id")             // v1
-    def hasKeys(v: Long) = JFiles.isDirectory(JPaths.get(root, s"v=$v", "_graft_deletes"))
-    assert(hasKeys(1L) && manifestText(root, 1L).exists(_.contains("#keyfile\t")))
+    val v1Dir = t.versionDir(1L)
+    def hasKeys(dir: String) = JFiles.isDirectory(localPath(dir).resolve("_graft_deletes"))
+    assert(hasKeys(v1Dir) && manifestText(v1Dir).exists(_.contains("#keyfile\t")))
     // v1 is reachable from the head: expiry keeps its dir and manifest
     t.commit(rows(50 until 60), op = "append")                          // v2
     assert(t.expireSnapshots(keep = 1) === Nil)
-    assert(hasKeys(1L) && manifestText(root, 1L).exists(_.contains("#keyschema\t")))
+    assert(hasKeys(v1Dir) && manifestText(v1Dir).exists(_.contains("#keyschema\t")))
     t.compact(targetFiles = 1)                                          // v3
     assert(t.expireSnapshots(keep = 1) === Seq(0L, 1L, 2L))
-    assert(!JFiles.exists(JPaths.get(root, "v=1")) && manifestText(root, 1L).isEmpty)
+    assert(!JFiles.exists(localPath(v1Dir)) && manifestText(v1Dir).isEmpty)
     val after = asModel(t.read())
     assert(after.size === 60 && after.filter(_._1 < 5L).values.forall(_._2 == -1L))
 
-    // crash after the key files and their record land, before the log
-    t.beforeFinalHeadCheck = () => throw new IllegalStateException("injected crash")
-    intercept[IllegalStateException] {
+    // crash after the key files and their record land, at the log publish:
+    // no write succeeds from there on, its clean-up included
+    val dataRoot = localPath(s"$root/data")
+    val logged = dataRoot.toFile.list().toSet
+    t.beforeFinalHeadCheck = () => GraftFaultFs.arm(1)
+    intercept[java.io.IOException] {
       t.updateMor(col("id") === 20L, Map("n" -> lit(77L)), "id")
     }
+    GraftFaultFs.disarm()
     t.beforeFinalHeadCheck = () => ()
-    assert(hasKeys(4L) && manifestText(root, 4L).exists(_.contains("#keyfile\t")))
+    val debris = (dataRoot.toFile.list().toSet -- logged).toSeq
+    assert(debris.size === 1)
+    val crashed = s"$root/data/${debris.head}"
+    assert(hasKeys(crashed) && manifestText(crashed).exists(_.contains("#keyfile\t")))
     assert(asModel(new SnapshotTable(spark, root).read()) === after,
-      "an unlogged version is invisible")
-    // the writer is dead: its marker is swept and its debris has aged
-    JFiles.delete(JPaths.get(root, "_graft_commits", "v=4"))
-    JFiles.setLastModifiedTime(JPaths.get(root, "v=4"),
+      "an unlogged commit is invisible")
+    // the writer is dead and its debris has aged
+    JFiles.setLastModifiedTime(localPath(crashed),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 600000L))
-    assert(t.removeOrphans(olderThanMillis = 60000L, force = true) === Seq(4L))
-    assert(!JFiles.exists(JPaths.get(root, "v=4")) && manifestText(root, 4L).isEmpty)
+    JFiles.setLastModifiedTime(localPath(s"$root/_graft_manifest/${debris.head}.tsv"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 600000L))
+    assert(t.removeOrphans(olderThanMillis = 60000L, force = true) === debris)
+    assert(!JFiles.exists(localPath(crashed)) && manifestText(crashed).isEmpty)
     // the retry commits
     val v = t.updateMor(col("id") === 20L, Map("n" -> lit(77L)), "id")
     assert(t.currentVersion === Some(v))

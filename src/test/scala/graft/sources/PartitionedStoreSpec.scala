@@ -23,12 +23,12 @@ class PartitionedStoreSpec extends SparkSpec {
     def batch(tag: String, n: Int) = Seq.tabulate(n)(i =>
       (i.toLong, Seq("eu", "us", "ap")(i % 3), s"$tag$i")).toDF("id", "region", "v")
     t.commitPartitioned(batch("a", 30).coalesce(1), Seq("region"))
-    // layout: v=0/region=eu/part-*.parquet
-    assert(Files.isDirectory(Paths.get(root, "v=0", "region=eu")))
+    // layout: data/<id>/region=eu/part-*.parquet
+    assert(Files.isDirectory(Paths.get(t.versionDir(0L), "region=eu")))
     assert(t.partitionSpec === Seq("region"))
     // a plain append INHERITS the spec — the whole chain stays partitioned
     t.commit(batch("b", 12).coalesce(1), op = "append")
-    assert(Files.isDirectory(Paths.get(root, "v=1", "region=us")))
+    assert(Files.isDirectory(Paths.get(t.versionDir(1L), "region=us")))
     assert(t.read().count() === 42)
     // partition pruning on a plain read: Spark's own PartitionFilters
     val plan = t.read().filter(col("region") === "eu")
@@ -57,7 +57,7 @@ class PartitionedStoreSpec extends SparkSpec {
     t.commitPartitioned(rows.toDF("id", "event_ts").coalesce(1),
       Seq("days(event_ts)"))
     // hive layout on the HIDDEN derived column; user schema untouched
-    assert(Files.isDirectory(Paths.get(root, "v=0", "graft__day=2025-03-02")))
+    assert(Files.isDirectory(Paths.get(t.versionDir(0L), "graft__day=2025-03-02")))
     assert(t.read().columns.toSeq === Seq("id", "event_ts"))
     assert(t.read().count() === 8)
     // a timestamp predicate prunes to the matching day partitions via the
@@ -71,15 +71,15 @@ class PartitionedStoreSpec extends SparkSpec {
     assert(total === 4L && kept === 1L, s"kept=$kept total=$total")
     // appends + mutations keep the layout; compaction preserves it too
     t.commit(Seq((501L, ts(1, 5))).toDF("id", "event_ts"), op = "append")
-    assert(Files.isDirectory(Paths.get(root, "v=1", "graft__day=2025-03-01")))
+    assert(Files.isDirectory(Paths.get(t.versionDir(1L), "graft__day=2025-03-01")))
     t.updateMor(col("id") === 301L,
       Map("event_ts" -> (col("event_ts") + expr("INTERVAL 1 HOUR"))), "id")
     assert(t.read().count() === 9)
     assert(t.read().filter(col("id") === 301L)
       .select(hour(col("event_ts"))).as[Int].head() === 2)
     t.compact(targetFiles = 1)
-    assert(Files.isDirectory(Paths.get(root,
-      s"v=${t.currentVersion.get}", "graft__day=2025-03-04")))
+    assert(Files.isDirectory(Paths.get(t.versionDir(t.currentVersion.get),
+      "graft__day=2025-03-04")))
     assert(t.read().count() === 9)
     assert(t.read().columns.toSeq.sorted === Seq("event_ts", "id"))
   }
@@ -99,7 +99,7 @@ class PartitionedStoreSpec extends SparkSpec {
     // must stay readable immediately after the spec change
     assert(t.read().count() === 12)
     t.commit(batch("b", 100, 6).coalesce(1), op = "append") // v2: new layout
-    assert(Files.isDirectory(Paths.get(root, "v=2", "region=eu")))
+    assert(Files.isDirectory(Paths.get(t.versionDir(2L), "region=eu")))
     assert(t.read().count() === 18)
     // a FRESH instance replays the full log (no cached state to hide a bad op)
     assert(new SnapshotTable(spark, root).read().count() === 18)
@@ -112,7 +112,7 @@ class PartitionedStoreSpec extends SparkSpec {
     t.dropPartitionField("region")                          // v3: back to flat
     assert(t.partitionSpec === Nil)
     t.commit(batch("c", 200, 3).coalesce(1), op = "append") // v4: unpartitioned
-    assert(!Files.isDirectory(Paths.get(root, "v=4", "region=eu")))
+    assert(!Files.isDirectory(Paths.get(t.versionDir(4L), "region=eu")))
     assert(t.read().count() === 21)
     // the changelog across the spec boundary reports DATA changes only (the
     // two layout-only evolve commits contribute nothing to the diff)
@@ -130,7 +130,7 @@ class PartitionedStoreSpec extends SparkSpec {
     val df = Seq.tabulate(400)(i => (i.toLong, s"v$i")).toDF("id", "v")
     t.commitPartitioned(df.coalesce(1), Seq("bucket(8, id)"))
     // hive layout on the HIDDEN bucket column; user schema untouched
-    val dirs = Paths.get(root, "v=0").toFile.list()
+    val dirs = Paths.get(t.versionDir(0L)).toFile.list()
       .count(_.startsWith("graft__bucket="))
     assert(dirs === 8, s"expected 8 bucket dirs, saw $dirs")
     assert(t.read().columns.toSeq === Seq("id", "v"))
@@ -163,7 +163,7 @@ class PartitionedStoreSpec extends SparkSpec {
     val t = new SnapshotTable(spark, root)
     t.commitPartitioned(Seq.tabulate(300)(i => (i.toLong, s"n$i"))
       .toDF("id", "v").coalesce(1), Seq("truncate(100, id)"))
-    val dirs = Paths.get(root, "v=0").toFile.list()
+    val dirs = Paths.get(t.versionDir(0L)).toFile.list()
       .count(_.startsWith("graft__trunc="))
     assert(dirs === 3, s"expected 3 truncation dirs, saw $dirs")
     assert(t.read().columns.toSeq === Seq("id", "v"))
@@ -232,7 +232,7 @@ class PartitionedStoreSpec extends SparkSpec {
     t1.commitPartitioned(rows.toDF("id", "event_ts").coalesce(1),
       Seq("months(event_ts)"))
     // the spec's tuple: months since 1970-01 (February 2025 = 661)
-    assert(Files.isDirectory(Paths.get(r1, "v=0", "graft__month=661")))
+    assert(Files.isDirectory(Paths.get(t1.versionDir(0L), "graft__month=661")))
     assert(t1.read().columns.toSeq === Seq("id", "event_ts"))
     val got = t1.readWhere(
       col("event_ts") >= lit("2025-02-01 00:00:00").cast("timestamp") &&
@@ -252,7 +252,7 @@ class PartitionedStoreSpec extends SparkSpec {
     t2.commitPartitioned(Seq((1L, ts("2023-06-01 00:00:00")),
       (2L, ts("2024-06-01 00:00:00")), (3L, ts("2025-06-01 00:00:00")))
       .toDF("id", "event_ts").coalesce(1), Seq("years(event_ts)"))
-    assert(Files.isDirectory(Paths.get(r2, "v=0", "graft__year=54"))) // 2024 - 1970
+    assert(Files.isDirectory(Paths.get(t2.versionDir(0L), "graft__year=54"))) // 2024 - 1970
     assert(t2.readWhere(year(col("event_ts")) === 2024).count() === 1)
     // year() wraps the column, so stats can't see through it — but a RANGE
     // predicate on the timestamp itself prunes
@@ -269,7 +269,7 @@ class PartitionedStoreSpec extends SparkSpec {
     t3.commitPartitioned(hr.toDF("id", "event_ts").coalesce(1),
       Seq("hours(event_ts)"))
     // hours since the epoch: 20148 days to 2025-03-01, then 10 more hours
-    assert(Files.isDirectory(Paths.get(r3, "v=0", "graft__hour=483562")))
+    assert(Files.isDirectory(Paths.get(t3.versionDir(0L), "graft__hour=483562")))
     val g3 = t3.readWhere(
       col("event_ts") >= lit("2025-03-01 10:00:00").cast("timestamp") &&
       col("event_ts") < lit("2025-03-01 11:00:00").cast("timestamp"))
@@ -303,7 +303,8 @@ class PartitionedStoreSpec extends SparkSpec {
       "34 hashes to 2017239379, 'iceberg' to 1210000089)") {
     import spark.implicits._
     def bucketDirs(root: String): Set[String] =
-      parquetFiles(s"$root/v=0").map(_.takeWhile(_ != '/')).toSet
+      parquetFiles(new SnapshotTable(spark, root).versionDir(0L))
+        .map(_.takeWhile(_ != '/')).toSet
     val long = tmp("pstore_b34")
     new SnapshotTable(spark, long).commitPartitioned(
       Seq((34L, "x")).toDF("id", "v"), Seq("bucket(16, id)"))
@@ -338,7 +339,7 @@ class PartitionedStoreSpec extends SparkSpec {
         val t = new SnapshotTable(spark, root)
         t.commitPartitioned(df.coalesce(1), Seq("days(ts)", "hours(ts)"))
         val ids = t.readWhere(window).select("id").as[Long].collect().sorted.toSeq
-        (parquetFiles(s"$root/v=0").map(f => f.substring(0, f.lastIndexOf('/'))),
+        (parquetFiles(t.versionDir(0L)).map(f => f.substring(0, f.lastIndexOf('/'))),
           t.lastPruneStats, ids)
       } finally spark.conf.set(key, prev)
     }
@@ -359,7 +360,8 @@ class PartitionedStoreSpec extends SparkSpec {
         .plusSeconds(i * 7L * 3600)))).toDF("id", "ts").coalesce(1)
     val spec = Seq("days(ts)", "bucket(4, id)")
     val root = tmp("pstore_vs_ice")
-    new SnapshotTable(spark, root).commitPartitioned(df, spec)
+    val st = new SnapshotTable(spark, root)
+    st.commitPartitioned(df, spec)
     val ice = tmp("pstore_vs_ice_dest")
     IcebergExport.export(df, ice, partitionBy = spec)
     // id → its file's dir values for `keys`
@@ -370,7 +372,7 @@ class PartitionedStoreSpec extends SparkSpec {
         }.toMap
         spark.read.parquet(p).select("id").as[Long].collect().map(_ -> keys.map(dirs))
       }.toMap
-    val store = tuples(parquetFiles(s"$root/v=0").map(f => s"$root/v=0/$f"),
+    val store = tuples(parquetFiles(st.versionDir(0L)).map(f => s"${st.versionDir(0L)}/$f"),
       Seq("graft__day", "graft__bucket"))
     val exported = tuples(IcebergExport.plannedFiles(spark, ice).map(_._1),
       Seq("ts_day", "id_bucket"))
@@ -414,6 +416,27 @@ class PartitionedStoreSpec extends SparkSpec {
     assert(SnapshotTable.scanStats(root) === ((1L, 3L)))
   }
 
+  test("identity TIMESTAMP partition dirs are zone-free: a commit under a " +
+      "non-UTC session reads back the same instants under UTC") {
+    import spark.implicits._
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    val root = tmp("pstore_idts_zone")
+    val instant = utc("2025-03-01T10:00:00Z")
+    try {
+      spark.conf.set(key, "America/Los_Angeles")
+      new SnapshotTable(spark, root).commitPartitioned(
+        Seq((1L, instant)).toDF("id", "slot"), Seq("slot"))
+      spark.conf.set(key, "UTC")
+      val t = new SnapshotTable(spark, root)
+      assert(t.read().select("slot").as[Timestamp].collect().toSeq === Seq(instant))
+      assert(t.readWhere(col("slot") === lit(instant)).count() === 1)
+      // the dir value itself is the UTC rendering
+      assert(Paths.get(t.versionDir(0L)).toFile.list().filter(_.startsWith("slot="))
+        .toSeq === Seq("slot=2025-03-01 10%3A00%3A00"))
+    } finally spark.conf.set(key, prev)
+  }
+
   test("position deletes hold through PRUNED reads over partitioned delta runs " +
       "(per-scan provenance, not post-union)") {
     import spark.implicits._
@@ -440,43 +463,6 @@ class PartitionedStoreSpec extends SparkSpec {
     assert(got.forall(_._1 % 3 != 0), "a pruned read resurrected deleted rows")
     val (kept, total) = t.lastPruneStats
     assert(kept < total, s"partition pruning should have fired: $kept/$total")
-  }
-
-  test("commit markers self-GC; expiry sweeps crashed writers' markers") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("pstore_markers").toFile.getAbsolutePath
-    val t = new SnapshotTable(spark, root)
-    t.commit(Seq((1L, "a")).toDF("id", "v"))
-    t.commit(Seq((2L, "b")).toDF("id", "v"), op = "append")
-    t.commit(Seq((3L, "c")).toDF("id", "v"), op = "append")
-    def markers() = Option(Paths.get(root, "_graft_commits").toFile.list())
-      .map(_.toSeq.sorted).getOrElse(Nil)
-    // a marker's job ends when its version is logged: the dir stays
-    // O(in-flight), never O(versions) — each commit's listing stays cheap
-    // on an object store
-    assert(markers() === Nil, s"markers not GC'd: ${markers()}")
-    // crashed writers leave their markers behind: expiry sweeps AGED
-    // markers below the log head, keeps possible in-flight ones
-    // (at/above head) AND young below-head markers — a slow writer the log
-    // moved past still needs its marker's removeOrphans protection until
-    // the sweep grace period passes
-    val aged = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - SnapshotTable.MarkerSweepGraceMillis - 60000)
-    Files.createFile(Paths.get(root, "_graft_commits", "v=0"))
-    Files.createFile(Paths.get(root, "_graft_commits", "v=1"))
-    Files.createFile(Paths.get(root, "_graft_commits", "v=2"))
-    Files.createFile(Paths.get(root, "_graft_commits", "v=9"))
-    Files.setLastModifiedTime(Paths.get(root, "_graft_commits", "v=0"), aged)
-    Files.setLastModifiedTime(Paths.get(root, "_graft_commits", "v=1"), aged)
-    t.expireSnapshots(keep = 10)
-    assert(markers() === Seq("v=2", "v=9"), s"sweep wrong: ${markers()}")
-    Files.delete(Paths.get(root, "_graft_commits", "v=2"))
-    Files.delete(Paths.get(root, "_graft_commits", "v=9"))
-    // the table still reads and commits normally after the sweep
-    assert(t.read().count() === 3)
-    t.commit(Seq((4L, "d")).toDF("id", "v"), op = "append")
-    assert(t.read().count() === 4)
-    assert(markers() === Nil)
   }
 
   test("table_partitions serves partition-grain rows from manifests, zero footer reads") {

@@ -8,7 +8,7 @@ import graft.SparkSpec
 
 /** The snapshot store on a NON-`file:` FileSystem scheme ([[GraftTestFs]]):
   * every metadata surface — commit log, refs, manifests, partition spec,
-  * sort order, markers, mor key files — must round-trip through Hadoop's
+  * sort order, mor key files — must round-trip through Hadoop's
   * FileSystem, because the 100 TB deployment story puts tables on
   * `s3a:`/`hdfs:` roots (reference spark.py:52-59, readme.md:393-401). A
   * java.nio escape would resolve the scheme'd root as a RELATIVE local path
@@ -94,13 +94,13 @@ class SnapshotRemoteFsSpec extends SparkSpec {
     val (kept, total) = t.lastPruneStats
     assert(kept < total, s"partition pruning should fire remotely: $kept/$total")
 
-    // a crashed writer's dir: unlogged, unclaimed, aged — removed via rootFs
+    // a crashed writer's dir: unlogged, aged — removed via rootFs
     val local = root.stripPrefix("graftfs://")
-    Seq((99L, "junk")).toDF("id", "region").write.parquet(s"$root/v=9")
-    assert(new java.io.File(s"$local/v=9").setLastModified(
+    Seq((99L, "junk")).toDF("id", "region").write.parquet(s"$root/data/crashed")
+    assert(new java.io.File(s"$local/data/crashed").setLastModified(
       System.currentTimeMillis() - 10L * 60 * 1000))
-    assert(t.removeOrphans(olderThanMillis = 60000L, force = true) === Seq(9L))
-    assert(!JFiles.exists(JPaths.get(local, "v=9")))
+    assert(t.removeOrphans(olderThanMillis = 60000L, force = true) === Seq("crashed"))
+    assert(!JFiles.exists(JPaths.get(local, "data", "crashed")))
     assert(t.read().count() === 12)
     assertNoNioEscape()
   }
@@ -115,7 +115,7 @@ class SnapshotRemoteFsSpec extends SparkSpec {
     t.commit(Seq((3L, "c")).toDF("id", "v"), op = "append")
     t.deleteWhereMor(col("id") === 2L, "id")
     assert(t.read().select("id").as[Long].collect().sorted === Array(1L, 3L))
-    assert(JFiles.exists(JPaths.get(local, "_graft_meta.jsonl")),
+    assert(JFiles.exists(JPaths.get(local, "_graft_log", "v=2.rec")),
       "commit log not at the real root")
     assert(!JFiles.exists(JPaths.get("file:")),
       "a java.nio path resolved the file: scheme as a relative name")
@@ -196,20 +196,18 @@ class SnapshotRemoteFsSpec extends SparkSpec {
       "committed version, and expiry does not resurrect expired records") {
     import spark.implicits._
     val root = remoteRoot("remfs_ledger")
-    val local = root.stripPrefix("graftfs://")
     val t = new SnapshotTable(spark, root)
     t.commit(Seq((0L, "base")).toDF("id", "v"))                          // v0
     t.commit(Seq((1L, "a")).toDF("id", "v"), op = "append")              // v1
     t.commit(Seq((2L, "b")).toDF("id", "v"), op = "append")              // v2
 
-    // simulate the cross-process lost append: an interleaved read-modify-
-    // write left the shared log cache holding only v0's line
-    val metaPath = JPaths.get(local, "_graft_meta.jsonl")
-    val kept = JFiles.readString(metaPath).linesIterator.next()
-    JFiles.writeString(metaPath, kept + "\n")
+    // the JVM's cache of parsed records lost every line but v0's
+    val canon = SnapshotTable.canonicalRoot(root)
+    SnapshotTable.logMemo.put(canon,
+      SnapshotTable.logMemo.get(canon).filter(_._1 == "v=0.rec"))
 
-    // the per-version records are the commit point — the store reads back
-    // intact and the next claim lands PAST the reconstructed head
+    // the records are the commit points — the store reads back intact and
+    // the next commit lands PAST the head
     val fresh = new SnapshotTable(spark, root)
     assert(fresh.history().select("version").as[Long].collect().sorted
       === Array(0L, 1L, 2L))
@@ -218,8 +216,8 @@ class SnapshotRemoteFsSpec extends SparkSpec {
     assert(fresh.read().count() === 4)
     assert(fresh.history().count() === 4)
 
-    // expiry drops the expired versions' records too — reconciliation must
-    // not resurrect them into the rewritten log
+    // expiry drops the expired versions' records — the cache must not
+    // resurrect them
     fresh.compact(targetFiles = 1)                                       // v4
     fresh.expireSnapshots(keep = 1)
     val after = new SnapshotTable(spark, root)
@@ -290,66 +288,23 @@ class SnapshotRemoteFsSpec extends SparkSpec {
     val t = new SnapshotTable(spark, root)
     t.commit(Seq((0L, "seed")).toDF("id", "v"))                          // v0
     t.commit(Seq((1L, "a")).toDF("id", "v"), op = "append")              // v1
-    t.history().count() // memoize the 2-line cache in THIS instance
-    val cachePath = JPaths.get(local, "_graft_meta.jsonl")
-    val bytes0 = JFiles.readAllBytes(cachePath)
-    val mtime0 = cachePath.toFile.lastModified()
+    val canon = SnapshotTable.canonicalRoot(root)
+    val before = SnapshotTable.logMemo.get(canon)
 
-    // a foreign writer lands v2 (record + cache line) …
+    // a foreign writer lands v2 …
     new SnapshotTable(spark, root)
       .commit(Seq((2L, "b")).toDF("id", "v"), op = "append")             // v2
-    // … then an interleaved RMW rewrite drops its cache line at EQUAL
-    // length within one mtime tick — the memo key aliases the pre-v2 state
-    JFiles.write(cachePath, bytes0)
-    assert(cachePath.toFile.setLastModified(mtime0))
+    // … and this JVM's cache reverts to the pre-v2 state
+    SnapshotTable.logMemo.put(canon, before)
 
-    // the stale memo must not let this instance re-claim v2: the claim
-    // path forces a fresh reconcile and lands PAST the committed version
-    t.commit(Seq((3L, "c")).toDF("id", "v"), op = "append")              // v3
+    // the stale cache must not let this instance take v2: the publish is
+    // exclusive, so the commit lands PAST the committed version
+    assert(t.commit(Seq((3L, "c")).toDF("id", "v"), op = "append") === 3L)
     val fresh = new SnapshotTable(spark, root)
     assert(fresh.history().select("version").as[Long].collect().sorted
       === Array(0L, 1L, 2L, 3L))
     assert(fresh.read().select("id").as[Long].collect().sorted
       === Array(0L, 1L, 2L, 3L))
-  }
-
-  test("two interleaved appenders on a NO-APPEND (object-store-shaped) " +
-      "root: the RMW cache loss is survived by the record ledger") {
-    import spark.implicits._
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.graftnoap.impl", classOf[GraftNoAppendFs].getName)
-    val local = JFiles.createTempDirectory("remfs_noap").toFile.getAbsolutePath
-    val root = s"graftnoap://$local"
-    val t = new SnapshotTable(spark, root)
-    t.commit(Seq((0L, "seed")).toDF("id", "v"))                          // v0
-
-    // inject a foreign appender into OUR commit's read→write RMW window:
-    // it lands a full commit (record + cache line) whose cache line our
-    // stale rewrite then drops — the classic cross-process lost update
-    val other = new SnapshotTable(spark, root)
-    @volatile var injected = false
-    t.beforeCacheRmwWrite = rel =>
-      if (rel == "_graft_meta.jsonl" && !injected) {
-        injected = true
-        other.commit(Seq((2L, "foreign")).toDF("id", "v"), op = "append")
-      }
-    t.commit(Seq((1L, "mine")).toDF("id", "v"), op = "append")
-    assert(injected, "the RMW seam never fired — no-append fallback not taken")
-    t.beforeCacheRmwWrite = _ => ()
-
-    // the shared cache genuinely lost a line (the hazard is real) …
-    val cacheLines = JFiles.readString(
-      JPaths.get(local, "_graft_meta.jsonl")).linesIterator.size
-    assert(cacheLines < 3, s"expected the stale RMW to drop a cache line, " +
-      s"cache has $cacheLines")
-    // … but every committed version survives via its record
-    val fresh = new SnapshotTable(spark, root)
-    assert(fresh.history().select("version").as[Long].collect().sorted
-      === Array(0L, 1L, 2L))
-    assert(fresh.read().select("id").as[Long].collect().sorted
-      === Array(0L, 1L, 2L))
-    fresh.commit(Seq((3L, "next")).toDF("id", "v"), op = "append")       // v3
-    assert(fresh.read().count() === 4)
   }
 
   test("an S3-shaped root (PUT overwrites, no append): the claim-arbiter " +
@@ -360,38 +315,32 @@ class SnapshotRemoteFsSpec extends SparkSpec {
     val local = JFiles.createTempDirectory("remfs_s3").toFile.getAbsolutePath
     val root = s"grafts3://$local"
 
-    // the hazard is REAL on this filesystem: create-exclusive silently
-    // overwrites, so the marker CAS alone cannot arbitrate cross-process
-    // claims (exactly S3's PUT model — the reason Iceberg commits through
-    // a catalog-side CAS)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val probe = new org.apache.hadoop.fs.Path(root, "probe")
-    fs.create(probe, false).close()
-    fs.create(probe, false).close() // would throw FileAlreadyExists on POSIX
+    // the hazard is REAL on this filesystem: a record published on the
+    // root itself is silently replaced by a second publish of its name
+    // (exactly S3's PUT model — the reason Iceberg commits through a
+    // catalog-side CAS)
+    val onRoot = new SnapshotTable.RecordDir(
+      spark.sparkContext.hadoopConfiguration, r => s"$r/_graft_log")
+    assert(onRoot.publish(root, "probe.rec", "a\n"))
+    assert(onRoot.publish(root, "probe.rec", "b\n"))
+    assert(onRoot.read(root, "probe.rec") === Some("b\n"))
+    onRoot.delete(root, "probe.rec")
 
-    // the arbiter IS atomic: second claim of a held version fails, release
-    // frees it, maxClaimed tracks the high-water mark — for the in-process
-    // arbiter AND the durable lock-dir one (two INSTANCES of the latter
-    // sharing a lock dir must arbitrate, the no-shared-memory shape)
-    val arb = new SnapshotTable.InProcessClaimArbiter
-    assert(arb.tryClaim("r", 5L) && !arb.tryClaim("r", 5L))
-    assert(arb.maxClaimed("r") === 5L)
-    arb.release("r", 5L)
-    assert(arb.tryClaim("r", 5L) && arb.maxClaimed("r") === 5L)
+    // the arbiter IS exclusive: a second publish of a name fails, delete
+    // frees it — across two INSTANCES sharing a lock dir (the
+    // no-shared-memory shape)
     val lockDir = JFiles.createTempDirectory("remfs_s3_lock").toFile.getAbsolutePath
     val dArb = new LockDirClaimArbiter(lockDir)
     val dArb2 = new LockDirClaimArbiter(lockDir) // separate instance, shared dir
-    assert(dArb.tryClaim("r", 5L) && !dArb2.tryClaim("r", 5L))
-    assert(dArb2.maxClaimed("r") === 5L)
-    dArb.release("r", 5L)
-    assert(dArb2.tryClaim("r", 5L) && dArb.maxClaimed("r") === 5L)
-    dArb2.release("r", 5L)
+    assert(dArb.publish("r", "v=5.rec", "a\n") && !dArb2.publish("r", "v=5.rec", "b\n"))
+    assert(dArb2.read("r", "v=5.rec") === Some("a\n"))
+    dArb.delete("r", "v=5.rec")
+    assert(dArb2.publish("r", "v=5.rec", "b\n"))
+    dArb2.delete("r", "v=5.rec")
 
     // end to end: with the DURABLE arbiter registered, the full commit
-    // protocol — claims, ledger records, log cache (RMW on this no-append
-    // store), DML, maintenance — runs on the S3-shaped root with distinct
-    // versions
+    // protocol — log records, refs, DML, maintenance — runs on the
+    // S3-shaped root with distinct versions
     SnapshotTable.registerClaimArbiter(root, dArb)
     try {
       val t = new SnapshotTable(spark, root)
@@ -433,8 +382,8 @@ class SnapshotRemoteFsSpec extends SparkSpec {
       val st = new SnapshotTable(spark, root)
       implicit val sql = spark.sqlContext
 
-      // streaming WRITE: micro-batch appends claim through the arbiter and
-      // commit through the record ledger (no append, no create-exclusive)
+      // streaming WRITE: micro-batch appends publish their records through
+      // the arbiter (no append, no publish-if-absent on the root)
       val in = MemoryStream[(Long, String)]
       in.addData((1L, "a"), (2L, "b"))
       graft.streaming.SnapshotStream.appendStream(
@@ -462,6 +411,7 @@ class SnapshotRemoteFsSpec extends SparkSpec {
 
   test("concurrent appends on a scheme'd root land distinct versions via the " +
       "Hadoop-FS marker CAS") {
+    // the publish-if-absent there is `rename` refusing an existing record
     import spark.implicits._
     val root = remoteRoot("remfs_conc")
     val t = new SnapshotTable(spark, root)

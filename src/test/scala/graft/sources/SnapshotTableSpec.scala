@@ -139,11 +139,11 @@ class SnapshotTableSpec extends SparkSpec {
     val t = new SnapshotTable(spark, root)
     t.commit(Seq((1, "a"), (2, "b")).toDF("id", "v")) // v0: id INT
     val filesBefore = java.nio.file.Files.list(
-      java.nio.file.Paths.get(root, "v=0")).count()
+      java.nio.file.Paths.get(t.versionDir(0L))).count()
     t.alterColumnType("id", "bigint")                 // v1: metadata-only
     assert(java.nio.file.Files.list(
-      java.nio.file.Paths.get(root, "v=0")).count() === filesBefore)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "v=1")))
+      java.nio.file.Paths.get(t.versionDir(0L))).count() === filesBefore)
+    assert(dataDirs(root).size === 1, "the metadata-only commit wrote a data dir")
     assert(t.read().schema("id").dataType === LongType)
     // values unchanged; a delta may now carry values beyond Int range
     t.commit(Seq((5000000000L, "c")).toDF("id", "v"), op = "append")
@@ -198,6 +198,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.readAsOfTimestamp(System.currentTimeMillis()).count() === 2)
     // publish: metadata-only fast-forward — main's new head reads the
     // branch's data dir without copying it
+    val dirsBefore = dataDirs(root)
     val pub = t.fastForward("wap")
     assert(t.read().count() === 4)
     assert(t.currentVersion === Some(pub))
@@ -208,7 +209,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert((pubOp.startsWith("alias:") || pubOp.startsWith("asof:")) &&
       pubOp.contains("publish-wap"))
     // the published pointer did not write its own data files
-    assert(!Files.exists(java.nio.file.Paths.get(root, s"v=$pub")))
+    assert(dataDirs(root) === dirsBefore)
     // tag still pins the pre-publish state; refs lists all three
     assert(t.readTag("release-1").count() === 2)
     assert(t.refs().count() === 2)
@@ -276,6 +277,22 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().as[(Long, String)].collect().toSeq === Seq((1L, "a")))
   }
 
+  test("expiry keeps the last logged record, so no version number is reused") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("exp_top").toFile.getAbsolutePath
+    val t = new SnapshotTable(spark, root)
+    t.commit(Seq((1L, "a")).toDF("id", "v"))                       // v0 main
+    t.createBranch("stage")
+    t.commitToBranch("stage", Seq((2L, "b")).toDF("id", "v"))      // v1 branch
+    t.dropRef("stage")
+    // v1 is reachable from nothing, but it is the last record
+    assert(t.expireSnapshotsOlderThan(System.currentTimeMillis() + 1000000L) === Nil)
+    assert(t.commit(Seq((3L, "c")).toDF("id", "v"), op = "append") === 2L)
+    // once it is not the last, it expires
+    assert(t.expireSnapshots(keep = 1) === Seq(1L))
+    assert(t.read().as[(Long, String)].collect().toSet === Set((1L, "a"), (3L, "c")))
+  }
+
   test("refs are validated: no tag→branch conversion, no corrupting names") {
     import spark.implicits._
     val root = Files.createTempDirectory("refs_val").toFile.getAbsolutePath
@@ -304,13 +321,13 @@ class SnapshotTableSpec extends SparkSpec {
     assert(ins.getAs[Long]("id") === 3L && ins.getAs[String]("lang") === "en")
   }
 
+  /** The store's data dirs (`data/<id>`), as sorted paths. */
   private def dataDirs(root: String): Seq[String] =
-    new java.io.File(root).listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName).sorted
+    Option(new java.io.File(root, "data").listFiles()).toSeq.flatten
+      .filter(_.isDirectory).map(_.getPath).sorted
 
-  private def filesOf(root: String, v: Long): Seq[String] =
-    new java.io.File(root, s"v=$v").listFiles().toSeq
+  private def filesOf(t: SnapshotTable, v: Long): Seq[String] =
+    new java.io.File(t.versionDir(v)).listFiles().toSeq
       .map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
       .sorted
 
@@ -319,12 +336,12 @@ class SnapshotTableSpec extends SparkSpec {
     val root = Files.createTempDirectory("snap_delta").toFile.getAbsolutePath
     val t = new SnapshotTable(spark, root)
     t.commit(Seq.tabulate(100)(i => (i.toLong, s"row$i")).toDF("id", "v"))
-    val baseFiles = filesOf(root, 0L)
+    val baseFiles = filesOf(t, 0L)
     t.commit(Seq((1000L, "new")).toDF("id", "v"), op = "append")
     // the base dir is byte-for-byte untouched; the new dir holds ONLY the delta
-    assert(filesOf(root, 0L) === baseFiles)
-    assert(dataDirs(root) === Seq("v=0", "v=1"))
-    assert(spark.read.parquet(s"$root/v=1").count() === 1)
+    assert(filesOf(t, 0L) === baseFiles)
+    assert(dataDirs(root) === Seq(t.versionDir(0L), t.versionDir(1L)).sorted)
+    assert(spark.read.parquet(t.versionDir(1L)).count() === 1)
     // the resolved head unions base + delta; time travel still serves v0 alone
     assert(t.read().count() === 101)
     assert(t.read(Some(0L)).count() === 100)
@@ -443,14 +460,13 @@ class SnapshotTableSpec extends SparkSpec {
     t.commit(Seq((2L, "b")).toDF("id", "v"))                       // v1
     t.commit(Seq((3L, "c")).toDF("id", "v"))                       // v2 head
     // simulate a clock step back between commits: v1 is NEWER than v2
-    val meta = Paths.get(root, "_graft_meta.jsonl")
-    val doctored = JFiles.readAllLines(meta).toArray.toSeq.map(_.toString)
-      .zip(Seq(1000L, 5000L, 2000L))
-      .map { case (line, ts) =>
-        val p = line.split(",", 4); s"${p(0)},$ts,${p(2)},${p(3)}" }
-      .mkString("", "\n", "\n")
-    JFiles.writeString(meta, doctored,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    Seq(1000L, 5000L, 2000L).zipWithIndex.foreach { case (ts, v) =>
+      val rec = Paths.get(root, "_graft_log", s"v=$v.rec")
+      val p = JFiles.readString(rec).split(",", 3)
+      JFiles.delete(rec)
+      JFiles.writeString(rec, s"${p(0)},$ts,${p(2)}",
+        StandardOpenOption.CREATE_NEW)
+    }
     // cutoff 3000: v1 (ts 5000) was committed AFTER the cutoff and must
     // survive even though it sits positionally before the head — a
     // positional keep-count mapping would have expired it
@@ -471,7 +487,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().as[(Long, String, String)].collect().toSet ===
       Set((1L, "en", "a"), (2L, "en", "c")))
     // the delete file carries BOTH key columns
-    assert(spark.read.parquet(s"$root/v=1").columns.toSeq === Seq("id", "lang"))
+    assert(spark.read.parquet(t.versionDir(1L)).columns.toSeq === Seq("id", "lang"))
   }
 
   test("composite-key mor-update keeps base rows sharing only the FIRST key part") {
@@ -521,8 +537,9 @@ class SnapshotTableSpec extends SparkSpec {
       JFiles.delete(stamp)
       val missing = refusal()
       assert(missing.contains(root) && missing.contains("no _graft_format"), missing)
-      // "1" is the layout before the partition tuples became the spec's
-      Seq("0", "1").foreach { old =>
+      // "1" is the layout before the partition tuples became the spec's,
+      // "2" the one with `v=N` dirs and a shared log file
+      Seq("0", "1", "2").foreach { old =>
         JFiles.writeString(stamp, old + "\n")
         val other = refusal()
         assert(other.contains(root) && other.contains(s"'$old'") &&
@@ -550,8 +567,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(rows(mor).count(_._2.startsWith("RED:")) === 10)
     // O(changed): the mor commit's version dir holds 10 replacement rows
     // (plus their keys in the hidden _graft_deletes file), not a 100-row copy
-    assert(spark.read.parquet(s"$morRoot/v=1").count() === 10)
-    assert(spark.read.parquet(s"$morRoot/v=1/_graft_deletes")
+    assert(spark.read.parquet(mor.versionDir(1L)).count() === 10)
+    assert(spark.read.parquet(s"${mor.versionDir(1L)}/_graft_deletes")
       .as[Long].collect().toSet === (0L until 100L by 10).toSet)
     // the commit log records the UNCHANGED table total for the update
     assert(mor.history().orderBy("version").collect().last.getLong(3) === 100L)
@@ -602,10 +619,10 @@ class SnapshotTableSpec extends SparkSpec {
     assert(rows(mor).size === 98) // 100 - 5 deleted + 3 inserted
     // O(source) file footprint: the mor version dir holds 5 updated copies
     // + 3 inserts; the cow dir holds the whole 98-row table
-    assert(spark.read.parquet(s"$morRoot/v=1").count() === 8)
-    assert(spark.read.parquet(s"$morRoot/v=1/_graft_deletes")
+    assert(spark.read.parquet(mor.versionDir(1L)).count() === 8)
+    assert(spark.read.parquet(s"${mor.versionDir(1L)}/_graft_deletes")
       .as[Long].collect().toSet === (0L until 50L by 5).toSet) // 10 claimed keys
-    assert(spark.read.parquet(s"$cowRoot/v=1").count() === 98)
+    assert(spark.read.parquet(cow.versionDir(1L)).count() === 98)
     // the commit log records the RESULTING total
     assert(mor.history().orderBy("version").collect().last.getLong(3) === 98L)
     // read plan: base scan ▷ broadcast anti ▷ union — no table-side shuffle

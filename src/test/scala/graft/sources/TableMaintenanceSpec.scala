@@ -77,17 +77,17 @@ class TableMaintenanceSpec extends SparkSpec {
     val t = new SnapshotTable(spark, root)
     t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))          // v0
     t.commit(Seq((3L, "c")).toDF("id", "v"), op = "append")      // v1
-    def fakeDir(v: Long): Unit =
-      Seq((99L, "junk")).toDF("id", "v").write.parquet(s"$root/v=$v")
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 10L * 60 * 1000)
-    fakeDir(9)   // crashed writer, marker already swept, OLD
-    JF.setLastModifiedTime(Paths.get(root, "v=9"), old)
-    fakeDir(10)  // in-flight: claim marker still present, OLD
-    JF.setLastModifiedTime(Paths.get(root, "v=10"), old)
-    JF.createDirectories(Paths.get(root, "_graft_commits"))
-    JF.createFile(Paths.get(root, "_graft_commits", "v=10"))
-    fakeDir(11)  // crashed writer but YOUNG — the slow-writer age guard
+    def fakeDir(id: String, aged: Boolean): Unit = {
+      Seq((99L, "junk")).toDF("id", "v").write.parquet(s"$root/data/$id")
+      if (aged) JF.setLastModifiedTime(Paths.get(root, "data", id), old)
+    }
+    fakeDir("crashed", aged = true) // crashed writer, OLD
+    fakeDir("young", aged = false)  // crashed writer but YOUNG — the slow-writer age guard
+    // a manifest whose dir is gone (an expiry that crashed between the two)
+    JF.writeString(Paths.get(root, "_graft_manifest", "ghost.tsv"), "#schema\tx\n")
+    JF.setLastModifiedTime(Paths.get(root, "_graft_manifest", "ghost.tsv"), old)
     // default 3-day threshold: nothing qualifies
     assert(t.removeOrphans() === Nil)
     // the slow-writer floor: a 1-minute interval is refused outright
@@ -95,18 +95,19 @@ class TableMaintenanceSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       t.removeOrphans(olderThanMillis = 60L * 1000)
     }
-    // forced 1-minute threshold: only the aged, unprotected orphan goes
-    assert(t.removeOrphans(olderThanMillis = 60L * 1000, force = true) === Seq(9L))
-    assert(!JF.exists(Paths.get(root, "v=9")))
-    assert(JF.exists(Paths.get(root, "v=10")), "marker-protected dir kept")
-    assert(JF.exists(Paths.get(root, "v=11")), "young dir kept")
-    assert(JF.exists(Paths.get(root, "v=0")) && JF.exists(Paths.get(root, "v=1")),
+    // forced 1-minute threshold: only the aged, unreferenced orphans go
+    assert(t.removeOrphans(olderThanMillis = 60L * 1000, force = true) ===
+      Seq("crashed", "ghost"))
+    assert(!JF.exists(Paths.get(root, "data", "crashed")))
+    assert(!JF.exists(Paths.get(root, "_graft_manifest", "ghost.tsv")))
+    assert(JF.exists(Paths.get(root, "data", "young")), "young dir kept")
+    assert(JF.exists(Paths.get(t.versionDir(0))) && JF.exists(Paths.get(t.versionDir(1))),
       "logged dirs are never orphans")
     assert(t.read().count() === 3, "content untouched")
     // the scripted form: OLDER_THAN pins the cutoff timestamp directly; a
     // cutoff inside the slow-writer window is refused until the session
     // disables the min-age check (Iceberg's escape-hatch conf shape)
-    JF.delete(Paths.get(root, "_graft_commits", "v=10"))
+    fakeDir("late", aged = true)
     spark.conf.set("graft.snapshot.maint.orph", root)
     val cutoff = new java.sql.Timestamp(System.currentTimeMillis() - 60L * 1000)
     intercept[IllegalArgumentException] {
@@ -117,8 +118,8 @@ class TableMaintenanceSpec extends SparkSpec {
     try new graft.pipeline.SqlScriptRunner(spark).run(
       s"VACUUM TABLE maint.orph REMOVE ORPHAN FILES OLDER_THAN '$cutoff'")
     finally spark.conf.set("graft.snapshot.orphan.minAgeCheck", "true")
-    assert(!JF.exists(Paths.get(root, "v=10")), "unclaimed aged orphan removed")
-    assert(JF.exists(Paths.get(root, "v=11")), "young orphan still kept")
+    assert(!JF.exists(Paths.get(root, "data", "late")), "aged orphan removed")
+    assert(JF.exists(Paths.get(root, "data", "young")), "young orphan still kept")
     assert(t.read().count() === 3)
   }
 }

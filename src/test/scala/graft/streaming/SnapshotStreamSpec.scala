@@ -33,7 +33,7 @@ class SnapshotStreamSpec extends SparkSpec {
     assert(SnapshotStream.committedBatches(st, root).size === 3)
     // every delta dir holds ONLY its batch's rows (O(delta), never a rewrite)
     (1L to 3L).foreach(v =>
-      assert(spark.read.parquet(s"$root/v=$v").count() === 10))
+      assert(spark.read.parquet(st.versionDir(v)).count() === 10))
   }
 
   test("a multi-batch run reads the commit history ONCE (cached dedup map)") {
