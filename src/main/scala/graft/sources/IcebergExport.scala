@@ -846,8 +846,9 @@ object IcebergExport {
     // 2. per-file footer stats: record counts, typed column bounds, and the
     //    spec's metrics maps (value_counts = values incl. nulls per column,
     //    null_value_counts) — all from footers the export already opens
+    val openFooter = SnapshotTable.footerOpener(hconf)
     val stats = files.map { case (p, len) =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      val reader = openFooter(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), hconf))
       try {
         val cols = SnapshotTable.footerColumnStats(reader.getFooter)
@@ -2637,9 +2638,9 @@ object IcebergExport {
   private def footerTopLevelIds(spark: SparkSession,
       path: String): Seq[(String, Int)] = {
     import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path),
-        spark.sparkContext.hadoopConfiguration))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val reader = SnapshotTable.footerOpener(hconf)(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), hconf))
     try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
       .flatMap(f => Option(f.getId).map(id => f.getName -> id.intValue))
     finally reader.close()

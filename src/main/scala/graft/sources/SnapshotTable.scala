@@ -215,6 +215,18 @@ object SnapshotTable {
     * the old layout. */
   private[sources] val FormatVersion = "3"
 
+  /** The one way the store opens a parquet footer: read options built
+    * ONCE on `hconf`, the caller's already-loaded Hadoop configuration,
+    * then one reader per file. Parquet's options-free `open` overload
+    * builds a fresh Hadoop `Configuration` per call (re-parsing
+    * `core-default.xml`, ~12 ms a file on the driver), so a commit that
+    * describes its files one after another must not use it. */
+  private[sources] def footerOpener(hconf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.io.InputFile => org.apache.parquet.hadoop.ParquetFileReader = {
+    val opts = org.apache.parquet.HadoopReadOptions.builder(hconf).build()
+    org.apache.parquet.hadoop.ParquetFileReader.open(_, opts)
+  }
+
   /** Record count from one parquet FOOTER — a metadata read, no data pages
     * opened. The shared helper for every consumer that needs ONLY the
     * count (metadata tables' foreign-file fallback, the Iceberg export);
@@ -222,7 +234,7 @@ object SnapshotTable {
     * also extracts column stats from the same footer. */
   private[sources] def footerRecordCount(p: org.apache.hadoop.fs.Path,
       hconf: org.apache.hadoop.conf.Configuration): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+    val reader = footerOpener(hconf)(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
     try reader.getRecordCount finally reader.close()
   }
@@ -1352,9 +1364,10 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val timeFields = spec.map(FilePruning.parseSpecEntry)
       .filter(sf => Set("day", "month", "year", "hour")(sf.kind))
       .map(sf => hiddenColOf(sf.kind) -> sf).toMap
+    val openFooter = SnapshotTable.footerOpener(hconf)
     SnapshotTable.listVisibleFiles(base.getFileSystem(hconf), base).map {
       case (rel, st) =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        val reader = openFooter(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
         try SnapshotTable.ManifestFile(rel, reader.getRecordCount, st.getLen,
           partitionPathStats(rel, df.schema, timeFields) ++
@@ -2541,7 +2554,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * keys — O(changed rows), never O(table). The redaction/takedown shape:
     * re-writing 1k docs of a 100 TB corpus costs kilobytes, with readers
     * paying one broadcast anti-join + union until compact() folds it.
-    * `keyCol` must identify rows uniquely (the equality-delete contract). */
+    * `keyCol` must identify rows uniquely (the equality-delete contract).
+    *
+    * Plan shape: one predicate pass over the table writes the replacements;
+    * their keys are read back from the just-written files (delta-sized), and
+    * the write's footer row count decides whether a key file is needed. */
   def updateMor(pred: Column, set: Map[String, Column], keyCol: String): Long =
     updateMor(pred, set, Seq(keyCol))
 
@@ -2562,12 +2579,11 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       val base = read()
       val updated = onFields(base.schema, set, "UPDATE")
         .foldLeft(base.filter(pred <=> lit(true))) { case (df, (c, e)) => df.withColumn(c, e) }
-      writeDataDir(updated, id)
+      val written = writeDataDir(updated, id)
       // the delete keys come from the just-written REPLACEMENT files — a
       // delta-sized read, not a second predicate pass over the table
-      val written = readDataDir(id)
-      writeKeyFiles(id, written.select(keyCols.map(col): _*).distinct(),
-        nonEmpty = !written.isEmpty)
+      writeKeyFiles(id, readDataDir(id).select(keyCols.map(col): _*).distinct(),
+        nonEmpty = written > 0)
       Staged(MorUpdateOp, headRows)
     }
   }
@@ -2694,10 +2710,13 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     * table. Readers fold it as base ▷ broadcast anti-join ▷ union until
     * compact(). Matched rows no clause claims stay in the base untouched.
     *
-    * Plan shape: the matched subset comes from one broadcast-semi pass over
-    * the target and the insert set from one broadcast-anti pass — the
-    * table-sized side is scanned, never shuffled, and nothing table-sized
-    * is written. */
+    * Plan shape: ONE pass over the target, `target ⋈ broadcast(source)` on
+    * the key with the clause index attached, builds the matched slice; it
+    * is persisted for the commit and released when the stage ends, failed
+    * or not. The replacements, the matched keys the insert set is
+    * anti-joined against, the claimed keys and the removed-row count all
+    * derive from that slice, so the table-sized side is scanned once, never
+    * shuffled, and nothing table-sized is written or cached. */
   def mergeIntoMor(source: DataFrame, keyCol: String,
       matched: Seq[(Option[Column], Option[Map[String, Column]])],
       notMatched: Seq[(Option[Column], Option[Map[String, Column]])]): Long =
@@ -2708,67 +2727,72 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     val mClauses = clausesOn(tSchema, matched, "MERGE UPDATE")
     val iClauses = clausesOn(tSchema, notMatched, "MERGE INSERT")
     val src = source.select(source.columns.toSeq.map(c => col(c).as(s"__src_$c")): _*)
-    // matched target rows only — delta-sized via a broadcast semi-join
-    val srcKeys = source.select(col(keyCol)).distinct()
-    val matchedTarget = target.join(broadcast(srcKeys), Seq(keyCol), "left_semi")
-    val joined = matchedTarget.join(broadcast(src),
-      col(keyCol) === col(s"__src_$keyCol"), "inner")
     // first-match-wins clause index; -1 = unclaimed → stays in the base
     val clauseIdx = mClauses.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
       case (acc, ((cond, _), i)) =>
         acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
     }.otherwise(lit(-1))
-    val claimed = joined.withColumn("__mclause", clauseIdx)
-      .filter(col("__mclause") >= 0)
-    val deleteIdx = mClauses.zipWithIndex.collect { case ((_, None), i) => i }
-    val updates =
-      if (deleteIdx.isEmpty) claimed
-      else claimed.filter(!col("__mclause").isin(deleteIdx: _*))
-    val outCols = tSchema.fields.toSeq.map { f =>
-      val upd = mClauses.zipWithIndex.collect {
-        case ((_, Some(set)), i) if set.contains(f.name) => (i, set(f.name))
-      }
-      upd.foldLeft(col(f.name): Column) { case (acc, (i, e)) =>
-        when(col("__mclause") === i, e).otherwise(acc)
-      }.cast(f.dataType).as(f.name) // replacements must union onto the base
-    }
-    val replacements = updates.select(outCols: _*)
-    // insert set: source rows matching no target key (broadcast anti)
-    val matchedKeys = matchedTarget.select(col(keyCol)).distinct()
-    val unmatchedSrc = src.join(broadcast(matchedKeys),
-      col(s"__src_$keyCol") === col(keyCol), "left_anti")
-    val insIdx = iClauses.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
-      case (acc, ((cond, _), i)) =>
-        acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
-    }.otherwise(lit(-1))
-    val insWithIdx = unmatchedSrc.withColumn("__iclause", insIdx)
-      .filter(col("__iclause") >= 0)
-    val insertRows = iClauses.zipWithIndex.map { case ((_, values), i) =>
-      val sel = tSchema.fields.toSeq.map { f =>
-        val e = values match {
-          case Some(m) => m.getOrElse(f.name, lit(null))
-          case None =>
-            if (source.columns.contains(f.name)) col(s"__src_${f.name}") else lit(null)
+    // the matched slice: every target row with a source match (the inner
+    // join filters as a semi-join would), read once. It is a function of
+    // the pinned head's immutable files, so an evicted block recomputes to
+    // the same rows.
+    val slice = target.join(broadcast(src),
+      col(keyCol) === col(s"__src_$keyCol"), "inner")
+      .withColumn("__mclause", clauseIdx).persist()
+    try {
+      val claimed = slice.filter(col("__mclause") >= 0)
+      // keys the read path removes, and the TARGET rows it removes with
+      // them: every slice row whose key some clause claimed. With
+      // duplicate-keyed base rows (appends can create them; nothing
+      // enforces target-key uniqueness) the row count exceeds the key
+      // count, and the logged total must record what readers see — later
+      // appends derive their cumulative counts from it.
+      val counts = slice.groupBy(col(keyCol))
+        .agg(max(col("__mclause")).as("__claim"), count(lit(1)).as("__rows"))
+        .filter(col("__claim") >= 0)
+        .agg(count(lit(1)), coalesce(sum(col("__rows")), lit(0L))).head()
+      val (keysN, removedN) = (counts.getLong(0), counts.getLong(1))
+      val deleteIdx = mClauses.zipWithIndex.collect { case ((_, None), i) => i }
+      val updates =
+        if (deleteIdx.isEmpty) claimed
+        else claimed.filter(!col("__mclause").isin(deleteIdx: _*))
+      val outCols = tSchema.fields.toSeq.map { f =>
+        val upd = mClauses.zipWithIndex.collect {
+          case ((_, Some(set)), i) if set.contains(f.name) => (i, set(f.name))
         }
-        e.cast(f.dataType).as(f.name)
+        upd.foldLeft(col(f.name): Column) { case (acc, (i, e)) =>
+          when(col("__mclause") === i, e).otherwise(acc)
+        }.cast(f.dataType).as(f.name) // replacements must union onto the base
       }
-      insWithIdx.filter(col("__iclause") === i).select(sel: _*)
-    }.reduceOption(_ unionByName _)
-    val data = insertRows.map(replacements.unionByName(_)).getOrElse(replacements)
-    // ONE commit: data files (updated copies + inserts) + claimed keys
-    val written = writeDataDir(data, id)
-    val keys = claimed.select(col(keyCol)).distinct()
-    val keysN = keys.count()
-    writeKeyFiles(id, keys, nonEmpty = keysN > 0)
-    // rows the read-path anti-join will actually remove: every TARGET row
-    // whose key is claimed. With duplicate-keyed base rows (appends can
-    // create them; nothing enforces target-key uniqueness) this exceeds the
-    // distinct-key count, and the logged total must record what readers see
-    // — later appends derive their cumulative counts from it.
-    val removedN =
-      if (keysN == 0) 0L
-      else matchedTarget.join(broadcast(keys), Seq(keyCol), "left_semi").count()
-    Staged(MorMergeOp, (log, h) => headRows(log, h) - removedN + written)
+      val replacements = updates.select(outCols: _*)
+      // insert set: source rows matching no target key (broadcast anti; a
+      // key repeated by duplicate-keyed base rows changes nothing there)
+      val matchedKeys = slice.select(col(keyCol))
+      val unmatchedSrc = src.join(broadcast(matchedKeys),
+        col(s"__src_$keyCol") === col(keyCol), "left_anti")
+      val insIdx = iClauses.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
+        case (acc, ((cond, _), i)) =>
+          acc.when(cond.getOrElse(lit(true)) <=> lit(true), lit(i))
+      }.otherwise(lit(-1))
+      val insWithIdx = unmatchedSrc.withColumn("__iclause", insIdx)
+        .filter(col("__iclause") >= 0)
+      val insertRows = iClauses.zipWithIndex.map { case ((_, values), i) =>
+        val sel = tSchema.fields.toSeq.map { f =>
+          val e = values match {
+            case Some(m) => m.getOrElse(f.name, lit(null))
+            case None =>
+              if (source.columns.contains(f.name)) col(s"__src_${f.name}") else lit(null)
+          }
+          e.cast(f.dataType).as(f.name)
+        }
+        insWithIdx.filter(col("__iclause") === i).select(sel: _*)
+      }.reduceOption(_ unionByName _)
+      val data = insertRows.map(replacements.unionByName(_)).getOrElse(replacements)
+      // ONE commit: data files (updated copies + inserts) + claimed keys
+      val written = writeDataDir(data, id)
+      writeKeyFiles(id, claimed.select(col(keyCol)).distinct(), nonEmpty = keysN > 0)
+      Staged(MorMergeOp, (log, h) => headRows(log, h) - removedN + written)
+    } finally slice.unpersist()
   }
 
   // ── schema evolution (Iceberg ALTER TABLE … ADD/DROP/RENAME COLUMN) ────

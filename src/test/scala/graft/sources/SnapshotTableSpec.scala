@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftTestBus
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -670,6 +671,130 @@ class SnapshotTableSpec extends SparkSpec {
     t.commit(Seq((10L, "z")).toDF("id", "v"), op = "append")
     assert(t.read().count() === 6)
     assert(t.history().orderBy("version").collect().last.getLong(3) === 6L)
+  }
+
+  test("mor-merge reads its target once: rows read stay within the table " +
+      "plus the source, and the job count is bounded") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("mm_once").toFile.getAbsolutePath
+    val t = new SnapshotTable(spark, root)
+    val tableRows = 4000
+    t.commit(Seq.tabulate(tableRows)(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .repartition(8))
+    assert(t.readManifest(0L)._2.size === 8)
+    // 30 updates of existing keys + 20 inserts
+    val src = (Seq.tabulate(30)(i => ((i * 100).toLong, s"u$i")) ++
+      Seq.tabulate(20)(i => ((tableRows + i).toLong, s"n$i"))).toDF("id", "v")
+    val sc = spark.sparkContext
+    val (jobs, (rowsRead, _)) = GraftTestBus.jobsDuring(sc)(
+      GraftTestBus.rowsReadDuring(sc)(
+        t.mergeIntoMor(src, "id",
+          matched = Seq((None, Some(Map("v" -> col("__src_v"))))),
+          notMatched = Seq((None, None)))))
+    assert(rowsRead <= tableRows + 50,
+      s"the merge read $rowsRead rows of a $tableRows-row table and a 50-row source")
+    assert(jobs <= 12, s"the merge launched $jobs jobs")
+    assert(t.read().count() === tableRows + 20)
+    assert(t.read().filter(col("id") === 100L).select("v").as[String].collect()
+      === Array("u1"))
+    assert(t.history().orderBy("version").collect().last.getLong(3) ===
+      tableRows + 20L)
+  }
+
+  test("mor-merge releases its matched slice after a commit and after a " +
+      "failed one") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[GraftFaultFs].getName)
+    val dir = Files.createTempDirectory("mm_release")
+    val t = new SnapshotTable(spark, s"graftfault://$dir")
+    t.commit(Seq.tabulate(100)(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    def merge(tag: String) = t.mergeIntoMor(
+      Seq((1L, tag), (2L, tag), (500L, tag)).toDF("id", "v"), "id",
+      matched = Seq((None, Some(Map("v" -> col("__src_v"))))),
+      notMatched = Seq((None, None)))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    merge("a")
+    assert(persisted -- before === Set.empty[Int], "the committed merge left a cached slice")
+    // the first create (the data write's first task file) and every later
+    // write fails, the stage's clean-up included
+    GraftFaultFs.arm(1)
+    try intercept[Exception](merge("b")) finally GraftFaultFs.disarm()
+    assert(persisted -- before === Set.empty[Int], "the failed merge left a cached slice")
+    assert(t.history().count() === 2)
+    assert(t.read().filter(col("id") === 1L).select("v").as[String].collect()
+      === Array("a"))
+  }
+
+  test("commit-time footer stats equal an independent footer read, in the " +
+      "store's manifest and in its Iceberg export") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the options-free open: slow (a fresh Hadoop configuration per call),
+    // but independent of the store's footer reader
+    def footer(p: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), conf))
+      try r.getFooter finally r.close()
+    }
+    def rowsOf(f: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
+      f.getBlocks.asScala.map(_.getRowCount).sum
+    val root = Files.createTempDirectory("footer_stats").toFile.getAbsolutePath
+    val t = new SnapshotTable(spark, root)
+    val t0 = java.sql.Timestamp.valueOf("2025-03-01 00:00:00").getTime
+    t.commitPartitioned(Seq.tabulate(200)(i =>
+        (i.toLong, new java.sql.Timestamp(t0 + i * 3600L * 1000), s"s${i % 37}"))
+      .toDF("id", "ts", "s").coalesce(1), Seq("days(ts)", "bucket(4, id)"))
+    val files = t.readManifest(0L)._2
+    assert(files.size > 8, s"expected day x bucket files, got ${files.size}")
+    // each file's id range and row count once more, from its rows (one scan)
+    val scanned = spark.read.parquet(t.versionDir(0L)).groupBy(input_file_name())
+      .agg(min("id"), max("id"), count(lit(1))).collect().toSeq
+      .map(r => r.getString(0) -> ((r.getLong(1).toString, r.getLong(2).toString), r.getLong(3)))
+    assert(scanned.size === files.size)
+    files.foreach { f =>
+      val path = s"${t.versionDir(0L)}/${f.name}"
+      val ft = footer(path)
+      assert(f.records === rowsOf(ft), f.name)
+      val own = SnapshotTable.footerColumnStats(ft)
+      // Spark writes ts as INT96, which carries no usable footer stats; its
+      // manifest range comes from the day partition path
+      assert(own.keySet === Set("id", "s") && f.stats.contains("ts"), f.name)
+      own.foreach { case (c, range) => assert(f.stats.get(c) === Some(range), s"${f.name} $c") }
+      val (range, n) = scanned.collectFirst { case (p, v) if p.endsWith(f.name) => v }.get
+      assert(f.stats("id") === range && f.records === n, f.name)
+    }
+    assert(files.map(_.records).sum === 200L)
+
+    val dest = Files.createTempDirectory("footer_stats_ice").toFile.getAbsolutePath
+    IcebergExport.syncStore(spark, root, dest)
+    def le(b: java.nio.ByteBuffer) =
+      b.duplicate().order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
+    val manifests = new java.io.File(s"$dest/metadata").listFiles().toSeq
+      .filter(m => m.getName.endsWith(".avro") && !m.getName.startsWith("snap-"))
+    val entries = manifests.flatMap { m =>
+      val rd = new org.apache.avro.file.DataFileReader(m,
+        new org.apache.avro.generic.GenericDatumReader[
+          org.apache.avro.generic.GenericData.Record]())
+      try rd.iterator().asScala.map(_.get("data_file")
+        .asInstanceOf[org.apache.avro.generic.GenericData.Record]).toList
+      finally rd.close()
+    }
+    entries.foreach { d =>
+      val path = d.get("file_path").toString
+      val ft = footer(path)
+      assert(d.get("record_count") === rowsOf(ft), path)
+      def bound(field: String) = d.get(field).asInstanceOf[java.util.List[_]]
+        .asScala.map(_.asInstanceOf[org.apache.avro.generic.GenericRecord])
+        .find(_.get("key") == 1) // the id column's field id
+        .map(kv => le(kv.get("value").asInstanceOf[java.nio.ByteBuffer]).toString)
+      val (lo, hi) = SnapshotTable.footerColumnStats(ft)("id")
+      assert(bound("lower_bounds") === Some(lo) && bound("upper_bounds") === Some(hi), path)
+    }
+    assert(entries.map(_.get("record_count").asInstanceOf[Long]).sum === 200L)
   }
 
   test("column-level mergeInto: first-match-wins clauses, no target shuffle") {

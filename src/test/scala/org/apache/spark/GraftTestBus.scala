@@ -1,24 +1,41 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
-/** Counts the Spark jobs a block of driver code launches. Job-start events
-  * reach listeners asynchronously, so the count waits for the listener bus
-  * to drain; that wait is package-private in Spark, hence this bridge. */
+/** Counts what a block of driver code makes Spark do: the jobs it launches
+  * and the rows its tasks read. Listener events arrive asynchronously, so a
+  * count waits for the listener bus to drain; that wait is package-private
+  * in Spark, hence this bridge. */
 object GraftTestBus {
   def jobsDuring[T](sc: SparkContext)(body: => T): (Int, T) = {
-    sc.listenerBus.waitUntilEmpty()
     val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
+    val out = during(sc, new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
+    })(body)
+    (jobs.get, out)
+  }
+
+  /** Rows read by the block's tasks: the task end events'
+    * `inputMetrics.recordsRead`, summed (file scans count rows, cached
+    * block reads count the blocks' records). */
+  def rowsReadDuring[T](sc: SparkContext)(body: => T): (Long, T) = {
+    val rows = new AtomicLong(0L)
+    val out = during(sc, new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => rows.addAndGet(m.inputMetrics.recordsRead))
+    })(body)
+    (rows.get, out)
+  }
+
+  private def during[T](sc: SparkContext, listener: SparkListener)(body: => T): T = {
+    sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty()
-      (jobs.get, out)
+      out
     } finally sc.removeSparkListener(listener)
   }
 }
